@@ -169,6 +169,93 @@ object Bench {
         .foreach(t => spark.catalog.dropTempView(t.name))
       System.gc()
     } catch { case _: Throwable => }
+    val pass = timedPass(spark, selected.toSeq, sfDir)
+    val fullJson = artifact(pass, exclude, sfDir)
+    println(fullJson)
+    // The full line above is ~20 KB at 226 queries — longer than the
+    // harness's stdout-tail window, so the per-query map was unparseable
+    // from stdout alone for two rounds (PERF r11/r12: n_common = 0). The
+    // full artifact therefore ALSO lands in a file that tooling can read…
+    try {
+      val p = java.nio.file.Paths.get(
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_queries.json"))
+      java.nio.file.Files.write(p, (fullJson + "\n").getBytes("UTF-8"))
+      System.err.println(s"[bench] full artifact written to ${p.toAbsolutePath}")
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] WARNING: could not write bench_queries.json: $e")
+    }
+    // …and the per-query timings stream as ≤2000-char JSON chunk lines
+    // (each self-contained: {"metric":"queries_chunk","i":k,"queries":{…}})
+    // before the compact final line, for tail parsers that read lines.
+    def chunkLines(metric: String, m: Seq[(String, Double)]): Unit = {
+      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+      var cur = new StringBuilder
+      m.foreach { kv =>
+        val ent = pass.entry(kv)
+        if (cur.nonEmpty && cur.length + ent.length > 1800) {
+          buf += cur.toString; cur = new StringBuilder
+        }
+        if (cur.nonEmpty) cur.append(",")
+        cur.append(ent)
+      }
+      if (cur.nonEmpty) buf += cur.toString
+      buf.zipWithIndex.foreach { case (c, i) =>
+        println(s"""{"metric":"$metric","i":$i,"n":${buf.size},"queries":{$c}}""")
+      }
+    }
+    chunkLines("queries_chunk", pass.best)
+    // compact FINAL line that always fits inside the tail window: headline
+    // numbers plus the 10 slowest queries
+    val clean = pass.clean(pass.best)
+    val slow = clean.sortBy(-_._2).take(10)
+      .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }.mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":${pass.total},"unit":"sec","n_queries":${pass.best.size},""" +
+      f""""mean_sec_per_query":${if (clean.isEmpty) 0.0 else pass.total / clean.size}%.4f,""" +
+      f""""first_pass_total":${pass.firstTotal}%.2f,"shuffle_mb_total":${pass.shuffleTotal}%.1f,""" +
+      f""""spill_mb_total":${pass.spillTotal}%.1f,"n_errors":${pass.errors.size},""" +
+      f""""slowest":$slow,"sf":"$sfDir"}""")
+    spark.stop()
+    // any per-query exception is a failed run: the artifact above still
+    // carries every number (and the errors map), but rc must be nonzero
+    // so a regression can never hide as a fast timing
+    if (pass.errors.nonEmpty) {
+      System.err.println(s"[bench] FAILED: ${pass.errors.size} queries threw: " +
+        pass.errors.map(_._1).mkString(", "))
+      sys.exit(1)
+    }
+  }
+
+  private[graft] type Query = (SparkSession, String) => org.apache.spark.sql.DataFrame
+
+  /** The samples of one timed pass, each keyed by query name in run order.
+    * A query that threw in either pass is in `errors`: its samples are the
+    * wall time around an exception, not a timing, so it reads `null` in
+    * every per-query map and stays out of every total — a failed run's
+    * headline can never be compared as if it were a clean, faster one.
+    */
+  private[graft] final case class TimedPass(
+      first: Seq[(String, Double)], best: Seq[(String, Double)],
+      shuffleMb: Seq[(String, Double)], spillMb: Seq[(String, Double)],
+      errors: Seq[(String, String)]) {
+    private val failed = errors.map(_._1).toSet
+    /** The samples of the queries that ran clean. */
+    def clean(m: Seq[(String, Double)]): Seq[(String, Double)] = m.filterNot(kv => failed(kv._1))
+    def total: Double = clean(best).map(_._2).sum
+    def firstTotal: Double = clean(first).map(_._2).sum
+    def shuffleTotal: Double = clean(shuffleMb).map(_._2).sum
+    def spillTotal: Double = clean(spillMb).map(_._2).sum
+    /** One `"name":value` JSON entry, `null` for a failed query. */
+    def entry(kv: (String, Double)): String =
+      "\"" + kv._1 + "\":" + (if (failed(kv._1)) "null" else f"${kv._2}%.4f")
+    def json(m: Seq[(String, Double)]): String = m.map(entry).mkString("{", ",", "}")
+  }
+
+  /** Time every selected query twice and keep the min (the reasons are
+    * in the comments below); the session's cached state is swept between
+    * queries.
+    */
+  private[graft] def timedPass(spark: SparkSession, selected: Seq[(String, Query)],
+      sfDir: String): TimedPass = {
     // hygiene between queries: drop leaked state (memory-sink tables,
     // cached frames) so later queries aren't taxed by earlier ones' GC
     def sweep(gc: Boolean = true): Unit = try {
@@ -184,9 +271,7 @@ object Bench {
     // nonzero exit after the artifact is printed (r12's silent catch let
     // a bench-SF-only failure read as a ~0 s success with rc 0)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def timeOnce(name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                 gc: Boolean = true): Double = {
+    def timeOnce(name: String, fn: Query, gc: Boolean = true): Double = {
       val t0 = System.nanoTime()
       // time a noop-sink write, not .count(): under a count aggregate
       // Catalyst's EliminateSorts removes top-level ORDER BYs and column
@@ -202,129 +287,77 @@ object Bench {
       sweep(gc)
       dt
     }
-    // per-query shuffle/spill attribution: delta of the cumulative meter
-    // around each first-pass run (the retime pass reuses the first-pass
-    // numbers — shuffle volume is plan-determined, not run-jittered)
-    var shuffleMb = Map.empty[String, Double]
-    var spillMb = Map.empty[String, Double]
-    // System.gc() every query cost more bench wall-clock than the jitter
-    // it removed (226 full GCs ≈ minutes at 32 cores) and is one of the
-    // fixed per-query overheads that made the sf0.1 suite SLOWER at 32
-    // cores than at 8 (VERDICT r12): sweep state every query, full GC
-    // every 8th — the ContextCleaner still reaps between GCs, and the
-    // min-of-2 retime absorbs the residual jitter.
-    val firstPass: Seq[(String, Double)] =
-      selected.toSeq.zipWithIndex.map { case ((name, fn), i) =>
-        val (r0, w0, s0) = meter.snapshot
-        val dt = timeOnce(name, fn, gc = i % 8 == 7)
-        val (r1, w1, s1) = meter.snapshot
-        shuffleMb += name -> ((r1 - r0) + (w1 - w0)) / 1048576.0
-        spillMb += name -> (s1 - s0) / 1048576.0
-        name -> dt
+    try {
+      // per-query shuffle/spill attribution: delta of the cumulative meter
+      // around each first-pass run (the retime pass reuses the first-pass
+      // numbers — shuffle volume is plan-determined, not run-jittered)
+      val shuffleMb = Seq.newBuilder[(String, Double)]
+      val spillMb = Seq.newBuilder[(String, Double)]
+      // System.gc() every query cost more bench wall-clock than the jitter
+      // it removed (226 full GCs ≈ minutes at 32 cores) and is one of the
+      // fixed per-query overheads that made the sf0.1 suite SLOWER at 32
+      // cores than at 8 (VERDICT r12): sweep state every query, full GC
+      // every 8th — the ContextCleaner still reaps between GCs, and the
+      // min-of-2 retime absorbs the residual jitter.
+      val firstPass: Seq[(String, Double)] =
+        selected.zipWithIndex.map { case ((name, fn), i) =>
+          val (r0, w0, s0) = meter.snapshot
+          val dt = timeOnce(name, fn, gc = i % 8 == 7)
+          val (r1, w1, s1) = meter.snapshot
+          shuffleMb += name -> ((r1 - r0) + (w1 - w0)) / 1048576.0
+          spillMb += name -> (s1 - s0) / 1048576.0
+          name -> dt
+        }
+      // Stage-scheduling + GC jitter dominates small queries and is NOT
+      // amortized by the big ones either: back-to-back identical runs of
+      // the heavy composites swing 2-5× in this single-JVM 226-query run
+      // (c5w_curate_report_fuzzy 11.5 vs 24.0 s, d24_lsh_recall 3.4 vs
+      // 17.2 s — same code, same data, adjacent windows), so since r12
+      // EVERY query is re-timed once and the min kept. The pre-r12 run
+      // retimed only queries under 2.5 s on the theory that long queries
+      // amortize jitter; the r11 spread campaign and this round's
+      // back-to-back runs measured that theory wrong — the ≥2.5 s set held
+      // 57 queries carrying 285/435 s of the headline, each a single draw
+      // from a distribution with >2× spread. Both series stay in the
+      // artifact ("queries" = min-of-2, "queries_first" = single-pass), so
+      // cross-round ratios never mix methodologies.
+      // gc=false on the retime pass: a full System.gc() per query costs
+      // more wall-clock than the jitter it removes on the SECOND sample
+      // (the first pass already swept)
+      val best = firstPass.zip(selected).map { case ((name, dt), (_, fn)) =>
+        name -> math.min(dt, timeOnce(name, fn, gc = false))
       }
-    // Stage-scheduling + GC jitter dominates small queries and is NOT
-    // amortized by the big ones either: back-to-back identical runs of
-    // the heavy composites swing 2-5× in this single-JVM 226-query run
-    // (c5w_curate_report_fuzzy 11.5 vs 24.0 s, d24_lsh_recall 3.4 vs
-    // 17.2 s — same code, same data, adjacent windows), so since r12
-    // EVERY query is re-timed once and the min kept. The pre-r12 run
-    // retimed only queries under 2.5 s on the theory that long queries
-    // amortize jitter; the r11 spread campaign and this round's
-    // back-to-back runs measured that theory wrong — the ≥2.5 s set held
-    // 57 queries carrying 285/435 s of the headline, each a single draw
-    // from a distribution with >2× spread. Both series stay in the
-    // artifact ("queries" = min-of-2, "queries_first" = single-pass), so
-    // cross-round ratios never mix methodologies.
-    // gc=false on the retime pass: a full System.gc() per query costs
-    // more wall-clock than the jitter it removes on the SECOND sample
-    // (the first pass already swept)
-    val results: Seq[(String, Double)] = firstPass.map { case (name, dt) =>
-      name -> math.min(dt, timeOnce(name, selected(name), gc = false))
-    }
-    def fmt(m: Iterable[(String, Double)]) =
-      m.map { case (k, v) => "\"" + k + f"""":$v%.4f""" }.mkString("{", ",", "}")
-    val qs = fmt(results)
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+      TimedPass(firstPass, best, shuffleMb.result(), spillMb.result(), errors.toSeq)
+    } finally spark.sparkContext.removeSparkListener(meter)
+  }
+
+  /** The full artifact line: headline totals and every per-query map. */
+  private[graft] def artifact(pass: TimedPass, exclude: Seq[String], sfDir: String): String = {
     // BOTH series in the artifact: "queries" = min-of-2 (the r5-compatible
     // headline), "queries_first" = single-pass (r1–r4-comparable) — so
-    // cross-round ratios never mix timing methodologies again
-    val firstTotal = if (firstPass.nonEmpty) firstPass.map(_._2).sum else 0.0
-    // shuffle discipline, quantified: total MB moved per query (read+write,
+    // cross-round ratios never mix timing methodologies again.
+    // Shuffle discipline, quantified: total MB moved per query (read+write,
     // so one shuffled MB counts twice), plus any query that spilled. At
     // bench SF nothing should spill; at 100 TB the same ranking predicts
     // which stages dominate the network.
-    val totalShuffleMb = shuffleMb.values.sum
-    val totalSpillMb = spillMb.values.sum
-    val spilled = spillMb.filter(_._2 > 0.5)
+    val spilled = pass.clean(pass.spillMb).filter(_._2 > 0.5)
     val exclJson = exclude.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val errJson = errors
+    val errJson = pass.errors
       .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
     // the ensure*-layout queries build their bucketed/partitioned tables
     // ONCE per JVM: their first-pass sample carries that one-time write,
     // the min-of-2 headline is the steady-state (post-layout) time —
     // declared per query here so cross-round ratios are read correctly
-    val resultKeys = results.map(_._1).toSet
+    val resultKeys = pass.best.map(_._1).toSet
     val layoutQueries = Seq("c8_bucketed_join", "c9_partition_pruning",
       "c10_dynamic_pruning").filter(resultKeys.contains)
     val layoutJson = layoutQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""first_pass_total":$firstTotal,"queries_first":${fmt(firstPass)},""" +
-      f""""shuffle_mb_total":$totalShuffleMb%.1f,"spill_mb_total":$totalSpillMb%.1f,""" +
-      s""""shuffle_mb":${fmt(shuffleMb)},"spilled_queries":${fmt(spilled)},""" +
+    s"""{"metric":"total","value":${pass.total},"unit":"sec","queries":${pass.json(pass.best)},""" +
+      s""""first_pass_total":${pass.firstTotal},"queries_first":${pass.json(pass.first)},""" +
+      f""""shuffle_mb_total":${pass.shuffleTotal}%.1f,"spill_mb_total":${pass.spillTotal}%.1f,""" +
+      s""""shuffle_mb":${pass.json(pass.shuffleMb)},"spilled_queries":${pass.json(spilled)},""" +
       s""""errors":$errJson,"layout_queries":$layoutJson,""" +
       s""""layout_timing":"headline is steady-state; one-time layout build is in queries_first",""" +
       s""""n_universe":${SparkEntry.queries.size},"excluded":$exclJson,"sf":"$sfDir"}"""
-    println(fullJson)
-    // The full line above is ~20 KB at 226 queries — longer than the
-    // harness's stdout-tail window, so the per-query map was unparseable
-    // from stdout alone for two rounds (PERF r11/r12: n_common = 0). The
-    // full artifact therefore ALSO lands in a file the driver can read…
-    try {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_queries.json"))
-      java.nio.file.Files.write(p, (fullJson + "\n").getBytes("UTF-8"))
-      System.err.println(s"[bench] full artifact written to ${p.toAbsolutePath}")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] WARNING: could not write bench_queries.json: $e")
-    }
-    // …and the per-query timings stream as ≤2000-char JSON chunk lines
-    // (each self-contained: {"metric":"queries_chunk","i":k,"queries":{…}})
-    // before the compact final line, for tail parsers that read lines.
-    def chunkLines(metric: String, m: Seq[(String, Double)]): Unit = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      var cur = new StringBuilder
-      m.foreach { case (k, v) =>
-        val ent = "\"" + k + f"""":$v%.4f"""
-        if (cur.nonEmpty && cur.length + ent.length > 1800) {
-          buf += cur.toString; cur = new StringBuilder
-        }
-        if (cur.nonEmpty) cur.append(",")
-        cur.append(ent)
-      }
-      if (cur.nonEmpty) buf += cur.toString
-      buf.zipWithIndex.foreach { case (c, i) =>
-        println(s"""{"metric":"$metric","i":$i,"n":${buf.size},"queries":{$c}}""")
-      }
-    }
-    chunkLines("queries_chunk", results.toSeq)
-    // compact FINAL line that always fits inside the tail window: headline
-    // numbers plus the 10 slowest queries
-    val slow = results.toSeq.sortBy(-_._2).take(10)
-      .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
-      f""""mean_sec_per_query":${if (results.isEmpty) 0.0 else total / results.size}%.4f,""" +
-      f""""first_pass_total":$firstTotal%.2f,"shuffle_mb_total":$totalShuffleMb%.1f,""" +
-      f""""spill_mb_total":$totalSpillMb%.1f,"n_errors":${errors.size},""" +
-      f""""slowest":$slow,"sf":"$sfDir"}""")
-    spark.stop()
-    // any per-query exception is a failed run: the artifact above still
-    // carries every number (and the errors map), but rc must be nonzero
-    // so a regression can never hide as a fast timing
-    if (errors.nonEmpty) {
-      System.err.println(s"[bench] FAILED: ${errors.size} queries threw: " +
-        errors.keys.mkString(", "))
-      sys.exit(1)
-    }
   }
 }

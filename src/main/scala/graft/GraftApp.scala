@@ -84,34 +84,35 @@ object GraftApp {
     val (alerts, updated, reputation, release) =
       HogzillaBatch.run(spark, samples, myNets, profiles, blacklist, osRepos, config)
 
-    // alerts append to the event sink (S5); reputation lists overwrite
-    alerts.write.mode(SaveMode.Append).parquet(s"$outDir/alerts")
-    // notification delivery (the reference's mailer role): render the
-    // payload per alert and hand it to the pluggable transport
-    sink.orElse(config.getString("alert.notify", "off") match {
-      case "log" => Some(graft.operators.AlertSink.LogSink)
-      case s if s.startsWith("file:") => // e.g. alert.notify = file:/var/spool/alerts
-        Some(new graft.operators.AlertSink.FileSink(s.stripPrefix("file:")))
-      case _ => None
-    }).foreach(graft.operators.AlertSink.deliver(alerts, _))
-    reputation.proxies.write.mode(SaveMode.Overwrite).parquet(s"$outDir/proxies")
-    reputation.bigProviders.write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/big_providers")
+    // the pins are dropped however the run ends: a failed write must not
+    // leave them cached when driven from a long-lived session
+    try {
+      // alerts append to the event sink (S5); reputation lists overwrite
+      alerts.write.mode(SaveMode.Append).parquet(s"$outDir/alerts")
+      // notification delivery (the reference's mailer role): render the
+      // payload per alert and hand it to the pluggable transport
+      sink.orElse(config.getString("alert.notify", "off") match {
+        case "log" => Some(graft.operators.AlertSink.LogSink)
+        case s if s.startsWith("file:") => // e.g. alert.notify = file:/var/spool/alerts
+          Some(new graft.operators.AlertSink.FileSink(s.stripPrefix("file:")))
+        case _ => None
+      }).foreach(graft.operators.AlertSink.deliver(alerts, _))
+      reputation.proxies.write.mode(SaveMode.Overwrite).parquet(s"$outDir/proxies")
+      reputation.bigProviders.write.mode(SaveMode.Overwrite)
+        .parquet(s"$outDir/big_providers")
 
-    // profile state: crash-safe stage-then-swap (Hadoop FS, loud renames,
-    // marker-file recovery — StateSwap) so a crash mid-write can't leave a
-    // family half-replaced OR silently cold-start the next run
-    val updatedSeq = Seq(
-      "hist01" -> updated.hist01, "hist02" -> updated.hist02,
-      "hist02snap" -> updated.hist02snap, "hist03" -> updated.hist03,
-      "hist04" -> updated.hist04, "hist05" -> updated.hist05,
-      "hist06" -> updated.hist06, "hist07" -> updated.hist07,
-      "hist08" -> updated.hist08)
-    updatedSeq.foreach { case (name, df) =>
-      graft.operators.StateSwap.swap(df, s"$stateDir/$name")
-    }
-    // every output is materialized: release the shared summary cache so
-    // no block outlives the run when driven from a long-lived session
-    release()
+      // profile state: crash-safe stage-then-swap (Hadoop FS, loud renames,
+      // marker-file recovery — StateSwap) so a crash mid-write can't leave a
+      // family half-replaced OR silently cold-start the next run
+      val updatedSeq = Seq(
+        "hist01" -> updated.hist01, "hist02" -> updated.hist02,
+        "hist02snap" -> updated.hist02snap, "hist03" -> updated.hist03,
+        "hist04" -> updated.hist04, "hist05" -> updated.hist05,
+        "hist06" -> updated.hist06, "hist07" -> updated.hist07,
+        "hist08" -> updated.hist08)
+      updatedSeq.foreach { case (name, df) =>
+        graft.operators.StateSwap.swap(df, s"$stateDir/$name")
+      }
+    } finally release()
   }
 }

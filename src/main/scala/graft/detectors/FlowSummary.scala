@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * (SURVEY §2.2 P4 + §2.4 A1): direction/status inference from TCP flags,
   * canonicalization to (myIP, alienIP) orientation, then the 5-tuple
   * rollup monoid. The reference computes this once and caches it
-  * (`HogSFlow.scala:789-882`); callers here should `.cache()` the result
-  * the same way before fanning out to ~17 detectors.
+  * (`HogSFlow.scala:789-882`); [[HogzillaBatch.run]] pins the result the
+  * same way (with the p2p and alert-union frames built over it) before
+  * fanning out to ~17 detectors, and its `release()` drops the pins.
   *
   * Expected raw sample columns (sFlow schema, HogHBaseRDD.scala:228-230):
   * srcIP, dstIP, srcPort, dstPort (strings), IPprotocol (string int),

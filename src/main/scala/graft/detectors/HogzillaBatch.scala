@@ -21,6 +21,27 @@ import graft.operators.ProfileStore
   * detectors consume them ([[Detectors.atypicalPorts]],
   * [[Detectors.atypicalData]]). The derived lists are also returned so a
   * caller can persist them for the next run (the reference's store).
+  *
+  * Pinned frames. Each frame that several plans of one batch read is
+  * cached once, so the detector DAG is evaluated once per batch instead
+  * of once per consumer:
+  *  - the flow summary: every detector, the alert payloads and the learn
+  *    pass;
+  *  - the `p2p` alert frame (method 1 ∪ method 2): the p2p section and
+  *    `p2pHosts`, which mediaStreaming, hPortScan, vPortScan and the
+  *    hist07/hist08 learn pass read;
+  *  - the union of the enabled detector sections (`bare`): the alert
+  *    rows, both `flowDetail` key sets (`my_ip`, `alien_ip`) and any
+  *    re-read of the returned alerts (AlertSink.deliver).
+  * Without the last two pins the alert write alone re-planned the
+  * 19-way union three times and the p2p frame about twelve times.
+  *
+  * The pins use `cache()`, not `localCheckpoint`: a cached block keeps
+  * its lineage, so a lost executor recomputes it, where a locally
+  * checkpointed block is gone for good and fails the job that reads it.
+  * Pinning the reputation lists, `p2pHosts` and the current hist02 as
+  * well was measured on the sflow_batch benchmark and gained nothing, so
+  * they stay unpinned.
   */
 object HogzillaBatch {
 
@@ -65,9 +86,11 @@ object HogzillaBatch {
 
   /** Run every detector over one batch of raw sFlow samples.
     * Returns (alerts, updated profile tables, derived reputation lists,
-    * release) — `release()` unpersists the shared flow summary that every
-    * returned frame reads; call it after materializing the outputs so the
-    * cached blocks don't outlive the run in a long-lived session.
+    * release) — `release()` drops every frame this run pinned (the flow
+    * summary, `p2p` and the alert union), blocking until the blocks are
+    * gone; call it after materializing the outputs (in a `finally`, so a
+    * failed write does not leave the pins cached in a long-lived
+    * session). The returned frames stay usable after it: they recompute.
     *
     * `config` carries the reference's per-detector conf surface
     * (`scripts/conf/sflow.conf` key names, `HogSFlow.scala:118-189`
@@ -83,7 +106,13 @@ object HogzillaBatch {
       : (DataFrame, ProfileTables, ReputationLists, () => Unit) = {
     val c = config
 
-    val summary = FlowSummary.summarize(samples, myNets).cache()
+    // run-scoped pins, dropped by release() dependents first: a pin
+    // uncached before the pins planned over it would make Spark re-plan
+    // those that never materialized
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { pins += df.cache(); df }
+
+    val summary = pin(FlowSummary.summarize(samples, myNets))
 
     val generalExcluded = c.getSetString("general.excludeIPs", Set.empty)
     // reference semantics (HogSFlow.scala:173-189): per-detector
@@ -108,12 +137,12 @@ object HogzillaBatch {
     // derived exclusion sets first (the reference's detector DAG)
     val ftpPairs = Detectors.ftpTalkerPairs(summary)
     val ftpSrv = Detectors.ftpServers(summary)
-    val p2p = excluding("p2p")(Detectors.p2pTalkers(summary, myNets, ftpPairs, ftpSrv,
+    val p2p = pin(excluding("p2p")(Detectors.p2pTalkers(summary, myNets, ftpPairs, ftpSrv,
       minPairs = c.getInt("p2p.minPairs", 5),
       minPorts = c.getInt("p2p.minPorts", 4),
       minPairs2 = c.getInt("p2p.minPairs2nd", 10),
       minPorts2 = c.getInt("p2p.minPorts2nd", 10),
-      minBytes2 = c.getLong("p2p.minBytes2nd", 10000000L)))
+      minBytes2 = c.getLong("p2p.minBytes2nd", 10000000L))))
     val p2pHosts = p2p.select(col("my_ip")).distinct()
 
     // pass 1: intra-run reputation (HogSFlow.scala:1486, 2029)
@@ -180,14 +209,14 @@ object HogzillaBatch {
     )
     val enabled = detectorRuns.filterNot { case (section, _) => c.isDisabled(section) }
       .map { case (section, build) => excluding(section)(build()) }
-    // every section disabled → an empty frame with the alert schema
-    val alerts = enabled.reduceOption(_ union _)
-      .getOrElse(detectorRuns.head._2().limit(0))
+    // the alert union, pinned after p2p so its cached plan reads the p2p
+    // pin; every section disabled → an empty frame with the alert schema
+    val bare = pin(enabled.reduceOption(_ union _)
+      .getOrElse(detectorRuns.head._2().limit(0)))
 
     // alert payloads: bounded top-K rendered flow lists for every alerted
     // host (HogSFlow.scala:662-713) — my_ip-keyed alerts get the local
     // host's flows, alien-only alerts (e.g. alienAccess) the alien's
-    val bare = alerts
     val flowListLimit = c.getInt("alert.maxFlowList", Detectors.FlowListLimit)
     val detailMy = Detectors.flowDetail(summary, bare.filter(col("my_ip").isNotNull),
       "my_ip", flowListLimit)
@@ -257,6 +286,7 @@ object HogzillaBatch {
         Detectors.hist07Current(summary, p2pHosts)),
       hist08 = ProfileStore.update(profiles.hist08,
         Detectors.hist08Current(summary, p2pHosts)))
-    (withDetail, updated, reputation, () => { summary.unpersist(); () })
+    (withDetail, updated, reputation,
+      () => pins.reverseIterator.foreach(_.unpersist(blocking = true)))
   }
 }

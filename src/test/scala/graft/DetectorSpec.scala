@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Union}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheProbe
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.detectors.{Detectors, FlowSummary, HogzillaBatch}
@@ -363,5 +366,56 @@ class DetectorSpec extends AnyFunSuite {
     // by THESE runs survives
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- preexisting
     assert(leaked.isEmpty, s"HogzillaBatch.run leaked cached blocks: $leaked")
+  }
+
+  /** The full-DAG fixture above: a spammer, a port probe and benign traffic. */
+  private def fullDag(config: GraftConfig = GraftConfig.empty) = {
+    import spark.implicits._
+    val spam = (1 to 30).flatMap(i => Seq.fill(4)(
+      ("10.0.0.5", "66.1.1." + i, "4000", "25", "6", 200000L, 10L, "0x18", 100L + i)))
+    HogzillaBatch.run(spark, samples(spam ++ vScanProbe(5) ++ benign), myNets,
+      HogzillaBatch.emptyProfileTables(spark),
+      blacklist = Seq("66.66.").toDF("prefix"),
+      osRepos = Seq(("93.1.1.1", "debian")).toDF("repo_ip", "os"), config = config)
+  }
+
+  private def cachedRelations(plan: LogicalPlan) =
+    plan.collect { case r: InMemoryRelation => r }
+
+  test("HogzillaBatch.run: the alert plan reads the alert union and p2p from their pins") {
+    val (alerts, _, _, release) = fullDag()
+    try {
+      // the 19-way detector union and p2p's method1 ∪ method2 are each
+      // planned once, inside their cached relations, not per consumer
+      val plan = alerts.queryExecution.optimizedPlan
+      val unions = plan.collect { case u: Union => u }
+      assert(unions.isEmpty, s"${unions.size} Union node(s) re-planned in the alert frame:\n$plan")
+      assert(cachedRelations(plan).nonEmpty)
+      assert(alerts.filter(col("detector") === "smtpTalkers").count() == 1)
+    } finally release()
+  }
+
+  test("HogzillaBatch release() drops pins that never materialized") {
+    // only topTalkers runs and only the alerts are materialized, so the
+    // p2p pin (read by the hist07/hist08 learn pass) is never filled
+    val others = Seq("SMTPTalkers", "p2p", "mediaStreaming", "atypicalPorts",
+      "atypicalAlienPorts", "atypicalPairs", "atypicalData", "alienNetworkAtypicalPorts",
+      "alien", "UDPAmplifier", "abusedSMTP", "dnsTunnel", "ICMPTunnel", "hPortScan",
+      "vPortScan", "DDoS", "BotNet", "osDiscovery")
+    val before = CacheProbe.entries(spark)
+    val (alerts, updated, _, release) =
+      fullDag(GraftConfig.parse(others.map(s => s"$s.disabled = 1").mkString("\n")))
+    assert(alerts.select("detector").distinct().collect().map(_.getString(0)).toSeq ==
+      Seq("topTalkers"))
+    assert(cachedRelations(updated.hist07.queryExecution.withCachedData).nonEmpty)
+    release()
+    assert(CacheProbe.entries(spark) == before, "release() left cache entries")
+    // fresh queries plan against the cache as it is now: no entry left,
+    // with or without blocks behind it
+    for ((name, df) <- Seq("alerts" -> alerts, "hist07" -> updated.hist07)) {
+      val fresh = df.filter(lit(true)).queryExecution.withCachedData
+      assert(cachedRelations(fresh).isEmpty, s"$name still reads a pin after release():\n$fresh")
+    }
+    assert(alerts.count() > 0) // the returned frames recompute
   }
 }

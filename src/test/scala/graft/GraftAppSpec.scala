@@ -2,8 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheProbe
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.detectors.FlowSummary
 
 /** Executor-side buffer sink for the notification test: local-mode
   * executors share the JVM, so a static queue observes deliveries.
@@ -77,6 +81,27 @@ class GraftAppSpec extends AnyFunSuite {
     assert(body.contains("Host: 10.0.0."), body)
     assert(body.contains("Note: top upload"), body)
     assert(body.contains("Flows:\n"), body)
+  }
+
+  test("GraftApp.run: a failed alerts write still releases the batch's pins") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graftapp_fail").toFile.getAbsolutePath
+    val samplesPath = s"$root/samples"
+    (1 to 6).map(i => ("10.0.0.9", "93.9.9." + i, "1900", "53713", "17", 5000L, 10L, "0x00", 100L + i))
+      .toDF("srcIP", "dstIP", "srcPort", "dstPort",
+        "IPprotocol", "packetSize", "samplingRate", "tcpFlags", "timestamp")
+      .write.parquet(samplesPath)
+    // a regular file where the alerts table should go: the append fails
+    new java.io.File(s"$root/out").mkdirs()
+    Files.write(java.nio.file.Paths.get(root, "out", "alerts"), Array[Byte](1))
+    val before = CacheProbe.entries(spark)
+    intercept[Exception] {
+      GraftApp.run(spark, samplesPath, s"$root/state", s"$root/out", Seq("10.0."))
+    }
+    assert(CacheProbe.entries(spark) == before, "GraftApp.run left pins cached")
+    val summary = FlowSummary.summarize(spark.read.parquet(samplesPath), Seq("10.0."))
+    assert(summary.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }.isEmpty,
+      "the flow summary of the failed run is still cached")
   }
 
   test("FileSink: GraftApp delivers alert files via alert.notify=file:<dir>") {

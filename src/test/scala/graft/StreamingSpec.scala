@@ -157,7 +157,7 @@ class StreamingSpec extends AnyFunSuite {
           updated.hist06.localCheckpoint(), updated.hist07.localCheckpoint(),
           updated.hist08.localCheckpoint())
         perBatch.synchronized { perBatch += ((id, n)) }
-        release() // profiles are checkpointed; drop the batch's summary cache
+        release() // profiles are checkpointed; drop the batch's pins
       }
     }
     source.addData(rows: _*)
