@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Pin}
 import graft.sources.Catalog
 
 /** Production corpus-curation entry point — the LLM-training-data
@@ -160,9 +160,10 @@ object CurateApp {
 
   /** [[tagged]] with the three stages the DAG reuses — the row-local
     * verdict frame, the fingerprint-joined frame, and the near-dup
-    * resolution — persisted (memory-and-disk). Returns the frame plus a
-    * release thunk the caller MUST invoke after its last action; the
-    * thunk unpersists all shared stages, so nothing outlives the run.
+    * resolution — pinned with lazy [[Pin]] truncations. Returns the frame
+    * plus a release thunk the caller MUST invoke after its last action;
+    * the thunk drops all shared stages, so nothing outlives the run. A
+    * truncated frame must not be read after `release()`.
     */
   def taggedCached(spark: SparkSession, inDir: String,
                    qualityMin: Double = 0.5, benchMod: Int = 50,
@@ -208,26 +209,15 @@ object CurateApp {
                     surgeryMinKeepFrac: Double,
                     surgeryNGram: Int, surgeryPad: Int,
                     persistShared: Boolean): (DataFrame, () => Unit) = {
-    val shared = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // quality scores, tokenization, fingerprints and the LSH+CC near-dup
     // verdict each feed 2-3 downstream branches; recomputing them per
-    // branch triples the scan+tokenize cost (the r4 bench's slowest query)
+    // branch triples the scan+tokenize cost (the r4 bench's slowest query).
+    // Truncated, not cached: the c5 report runs ~15 actions over the 3
+    // shared stages, and a cached stage re-plans its whole subtree for
+    // each (measured ~1.5 s of inter-job planning gaps at sf0.1).
+    val pins = Pin.scope()
     def sharedStage(df: DataFrame): DataFrame =
-      if (!persistShared) df
-      else {
-        // lazy localCheckpoint, not persist (r13): a persisted stage
-        // KEEPS its lineage, so every downstream action re-optimizes the
-        // full upstream subtree inside the InMemoryRelation (the c5
-        // report runs ~15 actions over 3 shared stages — measured ~1.5 s
-        // of inter-job planning gaps at sf0.1). The checkpoint truncates
-        // each consumer's plan at a LogicalRDD (same MEMORY_AND_DISK
-        // blocks, materialized by the first consuming job, same
-        // spill-to-disk behavior); release() still frees the blocks via
-        // the checkpointed RDD handle below.
-        val p = df.localCheckpoint(false)
-        shared += p
-        p
-      }
+      if (persistShared) pins.truncate(df, eager = false) else df
 
     // the semantic near-dup method reads embeddings where the text
     // methods read shingle signatures — demand the column up front, with
@@ -264,11 +254,11 @@ object CurateApp {
         // the two-explode LM ran ~5× even for single-action callers
         // (fingerprint: 26 scans / 27 windows; pinned: the score-gate
         // shape plus one join). The scored frame is one row per doc with
-        // ≥1 bigram — cheap to pin (localCheckpoint, the a17 precedent).
+        // ≥1 bigram — cheap to pin (truncated, the a17 precedent).
         val scored = operators.PerplexityGate.nllScores(
             docs.select(col("doc_id"), col("text"), col("lang")),
             col("lang") === "en")
-          .localCheckpoint(true)
+          .transform(Pin.truncate(_))
         base0.join(scored, Seq("doc_id"), "left")
           .withColumn("low_quality",
             !operators.PerplexityGate.keepExpr(
@@ -402,15 +392,6 @@ object CurateApp {
           .otherwise(col("n_chars")))
       .drop("surgery_text", "surgery_removed")
     else frame0
-    // release frees the checkpointed stages' MEMORY_AND_DISK blocks: a
-    // Dataset-level unpersist is a CacheManager no-op for a checkpoint,
-    // so unpersist the LogicalRDD's backing RDD handles directly (the
-    // same blocks the ContextCleaner would eventually reap on GC — this
-    // just makes the release deterministic for long-lived sessions)
-    (frame, () => shared.foreach { p =>
-      p.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(false))
-    })
+    (frame, () => pins.release())
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.operators.{Dedup, StateSwap}
+import graft.operators.{Dedup, Pin, StateSwap}
 import graft.streaming.StreamingJobs
 
 /** Continuous corpus curation — the streaming sibling of [[CurateApp]]:
@@ -150,7 +150,7 @@ object CurateStreamApp {
     val sh = graft.functions.TextFunctions.explodedShingles(
         bench.select(col("doc_id").as("bench_id"), col("text")),
         "bench_id", "text", 3).distinct()
-      .localCheckpoint(true) // feeds two tables below; shingle once
+      .transform(Pin.truncate(_)) // feeds two tables below; shingle once
     StateSwap.swapAll(s"$stateDir/bench_state", Seq(
       "bench_shingles" -> sh,
       "bench_bands" -> Dedup.lshBands(
@@ -365,6 +365,12 @@ object CurateStreamApp {
   def processBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
                    outDir: String, config: GraftConfig = GraftConfig.empty,
                    batchId: Long = -1L): Unit = {
+    val pins = Pin.scope() // every pin of the batch is read only by its own writes
+    try screenBatch(spark, batch, stateDir, outDir, config, batchId, pins) finally pins.release()
+  }
+
+  private def screenBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
+      outDir: String, config: GraftConfig, batchId: Long, pins: Pin.Scope): Unit = {
     val qualityMin = config.getDouble("curation.qualityMin", 0.5)
     val qualityGate = config.getString("curation.qualityGate", "score")
     val maxAvgNllE6 = config.getLong("curation.perplexityMaxNllE6",
@@ -475,7 +481,7 @@ object CurateStreamApp {
       else Some(operators.Multimodal.imageHashBands(
         operators.Multimodal.imagePHashes(
           batchUnique.select(col("doc_id").as("media_id"), col("kind"), col("bytes"))),
-        "phash").localCheckpoint(true)) // codec runs once, feeds 3 consumers
+        "phash").transform(pins.truncate(_))) // codec runs once, feeds 3 consumers
     val collidingImg = batchImgBands match {
       case None => collidingText
       case Some(ib) =>
@@ -492,7 +498,7 @@ object CurateStreamApp {
           .withColumnRenamed("phash", "state_ph")
           .join(broadcast(ib.select(col("band"), col("sig")).distinct()),
             Seq("band", "sig"), "left_semi")
-          .localCheckpoint(true) // read twice: bucket count + verify join
+          .transform(pins.truncate(_)) // read twice: bucket count + verify join
         val hot = touched.groupBy(col("band"), col("sig"))
           .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
           .select(col("band"), col("sig"))
@@ -527,7 +533,7 @@ object CurateStreamApp {
         s"curation.audioScreen must be off|fingerprint, got '$audioScreen'")
       else Some(operators.Multimodal.audioFingerprints(
           batchUnique.select(col("doc_id").as("media_id"), col("kind"), col("bytes")))
-        .localCheckpoint(true)) // codec runs once, feeds 3 consumers
+        .transform(pins.truncate(_))) // codec runs once, feeds 3 consumers
     val colliding = batchAudioFps match {
       case None => collidingImg
       case Some(af) =>
@@ -543,7 +549,7 @@ object CurateStreamApp {
         // boilerplate audio — would fan the verify join out per arrival)
         val audTouched = state.audioFps.withColumnRenamed("media_id", "state_id")
           .join(broadcast(sigs.select(col("fp")).distinct()), Seq("fp"), "left_semi")
-          .localCheckpoint(true) // read twice: bucket count + verify join
+          .transform(pins.truncate(_)) // read twice: bucket count + verify join
         val audHot = audTouched.groupBy(col("fp"))
           .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
           .select(col("fp"))
@@ -608,7 +614,7 @@ object CurateStreamApp {
             pad = config.getInt("curation.surgeryPad", 5),
             hashFps = false)
           .filter(col("n_hits") > 0) // untouched arrivals never join back
-          .localCheckpoint(true)     // feeds the drop set AND the rewrite
+          .transform(pins.truncate(_))     // feeds the drop set AND the rewrite
         val minKeep = config.getDouble("curation.surgeryMinKeepFrac", 0.5)
         val dropped = surg.filter(col("kept_frac") < minKeep)
           .select(col("doc_id"))
@@ -623,7 +629,7 @@ object CurateStreamApp {
               "over the benchmark corpus first"))
         val arrSh = graft.functions.TextFunctions.explodedShingles(
             batchUnique.select(col("doc_id"), col("text")), "doc_id", "text", 3)
-          .distinct().localCheckpoint(true) // read twice: totals + hits/verify
+          .distinct().transform(pins.truncate(_)) // read twice: totals + hits/verify
         val contamHit =
           if (mode == "overlap") {
             // t10/CurateApp-overlap semantics against the prebuilt bench
@@ -645,7 +651,7 @@ object CurateStreamApp {
             val touched = benchBands
               .join(broadcast(batchBands.select(col("band"), col("sig")).distinct()),
                 Seq("band", "sig"), "left_semi")
-              .localCheckpoint(true) // read twice: bucket count + candidates
+              .transform(pins.truncate(_)) // read twice: bucket count + candidates
             val hot = touched.groupBy(col("band"), col("sig"))
               .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
               .select(col("band"), col("sig"))
@@ -653,7 +659,7 @@ object CurateStreamApp {
               .join(touched.join(broadcast(hot), Seq("band", "sig"), "left_anti"),
                 Seq("band", "sig"))
               .select(col("doc_id"), col("bench_id")).distinct()
-              .localCheckpoint(true) // read 3×: verify, nT prune, final join
+              .transform(pins.truncate(_)) // read 3×: verify, nT prune, final join
             val bshCand = benchSh
               .join(broadcast(pairs.select(col("bench_id")).distinct()),
                 Seq("bench_id"), "left_semi")
@@ -679,7 +685,7 @@ object CurateStreamApp {
     }
     // materialized EAGERLY: the survivor plan reads all three state
     // tables and feeds three consumers (curated write, fp merge, band
-    // merge) — one localCheckpoint avoids re-running the quality gate and
+    // merge) — one pin avoids re-running the quality gate and
     // dedup joins per consumer, and keeps the staged state writes from
     // racing the root promotion below
     val survivors0 = batchUnique.join(collidingAll, Seq("doc_id"), "left_anti")
@@ -712,7 +718,7 @@ object CurateStreamApp {
           .withColumn("fp_canon", min(col("doc_id")).over(byNewFp))
           .filter(col("doc_id") === col("fp_canon")).drop("fp_canon")
           .join(stateFps.select(col("fp")), Seq("fp"), "left_anti")
-    }).localCheckpoint(true)
+    }).transform(pins.truncate(_))
 
     if (batchId >= 0)
       survivors.drop("fp").write.mode(SaveMode.Overwrite)
@@ -723,7 +729,7 @@ object CurateStreamApp {
     // precomputed batch index on the survivor set — no second decode.
     val survivorBands = Dedup.lshBandsLocal(survivors.select(col("doc_id"), col("text")),
         widths.numPerms, widths.numBands)
-      .localCheckpoint(true) // consumed by two writes below
+      .transform(pins.truncate(_)) // consumed by two writes below
     val survivorImgBands = batchImgBands.map(_
       .join(survivors.select(col("doc_id").as("media_id")), Seq("media_id"), "left_semi")
       .select(col("band"), col("sig"), col("media_id"), col("__h").as("phash")))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftConfig
 import graft.functions.HistogramFunctions
-import graft.operators.ProfileStore
+import graft.operators.{Pin, ProfileStore}
 
 /** The 6-hourly batch analytics run (`Hogzilla.main`,
   * `src/Hogzilla.scala:49-78`) re-sequenced Spark-first: one cached flow
@@ -36,9 +36,8 @@ import graft.operators.ProfileStore
   * Without the last two pins the alert write alone re-planned the
   * 19-way union three times and the p2p frame about twelve times.
   *
-  * The pins use `cache()`, not `localCheckpoint`: a cached block keeps
-  * its lineage, so a lost executor recomputes it, where a locally
-  * checkpointed block is gone for good and fails the job that reads it.
+  * The pins are [[Pin.Scope.cache]] pins, the kind a lost executor
+  * recomputes (see [[Pin]]).
   * Pinning the reputation lists, `p2pHosts` and the current hist02 as
   * well was measured on the sflow_batch benchmark and gained nothing, so
   * they stay unpinned.
@@ -106,13 +105,12 @@ object HogzillaBatch {
       : (DataFrame, ProfileTables, ReputationLists, () => Unit) = {
     val c = config
 
-    // run-scoped pins, dropped by release() dependents first: a pin
-    // uncached before the pins planned over it would make Spark re-plan
-    // those that never materialized
-    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = { pins += df.cache(); df }
+    // run-scoped pins, dropped by release() dependents first (newest
+    // first): a pin uncached before the pins planned over it would make
+    // Spark re-plan those that never materialized
+    val pins = Pin.scope()
 
-    val summary = pin(FlowSummary.summarize(samples, myNets))
+    val summary = pins.cache(FlowSummary.summarize(samples, myNets))
 
     val generalExcluded = c.getSetString("general.excludeIPs", Set.empty)
     // reference semantics (HogSFlow.scala:173-189): per-detector
@@ -137,7 +135,7 @@ object HogzillaBatch {
     // derived exclusion sets first (the reference's detector DAG)
     val ftpPairs = Detectors.ftpTalkerPairs(summary)
     val ftpSrv = Detectors.ftpServers(summary)
-    val p2p = pin(excluding("p2p")(Detectors.p2pTalkers(summary, myNets, ftpPairs, ftpSrv,
+    val p2p = pins.cache(excluding("p2p")(Detectors.p2pTalkers(summary, myNets, ftpPairs, ftpSrv,
       minPairs = c.getInt("p2p.minPairs", 5),
       minPorts = c.getInt("p2p.minPorts", 4),
       minPairs2 = c.getInt("p2p.minPairs2nd", 10),
@@ -211,7 +209,7 @@ object HogzillaBatch {
       .map { case (section, build) => excluding(section)(build()) }
     // the alert union, pinned after p2p so its cached plan reads the p2p
     // pin; every section disabled → an empty frame with the alert schema
-    val bare = pin(enabled.reduceOption(_ union _)
+    val bare = pins.cache(enabled.reduceOption(_ union _)
       .getOrElse(detectorRuns.head._2().limit(0)))
 
     // alert payloads: bounded top-K rendered flow lists for every alerted
@@ -286,7 +284,6 @@ object HogzillaBatch {
         Detectors.hist07Current(summary, p2pHosts)),
       hist08 = ProfileStore.update(profiles.hist08,
         Detectors.hist08Current(summary, p2pHosts)))
-    (withDetail, updated, reputation,
-      () => pins.reverseIterator.foreach(_.unpersist(blocking = true)))
+    (withDetail, updated, reputation, () => pins.release())
   }
 }

@@ -62,9 +62,7 @@ object BpeLearn {
   def learnMerges(words: DataFrame, nMerges: Int): DataFrame = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = words.sparkSession
-    val durable = spark.sparkContext.getCheckpointDir.isDefined
-    def truncate(df: DataFrame): DataFrame =
-      if (durable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
+    def truncate(df: DataFrame): DataFrame = Pin.truncate(df, eager = false)
 
     val clean = call_function("replace", col("w"), lit("/"), lit(""))
     var state = truncate(words

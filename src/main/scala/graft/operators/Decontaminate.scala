@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Plan discipline: the pair set and both shingle frames are each read
   * by 2+ consumers, and Catalyst re-evaluates a subtree per reference —
   * unpinned, the band join and the two shingle explodes re-ran per
-  * consumer (measured 17 scans / 16 windows). localCheckpoint pins each
+  * consumer (measured 17 scans / 16 windows). [[Pin.truncate]] pins each
   * after one evaluation.
   *
   * Join strategies are gated on MEASURED row counts, not hints or
@@ -129,7 +129,7 @@ object Decontaminate {
     // (5 parquet scans; the t36 lesson). Hit positions are three longs a
     // row and match-bounded — cheap to materialize.
     val hits = posFps(toksT, nGram, hashFps).join(benchFps, Seq("fp"), "left_semi")
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("s0"), col("e0"))
     val prevMax = max(col("e0")).over(byDoc.rowsBetween(Window.unboundedPreceding, -1))
     val spans = hits
@@ -187,7 +187,7 @@ object Decontaminate {
         .select(col("band"), col("sig"), col("doc_id").as("bench_id")),
         Seq("band", "sig"))
       .select(col("doc_id"), col("bench_id")).distinct()
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     // one aggregate over the materialized pair RDD measures every gate
     // input: pair count + per-side candidate-doc counts (also the nT/nB
     // row counts — one row per candidate doc)
@@ -228,7 +228,7 @@ object Decontaminate {
     // (sid, shingle) exchange, and the checkpoint pins the same blocks
     val allSh = graft.functions.TextFunctions.explodedDistinctShingles(
         sides, "sid", "text", 3)
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     val shCounts = allSh.groupBy(col("sid.is_train")).agg(count(lit(1)))
       .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
     val tSh = allSh.filter(col("sid.is_train"))

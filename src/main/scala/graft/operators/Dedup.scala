@@ -182,11 +182,9 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, minJaccard: Double): DataFrame = {
     // the pair list feeds the doc-set prune, the clone-collapse mapping,
     // and the final expansion; pin it (it's the small post-LSH set) so
-    // minhashing runs once. localCheckpoint, not cache (r13): cache
-    // keeps the LSH band-generation lineage, so every downstream action
-    // re-optimizes that whole subtree — the checkpoint truncates each
-    // consumer's plan at a LogicalRDD (the CurateApp sharedStage lesson)
-    val cands = lshCandidatePairs(df).localCheckpoint(false)
+    // minhashing runs once
+    val pins = Pin.scope()
+    val cands = pins.truncate(lshCandidatePairs(df), eager = false)
     val docsInPairs = cands.select(col("doc1").as("doc_id"))
       .union(cands.select(col("doc2").as("doc_id"))).distinct()
     // Clone collapse: the expensive part of the verify is shipping each
@@ -200,9 +198,8 @@ object Dedup {
     // lowercases, and shingles are case-sensitive). On a 10×-clone
     // corpus this cuts the array-join volume ~100×; on a clone-free one
     // it adds three small-key shuffles over the bounded pair set.
-    val fps = df.join(docsInPairs, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), md5(col("text")).as("fp"))
-      .localCheckpoint(false) // same lineage-truncation rationale as cands
+    val fps = pins.truncate(df.join(docsInPairs, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), md5(col("text")).as("fp")), eager = false)
     // adaptive: one tiny aggregate over the (LSH-bounded) paired-doc set
     // decides whether the collapse machinery pays for its three extra
     // shuffles. The win is quadratic in clone-GROUP size, so a corpus
@@ -254,12 +251,9 @@ object Dedup {
           .select(col("doc1"), col("doc2"), col("jaccard"))
       }
     // materialize the (LSH-bounded) verified-pair set eagerly so the
-    // one-shot caches can be released HERE instead of leaking for the
-    // session lifetime; the truncated lineage is executor-local blocks
-    // that the ContextCleaner frees once the frame is unreferenced
-    val out = resolved.localCheckpoint(true)
-    cands.unpersist()
-    fps.unpersist()
+    // one-shot pins can be released HERE instead of leaking until GC
+    val out = Pin.truncate(resolved)
+    pins.release()
     out
   }
 
@@ -357,8 +351,8 @@ object Dedup {
     * O(log n) rounds regardless of diameter. Each round is two
     * window-min passes over the node key plus one dedup exchange (never
     * a collect of neighbor lists), and per-round lineage truncation
-    * keeps the plan from growing by two passes per round (durable
-    * `checkpoint` on a real cluster, executor-local otherwise).
+    * ([[Pin.truncate]]) keeps the plan from growing by two passes per
+    * round.
     *
     * Window-partition sizing: a window over the node key co-locates all
     * of a node's edges, which would be a skew hazard for an unbounded
@@ -370,17 +364,10 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
       pairsDistinct: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = pairs.sparkSession
-    // per-round lineage truncation: executor-local by default (fast, no
-    // durable storage needed); when a cluster checkpoint dir is set, use
-    // reliable checkpoints instead so a 100 TB run survives executor loss
-    // mid-iteration (localCheckpoint blocks are unrecoverable by design)
-    val durable = spark.sparkContext.getCheckpointDir.isDefined
-    // non-eager: the round's signature aggregate is the action that
-    // materializes the checkpoint blocks, so each round runs ONE job
-    // (an eager checkpoint would spend a separate job just materializing)
-    def truncate(df: DataFrame): DataFrame =
-      if (durable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
+    // non-eager truncation: the round's signature aggregate is the action
+    // that materializes the blocks, so each round runs ONE job (an eager
+    // one would spend a separate job just materializing)
+    def truncate(df: DataFrame): DataFrame = Pin.truncate(df, eager = false)
 
     // canonical directed form: (u, v) with u > v, no self-loops, distinct
     def canon(e: DataFrame): DataFrame = e
@@ -608,7 +595,7 @@ object Dedup {
       .groupBy(col("fp"))
       .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_clones"))
       .select(col("rep"), col("n_clones"))
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     // signatures once per distinct text, on each group's representative
     val repDocs = df.join(groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
     val sh = simhashOf(repDocs, "doc_id", "text")
@@ -674,7 +661,7 @@ object Dedup {
     val nibbles = bits / 4
     // ONE window pass for ALL rotations (r12): the per-rotation union
     // form ran `nibbles` separate Exchange+WindowExec branches (each
-    // rescanning a localCheckpoint of the signature table — 16 exchanges
+    // rescanning a truncated pin of the signature table — 16 exchanges
     // / 16 window sorts / 16 checkpoint scans at bits=64); the rotation
     // id is data, not plan structure, so all rotation keys explode
     // row-locally into (doc_id, sh, t, k) and ONE exchange on the
@@ -684,7 +671,7 @@ object Dedup {
     // order, same `window` leads), so the emitted pair set is identical
     // — sf0.1: 5.0 → 2.6 s (d13v), plan 18 Exchange → 3. The signature
     // table now has exactly one consumer, so the d4-pattern
-    // localCheckpoint that kept the tokenize+md5+vote aggregation from
+    // pin that kept the tokenize+md5+vote aggregation from
     // re-running per branch is no longer load-bearing and its extra
     // materialization pass is dropped with the branches.
     //
@@ -834,7 +821,7 @@ object Dedup {
     // the distinct-name table feeds both SNM sort passes and the
     // reflexive branch — pin it once (the d13 rotation pattern)
     val names = blocked.select(col("__block"), col(nameCol).as("__n"))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Pin.truncate(_))
     val namePairs = snmNeighborNamePairs(names, maxDist, window).unionByName(
       names.select(col("__block"), col("__n").as("__n1"),
         col("__n").as("__n2"), lit(0).as("dist")))
@@ -873,7 +860,7 @@ object Dedup {
     // intra branch — pin it once
     val groups = blocked.groupBy(col("__block"), col(nameCol))
       .agg(min(col(idCol)).as("__rep"), count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     val namePairs = snmNeighborNamePairs(
       groups.select(col("__block"), col(nameCol).as("__n")), maxDist, window)
     val g1 = groups.select(col("__block"), col(nameCol).as("__n1"),
@@ -897,7 +884,7 @@ object Dedup {
     * distinct-name pairs (dist in [1, maxDist]) out — forward and
     * reversed-string passes, `window` leads each, one WindowExec per
     * pass (the d13 lead-array idiom). Both passes re-shuffle `names` on
-    * a different sort key — callers pass a pinned (localCheckpoint)
+    * a different sort key — callers pass a pinned ([[Pin.truncate]])
     * frame so the upstream distinct/aggregate runs once.
     */
   private def snmNeighborNamePairs(names: DataFrame, maxDist: Int,

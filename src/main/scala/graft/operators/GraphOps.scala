@@ -56,13 +56,8 @@ object GraphOps {
     // The edge list feeds degrees, both 2-path join inputs, and the
     // closing semi-join — un-truncated, a derived edge pipeline (pair
     // explosion + distinct) would re-execute once per consumer (observed
-    // 3× work on the co-supplier graph). Same policy as
-    // connectedComponents: durable checkpoint when configured, else
-    // executor-local.
-    val spark = edges.sparkSession
-    val ce =
-      if (spark.sparkContext.getCheckpointDir.isDefined) edges.checkpoint()
-      else edges.localCheckpoint()
+    // 3× work on the co-supplier graph).
+    val ce = Pin.truncate(edges)
     val deg = degrees(ce)
     // (degree, id) order packed into one comparable struct-free key is not
     // needed — compare lexicographically with a boolean expression.
@@ -92,10 +87,7 @@ object GraphOps {
     * endpoints. Coefficient is exact rational-to-double (deterministic).
     */
   def clusteringCoefficient(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val ce =
-      if (spark.sparkContext.getCheckpointDir.isDefined) edges.checkpoint()
-      else edges.localCheckpoint()
+    val ce = Pin.truncate(edges)
     val deg = degrees(ce)
     val e = ce
       .join(deg.withColumnRenamed("node", "u").withColumnRenamed("degree", "du"), Seq("u"))
@@ -138,14 +130,11 @@ object GraphOps {
   def pageRankFixedPoint(edges: DataFrame, iters: Int = 10,
                          unit: Long = 1000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val spark = edges.sparkSession
-    val durable = spark.sparkContext.getCheckpointDir.isDefined
     // non-eager: each round still PLANS against a truncated LogicalRDD
     // (checkpointing plans the round immediately, so optimizer time stays
     // linear in `iters`), but nothing materializes until the caller's
     // action — 10 driver-blocking per-round jobs collapse into one.
-    def truncate(df: DataFrame): DataFrame =
-      if (durable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
+    def truncate(df: DataFrame): DataFrame = Pin.truncate(df, eager = false)
     // both directions: undirected rank flow. The edge list and the rank
     // state are both lineage-truncated: without this every round's plan
     // embeds all previous rounds (and re-derives the edge list), and
@@ -187,10 +176,7 @@ object GraphOps {
     */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val spark = edges.sparkSession
-    val durable = spark.sparkContext.getCheckpointDir.isDefined
-    def truncate(df: DataFrame): DataFrame =
-      if (durable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
+    def truncate(df: DataFrame): DataFrame = Pin.truncate(df, eager = false)
     val dir = truncate(edges.select(col("u").as("s"), col("v").as("d"))
       .unionAll(edges.select(col("v").as("s"), col("u").as("d"))))
     var visited = seeds.select(col("node")).distinct()

@@ -64,7 +64,7 @@ object Robust {
     def median(in: DataFrame, vc: Column, out: String): DataFrame =
       if (small) groupedQuantile(in, keys, vc, 0.5, out)
       else exactGroupedQuantiles(in, keys, vc, Seq(0.5 -> out))
-        .localCheckpoint(true)
+        .transform(Pin.truncate(_))
     val med = median(df, v, "med")
     val withMed = df.select(keys.map(col) :+ v.as("__v"): _*)
       .join(broadcast(med), keys)
@@ -113,7 +113,7 @@ object Robust {
     * by 2+ downstream branches, and Catalyst re-evaluates a subtree per
     * reference, so WITHOUT materialization every reference re-scans the
     * fact table (measured: 6+ scans, 2.2× the window form it replaced at
-    * sf0.1). `localCheckpoint` pins each one after a single evaluation —
+    * sf0.1). [[Pin.truncate]] pins each one after a single evaluation —
     * executor-block storage, no driver round-trip — cutting the plan to
     * the algorithmic three scans (stats, histogram, probe). The
     * checkpointed frames become LogicalRDDs whose size estimate is the
@@ -130,7 +130,7 @@ object Robust {
     val stats = base.groupBy(kc: _*).agg(
       count(lit(1)).as("__n"), min(col("__v")).as("__lo"), max(col("__v")).as("__hi"))
       .withColumn("__w", (col("__hi") - col("__lo")) / lit(bins.toDouble))
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     // one row per (group, p): fractional rank idx and its two order stats
     val targets = stats
       .withColumn("__p", explode(array(ps.map(p => lit(p._1)): _*)))
@@ -158,7 +158,7 @@ object Robust {
       .filter(col("__r").between(col("__start"), col("__end")))
       .select(kc :+ col("__bin") :+ col("__r") :+
         (col("__r") - col("__start") + 1).as("__k"): _*)
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     val probed = binned
       .join(broadcast(located.select(kc :+ col("__bin"): _*).distinct()),
         keys :+ "__bin", "left_semi")
@@ -167,7 +167,7 @@ object Robust {
     val ordStats = probed.join(broadcast(located), keys :+ "__bin")
       .filter(col("__bin_rn") === col("__k"))
       .select(kc :+ col("__r") :+ col("__v").as("__ov"): _*)
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     val interp = live
       .join(broadcast(ordStats.select(
           kc :+ col("__r").as("__rlo") :+ col("__ov").as("__vlo"): _*)),
@@ -238,12 +238,12 @@ object Robust {
     // derived frames (one-row stats, ≤`bins`-row counts, ≤2k-row located /
     // ordStats) each feed 2+ downstream branches, and without pinning each
     // reference re-scans the fact table (measured ~10 scans, 4.5× the
-    // single-task ntile this replaced at sf0.1); localCheckpoint holds
+    // single-task ntile this replaced at sf0.1); Pin.truncate holds
     // them to one evaluation and the plan to its three algorithmic scans
     val stats = base.agg(
       count(lit(1)).as("__n"), min(col("__v")).as("__lo"), max(col("__v")).as("__hi"))
       .withColumn("__w", (col("__hi") - col("__lo")) / lit(bins.toDouble))
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     val tiles = stats
       .withColumn("__t", explode(sequence(lit(1L), lit(k.toLong))))
       .withColumn("__q", floor(col("__n") / k).cast("long"))
@@ -269,7 +269,7 @@ object Robust {
       .withColumn("__bin", least(lit((bins - 1).toLong),
         floor((col("__v") - col("__lo")) / col("__w")).cast("long")))
     val counts = binned.groupBy(col("__bin")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     // Cumulative counts over occupied bins WITHOUT a global window (a
     // window partitioned on the constant `__g` constant-folds to "no
     // partition defined" — the single-task shape this operator exists to
@@ -299,7 +299,7 @@ object Robust {
     val located = cum.crossJoin(broadcast(ranks))
       .filter(col("__r").between(col("__bstart"), col("__bend")))
       .select(col("__bin"), col("__r"), (col("__r") - col("__bstart") + 1).as("__k"))
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     val probed = binned
       .join(broadcast(located.select(col("__bin")).distinct()), Seq("__bin"), "left_semi")
       .withColumn("__bin_rn",
@@ -307,7 +307,7 @@ object Robust {
     val ordStats = probed.join(broadcast(located), Seq("__bin"))
       .filter(col("__bin_rn") === col("__k"))
       .select(col("__r"), col("__v").as("__ov"))
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
     live
       .join(broadcast(ordStats.select(col("__r").as("__start"), col("__ov").as("__vstart"))),
         Seq("__start"))

@@ -226,11 +226,11 @@ object SimilaritySearch {
     val dataCols = vecs.columns.filterNot(_ == "part").map(col).toSeq
     // deterministic hash-sample: partition-layout-independent, replayable
     val mod = 1000000L
-    val sample = vecs
+    val pins = Pin.scope()
+    val sample = pins.cache(vecs
       .filter(pmod(xxhash64(col("vec_id"), lit(seed)), lit(mod)) <
         lit((sampleFraction * mod).toLong))
-      .select(col("embedding"), col("nrm"))
-      .persist()
+      .select(col("embedding"), col("nrm")))
     // centroids are driver-resident and tiny (cells × dim), so nearest-cell
     // assignment is a row-LOCAL fold over a literal centroid array — no
     // join, no shuffle, whole-stage codegen end to end; ties break to the
@@ -273,13 +273,12 @@ object SimilaritySearch {
       // a cell the sample never hits keeps its old centroid (never NaN)
       cent = cent.map { case (p, c) => p -> means.getOrElse(p, c) }
     }
-    sample.unpersist()
+    pins.release() // the sample
     // full assignment against the new centroids; only cells some row
     // enters or leaves get re-encoded
-    val assigned = nearest(vecs, cent)
+    val assigned = pins.cache(nearest(vecs, cent)
       .withColumn("new_part", col("cpart").cast("long")).drop("cpart")
-      .withColumn("old_part", col("part").cast("long"))
-      .persist()
+      .withColumn("old_part", col("part").cast("long")))
     try {
       val changedCells = assigned
         .filter(col("new_part") =!= col("old_part"))
@@ -306,7 +305,7 @@ object SimilaritySearch {
           .foreach(p => FileUtil.copy(fs, p, fs, new Path(stagedVecs, p.getName),
             false, conf))
       }
-    } finally assigned.unpersist()
+    } finally pins.release()
   }
 
   /** Persisted IVF index, query side: scores the saved centroids, probes
@@ -387,7 +386,7 @@ object SimilaritySearch {
       // nPlanes·nTables-plane projection per consumer); ~n·300 B pinned
       val sigged = normed
         .withColumn("sig", lshBucket(col("embedding"), planes))
-        .localCheckpoint(true)
+        .transform(Pin.truncate(_))
       def side(sfx: String) = sigged.select(
         col("vec_id").as(s"id$sfx"), col("embedding").as(s"v$sfx"),
         col("nrm").as(s"n$sfx"), col("sig").as(s"sig$sfx"))
@@ -590,7 +589,7 @@ object SimilaritySearch {
     // cost of d17/d20/c5x. The pinned rows are narrow (id, vec, cluster,
     // norm ≈ 300 B) — ~60 MB at 100×, spread across executors at scale.
     withNorm(assigned, "embedding", "nrm")
-      .localCheckpoint(true)
+      .transform(Pin.truncate(_))
   }
 
   /** SemDeDup as a CANDIDATE-PAIR generator — the embedding-modality

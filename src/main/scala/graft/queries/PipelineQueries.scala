@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.Catalog
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
-import graft.operators.{Dedup, Multimodal, SimilaritySearch}
+import graft.operators.{Dedup, Multimodal, Pin, SimilaritySearch}
 
 /** Training-data-pipeline operators (dedup / similarity search / text
   * analysis / multimodal) over the `documents` and `embeddings` fixtures,
@@ -80,7 +80,7 @@ object PipelineQueries {
           sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
             .filter(col("df") <= 1000).select(col("shingle")),
           Seq("shingle"), "left_semi")
-        .localCheckpoint(true)
+        .transform(Pin.truncate(_))
       val nsh = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       val exact = sh.select(col("doc_id").as("doc1"), col("shingle"))
         .join(sh.select(col("doc_id").as("doc2"), col("shingle")), Seq("shingle"))
@@ -91,7 +91,7 @@ object PipelineQueries {
         .select(col("doc1"), col("doc2"),
           round(col("i") / (col("n1") + col("n2") - col("i")).cast("double"), 6)
             .as("jac"))
-        .localCheckpoint(true) // feeds the per-tau counts and the candidate join
+        .transform(Pin.truncate(_)) // feeds the per-tau counts and the candidate join
       val candJac = Dedup.lshCandidatePairs(sample)
         .select(col("doc1"), col("doc2"))
         .join(exact, Seq("doc1", "doc2"), "left")
@@ -691,12 +691,12 @@ object PipelineQueries {
       val train = graft.functions.TextFunctions
         .explodedDistinctShingles(docs.filter(col("doc_id") % 50 =!= 0),
           "doc_id", "text", 3) // row-local per-doc dedup: no corpus exchange
-        .localCheckpoint(true)
+        .transform(Pin.truncate(_))
       val bench = docs.filter(col("doc_id") % 50 === 0)
       val suiteShingles = graft.functions.TextFunctions
         .explodedShingles(bench, "doc_id", "text", 3)
         .join(bench.select(col("doc_id"), col("source").as("suite")), Seq("doc_id"))
-        .select(col("suite"), col("shingle")).distinct().localCheckpoint(true)
+        .select(col("suite"), col("shingle")).distinct().transform(Pin.truncate(_))
       val benchUnion = suiteShingles.select(col("shingle")).distinct()
       val totals = train
         .join(benchUnion.withColumn("hit", lit(1)), Seq("shingle"), "left")
@@ -1459,7 +1459,7 @@ object PipelineQueries {
       // One (media_id, ahash) row per image — bounded.
       val hashes = Multimodal.imageHashes(
         Multimodal.gradientImagesFromDocuments(Catalog.documents(s, dir)))
-        .localCheckpoint(true)
+        .transform(Pin.truncate(_))
       Multimodal.imageNearDupPairs(hashes, maxHamming = 12)
         .orderBy(col("id1"), col("id2"))
     }),
@@ -1492,7 +1492,7 @@ object PipelineQueries {
       // row per image — cheap to materialize, the d4/t36 precedent.
       val hashes = Multimodal.imagePHashes(
         Multimodal.gradientImagesFromDocuments(Catalog.documents(s, dir)))
-        .localCheckpoint(true)
+        .transform(Pin.truncate(_))
       val pairs = Multimodal.imageNearDupPairs(hashes, maxHamming = 12,
           hashCol = "phash")
         .select(col("id1").as("doc1"), col("id2").as("doc2"))
@@ -1535,7 +1535,7 @@ object PipelineQueries {
       // 3-4×. One (media_id, frame_idx, fp) row per peak — bounded.
       val fps = Multimodal.audioFingerprints(
         Multimodal.toneAudioFromDocuments(Catalog.documents(s, dir)))
-        .localCheckpoint(true)
+        .transform(Pin.truncate(_))
       val pairs = Multimodal.audioNearDupPairs(fps,
           minShared = 1, minContainment = 0.8)
         .select(col("id1").as("doc1"), col("id2").as("doc2"))
@@ -1605,7 +1605,7 @@ object PipelineQueries {
       // side feeds a single consumer, so it needs no pin.
       val index = Multimodal.audioFingerprints(
         Multimodal.toneAudioFromDocuments(docs))
-        .localCheckpoint(true)
+        .transform(Pin.truncate(_))
       val queries = Multimodal.audioFingerprints(
         Multimodal.toneQueriesFromDocuments(docs))
       Multimodal.audioMatches(queries, index)
