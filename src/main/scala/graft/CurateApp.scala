@@ -316,7 +316,11 @@ object CurateApp {
         // survivor corpus on (doc_id, shingle) just to dedup within each
         // doc — array_distinct inside the row emits the same row set with
         // zero exchange, and the count aggregate below then runs map-side
-        // over the scan partitioning
+        // over the scan partitioning. Its unique-(id, text)-rows
+        // precondition holds only for an input with unique doc_ids: stage
+        // 3 keeps every row whose doc_id is its text's minimum, so two
+        // rows sharing a doc_id and text both survive, and that doc's
+        // n_sh/n_overlap would count each shingle twice
         val sh3 = explodedDistinctShingles(
           survivors.select(col("doc_id"), col("text")),
           "doc_id", "text", 3)

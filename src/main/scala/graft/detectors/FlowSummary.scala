@@ -11,6 +11,11 @@ import org.apache.spark.sql.functions._
   * same way (with the p2p and alert-union frames built over it) before
   * fanning out to ~17 detectors, and its `release()` drops the pins.
   *
+  * Output contract: the rollup is hash-partitioned by `my_ip`. Nearly
+  * every detector and the learn pass group or join by the local host, so
+  * over a materialized pin of the summary they aggregate without another
+  * shuffle (see [[HogzillaBatch]] for why that pin is eager).
+  *
   * Expected raw sample columns (sFlow schema, HogHBaseRDD.scala:228-230):
   * srcIP, dstIP, srcPort, dstPort (strings), IPprotocol (string int),
   * packetSize, samplingRate (string long), tcpFlags (hex "0x12"),
@@ -51,9 +56,9 @@ object FlowSummary {
 
   /** Canonicalize samples so the key is always (myIP, myPort, alienIP,
     * alienPort, proto) regardless of capture orientation, then roll up to
-    * the A1 summary. Direction is SUMMED as a majority vote and status
-    * summed then tested >0 downstream — both reference quirks preserved
-    * (HogSFlow.scala:877-882).
+    * the A1 summary, hash-partitioned by `my_ip`. Direction is SUMMED as a
+    * majority vote and status summed then tested >0 downstream — both
+    * reference quirks preserved (HogSFlow.scala:877-882).
     */
   def summarize(samples: DataFrame, myNets: Seq[String]): DataFrame = {
     val srcLocal = isLocalIp(col("srcIP"), myNets)
@@ -82,5 +87,6 @@ object FlowSummary {
         max("ts").as("t_max"),
         avg("sample_rate").as("sample_rate"),
         sum("status").as("status"))
+      .repartition(col("my_ip"))
   }
 }

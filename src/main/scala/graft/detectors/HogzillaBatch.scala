@@ -37,7 +37,34 @@ import graft.operators.{Pin, ProfileStore}
   * 19-way union three times and the p2p frame about twelve times.
   *
   * The pins are [[Pin.Scope.cache]] pins, the kind a lost executor
-  * recomputes (see [[Pin]]).
+  * recomputes (see [[Pin]]). Two of them are shaped for their readers:
+  *  - The summary comes hash-partitioned by `my_ip` ([[FlowSummary]]'s
+  *    output contract) and is pinned eagerly, before any frame over it is
+  *    built. Under AQE a cached plan reports `UnknownPartitioning` until it
+  *    has run, so a lazy pin would leave every host-keyed aggregate (most
+  *    detectors, `p2p`, the learn pass) shuffling its slice of the summary
+  *    again. With the filled pin they run in place: on the sflow_batch
+  *    benchmark window the batch plans 44 shuffle exchanges (and one
+  *    rebalance per profile table, below), none in `p2p`, against 116
+  *    over a lazy pin of an unpartitioned summary.
+  *  - The alert union is one partition. Alert rows scale with the alerted
+  *    hosts, not the samples, so one task holds them easily. Its readers then
+  *    read one partition whose task stops at a shuffle boundary, instead
+  *    of every task deserializing the 19 detector subplans. The returned
+  *    alerts are one partition too (coalesced after the detail joins,
+  *    which shuffle the union by host once the flow details outgrow a
+  *    broadcast), so the event sink gets one file per batch.
+  * The trade-off: one hot local host now lands in one partition for every
+  * host-keyed aggregate over the summary, where before only the final
+  * merge of each aggregate was per key. On a 4-core run of 1M samples in
+  * which one local server carries 40% of the flows the batch was still
+  * faster (63-89 s against 85-110 s) with the same alerts; with many
+  * more cores the hot host's task would weigh more and is unmeasured.
+  * The learned profile tables would keep the summary's partitions too,
+  * which AQE cannot coalesce (a cached scan is not a shuffle), so they
+  * come back rebalanced: a writer gets files sized by the tables' bytes,
+  * not one per `spark.sql.shuffle.partitions`.
+  *
   * Pinning the reputation lists, `p2pHosts` and the current hist02 as
   * well was measured on the sflow_batch benchmark and gained nothing, so
   * they stay unpinned.
@@ -59,7 +86,11 @@ object HogzillaBatch {
       hist05: DataFrame,     // ports per alien /24 network
       hist06: DataFrame,     // log-binned upload bins per alien /24
       hist07: DataFrame,     // max distinct-pair fan-out per (host, port)
-      hist08: DataFrame)     // distinct-port-count distribution per host
+      hist08: DataFrame) {   // distinct-port-count distribution per host
+    def map(f: DataFrame => DataFrame): ProfileTables = ProfileTables(f(hist01),
+      f(hist02), f(hist02snap), f(hist03), f(hist04), f(hist05), f(hist06),
+      f(hist07), f(hist08))
+  }
 
   /** Derived reputation lists from one run (pass 1) — persist and feed
     * back as the next run's exclusions, as the reference's HBase
@@ -110,7 +141,8 @@ object HogzillaBatch {
     // Spark re-plan those that never materialized
     val pins = Pin.scope()
 
-    val summary = pins.cache(FlowSummary.summarize(samples, myNets))
+    // eager, before any frame over it is built (scaladoc above)
+    val summary = pins.cache(FlowSummary.summarize(samples, myNets), eager = true)
 
     val generalExcluded = c.getSetString("general.excludeIPs", Set.empty)
     // reference semantics (HogSFlow.scala:173-189): per-detector
@@ -208,9 +240,10 @@ object HogzillaBatch {
     val enabled = detectorRuns.filterNot { case (section, _) => c.isDisabled(section) }
       .map { case (section, build) => excluding(section)(build()) }
     // the alert union, pinned after p2p so its cached plan reads the p2p
-    // pin; every section disabled → an empty frame with the alert schema
+    // pin, in one partition (scaladoc above); every section disabled → an
+    // empty frame with the alert schema
     val bare = pins.cache(enabled.reduceOption(_ union _)
-      .getOrElse(detectorRuns.head._2().limit(0)))
+      .getOrElse(detectorRuns.head._2().limit(0)).repartition(1))
 
     // alert payloads: bounded top-K rendered flow lists for every alerted
     // host (HogSFlow.scala:662-713) — my_ip-keyed alerts get the local
@@ -245,6 +278,9 @@ object HogzillaBatch {
       .select("signature_id", "detector", "title", "priority", "time",
         "my_ip", "alien_ip", "metric", "n_flows", "note", "ports",
         "username", "coords", "flows")
+      // one partition, so a batch appends one file to the event sink even
+      // when the detail joins above re-shuffle the union by host
+      .coalesce(1)
 
     // learn pass: current-window histograms merged into the profiles
     // (decayed weighted mean, cold-start-safe) — S6's delete+put upsert
@@ -256,7 +292,7 @@ object HogzillaBatch {
         Seq("name"))
     val hist02Cur = Detectors.hist02Current(summary)
       .withColumnRenamed("my_ip", "name")
-    val updated = ProfileTables(
+    val learned = ProfileTables(
       hist01 = ProfileStore.update(profiles.hist01,
         currentHist("my_ip", col("my_port"))),
       hist02 = ProfileStore.update(profiles.hist02, hist02Cur),
@@ -284,6 +320,7 @@ object HogzillaBatch {
         Detectors.hist07Current(summary, p2pHosts)),
       hist08 = ProfileStore.update(profiles.hist08,
         Detectors.hist08Current(summary, p2pHosts)))
-    (withDetail, updated, reputation, () => pins.release())
+    // rebalanced so AQE sizes their files (scaladoc above)
+    (withDetail, learned.map(_.hint("rebalance")), reputation, () => pins.release())
   }
 }

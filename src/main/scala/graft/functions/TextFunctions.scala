@@ -90,6 +90,11 @@ object TextFunctions {
     * per consumer (the single biggest frame of the overlap-gate
     * pipelines); downstream per-doc aggregates run map-side over the
     * scan partitioning instead.
+    *
+    * Precondition: each (id, text) row is unique. The identity above only
+    * holds then: a duplicated row emits its shingles twice, where the
+    * global distinct merged them, so per-id shingle counts double. Callers
+    * dedup ids upstream or accept that inflation.
     */
   def explodedDistinctShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =

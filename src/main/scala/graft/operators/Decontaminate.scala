@@ -225,7 +225,10 @@ object Decontaminate {
     // explodedDistinctShingles rationale): the struct id rides every
     // row, so the old global distinct only deduped within a document —
     // array_distinct inside the row emits the same row set without the
-    // (sid, shingle) exchange, and the checkpoint pins the same blocks
+    // (sid, shingle) exchange, and the checkpoint pins the same blocks.
+    // Its unique-(id, text)-rows precondition is not promised here: a
+    // doc_id repeated within one side counts its shingles once per row in
+    // shCounts and n_t/n_b
     val allSh = graft.functions.TextFunctions.explodedDistinctShingles(
         sides, "sid", "text", 3)
       .transform(Pin.truncate(_))

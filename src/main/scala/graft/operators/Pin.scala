@@ -22,10 +22,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `localCheckpoint` (executor-local MEMORY_AND_DISK blocks, fast, but
   * unrecoverable once an executor is lost). There is no other switch.
   *
-  * Eager vs lazy: `eager = true` materializes the blocks with a job of
-  * its own right away; `eager = false` only marks the frame, and the
-  * first job that reads it materializes the blocks (one job per round
-  * instead of two in an iteration, and nothing at all if no one reads it).
+  * Eager vs lazy, for both kinds: `eager = true` materializes the blocks
+  * with a job of its own right away; `eager = false` only marks the frame,
+  * and the first job that reads it materializes the blocks (one job per
+  * round instead of two in an iteration, and nothing at all if no one
+  * reads it). A truncation defaults to eager, a cache to lazy. An eager
+  * cache also matters to plans built over it later: under AQE a cached
+  * plan reports `UnknownPartitioning` until it has run, so only a consumer
+  * planned after the blocks exist can reuse the cached frame's
+  * partitioning instead of shuffling it again.
   *
   * Release: a [[Scope]] collects the pins of one run and `release()`
   * drops them newest first with a blocking unpersist. A truncated frame
@@ -47,10 +52,17 @@ object Pin {
   final class Scope private[Pin] () {
     private val drops = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
-    /** `df.cache()`, dropped by [[release]]. */
-    def cache(df: DataFrame): DataFrame = {
+    /** `df.cache()`, dropped by [[release]]; `eager` fills the blocks now.
+      * A fill that throws drops the entry before rethrowing, since the
+      * caller never gets a frame (or a scope) to release.
+      */
+    def cache(df: DataFrame, eager: Boolean = false): DataFrame = {
       drops += (() => df.unpersist(blocking = true))
       df.cache()
+      if (eager) try df.count() catch {
+        case e: Throwable => df.unpersist(blocking = true); throw e
+      }
+      df
     }
 
     /** [[Pin.truncate]], dropped by [[release]]. A Dataset-level

@@ -1,8 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Union}
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CacheProbe
 import org.scalatest.funsuite.AnyFunSuite
@@ -392,6 +397,40 @@ class DetectorSpec extends AnyFunSuite {
       assert(unions.isEmpty, s"${unions.size} Union node(s) re-planned in the alert frame:\n$plan")
       assert(cachedRelations(plan).nonEmpty)
       assert(alerts.filter(col("detector") === "smtpTalkers").count() == 1)
+    } finally release()
+  }
+
+  /** Every node the planner put into a physical plan: through AQE's
+    * initial plans (before runtime re-planning drops, say, the exchange of
+    * an empty side), but not into the cached plan behind a pin's scan.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.initialPlan)
+    case _: InMemoryTableScanExec => Nil
+    case other => (other.children ++ other.subqueries).flatMap(nodes)
+  })
+
+  private def shuffles(p: SparkPlan) = nodes(p).count(_.isInstanceOf[ShuffleExchangeLike])
+
+  test("HogzillaBatch.run: host-keyed plans reuse the summary's my_ip partitioning") {
+    val (_, updated, _, release) = fullDag()
+    try {
+      // hist07's learn pass reads both the summary and the p2p pin
+      val pins = cachedRelations(updated.hist07.queryExecution.withCachedData)
+      def pin(column: String) = pins.find(_.output.exists(_.name == column))
+        .getOrElse(fail(s"no pin with a $column column among ${pins.map(_.output)}"))
+      val p2pPlan = pin("detector").cachedPlan
+      assert(shuffles(p2pPlan) == 0, s"the p2p pin's plan shuffles the summary again:\n$p2pPlan")
+      // the hist01 write plan: one exchange for the stored profile side of
+      // the merge join and one for the rebalance that sizes the written
+      // files; the summary side is already keyed by host
+      val plan = updated.hist01.queryExecution.executedPlan
+      assert(shuffles(plan) == 2, s"hist01 runs ${shuffles(plan)} shuffles:\n$plan")
+      val scanned = nodes(plan).collect { case s: InMemoryTableScanExec => s.outputPartitioning }
+      assert(scanned.exists {
+        case HashPartitioning(Seq(a: Attribute), _) => a.name == "my_ip"
+        case _ => false
+      }, s"no summary scan reports HashPartitioning(my_ip): $scanned")
     } finally release()
   }
 

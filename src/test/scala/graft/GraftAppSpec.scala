@@ -35,7 +35,11 @@ class GraftAppSpec extends AnyFunSuite {
         "IPprotocol", "packetSize", "samplingRate", "tcpFlags", "timestamp")
       .write.parquet(samplesPath)
 
+    // one batch appends one file to the event sink, however many
+    // detector sections fired
+    def alertFiles = new java.io.File(s"$outDir/alerts").list().count(_.startsWith("part-"))
     GraftApp.run(spark, samplesPath, stateDir, outDir, Seq("10.0."))
+    assert(alertFiles == 1, s"$alertFiles alert files after one run")
     val alerts1 = spark.read.parquet(s"$outDir/alerts")
     assert(alerts1.filter(col("detector") === "topTalkers").count() >= 1)
     // event-row fidelity: the alert schema is a superset of the
@@ -50,8 +54,13 @@ class GraftAppSpec extends AnyFunSuite {
     assert(tt.getAs[Long]("signature_id") == 826001001L)
     assert(tt.getAs[String]("title") == "HZ: Top talker identified")
     assert(tt.getAs[Int]("priority") == 2)
-    // profile families materialized into the state dir
+    // profile families materialized into the state dir, each table in
+    // as few files as its bytes need: one, for this fixture
     assert(new java.io.File(s"$stateDir/hist01").exists())
+    val stateFiles = Seq("hist01", "hist02", "hist02snap", "hist03", "hist04",
+        "hist05", "hist06", "hist07", "hist08").map(h =>
+      h -> new java.io.File(s"$stateDir/$h").list().count(_.startsWith("part-")))
+    assert(stateFiles.forall(_._2 == 1), s"state files per table: $stateFiles")
     val size1 = spark.read.parquet(s"$stateDir/hist01")
       .agg(sum(col("size"))).head().getLong(0)
 
@@ -59,6 +68,7 @@ class GraftAppSpec extends AnyFunSuite {
     GraftApp.run(spark, samplesPath, stateDir, outDir, Seq("10.0."))
     val alerts2 = spark.read.parquet(s"$outDir/alerts")
     assert(alerts2.count() > alerts1.count())
+    assert(alertFiles == 2, s"$alertFiles alert files after two runs")
     val size2 = spark.read.parquet(s"$stateDir/hist01")
       .agg(sum(col("size"))).head().getLong(0)
     assert(size2 > size1, s"hist01 size should advance: $size1 -> $size2")
@@ -102,6 +112,24 @@ class GraftAppSpec extends AnyFunSuite {
     val summary = FlowSummary.summarize(spark.read.parquet(samplesPath), Seq("10.0."))
     assert(summary.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }.isEmpty,
       "the flow summary of the failed run is still cached")
+  }
+
+  test("GraftApp.run: a batch that fails in its first job still releases the summary pin") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graftapp_badrow").toFile.getAbsolutePath
+    val samplesPath = s"$root/samples"
+    // a packetSize that does not parse: the eager summary fill throws
+    // under ANSI casts, before run returns its release
+    (1 to 6).map(i => ("10.0.0.9", "93.9.9." + i, "1900", "53713", "17",
+        if (i == 3) "5k" else "5000", 10L, "0x00", 100L + i))
+      .toDF("srcIP", "dstIP", "srcPort", "dstPort",
+        "IPprotocol", "packetSize", "samplingRate", "tcpFlags", "timestamp")
+      .write.parquet(samplesPath)
+    val before = CacheProbe.entries(spark)
+    intercept[Exception] {
+      GraftApp.run(spark, samplesPath, s"$root/state", s"$root/out", Seq("10.0."))
+    }
+    assert(CacheProbe.entries(spark) == before, "GraftApp.run left the summary cached")
   }
 
   test("FileSink: GraftApp delivers alert files via alert.notify=file:<dir>") {

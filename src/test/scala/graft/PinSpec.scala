@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Pin}
 
 /** The pin policy lives in `graft.operators.Pin` alone: no other main
   * source pins a frame by hand, scoped pins are released when their run
@@ -39,6 +39,21 @@ class PinSpec extends AnyFunSuite {
     } yield s"${rel(p)}:${n + 1}: $token"
     assert(sources.size > 50, s"scanned only ${sources.size} files")
     assert(hits.isEmpty, hits.mkString("pins outside Pin:\n", "\n", ""))
+  }
+
+  test("an eager cache pin fills every partition before any consumer runs; release() drops it") {
+    import spark.implicits._
+    val scope = Pin.scope()
+    val before = persistedIds
+    scope.cache((1 to 1000).toDF("x").repartition(5), eager = true)
+    val pinned = persistedIds -- before
+    assert(pinned.size == 1, s"expected one cached RDD, got $pinned")
+    def stored = spark.sparkContext.getRDDStorageInfo.filter(i => pinned(i.id))
+    assert(stored.length == 1 && stored.head.numPartitions > 0 &&
+      stored.head.numCachedPartitions == stored.head.numPartitions,
+      stored.map(i => s"${i.numCachedPartitions}/${i.numPartitions}").mkString(","))
+    scope.release()
+    assert((persistedIds -- before).isEmpty && stored.isEmpty, "release() left the pin cached")
   }
 
   test("ngramJaccardPairs leaves only its output pinned") {
