@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.detectors.HogzillaBatch
-import graft.detectors.HogzillaBatch.{ProfileTables, ReputationLists}
+import graft.detectors.HogzillaBatch.ProfileTables
+import graft.operators.StateSwap
 
 /** The production entry point — the reference's 6-hourly batch job
   * (`Hogzilla.main` + the `start-hogzilla.sh` relaunch loop) as one
@@ -32,20 +34,9 @@ import graft.detectors.HogzillaBatch.{ProfileTables, ReputationLists}
   */
 object GraftApp {
 
-  private val HistNames = Seq("hist01", "hist02", "hist02snap", "hist03",
-    "hist04", "hist05", "hist06", "hist07", "hist08")
-
-  private def readOr(spark: SparkSession, path: String, fallback: => DataFrame): DataFrame =
-    graft.operators.StateSwap.readOrElse(spark, path, fallback)
-
-  private def emptyTable(spark: SparkSession, cols: (String, String)*): DataFrame = {
-    import org.apache.spark.sql.types._
-    val fields = cols.map { case (n, t) => StructField(n, CatalystSqlParser.parseDataType(t)) }
+  private def emptyTable(spark: SparkSession, ddl: String): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(fields))
-  }
-  // parser alias kept private so the import list stays minimal
-  private val CatalystSqlParser = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+      StructType.fromDDL(ddl))
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
@@ -71,15 +62,12 @@ object GraftApp {
           config: GraftConfig = GraftConfig.empty,
           sink: Option[graft.operators.AlertSink.Sink] = None): Unit = {
     val samples = spark.read.parquet(samplesPath)
-    val profiles = {
-      val ts = HistNames.map(h =>
-        readOr(spark, s"$stateDir/$h", HogzillaBatch.emptyProfiles(spark)))
-      ProfileTables(ts(0), ts(1), ts(2), ts(3), ts(4), ts(5), ts(6), ts(7), ts(8))
-    }
-    val blacklist = readOr(spark, s"$stateDir/blacklist",
-      emptyTable(spark, "prefix" -> "string"))
-    val osRepos = readOr(spark, s"$stateDir/os_repos",
-      emptyTable(spark, "repo_ip" -> "string", "os" -> "string"))
+    val profiles = ProfileTables.fromSeq(ProfileTables.Names.map(h =>
+      StateSwap.readOrElse(spark, s"$stateDir/$h", HogzillaBatch.emptyProfiles(spark))))
+    val blacklist = StateSwap.readOrElse(spark, s"$stateDir/blacklist",
+      emptyTable(spark, "prefix string"))
+    val osRepos = StateSwap.readOrElse(spark, s"$stateDir/os_repos",
+      emptyTable(spark, "repo_ip string, os string"))
 
     val (alerts, updated, reputation, release) =
       HogzillaBatch.run(spark, samples, myNets, profiles, blacklist, osRepos, config)
@@ -104,14 +92,8 @@ object GraftApp {
       // profile state: crash-safe stage-then-swap (Hadoop FS, loud renames,
       // marker-file recovery — StateSwap) so a crash mid-write can't leave a
       // family half-replaced OR silently cold-start the next run
-      val updatedSeq = Seq(
-        "hist01" -> updated.hist01, "hist02" -> updated.hist02,
-        "hist02snap" -> updated.hist02snap, "hist03" -> updated.hist03,
-        "hist04" -> updated.hist04, "hist05" -> updated.hist05,
-        "hist06" -> updated.hist06, "hist07" -> updated.hist07,
-        "hist08" -> updated.hist08)
-      updatedSeq.foreach { case (name, df) =>
-        graft.operators.StateSwap.swap(df, s"$stateDir/$name")
+      ProfileTables.Names.zip(updated.toSeq).foreach { case (name, df) =>
+        StateSwap.swap(df, s"$stateDir/$name")
       }
     } finally release()
   }

@@ -26,6 +26,47 @@ case class FlowLineFields(myIp: String, myPort: String, alienIp: String,
   * parameters so a config file can override, and each is independently
   * disable-able by simply not calling it (HogzillaBatch sequences the DAG).
   *
+  * Key families. Most sections and learn inputs are a threshold over a
+  * per-key rollup of the summary, so the rollups are computed once per
+  * key, with conditional columns (`sum(when(c, x))`, `count_if(c)`), and
+  * each section is a projection, a threshold and a top-k over its family:
+  *  - host (`my_ip`, [[hostFeatures]]): topTalkers, smtpTalkers,
+  *    udpAmplifier, dnsTunnel, icmpTunnel, [[ftpServers]] and the HIST04
+  *    learn input;
+  *  - pair (`my_ip`, `alien_ip`, [[pairFeatures]]): mediaStreaming,
+  *    abusedSmtp, vPortScan and HIST08, [[ftpTalkerPairs]], and through
+  *    [[hostPairs]] atypicalPairs, DDoS's flow and partner counts and
+  *    HIST03;
+  *  - alien port (`my_ip`, `alien_port`, [[alienPortFeatures]]):
+  *    hPortScan and HIST07, atypicalAlienPorts and HIST02/HIST02.1;
+  *  - served port (`my_ip`, `my_port`, [[servedPortFeatures]]):
+  *    proxyServers, atypicalPorts and HIST01;
+  *  - alien net (`/24`, [[alienNetFeatures]]): bigProviders and the
+  *    eligible networks of HIST05 and HIST06.
+  *
+  * The pair and alien-port families both roll up one [[contacts]]
+  * aggregate (`my_ip`, `alien_ip`, `alien_port`): the distinct counts
+  * they need (alien ports per pair, aliens per port) are counts of its
+  * rows. Distinct counts are built this way, as a count over a finer
+  * rollup, and not as `countDistinct` in a family with other aggregates:
+  * two distinct columns make Spark plan an `Expand` (a copy of every row
+  * per distinct column and one more, then shuffles that lose the
+  * summary's `my_ip` partitioning), and one makes it sum the other
+  * columns per distinct value first, which would change the
+  * double-valued byte sums. Those sums are direct
+  * aggregates over summary rows; the one that passes through the contact
+  * level (abusedSmtp's bytes) is keyed by port 25, so exactly one contact
+  * holds each pair's sum. The alien-net family has one distinct count
+  * and a `max`, which no grouping order changes.
+  *
+  * Sections that join or window before they group keep their own
+  * aggregate: atypicalData (anti-joins the BigProvider networks per
+  * flow), botnetCC (prefix join), osDiscovery (repo join), DDoS's gap
+  * window, alienAccess (keyed by `alien_ip`, no family shares it), the
+  * HIST05/HIST06 builds (semi-join the eligible networks) and p2pTalkers'
+  * per-pair rollup (its port sets would make the pair family an object
+  * aggregate).
+  *
   * Scale notes baked in:
   *  - per-alert flow detail is a bounded top-K hash aggregate
   *    (O(limit) state per key, map-side combining), never an unbounded
@@ -160,40 +201,135 @@ object Detectors {
         concat_ws("\n", transform(col("win"), renderLine _)).as("flows_detail"))
   }
 
+  // ------------------------------------------------------------ key families
+
+  /** The host family: one row per local host. Each section's row filter
+    * is a conditional column, so every sum runs over the same summary
+    * rows, in the same order, as the section's own filtered aggregate did.
+    * `udpMinPkts`/`ampPorts` and `icmpMinPktSize` are udpAmplifier's and
+    * icmpTunnel's row filters.
+    */
+  def hostFeatures(summary: DataFrame, myNets: Seq[String], udpMinPkts: Int = 2000,
+      ampPorts: Seq[String] = Seq("19", "53", "123", "161", "389", "1900"),
+      icmpMinPktSize: Int = 200): DataFrame = {
+    val smtp = col("alien_port") === "25" && col("n_pkts") > 3 &&
+      !FlowSummary.isLocalIp(col("alien_ip"), myNets)
+    val udp = col("proto") === "17" && col("my_port").isin(ampPorts: _*) &&
+      col("n_pkts") > udpMinPkts
+    val dns = col("alien_port") === "53" || col("my_port") === "53"
+    val icmp = col("proto").isin("1", "58") &&
+      (col("bytes_up") + col("bytes_down")) / col("n_pkts") > icmpMinPktSize
+    summary.groupBy("my_ip")
+      .agg(count(lit(1)).as("nf"), sum(col("bytes_up") * col("sample_rate")).as("up"),
+        sum(when(smtp, scaledBytes)).as("smtp_bytes"),
+        sum(when(smtp, col("n_pkts"))).as("smtp_pkts"), count_if(smtp).as("smtp_nf"),
+        sum(when(udp, col("n_pkts"))).as("udp_pkts"), count_if(udp).as("udp_nf"),
+        sum(when(dns, scaledBytes)).as("dns_bytes"), count_if(dns).as("dns_nf"),
+        sum(when(icmp, scaledBytes)).as("icmp_bytes"), count_if(icmp).as("icmp_nf"),
+        count_if(col("my_port") === "21").as("ftp_nf"))
+  }
+
+  /** The rollup per (my_ip, alien_ip, alien_port) that [[pairFeatures]]
+    * and [[alienPortFeatures]] sum up, with every row filter those
+    * families need as a conditional column: mediaStreaming's
+    * (`media*`: port not excluded, duration in range), abusedSmtp's
+    * (port 25), vPortScan's probes (`vscan_nf`: to a port below
+    * `vScanMaxPort` from an ephemeral port, <5 packets), FTP
+    * (`ftp_nf`), HIST02's outbound flows (`out_nf`: direction > 0, more
+    * than `minPktsPerFlow` packets) and hPortScan's probes (`probe_nf`:
+    * <5 packets).
+    */
+  def contacts(summary: DataFrame, mediaMinDuration: Int = 300,
+      mediaMaxDuration: Int = 7200, mediaExcludePorts: Seq[String] = Seq("1194"),
+      vScanMaxPort: Int = 1024, minPktsPerFlow: Int = 2): DataFrame = {
+    val media = !col("alien_port").isin(mediaExcludePorts: _*) &&
+      (col("t_max") - col("t_min")).between(mediaMinDuration, mediaMaxDuration)
+    val smtp = col("alien_port") === "25"
+    summary.groupBy("my_ip", "alien_ip", "alien_port")
+      .agg(count(lit(1)).as("nf"),
+        sum(when(media, col("bytes_up"))).as("media_up"),
+        sum(when(media, col("bytes_down"))).as("media_down"), count_if(media).as("media_nf"),
+        sum(when(smtp, scaledBytes)).as("smtp_bytes"), count_if(smtp).as("smtp_nf"),
+        count_if(col("alien_port").cast("int") < vScanMaxPort &&
+          col("my_port").cast("int") > 1023 && col("n_pkts") < 5).as("vscan_nf"),
+        count_if(col("my_port") === "21" || col("alien_port") === "21").as("ftp_nf"),
+        count_if(col("direction") > 0 && col("n_pkts") > minPktsPerFlow).as("out_nf"),
+        count_if(col("n_pkts") < 5).as("probe_nf"))
+  }
+
+  /** The pair family from [[contacts]]: one row per (my_ip, alien_ip).
+    * `vscan_ports` is the number of distinct alien ports the pair probed.
+    */
+  def pairFeatures(contacts: DataFrame): DataFrame =
+    contacts.groupBy("my_ip", "alien_ip")
+      .agg(sum("nf").as("nf"), sum("media_up").as("media_up"),
+        sum("media_down").as("media_down"), sum("media_nf").as("media_nf"),
+        sum("smtp_bytes").as("smtp_bytes"), sum("smtp_nf").as("smtp_nf"),
+        count_if(col("vscan_nf") > 0).as("vscan_ports"), sum("vscan_nf").as("vscan_nf"),
+        sum("ftp_nf").as("ftp_nf"))
+
+  /** Distinct partners (`pairs`) and flows (`nf`) per host, from the pair
+    * family.
+    */
+  private[detectors] def hostPairs(pair: DataFrame): DataFrame =
+    pair.groupBy("my_ip").agg(count("alien_ip").as("pairs"), sum("nf").as("nf"))
+
+  /** The alien-port family from [[contacts]]: one row per (my_ip,
+    * alien_port). `probe_aliens` is the number of distinct aliens probed
+    * on the port.
+    */
+  def alienPortFeatures(contacts: DataFrame): DataFrame =
+    contacts.groupBy("my_ip", "alien_port")
+      .agg(sum("out_nf").as("out_nf"), sum("probe_nf").as("probe_nf"),
+        count_if(col("probe_nf") > 0 && col("alien_ip").isNotNull).as("probe_aliens"))
+
+  /** The served-port family: per (my_ip, my_port), how many distinct alien
+    * ports hit it and how many of them are well-known (<1024), its flows,
+    * its served flows (direction < 0) and those with more than
+    * `minPktsPerFlow` packets (`listen_nf`, atypicalPorts' HIST01 count).
+    * The reference computes these inside the atypicalPorts filter closure
+    * (HogSFlow.scala:1440-1478). The distinct counts are counts of the
+    * rows of a rollup per alien port (object scaladoc).
+    */
+  def servedPortFeatures(summary: DataFrame, minPktsPerFlow: Int = 2): DataFrame =
+    summary.groupBy("my_ip", "my_port", "alien_port")
+      .agg(count(lit(1)).as("nf"), count_if(col("direction") < 0).as("served_nf"),
+        count_if(col("direction") < 0 && col("n_pkts") > minPktsPerFlow).as("listen_nf"))
+      .groupBy("my_ip", "my_port")
+      .agg(count("alien_port").as("qtd_alien_ports"),
+        count_if(col("alien_port").cast("int") < 1024).as("low_alien_ports"),
+        sum("nf").as("nf_port"), sum("served_nf").as("nf_served"),
+        sum("listen_nf").as("listen_nf"))
+
+  /** The alien-net family: per external /24, the distinct local hosts
+    * that touched it and the largest effective upload of one flow group.
+    */
+  def alienNetFeatures(summary: DataFrame, myNets: Seq[String]): DataFrame =
+    summary
+      .filter(!FlowSummary.isLocalIp(col("alien_ip"), myNets))
+      .groupBy(NetFunctions.significantNetwork(col("alien_ip")).as("net"))
+      .agg(countDistinct("my_ip").as("hosts"),
+        max(col("bytes_up") * col("sample_rate")).as("max_up"))
+
   // ------------------------------------------------------------ derived sets
 
   /** (my_ip, alien_ip) pairs talking FTP — excluded from P2P/atypical
     * detectors (J3, HogSFlow.scala:1108-1133).
     */
-  def ftpTalkerPairs(summary: DataFrame): DataFrame =
-    summary.filter(col("my_port") === "21" || col("alien_port") === "21")
-      .select("my_ip", "alien_ip").distinct()
+  def ftpTalkerPairs(pair: DataFrame): DataFrame =
+    pair.filter(col("ftp_nf") > 0).select("my_ip", "alien_ip")
 
   /** Hosts serving FTP (HogSFlow.scala:1140). */
-  def ftpServers(summary: DataFrame): DataFrame =
-    summary.filter(col("my_port") === "21").select("my_ip").distinct()
-
-  /** Served-port statistics per (my_ip, my_port): how many distinct alien
-    * ports hit it, how many flows, how many of the alien ports are
-    * well-known (<1024). The reference computes these inside the
-    * atypicalPorts filter closure (HogSFlow.scala:1440-1478); here it is
-    * one aggregation shared by [[proxyServers]] and [[atypicalPorts]].
-    */
-  private[detectors] def servedPortStats(summary: DataFrame): DataFrame =
-    summary.groupBy("my_ip", "my_port")
-      .agg(countDistinct("alien_port").as("qtd_alien_ports"),
-        countDistinct(when(col("alien_port").cast("int") < 1024, col("alien_port")))
-          .as("low_alien_ports"),
-        count(lit(1)).as("nf_port"),
-        sum(when(col("direction") < 0, 1L).otherwise(0L)).as("nf_served"))
+  def ftpServers(host: DataFrame): DataFrame =
+    host.filter(col("ftp_nf") > 0).select("my_ip")
 
   /** Intra-run reputation derivation: proxy servers (HogSFlow.scala:1480-1489).
     * A host whose "served" port fans out to >2 well-known alien ports, and
     * where those dominate (>50% of the distinct alien ports low), is proxying
     * rather than serving — whitelisted for this and later runs.
     */
-  def proxyServers(summary: DataFrame): DataFrame =
-    servedPortStats(summary)
+  def proxyServers(servedPort: DataFrame): DataFrame =
+    servedPort
       .filter(col("nf_served") > 0 && // the port actually serves (direction<0)
         col("low_alien_ports") > 2 &&
         col("qtd_alien_ports").cast("double") / col("low_alien_ports") > 0.5)
@@ -205,23 +341,16 @@ object Detectors {
     * upload. Consumed by [[atypicalData]] (HogSFlow.scala:1840,1851) in the
     * same run — explicit two-pass sequencing instead of a side-channel store.
     */
-  def bigProviders(summary: DataFrame, myNets: Seq[String],
-      minDistinctHosts: Int = 4, minBytes: Long = 1073741824L): DataFrame =
-    summary
-      .filter(!FlowSummary.isLocalIp(col("alien_ip"), myNets))
-      .groupBy(NetFunctions.significantNetwork(col("alien_ip")).as("net"))
-      .agg(countDistinct("my_ip").as("hosts"),
-        max(col("bytes_up") * col("sample_rate")).as("max_up"))
-      .filter(col("hosts") > minDistinctHosts && col("max_up") > minBytes)
+  def bigProviders(alienNet: DataFrame, minDistinctHosts: Int = 4,
+      minBytes: Long = 1073741824L): DataFrame =
+    alienNet.filter(col("hosts") > minDistinctHosts && col("max_up") > minBytes)
       .select("net")
 
   // -------------------------------------------------------------- detectors
 
   /** Top talkers by effective upload (O1, HogSFlow.scala:1060-1082). */
-  def topTalkers(summary: DataFrame, k: Int = 100): DataFrame =
-    summary.groupBy("my_ip")
-      .agg(sum(col("bytes_up") * col("sample_rate")).as("up"), count(lit(1)).as("nf"))
-      .orderBy(col("up").desc, col("my_ip"))
+  def topTalkers(host: DataFrame, k: Int = 100): DataFrame =
+    host.orderBy(col("up").desc, col("my_ip"))
       .limit(k)
       .select(alert("topTalkers", col("my_ip"), lit(null).cast("string"),
         col("up"), col("nf"), lit("top upload")): _*)
@@ -231,24 +360,18 @@ object Detectors {
     * bytes over threshold, and the host is NOT a known SMTP server/sender
     * per its HIST01/HIST02 profiles (J5/H6).
     */
-  def smtpTalkers(summary: DataFrame, myNets: Seq[String],
-      hist01: DataFrame, hist02: DataFrame,
+  def smtpTalkers(host: DataFrame, hist01: DataFrame, hist02: DataFrame,
       minBytes: Long = 20971520L, k: Int = 100): DataFrame = {
-    val rolled = summary
-      .filter(col("alien_port") === "25" && col("n_pkts") > 3 &&
-        !FlowSummary.isLocalIp(col("alien_ip"), myNets))
-      .groupBy("my_ip")
-      .agg(sum(scaledBytes).as("eff_bytes"), sum("n_pkts").as("pkts"),
-        count(lit(1)).as("connections"))
-      .filter(col("connections") > 1 && col("eff_bytes") > minBytes && col("pkts") > 20)
+    val rolled = host
+      .filter(col("smtp_nf") > 1 && col("smtp_bytes") > minBytes && col("smtp_pkts") > 20)
     val smtpServer = profileTypical(hist01, "25").withColumnRenamed("name", "my_ip")
     val smtpSender = profileTypical(hist02, "25").withColumnRenamed("name", "my_ip")
     rolled
       .join(smtpServer, Seq("my_ip"), "left_anti")
       .join(smtpSender, Seq("my_ip"), "left_anti")
-      .orderBy(col("eff_bytes").desc, col("my_ip")).limit(k)
+      .orderBy(col("smtp_bytes").desc, col("my_ip")).limit(k)
       .select(alert("smtpTalkers", col("my_ip"), lit(null).cast("string"),
-        col("eff_bytes"), col("connections"), lit("atypical SMTP volume")): _*)
+        col("smtp_bytes"), col("smtp_nf"), lit("atypical SMTP volume")): _*)
   }
 
   /** Keys whose profile says `bucket` is typical (frequency > ε). */
@@ -267,6 +390,7 @@ object Detectors {
     val external = summary
       .filter(!FlowSummary.isLocalIp(col("alien_ip"), myNets))
       .join(ftpPairs, Seq("my_ip", "alien_ip"), "left_anti")
+    // its own rollup: the port sets would make the pair family an object aggregate
     val perPair = external.groupBy("my_ip", "alien_ip")
       .agg(sum("bytes_up").as("up"), sum("bytes_down").as("down"),
         collect_set("my_port").as("my_ports"), collect_set("alien_port").as("alien_ports"),
@@ -291,22 +415,17 @@ object Detectors {
 
   /** Media-streaming clients (HogSFlow.scala:1295-1360): long-lived
     * (5 min..2 h) download-heavy external flows, small upload, excluding
-    * VPN port 1194 and P2P hosts (detector DAG J4).
+    * VPN port 1194 and P2P hosts (detector DAG J4). The duration and port
+    * filters are [[contacts]]' `media*` columns.
     */
-  def mediaStreamingClients(summary: DataFrame, myNets: Seq[String], p2pHosts: DataFrame,
-      minDuration: Int = 300, maxDuration: Int = 7200,
-      maxUpload: Long = 10000000L, minDownload: Long = 1000000L,
-      excludePorts: Seq[String] = Seq("1194")): DataFrame =
-    summary
-      .filter(!FlowSummary.isLocalIp(col("alien_ip"), myNets) &&
-        !col("alien_port").isin(excludePorts: _*) &&
-        (col("t_max") - col("t_min")).between(minDuration, maxDuration))
-      .groupBy("my_ip", "alien_ip")
-      .agg(sum("bytes_up").as("up"), sum("bytes_down").as("down"), count(lit(1)).as("nf"))
-      .filter(col("down") > minDownload && col("up") < maxUpload)
+  def mediaStreamingClients(pair: DataFrame, myNets: Seq[String], p2pHosts: DataFrame,
+      maxUpload: Long = 10000000L, minDownload: Long = 1000000L): DataFrame =
+    pair
+      .filter(col("media_nf") > 0 && !FlowSummary.isLocalIp(col("alien_ip"), myNets) &&
+        col("media_down") > minDownload && col("media_up") < maxUpload)
       .join(p2pHosts, Seq("my_ip"), "left_anti")
       .select(alert("mediaStreaming", col("my_ip"), col("alien_ip"),
-        col("down"), col("nf"), lit("streaming client")): _*)
+        col("media_down"), col("media_nf"), lit("streaming client")): _*)
 
   /** Atypical-open-port access (HIST01 + H5, HogSFlow.scala:1370-1520):
     * served ports this window that the host's learned profile has never
@@ -318,24 +437,19 @@ object Detectors {
     * the proxy whitelist take the direction<0 test instead (a proxy's served
     * port legitimately fans out to low alien ports, HogSFlow.scala:1434-1439).
     */
-  def atypicalPorts(summary: DataFrame, hist01: DataFrame, proxies: DataFrame,
-      minObs: Long = 100, minPktsPerFlow: Int = 2,
+  def atypicalPorts(servedPort: DataFrame, hist01: DataFrame, proxies: DataFrame,
+      minObs: Long = 100,
       excludePorts: Seq[String] = Seq("80", "443", "587", "465", "993", "995")): DataFrame = {
-    val served = servedPortStats(summary)
-      .join(proxies.withColumn("is_proxy", lit(true)), Seq("my_ip"), "left")
-      .filter(
-        when(col("is_proxy"), col("nf_served") > 0)
-          .otherwise(col("qtd_alien_ports") > 3 &&
-            col("qtd_alien_ports").cast("double") / col("nf_port") > 0.2 &&
-            !(col("low_alien_ports") > 2 &&
-              col("qtd_alien_ports").cast("double") / col("low_alien_ports") > 0.5)))
-      .select("my_ip", "my_port")
     val current = HistogramFunctions.buildHistogram(
-      summary.filter(col("direction") < 0 && col("n_pkts") > minPktsPerFlow &&
-          !col("my_port").isin(excludePorts: _*))
-        .join(served, Seq("my_ip", "my_port"), "left_semi")
-        .groupBy(col("my_ip"), col("my_port").as("bucket"))
-        .agg(count(lit(1)).as("cnt")),
+      servedPort
+        .join(proxies.withColumn("is_proxy", lit(true)), Seq("my_ip"), "left")
+        .filter(col("listen_nf") > 0 && !col("my_port").isin(excludePorts: _*) &&
+          when(col("is_proxy"), col("nf_served") > 0)
+            .otherwise(col("qtd_alien_ports") > 3 &&
+              col("qtd_alien_ports").cast("double") / col("nf_port") > 0.2 &&
+              !(col("low_alien_ports") > 2 &&
+                col("qtd_alien_ports").cast("double") / col("low_alien_ports") > 0.5)))
+        .select(col("my_ip"), col("my_port").as("bucket"), col("listen_nf").as("cnt")),
       Seq("my_ip"))
     current
       .join(hist01.withColumnRenamed("name", "my_ip")
@@ -350,14 +464,13 @@ object Detectors {
   }
 
   /** The current-window HIST02 histogram: alien ports contacted per local
-    * host (direction > 0, >minPkts pkts/flow). Shared by
-    * [[atypicalAlienPorts]] and the HIST02/HIST02.1 learners.
+    * host ([[contacts]]' `out_nf` flows). Shared by [[atypicalAlienPorts]]
+    * and the HIST02/HIST02.1 learners.
     */
-  private[detectors] def hist02Current(summary: DataFrame, minPktsPerFlow: Int = 2): DataFrame =
+  private[detectors] def hist02Current(alienPort: DataFrame): DataFrame =
     HistogramFunctions.buildHistogram(
-      summary.filter(col("direction") > 0 && col("n_pkts") > minPktsPerFlow)
-        .groupBy(col("my_ip"), col("alien_port").as("bucket"))
-        .agg(count(lit(1)).as("cnt")),
+      alienPort.filter(col("out_nf") > 0)
+        .select(col("my_ip"), col("alien_port").as("bucket"), col("out_nf").as("cnt")),
       Seq("my_ip"))
 
   /** Atypical alien-port access (HIST02 + HIST02.1 + the J6 alien-profile
@@ -375,12 +488,12 @@ object Detectors {
     *
     * The reference runs gate 3 per flow inside a filter closure with an
     * HBase GET per flow; here it is one conditional-key left join over the
-    * candidate flows.
+    * candidate contacts.
     */
-  def atypicalAlienPorts(summary: DataFrame, myNets: Seq[String],
+  def atypicalAlienPorts(contacts: DataFrame, alienPort: DataFrame, myNets: Seq[String],
       hist02: DataFrame, hist02snap: DataFrame, hist01: DataFrame, hist05: DataFrame,
-      minObs: Long = 100, minAlienObs: Long = 21, minPktsPerFlow: Int = 2): DataFrame = {
-    val current = hist02Current(summary, minPktsPerFlow)
+      minObs: Long = 100, minAlienObs: Long = 21): DataFrame = {
+    val current = hist02Current(alienPort)
     // gates 1+2: atypical vs profile, typical vs last-window snapshot
     val candidates = current
       .join(hist02.withColumnRenamed("name", "my_ip")
@@ -397,7 +510,7 @@ object Detectors {
           HistogramFunctions.typicalKeys(col("sbuckets"), col("buckets")))).as("port"))
     // gate 3: the alien side's own profile also calls the port atypical.
     // Conditional keyspace: local alien → HIST01-<ip>; external → HIST05-<net>.
-    val flows = summary.filter(col("direction") > 0 && col("n_pkts") > minPktsPerFlow)
+    val flows = contacts.filter(col("out_nf") > 0)
       .select(col("my_ip"), col("alien_port").as("port"), col("alien_ip"))
       .join(candidates, Seq("my_ip", "port"), "left_semi")
       .withColumn("alien_key",
@@ -429,9 +542,9 @@ object Detectors {
     * seen. The reference logs but does not alert (the alert block is
     * commented out, :2085-2098) — emitted here as first-class alert rows.
     */
-  def alienNetworkAtypicalPorts(summary: DataFrame, myNets: Seq[String],
+  def alienNetworkAtypicalPorts(summary: DataFrame, alienNet: DataFrame, myNets: Seq[String],
       hist05: DataFrame, minDistinctHosts: Int = 4, minObs: Long = 1000): DataFrame = {
-    val current = hist05Current(summary, myNets, minDistinctHosts)
+    val current = hist05Current(summary, alienNet, myNets, minDistinctHosts)
     current
       .join(hist05
         .withColumnRenamed("size", "psize").withColumnRenamed("buckets", "pbuckets"),
@@ -445,24 +558,28 @@ object Detectors {
         ports = concat(lit("TCP: "), col("port"))): _*)
   }
 
+  /** External summary rows, with their `net`, to the /24s touched by
+    * >minDistinctHosts distinct local hosts (the alien-net family's
+    * `hosts`): the rows HIST05 and HIST06 learn from.
+    */
+  private def eligibleNetRows(summary: DataFrame, alienNet: DataFrame, myNets: Seq[String],
+      minDistinctHosts: Int): DataFrame =
+    summary.filter(!FlowSummary.isLocalIp(col("alien_ip"), myNets))
+      .withColumn("net", NetFunctions.significantNetwork(col("alien_ip")))
+      .join(alienNet.filter(col("hosts") > minDistinctHosts).select("net"), Seq("net"),
+        "left_semi")
+
   /** Current-window HIST05 build (HogSFlow.scala:1950-1991): per external
     * /24 with >minDistinctHosts distinct local pairs, the flow-count
     * histogram over alien ports.
     */
-  private[detectors] def hist05Current(summary: DataFrame, myNets: Seq[String],
-      minDistinctHosts: Int = 4): DataFrame = {
-    val ext = summary.filter(!FlowSummary.isLocalIp(col("alien_ip"), myNets))
-      .withColumn("net", NetFunctions.significantNetwork(col("alien_ip")))
-    val eligible = ext.groupBy("net")
-      .agg(countDistinct("my_ip").as("hosts"))
-      .filter(col("hosts") > minDistinctHosts)
-      .select("net")
+  private[detectors] def hist05Current(summary: DataFrame, alienNet: DataFrame,
+      myNets: Seq[String], minDistinctHosts: Int = 4): DataFrame =
     HistogramFunctions.buildHistogram(
-      ext.join(eligible, Seq("net"), "left_semi")
+      eligibleNetRows(summary, alienNet, myNets, minDistinctHosts)
         .groupBy(col("net"), col("alien_port").as("bucket"))
         .agg(count(lit(1)).as("cnt")),
       Seq("net")).withColumnRenamed("net", "name")
-  }
 
   /** Current-window HIST06 build (HogSFlow.scala:2003-2020): per eligible
     * alien /24, the set of log-binned effective-upload sizes seen from
@@ -471,16 +588,10 @@ object Detectors {
     * bin carries weight 1 — preserved here via countDistinct-style
     * distinct-bin collection.
     */
-  private[detectors] def hist06Current(summary: DataFrame, myNets: Seq[String],
-      minDistinctHosts: Int = 4): DataFrame = {
-    val ext = summary.filter(!FlowSummary.isLocalIp(col("alien_ip"), myNets))
-      .withColumn("net", NetFunctions.significantNetwork(col("alien_ip")))
-    val eligible = ext.groupBy("net")
-      .agg(countDistinct("my_ip").as("hosts"))
-      .filter(col("hosts") > minDistinctHosts)
-      .select("net")
+  private[detectors] def hist06Current(summary: DataFrame, alienNet: DataFrame,
+      myNets: Seq[String], minDistinctHosts: Int = 4): DataFrame =
     HistogramFunctions.buildHistogram(
-      ext.join(eligible, Seq("net"), "left_semi")
+      eligibleNetRows(summary, alienNet, myNets, minDistinctHosts)
         .filter(col("my_port").cast("int") > 1023)
         .select(col("net"),
           HistogramFunctions.logBin(col("bytes_up") * col("sample_rate"), scale = 0.0001)
@@ -488,16 +599,14 @@ object Detectors {
         .distinct()
         .withColumn("cnt", lit(1L)),
       Seq("net")).withColumnRenamed("net", "name")
-  }
 
   /** Atypical pair-count (HIST03 log-binned, HogSFlow.scala:1757-1824):
     * the number of distinct partners this window falls in a log bin the
     * profile has never seen.
     */
-  def atypicalPairs(summary: DataFrame, hist03: DataFrame, minObs: Long = 100,
+  def atypicalPairs(pair: DataFrame, hist03: DataFrame, minObs: Long = 100,
       minPairs: Int = 300): DataFrame = {
-    val pairs = summary.groupBy("my_ip")
-      .agg(countDistinct("alien_ip").as("pairs"))
+    val pairs = hostPairs(pair)
       .filter(col("pairs") > minPairs)
       .withColumn("bin", HistogramFunctions.logBin(col("pairs").cast("double")).cast("string"))
     pairs.join(hist03.withColumnRenamed("name", "my_ip"), Seq("my_ip"))
@@ -553,73 +662,61 @@ object Detectors {
 
   /** UDP amplification reflector (A3, HogSFlow.scala:2155-2191): UDP from
     * an amplification service port with a huge packet count and
-    * essentially one-way traffic.
+    * essentially one-way traffic ([[hostFeatures]]' `udp*` columns).
     */
-  def udpAmplifier(summary: DataFrame, minPkts: Int = 2000,
-      ampPorts: Seq[String] = Seq("19", "53", "123", "161", "389", "1900")): DataFrame =
-    summary
-      .filter(col("proto") === "17" && col("my_port").isin(ampPorts: _*) &&
-        col("n_pkts") > minPkts)
-      .groupBy("my_ip")
-      .agg(sum(scaledBytes).as("eff_bytes"), sum("n_pkts").as("pkts"), count(lit(1)).as("nf"))
+  def udpAmplifier(host: DataFrame): DataFrame =
+    host.filter(col("udp_nf") > 0)
       .select(alert("udpAmplifier", col("my_ip"), lit(null).cast("string"),
-        col("pkts"), col("nf"), lit("amplification reflector")): _*)
+        col("udp_pkts"), col("udp_nf"), lit("amplification reflector")): _*)
 
   /** Abused SMTP relay (keyed by pair, HogSFlow.scala:2219-2252). */
-  def abusedSmtp(summary: DataFrame, minBytes: Long = 50000000L, k: Int = 100): DataFrame =
-    summary.filter(col("alien_port") === "25")
-      .groupBy("my_ip", "alien_ip")
-      .agg(sum(scaledBytes).as("eff_bytes"), count(lit(1)).as("nf"))
-      .filter(col("eff_bytes") > minBytes)
-      .orderBy(col("eff_bytes").desc, col("my_ip"), col("alien_ip")).limit(k)
+  def abusedSmtp(pair: DataFrame, minBytes: Long = 50000000L, k: Int = 100): DataFrame =
+    pair.filter(col("smtp_nf") > 0 && col("smtp_bytes") > minBytes)
+      .orderBy(col("smtp_bytes").desc, col("my_ip"), col("alien_ip")).limit(k)
       .select(alert("abusedSMTP", col("my_ip"), col("alien_ip"),
-        col("eff_bytes"), col("nf"), lit("smtp relay abuse")): _*)
+        col("smtp_bytes"), col("smtp_nf"), lit("smtp relay abuse")): _*)
 
   /** DNS tunnel (HogSFlow.scala:2281-2309): port-53 volume way past name
     * resolution.
     */
-  def dnsTunnel(summary: DataFrame, minBytes: Long = 25000000L, k: Int = 30): DataFrame =
-    summary.filter(col("alien_port") === "53" || col("my_port") === "53")
-      .groupBy("my_ip")
-      .agg(sum(scaledBytes).as("eff_bytes"), count(lit(1)).as("nf"))
-      .filter(col("eff_bytes") > minBytes)
-      .orderBy(col("eff_bytes").desc, col("my_ip")).limit(k)
+  def dnsTunnel(host: DataFrame, minBytes: Long = 25000000L, k: Int = 30): DataFrame =
+    host.filter(col("dns_nf") > 0 && col("dns_bytes") > minBytes)
+      .orderBy(col("dns_bytes").desc, col("my_ip")).limit(k)
       .select(alert("dnsTunnel", col("my_ip"), lit(null).cast("string"),
-        col("eff_bytes"), col("nf"), lit("dns tunnel volume")): _*)
+        col("dns_bytes"), col("dns_nf"), lit("dns tunnel volume")): _*)
 
-  /** ICMP tunnel (A2 shape, HogSFlow.scala:2341-2370): big ICMP payloads,
-    * big totals.
+  /** ICMP tunnel (A2 shape, HogSFlow.scala:2341-2370): big ICMP payloads
+    * ([[hostFeatures]]' `icmpMinPktSize`), big totals.
     */
-  def icmpTunnel(summary: DataFrame, minPktSize: Int = 200,
-      minBytes: Long = 100000000L, k: Int = 30): DataFrame =
-    summary.filter(col("proto").isin("1", "58") &&
-        (col("bytes_up") + col("bytes_down")) / col("n_pkts") > minPktSize)
-      .groupBy("my_ip")
-      .agg(sum(scaledBytes).as("eff_bytes"), count(lit(1)).as("nf"))
-      .filter(col("eff_bytes") > minBytes)
-      .orderBy(col("eff_bytes").desc, col("my_ip")).limit(k)
+  def icmpTunnel(host: DataFrame, minBytes: Long = 100000000L, k: Int = 30): DataFrame =
+    host.filter(col("icmp_nf") > 0 && col("icmp_bytes") > minBytes)
+      .orderBy(col("icmp_bytes").desc, col("my_ip")).limit(k)
       .select(alert("icmpTunnel", col("my_ip"), lit(null).cast("string"),
-        col("eff_bytes"), col("nf"), lit("icmp tunnel volume")): _*)
+        col("icmp_bytes"), col("icmp_nf"), lit("icmp tunnel volume")): _*)
 
-  /** Per-(my_ip, alien_port) fan-out counts feeding HIST07 and the
-    * horizontal-scan detector (HogSFlow.scala:2403-2446): flows with <5
-    * packets (probe-sized), per local host and targeted alien port, the
-    * number of distinct alien hosts probed on that port. Only ports past
-    * the per-port fan-out floor survive (the reference's
-    * `numberOfPairsPort > hPortScanMinFlowsThreshold` filter at :2447 —
+  /** The ports hPortScan tests and HIST07 learns (HogSFlow.scala:2403-2446):
+    * per local host and alien port, the distinct aliens probed with
+    * probe-sized flows, past the per-port fan-out floor (the reference's
+    * `numberOfPairsPort > hPortScanMinFlowsThreshold` filter at :2447,
     * applied BEFORE regrouping, so the learned HIST07 only ever contains
-    * heavy ports).
+    * heavy ports), P2P hosts excluded.
     */
-  private[detectors] def hist07Current(summary: DataFrame, p2pHosts: DataFrame,
+  private def scannedPorts(alienPort: DataFrame, p2pHosts: DataFrame, minPairsPort: Int,
+      excludeAlienPorts: Seq[String]): DataFrame =
+    alienPort
+      .filter(col("probe_nf") > 0 && !col("alien_port").isin(excludeAlienPorts: _*) &&
+        col("probe_aliens") > minPairsPort)
+      .join(p2pHosts, Seq("my_ip"), "left_anti")
+
+  /** Current-window HIST07 build: the per-port fan-out of [[scannedPorts]]
+    * as a count map.
+    */
+  private[detectors] def hist07Current(alienPort: DataFrame, p2pHosts: DataFrame,
       minPairsPort: Int = 100,
       excludeAlienPorts: Seq[String] = Seq("80", "443", "53")): DataFrame =
     HistogramFunctions.buildCountMap(
-      summary
-        .filter(col("n_pkts") < 5 && !col("alien_port").isin(excludeAlienPorts: _*))
-        .groupBy(col("my_ip"), col("alien_port").as("bucket"))
-        .agg(countDistinct("alien_ip").as("cnt"))
-        .filter(col("cnt") > minPairsPort)
-        .join(p2pHosts, Seq("my_ip"), "left_anti"),
+      scannedPorts(alienPort, p2pHosts, minPairsPort, excludeAlienPorts)
+        .select(col("my_ip"), col("alien_port").as("bucket"), col("probe_aliens").as("cnt")),
       Seq("my_ip")).withColumnRenamed("my_ip", "name")
 
   /** Horizontal port scan (HIST07-relative, HogSFlow.scala:2403-2531): a
@@ -631,16 +728,13 @@ object Detectors {
     * HIST01 profile says they serve SMTP (:2487-2490). Cold-start profiles
     * (size < minObs) learn only.
     */
-  def hPortScan(summary: DataFrame, myNets: Seq[String], hist07: DataFrame,
+  def hPortScan(alienPort: DataFrame, myNets: Seq[String], hist07: DataFrame,
       hist01: DataFrame, p2pHosts: DataFrame, minPairsPort: Int = 100,
       minObs: Long = 100,
       excludeAlienPorts: Seq[String] = Seq("80", "443", "53")): DataFrame = {
-    val current = summary
-      .filter(col("n_pkts") < 5 && !col("alien_port").isin(excludeAlienPorts: _*))
-      .groupBy(col("my_ip"), col("alien_port").as("port"))
-      .agg(countDistinct("alien_ip").as("pairs"), count(lit(1)).as("nf"))
-      .filter(col("pairs") > minPairsPort)
-      .join(p2pHosts, Seq("my_ip"), "left_anti")
+    val current = scannedPorts(alienPort, p2pHosts, minPairsPort, excludeAlienPorts)
+      .select(col("my_ip"), col("alien_port").as("port"), col("probe_aliens").as("pairs"),
+        col("probe_nf").as("nf"))
     val smtpServers = profileTypical(hist01, "25").withColumnRenamed("name", "my_ip")
       .withColumn("serves_smtp", lit(true))
     current
@@ -658,30 +752,24 @@ object Detectors {
         ports = concat(lit("Ports: "), col("port"))): _*)
   }
 
-  /** Per-(my_ip, alien_ip) distinct-low-port counts feeding HIST08 and the
-    * vertical-scan detector (HogSFlow.scala:2546-2586): probe-sized flows
-    * from an ephemeral local port to well-known alien ports.
+  /** The pairs vPortScan tests and HIST08 learns (HogSFlow.scala:2546-2586):
+    * probe-sized flows from an ephemeral local port to more than
+    * `minPorts` distinct well-known alien ports, P2P hosts excluded.
     */
-  private[detectors] def vScanPairPorts(summary: DataFrame,
-      maxPortNumber: Int = 1024): DataFrame =
-    summary
-      .filter(col("alien_port").cast("int") < maxPortNumber &&
-        col("my_port").cast("int") > 1023 && col("n_pkts") < 5)
-      .groupBy("my_ip", "alien_ip")
-      .agg(countDistinct("alien_port").as("ports"), count(lit(1)).as("nf"))
+  private def scanningPairs(pair: DataFrame, p2pHosts: DataFrame, minPorts: Int): DataFrame =
+    pair.filter(col("vscan_nf") > 0 && col("vscan_ports") > minPorts)
+      .join(p2pHosts, Seq("my_ip"), "left_anti")
 
   /** Current-window HIST08 build (HogSFlow.scala:2599-2640): per local
     * host, the distribution of how many distinct ports its over-threshold
     * pair bursts touched — one observation per qualifying (my_ip, alien_ip)
     * pair, keyed by the port count as a string.
     */
-  private[detectors] def hist08Current(summary: DataFrame, p2pHosts: DataFrame,
-      minPorts: Int = 3, maxPortNumber: Int = 1024): DataFrame =
+  private[detectors] def hist08Current(pair: DataFrame, p2pHosts: DataFrame,
+      minPorts: Int = 3): DataFrame =
     HistogramFunctions.buildHistogram(
-      vScanPairPorts(summary, maxPortNumber)
-        .filter(col("ports") > minPorts)
-        .join(p2pHosts, Seq("my_ip"), "left_anti")
-        .groupBy(col("my_ip"), col("ports").cast("string").as("bucket"))
+      scanningPairs(pair, p2pHosts, minPorts)
+        .groupBy(col("my_ip"), col("vscan_ports").cast("string").as("bucket"))
         .agg(count(lit(1)).as("cnt")),
       Seq("my_ip")).withColumnRenamed("my_ip", "name")
 
@@ -692,27 +780,25 @@ object Detectors {
     * >= numPorts && weight > ε).size == 0`, :2614-2620). Cold-start
     * profiles learn only.
     */
-  def vPortScan(summary: DataFrame, myNets: Seq[String], hist08: DataFrame,
-      p2pHosts: DataFrame, minPorts: Int = 3, maxPortNumber: Int = 1024,
-      minObs: Long = 10): DataFrame =
-    vScanPairPorts(summary, maxPortNumber)
-      .filter(col("ports") > minPorts)
-      .join(p2pHosts, Seq("my_ip"), "left_anti")
+  def vPortScan(pair: DataFrame, myNets: Seq[String], hist08: DataFrame,
+      p2pHosts: DataFrame, minPorts: Int = 3, minObs: Long = 10): DataFrame =
+    scanningPairs(pair, p2pHosts, minPorts)
       .join(hist08.withColumnRenamed("name", "my_ip")
         .withColumnRenamed("size", "psize").withColumnRenamed("buckets", "pbuckets"),
         Seq("my_ip"))
       .filter(col("psize") >= minObs)
       .filter(size(map_filter(col("pbuckets"), (k, v) =>
-        k.cast("long") >= col("ports") &&
+        k.cast("long") >= col("vscan_ports") &&
           v > HistogramFunctions.AtypicalThreshold)) === 0)
       .select(alert("vPortScan", col("my_ip"), col("alien_ip"),
-        col("ports"), col("nf"), lit("vertical scan beyond learned port-count profile")): _*)
+        col("vscan_ports"), col("vscan_nf"),
+        lit("vertical scan beyond learned port-count profile")): _*)
 
   /** DDoS burst (A4 + F9 trimmed mean, HogSFlow.scala:2676-2731): many
     * flows from many pairs whose inter-arrival gaps — after dropping the
     * 4 largest — average under a minute.
     */
-  def ddos(summary: DataFrame, minFlows: Int = 50, minPairs: Int = 20,
+  def ddos(summary: DataFrame, pair: DataFrame, minFlows: Int = 50, minPairs: Int = 20,
       maxMeanGapSecs: Double = 60.0): DataFrame = {
     val byStart = Window.partitionBy(col("my_ip")).orderBy(col("t_min"), col("alien_ip"), col("alien_port"))
     val gaps = summary
@@ -721,8 +807,7 @@ object Detectors {
     val byGap = Window.partitionBy(col("my_ip")).orderBy(col("gap").desc, col("t_min"), col("alien_ip"), col("alien_port"))
     val trimmed = gaps.withColumn("gr", row_number().over(byGap)).filter(col("gr") > 4)
       .groupBy("my_ip").agg(avg("gap").as("mean_gap"))
-    summary.groupBy("my_ip")
-      .agg(count(lit(1)).as("nf"), countDistinct("alien_ip").as("pairs"))
+    hostPairs(pair)
       .filter(col("nf") > minFlows && col("pairs") > minPairs)
       .join(trimmed, Seq("my_ip"))
       .filter(col("mean_gap") < maxMeanGapSecs)

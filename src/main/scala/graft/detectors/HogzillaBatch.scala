@@ -25,8 +25,12 @@ import graft.operators.{Pin, ProfileStore}
   * Pinned frames. Each frame that several plans of one batch read is
   * cached once, so the detector DAG is evaluated once per batch instead
   * of once per consumer:
-  *  - the flow summary: every detector, the alert payloads and the learn
-  *    pass;
+  *  - the flow summary: the key families, the sections that keep their
+  *    own aggregate, the alert payloads and the HIST05/HIST06 builds;
+  *  - the key families ([[Detectors]] scaladoc): host, contacts (which
+  *    the pair and alien-port families roll up), pair, alien port, served
+  *    port and alien net. Each is one aggregate read by several sections
+  *    and learn inputs;
   *  - the `p2p` alert frame (method 1 ∪ method 2): the p2p section and
   *    `p2pHosts`, which mediaStreaming, hPortScan, vPortScan and the
   *    hist07/hist08 learn pass read;
@@ -37,16 +41,24 @@ import graft.operators.{Pin, ProfileStore}
   * 19-way union three times and the p2p frame about twelve times.
   *
   * The pins are [[Pin.Scope.cache]] pins, the kind a lost executor
-  * recomputes (see [[Pin]]). Two of them are shaped for their readers:
+  * recomputes (see [[Pin]]). They are shaped for their readers:
   *  - The summary comes hash-partitioned by `my_ip` ([[FlowSummary]]'s
   *    output contract) and is pinned eagerly, before any frame over it is
   *    built. Under AQE a cached plan reports `UnknownPartitioning` until it
-  *    has run, so a lazy pin would leave every host-keyed aggregate (most
-  *    detectors, `p2p`, the learn pass) shuffling its slice of the summary
+  *    has run, so a lazy pin would leave every host-keyed aggregate (the
+  *    families, `p2p`, the learn pass) shuffling its slice of the summary
   *    again. With the filled pin they run in place: on the sflow_batch
-  *    benchmark window the batch plans 44 shuffle exchanges (and one
+  *    benchmark window the batch planned 44 shuffle exchanges (and one
   *    rebalance per profile table, below), none in `p2p`, against 116
   *    over a lazy pin of an unpartitioned summary.
+  *  - The families keyed by `my_ip` keep that partitioning, and are
+  *    pinned eagerly for the same reason: their readers join and group
+  *    them by host in place. Lazy family pins, measured on the traced
+  *    sflow_batch seed-1 call, put an exchange back into the learn pass
+  *    (hist01 plans three shuffles instead of two) and raise the alert
+  *    write from 56 to 70 jobs; the eager fills cost five jobs of their
+  *    own. The alien-net family is keyed by network, so every reader
+  *    shuffles it anyway; it is pinned lazily.
   *  - The alert union is one partition. Alert rows scale with the alerted
   *    hosts, not the samples, so one task holds them easily. Its readers then
   *    read one partition whose task stops at a shuffle boundary, instead
@@ -65,9 +77,8 @@ import graft.operators.{Pin, ProfileStore}
   * come back rebalanced: a writer gets files sized by the tables' bytes,
   * not one per `spark.sql.shuffle.partitions`.
   *
-  * Pinning the reputation lists, `p2pHosts` and the current hist02 as
-  * well was measured on the sflow_batch benchmark and gained nothing, so
-  * they stay unpinned.
+  * Pinning the reputation lists and `p2pHosts` as well was measured on
+  * the sflow_batch benchmark and gained nothing, so they stay unpinned.
   */
 object HogzillaBatch {
 
@@ -87,9 +98,24 @@ object HogzillaBatch {
       hist06: DataFrame,     // log-binned upload bins per alien /24
       hist07: DataFrame,     // max distinct-pair fan-out per (host, port)
       hist08: DataFrame) {   // distinct-port-count distribution per host
-    def map(f: DataFrame => DataFrame): ProfileTables = ProfileTables(f(hist01),
-      f(hist02), f(hist02snap), f(hist03), f(hist04), f(hist05), f(hist06),
-      f(hist07), f(hist08))
+    /** The tables in [[ProfileTables.Names]] order. */
+    def toSeq: Seq[DataFrame] = Seq(hist01, hist02, hist02snap, hist03, hist04, hist05,
+      hist06, hist07, hist08)
+    def map(f: DataFrame => DataFrame): ProfileTables = ProfileTables.fromSeq(toSeq.map(f))
+  }
+
+  object ProfileTables {
+    /** The tables' names, which are also their state directories, in field
+      * order.
+      */
+    val Names: Seq[String] = Seq("hist01", "hist02", "hist02snap", "hist03", "hist04",
+      "hist05", "hist06", "hist07", "hist08")
+
+    /** The tables from a sequence in [[Names]] order. */
+    def fromSeq(t: Seq[DataFrame]): ProfileTables = {
+      require(t.size == Names.size, s"${t.size} profile tables, expected ${Names.size}")
+      ProfileTables(t(0), t(1), t(2), t(3), t(4), t(5), t(6), t(7), t(8))
+    }
   }
 
   /** Derived reputation lists from one run (pass 1) — persist and feed
@@ -117,10 +143,11 @@ object HogzillaBatch {
   /** Run every detector over one batch of raw sFlow samples.
     * Returns (alerts, updated profile tables, derived reputation lists,
     * release) — `release()` drops every frame this run pinned (the flow
-    * summary, `p2p` and the alert union), blocking until the blocks are
-    * gone; call it after materializing the outputs (in a `finally`, so a
-    * failed write does not leave the pins cached in a long-lived
-    * session). The returned frames stay usable after it: they recompute.
+    * summary, the key families, `p2p` and the alert union), blocking
+    * until the blocks are gone; call it after materializing the outputs
+    * (in a `finally`, so a failed write does not leave the pins cached in
+    * a long-lived session). The returned frames stay usable after it: they
+    * recompute.
     *
     * `config` carries the reference's per-detector conf surface
     * (`scripts/conf/sflow.conf` key names, `HogSFlow.scala:118-189`
@@ -144,6 +171,23 @@ object HogzillaBatch {
     // eager, before any frame over it is built (scaladoc above)
     val summary = pins.cache(FlowSummary.summarize(samples, myNets), eager = true)
 
+    // the key families (Detectors scaladoc), each pinned after the pins it
+    // reads; the my_ip-keyed ones eagerly, like the summary
+    def family(df: DataFrame) = pins.cache(df, eager = true)
+    val host = family(Detectors.hostFeatures(summary, myNets,
+      udpMinPkts = c.getInt("UDPAmplifier.minPktsPerFlow", 2000),
+      icmpMinPktSize = c.getInt("ICMPTunnel.minPacket", 200)))
+    val contacts = family(Detectors.contacts(summary,
+      mediaMinDuration = c.getInt("mediaStreaming.minDuration", 300),
+      mediaMaxDuration = c.getInt("mediaStreaming.maxDuration", 7200),
+      mediaExcludePorts = c.getSetString("mediaStreaming.excludePorts", Set("1194")).toSeq.sorted,
+      vScanMaxPort = c.getInt("vPortScan.maxPortNumber", 1024),
+      minPktsPerFlow = c.getInt("atypicalAlienPorts.minPacketsPerFlow", 2)))
+    val pair = family(Detectors.pairFeatures(contacts))
+    val alienPort = family(Detectors.alienPortFeatures(contacts))
+    val servedPort = family(Detectors.servedPortFeatures(summary))
+    val alienNet = pins.cache(Detectors.alienNetFeatures(summary, myNets))
+
     val generalExcluded = c.getSetString("general.excludeIPs", Set.empty)
     // reference semantics (HogSFlow.scala:173-189): per-detector
     // exclusions extend the general list and suppress alerts keyed to an
@@ -156,18 +200,13 @@ object HogzillaBatch {
     def excluding(section: String)(alerts: DataFrame): DataFrame = {
       val ex = (c.getSetString(s"$section.excludeIPs", Set.empty) ++ generalExcluded).toSeq.sorted
       if (ex.isEmpty) alerts
-      else {
-        val myOk = col("my_ip").isNull || !col("my_ip").isin(ex: _*)
-        if (alerts.columns.contains("alien_ip"))
-          alerts.filter(myOk && (col("alien_ip").isNull || !col("alien_ip").isin(ex: _*)))
-        else alerts.filter(myOk)
-      }
+      else alerts.filter((col("my_ip").isNull || !col("my_ip").isin(ex: _*)) &&
+        (col("alien_ip").isNull || !col("alien_ip").isin(ex: _*)))
     }
 
     // derived exclusion sets first (the reference's detector DAG)
-    val ftpPairs = Detectors.ftpTalkerPairs(summary)
-    val ftpSrv = Detectors.ftpServers(summary)
-    val p2p = pins.cache(excluding("p2p")(Detectors.p2pTalkers(summary, myNets, ftpPairs, ftpSrv,
+    val p2p = pins.cache(excluding("p2p")(Detectors.p2pTalkers(summary, myNets,
+      Detectors.ftpTalkerPairs(pair), Detectors.ftpServers(host),
       minPairs = c.getInt("p2p.minPairs", 5),
       minPorts = c.getInt("p2p.minPorts", 4),
       minPairs2 = c.getInt("p2p.minPairs2nd", 10),
@@ -177,60 +216,57 @@ object HogzillaBatch {
 
     // pass 1: intra-run reputation (HogSFlow.scala:1486, 2029)
     val reputation = ReputationLists(
-      proxies = Detectors.proxyServers(summary),
-      bigProviders = Detectors.bigProviders(summary, myNets,
+      proxies = Detectors.proxyServers(servedPort),
+      bigProviders = Detectors.bigProviders(alienNet,
         minBytes = c.getLong("bigProviders.minBytes", 1073741824L)))
+
+    // the scan thresholds the learn pass applies too, as the reference
+    // does before it learns HIST07/HIST08
+    val hScanMinFlows = c.getInt("hPortScan.minFlows", 100)
+    val hScanExcluded = c.getSetString("hPortScan.excludeAlienPorts",
+      Set("80", "443", "53")).toSeq.sorted
+    val vScanMinPorts = c.getInt("vPortScan.minPorts", 3)
 
     // pass 2: the standing detectors, profile-relative where the
     // reference's are (HIST01/02/02.1/03/04/05/07/08); each entry is
     // (conf section, lazily-built frame) so a disabled section never
     // even constructs its plan
     val detectorRuns: Seq[(String, () => DataFrame)] = Seq(
-      "topTalkers" -> (() => Detectors.topTalkers(summary)),
-      "SMTPTalkers" -> (() => Detectors.smtpTalkers(summary, myNets,
-        profiles.hist01, profiles.hist02,
+      "topTalkers" -> (() => Detectors.topTalkers(host)),
+      "SMTPTalkers" -> (() => Detectors.smtpTalkers(host, profiles.hist01, profiles.hist02,
         minBytes = c.getLong("SMTPTalkers.minBytes", 20971520L))),
       "p2p" -> (() => p2p),
-      "mediaStreaming" -> (() => Detectors.mediaStreamingClients(summary, myNets, p2pHosts,
-        minDuration = c.getInt("mediaStreaming.minDuration", 300),
-        maxDuration = c.getInt("mediaStreaming.maxDuration", 7200),
+      "mediaStreaming" -> (() => Detectors.mediaStreamingClients(pair, myNets, p2pHosts,
         maxUpload = c.getLong("mediaStreaming.maxUploadBytes", 10000000L),
-        minDownload = c.getLong("mediaStreaming.minDownloadBytes", 1000000L),
-        excludePorts = c.getSetString("mediaStreaming.excludePorts", Set("1194")).toSeq.sorted)),
-      "atypicalPorts" -> (() => Detectors.atypicalPorts(summary, profiles.hist01,
+        minDownload = c.getLong("mediaStreaming.minDownloadBytes", 1000000L))),
+      "atypicalPorts" -> (() => Detectors.atypicalPorts(servedPort, profiles.hist01,
         reputation.proxies,
         excludePorts = c.getSetString("atypicalPorts.excludePorts",
           Set("80", "443", "587", "465", "993", "995")).toSeq.sorted)),
-      "atypicalAlienPorts" -> (() => Detectors.atypicalAlienPorts(summary, myNets,
-        profiles.hist02, profiles.hist02snap, profiles.hist01, profiles.hist05,
-        minPktsPerFlow = c.getInt("atypicalAlienPorts.minPacketsPerFlow", 2))),
-      "atypicalPairs" -> (() => Detectors.atypicalPairs(summary, profiles.hist03,
+      "atypicalAlienPorts" -> (() => Detectors.atypicalAlienPorts(contacts, alienPort, myNets,
+        profiles.hist02, profiles.hist02snap, profiles.hist01, profiles.hist05)),
+      "atypicalPairs" -> (() => Detectors.atypicalPairs(pair, profiles.hist03,
         minPairs = c.getInt("atypicalPairs.minPairs", 300))),
       "atypicalData" -> (() => Detectors.atypicalData(summary, myNets, profiles.hist04,
         reputation.bigProviders,
         minBytes = c.getLong("atypicalData.minBytes", 5737418240L))),
       "alienNetworkAtypicalPorts" -> (() =>
-        Detectors.alienNetworkAtypicalPorts(summary, myNets, profiles.hist05)),
+        Detectors.alienNetworkAtypicalPorts(summary, alienNet, myNets, profiles.hist05)),
       "alien" -> (() => Detectors.alienAccess(summary, myNets,
         minPairs = c.getInt("alien.minPairs", 20))),
-      "UDPAmplifier" -> (() => Detectors.udpAmplifier(summary,
-        minPkts = c.getInt("UDPAmplifier.minPktsPerFlow", 2000))),
-      "abusedSMTP" -> (() => Detectors.abusedSmtp(summary,
+      "UDPAmplifier" -> (() => Detectors.udpAmplifier(host)),
+      "abusedSMTP" -> (() => Detectors.abusedSmtp(pair,
         minBytes = c.getLong("abusedSMTP.minBytes", 50000000L))),
-      "dnsTunnel" -> (() => Detectors.dnsTunnel(summary,
+      "dnsTunnel" -> (() => Detectors.dnsTunnel(host,
         minBytes = c.getLong("dnsTunnel.minBytes", 25000000L))),
-      "ICMPTunnel" -> (() => Detectors.icmpTunnel(summary,
-        minPktSize = c.getInt("ICMPTunnel.minPacket", 200),
+      "ICMPTunnel" -> (() => Detectors.icmpTunnel(host,
         minBytes = c.getLong("ICMPTunnel.minBytes", 100000000L))),
-      "hPortScan" -> (() => Detectors.hPortScan(summary, myNets, profiles.hist07,
-        profiles.hist01, p2pHosts,
-        minPairsPort = c.getInt("hPortScan.minFlows", 100),
-        excludeAlienPorts = c.getSetString("hPortScan.excludeAlienPorts",
-          Set("80", "443", "53")).toSeq.sorted)),
-      "vPortScan" -> (() => Detectors.vPortScan(summary, myNets, profiles.hist08, p2pHosts,
-        minPorts = c.getInt("vPortScan.minPorts", 3),
-        maxPortNumber = c.getInt("vPortScan.maxPortNumber", 1024))),
-      "DDoS" -> (() => Detectors.ddos(summary,
+      "hPortScan" -> (() => Detectors.hPortScan(alienPort, myNets, profiles.hist07,
+        profiles.hist01, p2pHosts, minPairsPort = hScanMinFlows,
+        excludeAlienPorts = hScanExcluded)),
+      "vPortScan" -> (() => Detectors.vPortScan(pair, myNets, profiles.hist08, p2pHosts,
+        minPorts = vScanMinPorts)),
+      "DDoS" -> (() => Detectors.ddos(summary, pair,
         minFlows = c.getInt("DDoS.minFlows", 50),
         minPairs = c.getInt("DDoS.minPairs", 20))),
       "BotNet" -> (() => Detectors.botnetCC(summary, blacklist,
@@ -285,41 +321,29 @@ object HogzillaBatch {
     // learn pass: current-window histograms merged into the profiles
     // (decayed weighted mean, cold-start-safe) — S6's delete+put upsert
     // becomes one atomic state overwrite per family
-    def currentHist(keyCol: String, bucketCol: org.apache.spark.sql.Column) =
-      HistogramFunctions.buildHistogram(
-        summary.groupBy(col(keyCol).as("name"), bucketCol.as("bucket"))
-          .agg(count(lit(1)).as("cnt")),
-        Seq("name"))
-    val hist02Cur = Detectors.hist02Current(summary)
-      .withColumnRenamed("my_ip", "name")
+    def logBinned(perHost: DataFrame, x: String) = HistogramFunctions.buildHistogram(
+      perHost.select(col("my_ip").as("name"),
+        HistogramFunctions.logBin(col(x).cast("double")).cast("string").as("bucket"),
+        lit(1L).as("cnt")),
+      Seq("name"))
+    val hist02Cur = Detectors.hist02Current(alienPort).withColumnRenamed("my_ip", "name")
     val learned = ProfileTables(
-      hist01 = ProfileStore.update(profiles.hist01,
-        currentHist("my_ip", col("my_port"))),
+      hist01 = ProfileStore.update(profiles.hist01, HistogramFunctions.buildHistogram(
+        servedPort.select(col("my_ip").as("name"), col("my_port").as("bucket"),
+          col("nf_port").as("cnt")),
+        Seq("name"))),
       hist02 = ProfileStore.update(profiles.hist02, hist02Cur),
       hist02snap = ProfileStore.snapshot(profiles.hist02snap, hist02Cur),
-      hist03 = ProfileStore.update(profiles.hist03,
-        HistogramFunctions.buildHistogram(
-          summary.groupBy("my_ip").agg(countDistinct("alien_ip").as("pairs"))
-            .select(col("my_ip").as("name"),
-              HistogramFunctions.logBin(col("pairs").cast("double")).cast("string").as("bucket"),
-              lit(1L).as("cnt")),
-          Seq("name"))),
-      hist04 = ProfileStore.update(profiles.hist04,
-        HistogramFunctions.buildHistogram(
-          summary.groupBy("my_ip")
-            .agg(sum(col("bytes_up") * col("sample_rate")).as("up"))
-            .select(col("my_ip").as("name"),
-              HistogramFunctions.logBin(col("up").cast("double")).cast("string").as("bucket"),
-              lit(1L).as("cnt")),
-          Seq("name"))),
+      hist03 = ProfileStore.update(profiles.hist03, logBinned(Detectors.hostPairs(pair), "pairs")),
+      hist04 = ProfileStore.update(profiles.hist04, logBinned(host, "up")),
       hist05 = ProfileStore.update(profiles.hist05,
-        Detectors.hist05Current(summary, myNets)),
+        Detectors.hist05Current(summary, alienNet, myNets)),
       hist06 = ProfileStore.update(profiles.hist06,
-        Detectors.hist06Current(summary, myNets)),
+        Detectors.hist06Current(summary, alienNet, myNets)),
       hist07 = ProfileStore.updateMax(profiles.hist07,
-        Detectors.hist07Current(summary, p2pHosts)),
+        Detectors.hist07Current(alienPort, p2pHosts, hScanMinFlows, hScanExcluded)),
       hist08 = ProfileStore.update(profiles.hist08,
-        Detectors.hist08Current(summary, p2pHosts)))
+        Detectors.hist08Current(pair, p2pHosts, vScanMinPorts)))
     // rebalanced so AQE sizes their files (scaladoc above)
     (withDetail, learned.map(_.hint("rebalance")), reputation, () => pins.release())
   }

@@ -89,15 +89,19 @@ object Integrity {
     * of four over the inputs.
     */
   def diffTables(a: DataFrame, b: DataFrame, cols: Seq[String]): DataFrame = {
+    require(!cols.contains("side"), "diffTables: `side` is its output tag column")
+    // internal columns named apart from every input column
+    val Seq(w, d, i) = Seq("__w", "__d", "__i").map(n =>
+      Iterator.iterate(n)(_ + "_").find(!cols.contains(_)).get)
     val pa = a.select(cols.map(col): _*)
     val pb = b.select(cols.map(col): _*)
-    pa.withColumn("__w", lit(1L)).unionByName(pb.withColumn("__w", lit(-1L)))
-      .groupBy(cols.map(col): _*).agg(sum(col("__w")).as("__d"))
-      .filter(col("__d") =!= 0L)
+    pa.withColumn(w, lit(1L)).unionByName(pb.withColumn(w, lit(-1L)))
+      .groupBy(cols.map(col): _*).agg(sum(col(w)).as(d))
+      .filter(col(d) =!= 0L)
       .select(cols.map(col) :+
-        when(col("__d") > 0, lit("only_in_a")).otherwise(lit("only_in_b")).as("side") :+
-        explode(sequence(lit(1L), abs(col("__d")))).as("__i"): _*)
-      .drop("__i")
+        when(col(d) > 0, lit("only_in_a")).otherwise(lit("only_in_b")).as("side") :+
+        explode(sequence(lit(1L), abs(col(d)))).as(i): _*)
+      .drop(i)
   }
 
   def orphanCount(child: DataFrame, fkCol: String, parent: DataFrame,

@@ -150,6 +150,14 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     assert(got.count(_ == ("3", "w", "only_in_b")) == 2)
     // identical multisets diff to nothing (null keys compare equal)
     assert(graft.operators.Integrity.diffTables(a, a, Seq("k", "s")).count() == 0)
+    // an input column named like an internal one is diffed as data
+    val aw = a.withColumnRenamed("s", "__w"); val bw = b.withColumnRenamed("s", "__w")
+    assert(sortedRows(graft.operators.Integrity.diffTables(aw, bw, Seq("k", "__w"))) == ref)
+    // an input column named like the output tag is refused
+    intercept[IllegalArgumentException] {
+      graft.operators.Integrity.diffTables(a.withColumnRenamed("s", "side"),
+        b.withColumnRenamed("s", "side"), Seq("k", "side"))
+    }
   }
 
   test("qualityReport accepts rule names with dots/spaces") {

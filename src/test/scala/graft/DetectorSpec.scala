@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Union}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
@@ -29,6 +31,14 @@ class DetectorSpec extends AnyFunSuite {
       "packetSize", "samplingRate", "tcpFlags", "timestamp")
   }
 
+  /** The key families of a summary, with the default row filters. */
+  private def host(s: DataFrame) = Detectors.hostFeatures(s, myNets)
+  private def contacts(s: DataFrame) = Detectors.contacts(s)
+  private def pair(s: DataFrame) = Detectors.pairFeatures(contacts(s))
+  private def alienPort(s: DataFrame) = Detectors.alienPortFeatures(contacts(s))
+  private def servedPort(s: DataFrame) = Detectors.servedPortFeatures(s)
+  private def alienNet(s: DataFrame) = Detectors.alienNetFeatures(s, myNets)
+
   private def benign = (1 to 5).map(i =>
     ("10.0.0.100", "93.1.1." + i, "50000", "443", "6", 1000L, 10L, "0x18", 1000L + i))
 
@@ -47,7 +57,7 @@ class DetectorSpec extends AnyFunSuite {
       ("10.0.0.5", "66.1.1." + i, "4000", "25", "6", 200000L, 10L, "0x18", 100L + i)))
     val sum_ = FlowSummary.summarize(samples(spam ++ benign), myNets)
     val empty = HogzillaBatch.emptyProfiles(spark)
-    val out = Detectors.smtpTalkers(sum_, myNets, empty, empty).collect()
+    val out = Detectors.smtpTalkers(host(sum_), empty, empty).collect()
     assert(out.map(_.getAs[String]("my_ip")).toSeq == Seq("10.0.0.5"))
     // 30 flows × 200000B × rate 10 = 60MB effective > 20MB threshold
     assert(out.head.getAs[Double]("metric") > 20971520.0)
@@ -60,7 +70,7 @@ class DetectorSpec extends AnyFunSuite {
     val sum_ = FlowSummary.summarize(samples(spam), myNets)
     val knownSender = Seq(("10.0.0.5", 1000L, Map("25" -> 0.9, "443" -> 0.1)))
       .toDF("name", "size", "buckets")
-    val out = Detectors.smtpTalkers(sum_, myNets, HogzillaBatch.emptyProfiles(spark), knownSender)
+    val out = Detectors.smtpTalkers(host(sum_), HogzillaBatch.emptyProfiles(spark), knownSender)
     assert(out.count() == 0)
   }
 
@@ -79,17 +89,17 @@ class DetectorSpec extends AnyFunSuite {
     // mature profile that has typically seen bursts of up to 7 ports → silent
     val tolerant = Seq(("10.0.0.7", 50L, Map("4" -> 0.6, "7" -> 0.4)))
       .toDF("name", "size", "buckets")
-    assert(Detectors.vPortScan(sum_, myNets, tolerant, noHosts).count() == 0)
+    assert(Detectors.vPortScan(pair(sum_), myNets, tolerant, noHosts).count() == 0)
     // mature profile that never saw more than 4 ports → fires
     val strict = Seq(("10.0.0.7", 50L, Map("4" -> 1.0))).toDF("name", "size", "buckets")
-    val rows = Detectors.vPortScan(sum_, myNets, strict, noHosts).collect()
+    val rows = Detectors.vPortScan(pair(sum_), myNets, strict, noHosts).collect()
     assert(rows.length == 1)
     assert(rows.head.getAs[String]("my_ip") == "10.0.0.7")
     assert(rows.head.getAs[String]("alien_ip") == "99.9.9.9")
     assert(rows.head.getAs[Double]("metric") == 5.0)
     // cold-start profile (size < 10) → learn only, never alerts
     val cold = Seq(("10.0.0.7", 5L, Map("4" -> 1.0))).toDF("name", "size", "buckets")
-    assert(Detectors.vPortScan(sum_, myNets, cold, noHosts).count() == 0)
+    assert(Detectors.vPortScan(pair(sum_), myNets, cold, noHosts).count() == 0)
   }
 
   test("hPortScan alerts beyond the learned HIST07 per-port max, not a fixed threshold") {
@@ -100,15 +110,15 @@ class DetectorSpec extends AnyFunSuite {
     val empty = HogzillaBatch.emptyProfiles(spark)
     // learned max 200 on this port → 120 pairs is within profile → silent
     val wide = Seq(("10.0.0.7", 500L, Map("3389" -> 200.0))).toDF("name", "size", "buckets")
-    assert(Detectors.hPortScan(sum_, myNets, wide, empty, noHosts).count() == 0)
+    assert(Detectors.hPortScan(alienPort(sum_), myNets, wide, empty, noHosts).count() == 0)
     // learned max 110 → 120 exceeds it → fires
     val tight = Seq(("10.0.0.7", 500L, Map("3389" -> 110.0))).toDF("name", "size", "buckets")
-    val rows = Detectors.hPortScan(sum_, myNets, tight, empty, noHosts).collect()
+    val rows = Detectors.hPortScan(alienPort(sum_), myNets, tight, empty, noHosts).collect()
     assert(rows.length == 1 && rows.head.getAs[String]("my_ip") == "10.0.0.7")
     assert(rows.head.getAs[String]("note").contains("3389"))
     // cold-start (size < 100) → learn only
     val cold = Seq(("10.0.0.7", 50L, Map("3389" -> 110.0))).toDF("name", "size", "buckets")
-    assert(Detectors.hPortScan(sum_, myNets, cold, empty, noHosts).count() == 0)
+    assert(Detectors.hPortScan(alienPort(sum_), myNets, cold, empty, noHosts).count() == 0)
   }
 
   test("hPortScan suppresses port 25 for hosts whose HIST01 profile serves SMTP") {
@@ -118,15 +128,15 @@ class DetectorSpec extends AnyFunSuite {
     val sum_ = FlowSummary.summarize(samples(scan), myNets)
     val tight = Seq(("10.0.0.7", 500L, Map("25" -> 10.0))).toDF("name", "size", "buckets")
     val notSmtp = HogzillaBatch.emptyProfiles(spark)
-    assert(Detectors.hPortScan(sum_, myNets, tight, notSmtp, noHosts).count() == 1)
+    assert(Detectors.hPortScan(alienPort(sum_), myNets, tight, notSmtp, noHosts).count() == 1)
     val smtpServer = Seq(("10.0.0.7", 500L, Map("25" -> 0.9, "443" -> 0.1)))
       .toDF("name", "size", "buckets")
-    assert(Detectors.hPortScan(sum_, myNets, tight, smtpServer, noHosts).count() == 0)
+    assert(Detectors.hPortScan(alienPort(sum_), myNets, tight, smtpServer, noHosts).count() == 0)
   }
 
   test("udpAmplifier fires on a huge-packet-count NTP flow") {
     val amp = Seq.fill(2100)(("10.0.0.8", "77.7.7.7", "123", "33333", "17", 400L, 1L, "0x00", 60L))
-    val out = Detectors.udpAmplifier(FlowSummary.summarize(samples(amp ++ benign), myNets))
+    val out = Detectors.udpAmplifier(host(FlowSummary.summarize(samples(amp ++ benign), myNets)))
     assert(out.collect().map(_.getAs[String]("my_ip")).toSeq == Seq("10.0.0.8"))
   }
 
@@ -142,7 +152,8 @@ class DetectorSpec extends AnyFunSuite {
   test("ddos fires on a fast many-pair burst and respects the trimmed mean") {
     val burst = (1 to 60).map(i =>
       ("44.4.4." + i, "10.0.0.11", "50000", "80", "6", 60L, 1L, "0x02", 1000L + i))
-    val out = Detectors.ddos(FlowSummary.summarize(samples(burst ++ benign), myNets))
+    val sum_ = FlowSummary.summarize(samples(burst ++ benign), myNets)
+    val out = Detectors.ddos(sum_, pair(sum_))
     val rows = out.collect()
     assert(rows.length == 1 && rows.head.getAs[String]("my_ip") == "10.0.0.11")
     assert(rows.head.getAs[Double]("metric") <= 1.0) // 1s gaps
@@ -156,9 +167,9 @@ class DetectorSpec extends AnyFunSuite {
       ("55.5.5.5", "10.0.0.12", (40000 + i).toString, "31337", "6", 100L, 1L, "0x02", 80L + i)))
     val sum_ = FlowSummary.summarize(samples(oddPort), myNets)
     val cold = Seq(("10.0.0.12", 5L, Map("80" -> 1.0))).toDF("name", "size", "buckets")
-    assert(Detectors.atypicalPorts(sum_, cold, noHosts).count() == 0) // size 5 < 100 → learn only
+    assert(Detectors.atypicalPorts(servedPort(sum_), cold, noHosts).count() == 0) // size 5 < 100 → learn only
     val warm = Seq(("10.0.0.12", 500L, Map("80" -> 1.0))).toDF("name", "size", "buckets")
-    val rows = Detectors.atypicalPorts(sum_, warm, noHosts).collect()
+    val rows = Detectors.atypicalPorts(servedPort(sum_), warm, noHosts).collect()
     assert(rows.length == 1 && rows.head.getAs[String]("note").contains("31337"))
   }
 
@@ -170,7 +181,7 @@ class DetectorSpec extends AnyFunSuite {
       ("55.5.5.5", "10.0.0.12", "40000", "31337", "6", 100L, 1L, "0x02", 80L + i))
     val sum_ = FlowSummary.summarize(samples(clienty), myNets)
     val warm = Seq(("10.0.0.12", 500L, Map("80" -> 1.0))).toDF("name", "size", "buckets")
-    assert(Detectors.atypicalPorts(sum_, warm, noHosts).count() == 0)
+    assert(Detectors.atypicalPorts(servedPort(sum_), warm, noHosts).count() == 0)
   }
 
   test("proxyServers derivation feeds atypicalPorts' proxy-specific screen") {
@@ -182,7 +193,7 @@ class DetectorSpec extends AnyFunSuite {
     } ++ (1 to 3).map(i => // inbound clients hitting the listening port
       ("70.3.3." + i, "10.0.0.20", (51000 + i).toString, "8080", "6", 100L, 1L, "0x02", 93L + i))
     val sum_ = FlowSummary.summarize(samples(proxyish), myNets)
-    val proxies = Detectors.proxyServers(sum_)
+    val proxies = Detectors.proxyServers(servedPort(sum_))
     assert(proxies.collect().map(_.getString(0)).toSeq == Seq("10.0.0.20"))
     // with the host whitelisted as a proxy, its served (direction<0) ports
     // still reach the profile comparison instead of being screened out
@@ -190,7 +201,7 @@ class DetectorSpec extends AnyFunSuite {
     val inbound = (1 to 4).flatMap(i => Seq.fill(3)(
       ("70.2.2." + i, "10.0.0.20", (50000 + i).toString, "9999", "6", 100L, 1L, "0x02", 95L + i)))
     val sum2 = FlowSummary.summarize(samples(inbound), myNets)
-    assert(Detectors.atypicalPorts(sum2, warm, proxies).collect()
+    assert(Detectors.atypicalPorts(servedPort(sum2), warm, proxies).collect()
       .exists(_.getAs[String]("note").contains("9999")))
   }
 
@@ -200,7 +211,7 @@ class DetectorSpec extends AnyFunSuite {
     val bulk = (1 to 6).map(i =>
       ("10.0.0." + i, "66.10.20." + i, "45000", "443", "6", 20000000L, 100L, "0x18", 100L + i))
     val sum_ = FlowSummary.summarize(samples(bulk), myNets)
-    val prov = Detectors.bigProviders(sum_, myNets)
+    val prov = Detectors.bigProviders(alienNet(sum_))
     assert(prov.collect().map(_.getString(0)).toSeq == Seq("66.10.20"))
     // pass 2: a host uploading 2 GB effective to the whitelisted network
     // stays silent; the same volume to an unknown network alerts
@@ -226,16 +237,16 @@ class DetectorSpec extends AnyFunSuite {
     val empty = HogzillaBatch.emptyProfiles(spark)
     // alien /24 77.1.2 has a mature HIST05 that never served 4444 → confirm
     val h05 = Seq(("77.1.2", 100L, Map("443" -> 1.0))).toDF("name", "size", "buckets")
-    val fires = Detectors.atypicalAlienPorts(sum_, myNets, hist02, snapYes, empty, h05)
+    val fires = Detectors.atypicalAlienPorts(contacts(sum_), alienPort(sum_), myNets, hist02, snapYes, empty, h05)
     assert(fires.collect().map(_.getAs[String]("note")).exists(_.contains("4444")))
     // gate 2: port absent from the last-window snapshot → noise, silent
-    assert(Detectors.atypicalAlienPorts(sum_, myNets, hist02, snapNo, empty, h05).count() == 0)
+    assert(Detectors.atypicalAlienPorts(contacts(sum_), alienPort(sum_), myNets, hist02, snapNo, empty, h05).count() == 0)
     // gate 3: the alien network typically serves 4444 → not atypical, silent
     val h05Serves = Seq(("77.1.2", 100L, Map("4444" -> 1.0))).toDF("name", "size", "buckets")
-    assert(Detectors.atypicalAlienPorts(sum_, myNets, hist02, snapYes, empty, h05Serves).count() == 0)
+    assert(Detectors.atypicalAlienPorts(contacts(sum_), alienPort(sum_), myNets, hist02, snapYes, empty, h05Serves).count() == 0)
     // gate 3: immature alien profile (size < 21) cannot confirm → silent
     val h05Cold = Seq(("77.1.2", 5L, Map("443" -> 1.0))).toDF("name", "size", "buckets")
-    assert(Detectors.atypicalAlienPorts(sum_, myNets, hist02, snapYes, empty, h05Cold).count() == 0)
+    assert(Detectors.atypicalAlienPorts(contacts(sum_), alienPort(sum_), myNets, hist02, snapYes, empty, h05Cold).count() == 0)
   }
 
   test("alienNetworkAtypicalPorts alerts on a new port for a profiled alien /24") {
@@ -245,12 +256,12 @@ class DetectorSpec extends AnyFunSuite {
       ("10.0.0." + i, "66.30.1." + i, "43000", "4444", "6", 200L, 1L, "0x02", 400L + i))
     val sum_ = FlowSummary.summarize(samples(touch), myNets)
     val mature = Seq(("66.30.1", 2000L, Map("443" -> 1.0))).toDF("name", "size", "buckets")
-    val rows = Detectors.alienNetworkAtypicalPorts(sum_, myNets, mature).collect()
+    val rows = Detectors.alienNetworkAtypicalPorts(sum_, alienNet(sum_), myNets, mature).collect()
     assert(rows.length == 1 && rows.head.getAs[String]("alien_ip") == "66.30.1")
     assert(rows.head.getAs[String]("note").contains("4444"))
     // immature network profile → learn only
     val cold = Seq(("66.30.1", 50L, Map("443" -> 1.0))).toDF("name", "size", "buckets")
-    assert(Detectors.alienNetworkAtypicalPorts(sum_, myNets, cold).count() == 0)
+    assert(Detectors.alienNetworkAtypicalPorts(sum_, alienNet(sum_), myNets, cold).count() == 0)
   }
 
   test("p2pTalkers method 1 fires on many pairs over many local ports; ftp traffic exempt") {
@@ -258,7 +269,7 @@ class DetectorSpec extends AnyFunSuite {
       ("10.0.0.7", "66.2.1." + i, (4000 + i).toString, "6881", "6", 1000L, 1L, "0x02", 100L + i))
     val sum_ = FlowSummary.summarize(samples(p2p ++ benign), myNets)
     val out = Detectors.p2pTalkers(sum_, myNets,
-      Detectors.ftpTalkerPairs(sum_), Detectors.ftpServers(sum_)).collect()
+      Detectors.ftpTalkerPairs(pair(sum_)), Detectors.ftpServers(host(sum_))).collect()
     assert(out.map(_.getAs[String]("my_ip")).toSeq == Seq("10.0.0.7"))
     assert(out.head.getAs[String]("note") == "p2p method1")
   }
@@ -268,21 +279,21 @@ class DetectorSpec extends AnyFunSuite {
       ("93.9.9.9", "10.0.0.8", "443", "50000", "6", 600000L, 10L, "0x18", ts))
     val sum_ = FlowSummary.summarize(samples(stream ++ benign), myNets)
     val noP2p = sum_.select(col("my_ip")).limit(0)
-    val out = Detectors.mediaStreamingClients(sum_, myNets, noP2p).collect()
+    val out = Detectors.mediaStreamingClients(pair(sum_), myNets, noP2p).collect()
     assert(out.map(_.getAs[String]("my_ip")).toSeq == Seq("10.0.0.8"))
     // the same host listed as a P2P talker must be excluded (DAG J4)
     import spark.implicits._
     val p2pHosts = Seq("10.0.0.8").toDF("my_ip")
-    assert(Detectors.mediaStreamingClients(sum_, myNets, p2pHosts).count() == 0)
+    assert(Detectors.mediaStreamingClients(pair(sum_), myNets, p2pHosts).count() == 0)
   }
 
   test("dnsTunnel fires on port-53 volume far past name resolution") {
     val tunnel = Seq(
       ("10.0.0.9", "8.8.4.4", "50000", "53", "17", 300000L, 100L, "0x00", 500L))
     val sum_ = FlowSummary.summarize(samples(tunnel ++ benign), myNets)
-    val out = Detectors.dnsTunnel(sum_).collect()
+    val out = Detectors.dnsTunnel(host(sum_)).collect()
     assert(out.map(_.getAs[String]("my_ip")).toSeq == Seq("10.0.0.9"))
-    assert(Detectors.dnsTunnel(FlowSummary.summarize(samples(benign), myNets)).count() == 0)
+    assert(Detectors.dnsTunnel(host(FlowSummary.summarize(samples(benign), myNets))).count() == 0)
   }
 
   test("alienAccess fires when one alien touches many local hosts") {
@@ -299,7 +310,7 @@ class DetectorSpec extends AnyFunSuite {
     val ping = Seq(
       ("10.0.0.12", "44.4.4.5", "0", "0", "1", 64L, 10L, "0x00", 701L))
     val sum_ = FlowSummary.summarize(samples(tunnel ++ ping ++ benign), myNets)
-    val out = Detectors.icmpTunnel(sum_).collect()
+    val out = Detectors.icmpTunnel(host(sum_)).collect()
     assert(out.map(_.getAs[String]("my_ip")).toSeq == Seq("10.0.0.11"))
   }
 
@@ -319,9 +330,9 @@ class DetectorSpec extends AnyFunSuite {
     import spark.implicits._
     val profile = Seq(("10.0.0.7", 50L, Map("5" -> 1.0))).toDF("name", "size", "buckets")
     val atMax = FlowSummary.summarize(samples(vScanProbe(5) ++ benign), myNets)
-    assert(Detectors.vPortScan(atMax, myNets, profile, noHosts).count() == 0)
+    assert(Detectors.vPortScan(pair(atMax), myNets, profile, noHosts).count() == 0)
     val pastMax = FlowSummary.summarize(samples(vScanProbe(6) ++ benign), myNets)
-    assert(Detectors.vPortScan(pastMax, myNets, profile, noHosts).collect()
+    assert(Detectors.vPortScan(pair(pastMax), myNets, profile, noHosts).collect()
       .map(_.getAs[String]("my_ip")).toSeq == Seq("10.0.0.7"))
   }
 
@@ -456,5 +467,55 @@ class DetectorSpec extends AnyFunSuite {
       assert(cachedRelations(fresh).isEmpty, s"$name still reads a pin after release():\n$fresh")
     }
     assert(alerts.count() > 0) // the returned frames recompute
+  }
+
+  /** The last aggregate of a grouping: the one that emits its groups. */
+  private def isFinal(a: BaseAggregateExec) =
+    a.aggregateExpressions.exists(e => e.mode == Final || e.mode == Complete) ||
+      (a.aggregateExpressions.isEmpty && a.requiredChildDistributionExpressions.isDefined)
+
+  /** Whether `p` reads the summary pin's scan (the one pin with the
+    * summary's `t_min`) through one-input operators only: projections,
+    * filters, exchanges, windows and the partial steps of an aggregate.
+    */
+  private def readsSummary(p: SparkPlan): Boolean = p match {
+    case a: BaseAggregateExec if isFinal(a) => false
+    case s: InMemoryTableScanExec => s.relation.output.exists(_.name == "t_min")
+    case a: AdaptiveSparkPlanExec => readsSummary(a.initialPlan)
+    case other => other.children match {
+      case Seq(child) => readsSummary(child)
+      case _ => false
+    }
+  }
+
+  test("HogzillaBatch.run: each key family groups the summary once") {
+    val (alerts, updated, _, release) = fullDag()
+    try {
+      // the alert plan (which reads the alert-union pin), the nine learned
+      // tables' plans, and the cached plan of every pin they reach
+      val roots = (alerts +: updated.toSeq).map(_.queryExecution.executedPlan)
+      val plans = scala.collection.mutable.LinkedHashMap.empty[AnyRef, SparkPlan]
+      def visit(p: SparkPlan): Unit = nodes(p).foreach {
+        case s: InMemoryTableScanExec if !plans.contains(s.relation.cacheBuilder) =>
+          plans(s.relation.cacheBuilder) = s.relation.cachedPlan
+          visit(s.relation.cachedPlan)
+        case _ =>
+      }
+      roots.foreach(visit)
+      val keys = (roots ++ plans.values).flatMap(nodes).collect {
+        case a: BaseAggregateExec if isFinal(a) && readsSummary(a.child) =>
+          a.groupingExpressions.map(_.name).mkString(",")
+      }
+      // host; contacts, which the pair and alien-port families roll up;
+      // served port (per alien port, then per port); alien net (keyed by a
+      // computed /24, which the planner names _groupingexpression); and
+      // the sections that keep their own: DDoS's gap window (a second
+      // my_ip) and alienAccess
+      val allowed = Map("my_ip" -> 2, "my_ip,alien_ip,alien_port" -> 1,
+        "my_ip,my_port,alien_port" -> 1, "_groupingexpression" -> 1, "alien_ip" -> 1)
+      val perKey = keys.groupBy(identity).map { case (k, v) => k -> v.size }
+      assert(perKey.forall { case (k, n) => n <= allowed.getOrElse(k, 0) },
+        s"aggregates over the summary scan, by grouping key: $perKey")
+    } finally release()
   }
 }

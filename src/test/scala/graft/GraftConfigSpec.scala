@@ -124,4 +124,22 @@ class GraftConfigSpec extends AnyFunSuite {
     // 10.0.0.5 is the only local host in the fixture: nothing my_ip-keyed may fire
     assert(runBatch(conf).filter(col("my_ip").isNotNull).count() == 0)
   }
+
+  test("hPortScan.minFlows also gates the HIST07 learn input") {
+    // 10.0.0.7 probes port 3389 on 60 aliens: under the default per-port
+    // floor of 100, over a lowered floor of 50
+    val probe = samples((1 to 60).map(i =>
+      ("10.0.0.7", "66.1.2." + i, "41000", "3389", "6", 60L, 1L, "0x02", 50L + i)))
+    def learned(conf: GraftConfig): Long = {
+      val empty = HogzillaBatch.emptyProfiles(spark)
+      val (_, updated, _, release) = HogzillaBatch.run(spark, probe, myNets,
+        HogzillaBatch.emptyProfileTables(spark),
+        blacklist = empty.select(col("name").as("prefix")),
+        osRepos = empty.select(col("name").as("repo_ip"), col("name").as("os")),
+        config = conf)
+      try updated.hist07.filter(col("name") === "10.0.0.7").count() finally release()
+    }
+    assert(learned(GraftConfig.empty) == 0)
+    assert(learned(GraftConfig.parse("hPortScan { minFlows = \"50\" }")) == 1)
+  }
 }
