@@ -71,18 +71,16 @@ object GraftContinuousApp {
       : org.apache.spark.sql.streaming.StreamingQuery =
     StreamingJobs.consumeMicroBatches(stream, intervalSecs,
         checkpointDir = Some(s"$stateDir/checkpoint")) { (batch, batchId) =>
-      if (!batch.isEmpty) processBatch(spark, batch, stateDir, outDir, config, batchId)
+      if (!batch.isEmpty) processBatch(spark, batch, stateDir, outDir, batchId, config)
     }
 
   /** One micro-batch: detect against saved profiles, write alerts,
     * learn, stage-swap the profile state (with the applied batch id
     * riding in the swap — see [[run]] for the replay contract).
-    * `batchId < 0` (direct test/tool invocations outside a stream) keeps
-    * the legacy append-to-root alert path and skips replay tracking.
     */
   def processBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
-                   outDir: String, config: GraftConfig = GraftConfig.empty,
-                   batchId: Long = -1L): Unit = {
+                   outDir: String, batchId: Long,
+                   config: GraftConfig = GraftConfig.empty): Unit = {
     // both state tables (profiles + city coords) live under one root and
     // promote in a single StateSwap.swapAll, so the replay marker inside
     // the profiles is provably in sync with the coords table too
@@ -96,7 +94,7 @@ object GraftContinuousApp {
     // sequenced before it) already completed — a replayed handler is a no-op
     val lastApplied = allProfiles.filter(col("name") === BatchMarker)
       .select(col("size")).collect().headOption.map(_.getLong(0))
-    if (batchId >= 0 && lastApplied.exists(_ >= batchId)) return
+    if (lastApplied.exists(_ >= batchId)) return
     val profiles = allProfiles.filter(col("name") =!= BatchMarker)
 
     // known city coordinates: every (city, coords) this state has seen —
@@ -152,10 +150,7 @@ object GraftContinuousApp {
     // per-batch-id directory + overwrite = a replayed write REPLACES its
     // own output instead of appending duplicates (readers scan the
     // auth_alerts root; `batch=` becomes a partition column)
-    if (batchId >= 0)
-      alertRows.write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/auth_alerts/batch=$batchId")
-    else alertRows.write.mode(SaveMode.Append).parquet(s"$outDir/auth_alerts")
+    alertRows.write.mode(SaveMode.Overwrite).parquet(s"$outDir/auth_alerts/batch=$batchId")
 
     // learn pass: merge this batch into every family's histograms
     val learning = Families.filter { case (family, _) => familyLevel(family) != 2 }
@@ -172,11 +167,9 @@ object GraftContinuousApp {
     // the applied-batch marker swaps ATOMICALLY with the merged profiles
     // AND the coords table (one root rename): after it, a replay of
     // batchId is provably redundant for every table
-    val withMarker =
-      if (batchId < 0) updated
-      else updated.unionByName(
-        spark.range(1).select(lit(BatchMarker).as("name"), lit(batchId).as("size"),
-          lit(null).cast("map<string,double>").as("buckets")))
+    val withMarker = updated.unionByName(
+      spark.range(1).select(lit(BatchMarker).as("name"), lit(batchId).as("size"),
+        lit(null).cast("map<string,double>").as("buckets")))
     StateSwap.swapAll(stateRoot, Seq(
       "profiles" -> withMarker, "city_coords" -> cityCoords))
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.HistogramFunctions
 import graft.functions.NetFunctions
+import graft.operators.ProfileStore
 
 /** Raw render inputs buffered by [[Detectors.flowDetail]]'s top-K
   * aggregate — the payload type of its
@@ -66,6 +67,29 @@ case class FlowLineFields(myIp: String, myPort: String, alienIp: String,
   * HIST05/HIST06 builds (semi-join the eligible networks) and p2pTalkers'
   * per-pair rollup (its port sets would make the pair family an object
   * aggregate).
+  *
+  * Profile comparisons. Each HIST-relative section joins one current-window
+  * frame to [[ProfileStore.mature]]: the profiles at or past their
+  * cold-start threshold, as (key, `profile`). A younger profile only
+  * learns. Each threshold is a parameter of its section and is passed only
+  * to that operator:
+  *  - atypicalPorts: its served-port histogram vs HIST01 (100), through
+  *    [[ProfileStore.atypicalAlerts]];
+  *  - atypicalAlienPorts: [[hist02Current]] vs HIST02 (100) and a
+  *    non-empty HIST02.1 snapshot (1), confirmed by the alien's HIST01 or
+  *    HIST05 (21);
+  *  - atypicalPairs: the [[logBinKey]] of [[hostPairs]]' partner count vs
+  *    HIST03 (100);
+  *  - atypicalData: the [[logBinKey]] of its upload volume vs HIST04 (100);
+  *  - alienNetworkAtypicalPorts: [[hist05Current]] vs HIST05 (1000),
+  *    through [[ProfileStore.atypicalAlerts]];
+  *  - hPortScan: its scanned ports vs HIST07 (100);
+  *  - vPortScan: its scanning pairs vs HIST08 (10).
+  * [[HogzillaBatch]] builds [[hist02Current]], [[hist05Current]] and
+  * [[hostPairs]] once per batch and hands each to its section and to its
+  * profile's learner (hostPairs also to DDoS); the HIST03/HIST04 learners
+  * bucket by [[logBinKey]] too. smtpTalkers and hPortScan's port-25 rule
+  * read HIST01/HIST02 at any size, as the reference does.
   *
   * Scale notes baked in:
   *  - per-alert flow detail is a bounded top-K hash aggregate
@@ -269,9 +293,9 @@ object Detectors {
         sum("ftp_nf").as("ftp_nf"))
 
   /** Distinct partners (`pairs`) and flows (`nf`) per host, from the pair
-    * family.
+    * family: atypicalPairs', DDoS's and HIST03's input.
     */
-  private[detectors] def hostPairs(pair: DataFrame): DataFrame =
+  def hostPairs(pair: DataFrame): DataFrame =
     pair.groupBy("my_ip").agg(count("alien_ip").as("pairs"), sum("nf").as("nf"))
 
   /** The alien-port family from [[contacts]]: one row per (my_ip,
@@ -451,27 +475,21 @@ object Detectors {
                 col("qtd_alien_ports").cast("double") / col("low_alien_ports") > 0.5)))
         .select(col("my_ip"), col("my_port").as("bucket"), col("listen_nf").as("cnt")),
       Seq("my_ip"))
-    current
-      .join(hist01.withColumnRenamed("name", "my_ip")
-        .withColumnRenamed("size", "psize").withColumnRenamed("buckets", "pbuckets"),
-        Seq("my_ip"))
-      .filter(col("psize") >= minObs)
-      .select(col("my_ip"),
-        explode(HistogramFunctions.atypicalKeys(col("pbuckets"), col("buckets"))).as("port"))
+    ProfileStore.atypicalAlerts(hist01, current, minObs, "my_ip")
       .select(alert("atypicalPorts", col("my_ip"), lit(null).cast("string"),
-        col("port").cast("double"), lit(1), concat(lit("atypical open port "), col("port")),
-        ports = concat(lit("TCP: "), col("port"))): _*)
+        col("bucket").cast("double"), lit(1), concat(lit("atypical open port "), col("bucket")),
+        ports = concat(lit("TCP: "), col("bucket"))): _*)
   }
 
-  /** The current-window HIST02 histogram: alien ports contacted per local
-    * host ([[contacts]]' `out_nf` flows). Shared by [[atypicalAlienPorts]]
-    * and the HIST02/HIST02.1 learners.
+  /** The current-window HIST02 histogram, keyed by `name`: alien ports
+    * contacted per local host ([[contacts]]' `out_nf` flows).
+    * [[atypicalAlienPorts]] and the HIST02/HIST02.1 learners read it.
     */
-  private[detectors] def hist02Current(alienPort: DataFrame): DataFrame =
+  def hist02Current(alienPort: DataFrame): DataFrame =
     HistogramFunctions.buildHistogram(
       alienPort.filter(col("out_nf") > 0)
         .select(col("my_ip"), col("alien_port").as("bucket"), col("out_nf").as("cnt")),
-      Seq("my_ip"))
+      Seq("my_ip")).withColumnRenamed("my_ip", "name")
 
   /** Atypical alien-port access (HIST02 + HIST02.1 + the J6 alien-profile
     * confirm, HogSFlow.scala:1530-1722). Three gates before a port alerts:
@@ -490,24 +508,17 @@ object Detectors {
     * HBase GET per flow; here it is one conditional-key left join over the
     * candidate contacts.
     */
-  def atypicalAlienPorts(contacts: DataFrame, alienPort: DataFrame, myNets: Seq[String],
+  def atypicalAlienPorts(contacts: DataFrame, hist02Cur: DataFrame, myNets: Seq[String],
       hist02: DataFrame, hist02snap: DataFrame, hist01: DataFrame, hist05: DataFrame,
       minObs: Long = 100, minAlienObs: Long = 21): DataFrame = {
-    val current = hist02Current(alienPort)
-    // gates 1+2: atypical vs profile, typical vs last-window snapshot
-    val candidates = current
-      .join(hist02.withColumnRenamed("name", "my_ip")
-        .withColumnRenamed("size", "psize").withColumnRenamed("buckets", "pbuckets"),
-        Seq("my_ip"))
-      .filter(col("psize") >= minObs)
-      .join(hist02snap.withColumnRenamed("name", "my_ip")
-          .withColumnRenamed("size", "ssize").withColumnRenamed("buckets", "sbuckets"),
-        Seq("my_ip"))
-      .filter(col("ssize") > 0)
-      .select(col("my_ip"),
+    // gates 1+2: atypical vs profile, typical vs a non-empty last-window snapshot
+    val candidates = hist02Cur
+      .join(ProfileStore.mature(hist02, minObs).as("hist02"), Seq("name"))
+      .join(ProfileStore.mature(hist02snap, 1).as("snap"), Seq("name"))
+      .select(col("name").as("my_ip"),
         explode(array_intersect(
-          HistogramFunctions.atypicalKeys(col("pbuckets"), col("buckets")),
-          HistogramFunctions.typicalKeys(col("sbuckets"), col("buckets")))).as("port"))
+          HistogramFunctions.atypicalKeys(col("hist02.profile"), col("buckets")),
+          HistogramFunctions.typicalKeys(col("snap.profile"), col("buckets")))).as("port"))
     // gate 3: the alien side's own profile also calls the port atypical.
     // Conditional keyspace: local alien → HIST01-<ip>; external → HIST05-<net>.
     val flows = contacts.filter(col("out_nf") > 0)
@@ -517,18 +528,15 @@ object Detectors {
         when(FlowSummary.isLocalIp(col("alien_ip"), myNets), col("alien_ip"))
           .otherwise(NetFunctions.significantNetwork(col("alien_ip"))))
       .withColumn("is_local_alien", FlowSummary.isLocalIp(col("alien_ip"), myNets))
-    val h01 = hist01.select(col("name").as("alien_key"),
-      col("size").as("a1size"), col("buckets").as("a1buckets"))
-    val h05 = hist05.select(col("name").as("alien_key"),
-      col("size").as("a5size"), col("buckets").as("a5buckets"))
+    val alienProfile =
+      when(col("is_local_alien"), col("hist01.profile")).otherwise(col("hist05.profile"))
     val confirming = flows
-      .join(h01, Seq("alien_key"), "left").join(h05, Seq("alien_key"), "left")
-      .withColumn("asize",
-        when(col("is_local_alien"), col("a1size")).otherwise(col("a5size")))
-      .withColumn("abuckets",
-        when(col("is_local_alien"), col("a1buckets")).otherwise(col("a5buckets")))
-      .filter(col("asize").isNotNull && col("asize") >= minAlienObs &&
-        !HistogramFunctions.isTypicalEvent(col("abuckets"), col("port")))
+      .join(ProfileStore.mature(hist01, minAlienObs, "alien_key").as("hist01"),
+        Seq("alien_key"), "left")
+      .join(ProfileStore.mature(hist05, minAlienObs, "alien_key").as("hist05"),
+        Seq("alien_key"), "left")
+      .filter(alienProfile.isNotNull &&
+        !HistogramFunctions.isTypicalEvent(alienProfile, col("port")))
       .select("my_ip", "port")
     candidates.join(confirming, Seq("my_ip", "port"), "left_semi")
       .select(alert("atypicalAlienPorts", col("my_ip"), lit(null).cast("string"),
@@ -537,26 +545,18 @@ object Detectors {
   }
 
   /** Atypical port on an alien /24 network (HIST05, HogSFlow.scala:1993-2113):
-    * per external network touched by >minDistinctHosts local hosts, the
-    * ports used this window that the network's learned profile has never
-    * seen. The reference logs but does not alert (the alert block is
+    * per external network of `hist05Cur` ([[hist05Current]]: touched by
+    * >minDistinctHosts local hosts), the ports used this window that the
+    * network's mature profile has never seen. The reference logs but does not alert (the alert block is
     * commented out, :2085-2098) — emitted here as first-class alert rows.
     */
-  def alienNetworkAtypicalPorts(summary: DataFrame, alienNet: DataFrame, myNets: Seq[String],
-      hist05: DataFrame, minDistinctHosts: Int = 4, minObs: Long = 1000): DataFrame = {
-    val current = hist05Current(summary, alienNet, myNets, minDistinctHosts)
-    current
-      .join(hist05
-        .withColumnRenamed("size", "psize").withColumnRenamed("buckets", "pbuckets"),
-        Seq("name"))
-      .filter(col("psize") >= minObs)
-      .select(col("name").as("net"),
-        explode(HistogramFunctions.atypicalKeys(col("pbuckets"), col("buckets"))).as("port"))
-      .select(alert("alienNetworkAtypicalPorts", lit(null).cast("string"), col("net"),
-        col("port").cast("double"), lit(1),
-        concat(lit("atypical port on alien network "), col("port")),
-        ports = concat(lit("TCP: "), col("port"))): _*)
-  }
+  def alienNetworkAtypicalPorts(hist05Cur: DataFrame, hist05: DataFrame,
+      minObs: Long = 1000): DataFrame =
+    ProfileStore.atypicalAlerts(hist05, hist05Cur, minObs)
+      .select(alert("alienNetworkAtypicalPorts", lit(null).cast("string"), col("name"),
+        col("bucket").cast("double"), lit(1),
+        concat(lit("atypical port on alien network "), col("bucket")),
+        ports = concat(lit("TCP: "), col("bucket"))): _*)
 
   /** External summary rows, with their `net`, to the /24s touched by
     * >minDistinctHosts distinct local hosts (the alien-net family's
@@ -571,9 +571,10 @@ object Detectors {
 
   /** Current-window HIST05 build (HogSFlow.scala:1950-1991): per external
     * /24 with >minDistinctHosts distinct local pairs, the flow-count
-    * histogram over alien ports.
+    * histogram over alien ports. [[alienNetworkAtypicalPorts]] and the
+    * HIST05 learner read it.
     */
-  private[detectors] def hist05Current(summary: DataFrame, alienNet: DataFrame,
+  def hist05Current(summary: DataFrame, alienNet: DataFrame,
       myNets: Seq[String], minDistinctHosts: Int = 4): DataFrame =
     HistogramFunctions.buildHistogram(
       eligibleNetRows(summary, alienNet, myNets, minDistinctHosts)
@@ -601,20 +602,21 @@ object Detectors {
       Seq("net")).withColumnRenamed("net", "name")
 
   /** Atypical pair-count (HIST03 log-binned, HogSFlow.scala:1757-1824):
-    * the number of distinct partners this window falls in a log bin the
-    * profile has never seen.
+    * the number of distinct partners ([[hostPairs]]) this window falls in a
+    * log bin the mature profile has never seen.
     */
-  def atypicalPairs(pair: DataFrame, hist03: DataFrame, minObs: Long = 100,
-      minPairs: Int = 300): DataFrame = {
-    val pairs = hostPairs(pair)
-      .filter(col("pairs") > minPairs)
-      .withColumn("bin", HistogramFunctions.logBin(col("pairs").cast("double")).cast("string"))
-    pairs.join(hist03.withColumnRenamed("name", "my_ip"), Seq("my_ip"))
-      .filter(col("size") >= minObs &&
-        !HistogramFunctions.isTypicalEvent(col("buckets"), col("bin")))
+  def atypicalPairs(hostPairs: DataFrame, hist03: DataFrame, minObs: Long = 100,
+      minPairs: Int = 300): DataFrame =
+    hostPairs.filter(col("pairs") > minPairs)
+      .withColumn("bin", logBinKey(col("pairs")))
+      .join(ProfileStore.mature(hist03, minObs, "my_ip"), Seq("my_ip"))
+      .filter(!HistogramFunctions.isTypicalEvent(col("profile"), col("bin")))
       .select(alert("atypicalPairs", col("my_ip"), lit(null).cast("string"),
         col("pairs"), col("pairs"), concat(lit("pair-count bin "), col("bin"))): _*)
-  }
+
+  /** The HIST03/HIST04 bucket of a count: its log bin, as a string. */
+  private[detectors] def logBinKey(x: Column): Column =
+    HistogramFunctions.logBin(x.cast("double")).cast("string")
 
   /** Atypical upload volume (HIST04 log-binned bytesUp,
     * HogSFlow.scala:1835-1933): external uploads from ephemeral ports,
@@ -633,10 +635,9 @@ object Detectors {
       .groupBy("my_ip")
       .agg(sum(col("bytes_up") * col("sample_rate")).as("up"), count(lit(1)).as("nf"))
       .filter(col("up") > minBytes)
-      .withColumn("bin", HistogramFunctions.logBin(col("up").cast("double")).cast("string"))
-    vol.join(hist04.withColumnRenamed("name", "my_ip"), Seq("my_ip"))
-      .filter(col("size") >= minObs &&
-        !HistogramFunctions.isTypicalEvent(col("buckets"), col("bin")))
+      .withColumn("bin", logBinKey(col("up")))
+    vol.join(ProfileStore.mature(hist04, minObs, "my_ip"), Seq("my_ip"))
+      .filter(!HistogramFunctions.isTypicalEvent(col("profile"), col("bin")))
       .select(alert("atypicalData", col("my_ip"), lit(null).cast("string"),
         col("up"), col("nf"), concat(lit("upload bin "), col("bin"))): _*)
   }
@@ -738,14 +739,11 @@ object Detectors {
     val smtpServers = profileTypical(hist01, "25").withColumnRenamed("name", "my_ip")
       .withColumn("serves_smtp", lit(true))
     current
-      .join(hist07.withColumnRenamed("name", "my_ip")
-        .withColumnRenamed("size", "psize").withColumnRenamed("buckets", "pbuckets"),
-        Seq("my_ip"))
-      .filter(col("psize") >= minObs)
+      .join(ProfileStore.mature(hist07, minObs, "my_ip"), Seq("my_ip"))
       .join(smtpServers, Seq("my_ip"), "left")
       .filter(!(col("port") === "25" && coalesce(col("serves_smtp"), lit(false))))
-      .filter(element_at(col("pbuckets"), col("port")).isNull ||
-        element_at(col("pbuckets"), col("port")) < col("pairs").cast("double"))
+      .filter(element_at(col("profile"), col("port")).isNull ||
+        element_at(col("profile"), col("port")) < col("pairs").cast("double"))
       .select(alert("hPortScan", col("my_ip"), lit(null).cast("string"),
         col("pairs"), col("nf"),
         concat(lit("horizontal scan beyond learned max on port "), col("port")),
@@ -783,11 +781,8 @@ object Detectors {
   def vPortScan(pair: DataFrame, myNets: Seq[String], hist08: DataFrame,
       p2pHosts: DataFrame, minPorts: Int = 3, minObs: Long = 10): DataFrame =
     scanningPairs(pair, p2pHosts, minPorts)
-      .join(hist08.withColumnRenamed("name", "my_ip")
-        .withColumnRenamed("size", "psize").withColumnRenamed("buckets", "pbuckets"),
-        Seq("my_ip"))
-      .filter(col("psize") >= minObs)
-      .filter(size(map_filter(col("pbuckets"), (k, v) =>
+      .join(ProfileStore.mature(hist08, minObs, "my_ip"), Seq("my_ip"))
+      .filter(size(map_filter(col("profile"), (k, v) =>
         k.cast("long") >= col("vscan_ports") &&
           v > HistogramFunctions.AtypicalThreshold)) === 0)
       .select(alert("vPortScan", col("my_ip"), col("alien_ip"),
@@ -795,10 +790,10 @@ object Detectors {
         lit("vertical scan beyond learned port-count profile")): _*)
 
   /** DDoS burst (A4 + F9 trimmed mean, HogSFlow.scala:2676-2731): many
-    * flows from many pairs whose inter-arrival gaps — after dropping the
-    * 4 largest — average under a minute.
+    * flows from many pairs ([[hostPairs]]) whose inter-arrival gaps —
+    * after dropping the 4 largest — average under a minute.
     */
-  def ddos(summary: DataFrame, pair: DataFrame, minFlows: Int = 50, minPairs: Int = 20,
+  def ddos(summary: DataFrame, hostPairs: DataFrame, minFlows: Int = 50, minPairs: Int = 20,
       maxMeanGapSecs: Double = 60.0): DataFrame = {
     val byStart = Window.partitionBy(col("my_ip")).orderBy(col("t_min"), col("alien_ip"), col("alien_port"))
     val gaps = summary
@@ -807,7 +802,7 @@ object Detectors {
     val byGap = Window.partitionBy(col("my_ip")).orderBy(col("gap").desc, col("t_min"), col("alien_ip"), col("alien_port"))
     val trimmed = gaps.withColumn("gr", row_number().over(byGap)).filter(col("gr") > 4)
       .groupBy("my_ip").agg(avg("gap").as("mean_gap"))
-    hostPairs(pair)
+    hostPairs
       .filter(col("nf") > minFlows && col("pairs") > minPairs)
       .join(trimmed, Seq("my_ip"))
       .filter(col("mean_gap") < maxMeanGapSecs)

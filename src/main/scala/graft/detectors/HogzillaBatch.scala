@@ -227,6 +227,11 @@ object HogzillaBatch {
       Set("80", "443", "53")).toSeq.sorted
     val vScanMinPorts = c.getInt("vPortScan.minPorts", 3)
 
+    // the current-window frames a detector and a learner both read
+    val hist02Cur = Detectors.hist02Current(alienPort)
+    val hist05Cur = Detectors.hist05Current(summary, alienNet, myNets)
+    val hostPairs = Detectors.hostPairs(pair)
+
     // pass 2: the standing detectors, profile-relative where the
     // reference's are (HIST01/02/02.1/03/04/05/07/08); each entry is
     // (conf section, lazily-built frame) so a disabled section never
@@ -243,15 +248,15 @@ object HogzillaBatch {
         reputation.proxies,
         excludePorts = c.getSetString("atypicalPorts.excludePorts",
           Set("80", "443", "587", "465", "993", "995")).toSeq.sorted)),
-      "atypicalAlienPorts" -> (() => Detectors.atypicalAlienPorts(contacts, alienPort, myNets,
+      "atypicalAlienPorts" -> (() => Detectors.atypicalAlienPorts(contacts, hist02Cur, myNets,
         profiles.hist02, profiles.hist02snap, profiles.hist01, profiles.hist05)),
-      "atypicalPairs" -> (() => Detectors.atypicalPairs(pair, profiles.hist03,
+      "atypicalPairs" -> (() => Detectors.atypicalPairs(hostPairs, profiles.hist03,
         minPairs = c.getInt("atypicalPairs.minPairs", 300))),
       "atypicalData" -> (() => Detectors.atypicalData(summary, myNets, profiles.hist04,
         reputation.bigProviders,
         minBytes = c.getLong("atypicalData.minBytes", 5737418240L))),
       "alienNetworkAtypicalPorts" -> (() =>
-        Detectors.alienNetworkAtypicalPorts(summary, alienNet, myNets, profiles.hist05)),
+        Detectors.alienNetworkAtypicalPorts(hist05Cur, profiles.hist05)),
       "alien" -> (() => Detectors.alienAccess(summary, myNets,
         minPairs = c.getInt("alien.minPairs", 20))),
       "UDPAmplifier" -> (() => Detectors.udpAmplifier(host)),
@@ -266,7 +271,7 @@ object HogzillaBatch {
         excludeAlienPorts = hScanExcluded)),
       "vPortScan" -> (() => Detectors.vPortScan(pair, myNets, profiles.hist08, p2pHosts,
         minPorts = vScanMinPorts)),
-      "DDoS" -> (() => Detectors.ddos(summary, pair,
+      "DDoS" -> (() => Detectors.ddos(summary, hostPairs,
         minFlows = c.getInt("DDoS.minFlows", 50),
         minPairs = c.getInt("DDoS.minPairs", 20))),
       "BotNet" -> (() => Detectors.botnetCC(summary, blacklist,
@@ -322,11 +327,9 @@ object HogzillaBatch {
     // (decayed weighted mean, cold-start-safe) — S6's delete+put upsert
     // becomes one atomic state overwrite per family
     def logBinned(perHost: DataFrame, x: String) = HistogramFunctions.buildHistogram(
-      perHost.select(col("my_ip").as("name"),
-        HistogramFunctions.logBin(col(x).cast("double")).cast("string").as("bucket"),
+      perHost.select(col("my_ip").as("name"), Detectors.logBinKey(col(x)).as("bucket"),
         lit(1L).as("cnt")),
       Seq("name"))
-    val hist02Cur = Detectors.hist02Current(alienPort).withColumnRenamed("my_ip", "name")
     val learned = ProfileTables(
       hist01 = ProfileStore.update(profiles.hist01, HistogramFunctions.buildHistogram(
         servedPort.select(col("my_ip").as("name"), col("my_port").as("bucket"),
@@ -334,10 +337,9 @@ object HogzillaBatch {
         Seq("name"))),
       hist02 = ProfileStore.update(profiles.hist02, hist02Cur),
       hist02snap = ProfileStore.snapshot(profiles.hist02snap, hist02Cur),
-      hist03 = ProfileStore.update(profiles.hist03, logBinned(Detectors.hostPairs(pair), "pairs")),
+      hist03 = ProfileStore.update(profiles.hist03, logBinned(hostPairs, "pairs")),
       hist04 = ProfileStore.update(profiles.hist04, logBinned(host, "up")),
-      hist05 = ProfileStore.update(profiles.hist05,
-        Detectors.hist05Current(summary, alienNet, myNets)),
+      hist05 = ProfileStore.update(profiles.hist05, hist05Cur),
       hist06 = ProfileStore.update(profiles.hist06,
         Detectors.hist06Current(summary, alienNet, myNets)),
       hist07 = ProfileStore.updateMax(profiles.hist07,

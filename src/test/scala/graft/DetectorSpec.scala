@@ -39,6 +39,11 @@ class DetectorSpec extends AnyFunSuite {
   private def servedPort(s: DataFrame) = Detectors.servedPortFeatures(s)
   private def alienNet(s: DataFrame) = Detectors.alienNetFeatures(s, myNets)
 
+  /** The current-window frames a section shares with its learner. */
+  private def hostPairs(s: DataFrame) = Detectors.hostPairs(pair(s))
+  private def hist02Cur(s: DataFrame) = Detectors.hist02Current(alienPort(s))
+  private def hist05Cur(s: DataFrame) = Detectors.hist05Current(s, alienNet(s), myNets)
+
   private def benign = (1 to 5).map(i =>
     ("10.0.0.100", "93.1.1." + i, "50000", "443", "6", 1000L, 10L, "0x18", 1000L + i))
 
@@ -153,7 +158,7 @@ class DetectorSpec extends AnyFunSuite {
     val burst = (1 to 60).map(i =>
       ("44.4.4." + i, "10.0.0.11", "50000", "80", "6", 60L, 1L, "0x02", 1000L + i))
     val sum_ = FlowSummary.summarize(samples(burst ++ benign), myNets)
-    val out = Detectors.ddos(sum_, pair(sum_))
+    val out = Detectors.ddos(sum_, hostPairs(sum_))
     val rows = out.collect()
     assert(rows.length == 1 && rows.head.getAs[String]("my_ip") == "10.0.0.11")
     assert(rows.head.getAs[Double]("metric") <= 1.0) // 1s gaps
@@ -237,16 +242,16 @@ class DetectorSpec extends AnyFunSuite {
     val empty = HogzillaBatch.emptyProfiles(spark)
     // alien /24 77.1.2 has a mature HIST05 that never served 4444 → confirm
     val h05 = Seq(("77.1.2", 100L, Map("443" -> 1.0))).toDF("name", "size", "buckets")
-    val fires = Detectors.atypicalAlienPorts(contacts(sum_), alienPort(sum_), myNets, hist02, snapYes, empty, h05)
+    val fires = Detectors.atypicalAlienPorts(contacts(sum_), hist02Cur(sum_), myNets, hist02, snapYes, empty, h05)
     assert(fires.collect().map(_.getAs[String]("note")).exists(_.contains("4444")))
     // gate 2: port absent from the last-window snapshot → noise, silent
-    assert(Detectors.atypicalAlienPorts(contacts(sum_), alienPort(sum_), myNets, hist02, snapNo, empty, h05).count() == 0)
+    assert(Detectors.atypicalAlienPorts(contacts(sum_), hist02Cur(sum_), myNets, hist02, snapNo, empty, h05).count() == 0)
     // gate 3: the alien network typically serves 4444 → not atypical, silent
     val h05Serves = Seq(("77.1.2", 100L, Map("4444" -> 1.0))).toDF("name", "size", "buckets")
-    assert(Detectors.atypicalAlienPorts(contacts(sum_), alienPort(sum_), myNets, hist02, snapYes, empty, h05Serves).count() == 0)
+    assert(Detectors.atypicalAlienPorts(contacts(sum_), hist02Cur(sum_), myNets, hist02, snapYes, empty, h05Serves).count() == 0)
     // gate 3: immature alien profile (size < 21) cannot confirm → silent
     val h05Cold = Seq(("77.1.2", 5L, Map("443" -> 1.0))).toDF("name", "size", "buckets")
-    assert(Detectors.atypicalAlienPorts(contacts(sum_), alienPort(sum_), myNets, hist02, snapYes, empty, h05Cold).count() == 0)
+    assert(Detectors.atypicalAlienPorts(contacts(sum_), hist02Cur(sum_), myNets, hist02, snapYes, empty, h05Cold).count() == 0)
   }
 
   test("alienNetworkAtypicalPorts alerts on a new port for a profiled alien /24") {
@@ -256,12 +261,12 @@ class DetectorSpec extends AnyFunSuite {
       ("10.0.0." + i, "66.30.1." + i, "43000", "4444", "6", 200L, 1L, "0x02", 400L + i))
     val sum_ = FlowSummary.summarize(samples(touch), myNets)
     val mature = Seq(("66.30.1", 2000L, Map("443" -> 1.0))).toDF("name", "size", "buckets")
-    val rows = Detectors.alienNetworkAtypicalPorts(sum_, alienNet(sum_), myNets, mature).collect()
+    val rows = Detectors.alienNetworkAtypicalPorts(hist05Cur(sum_), mature).collect()
     assert(rows.length == 1 && rows.head.getAs[String]("alien_ip") == "66.30.1")
     assert(rows.head.getAs[String]("note").contains("4444"))
     // immature network profile → learn only
     val cold = Seq(("66.30.1", 50L, Map("443" -> 1.0))).toDF("name", "size", "buckets")
-    assert(Detectors.alienNetworkAtypicalPorts(sum_, alienNet(sum_), myNets, cold).count() == 0)
+    assert(Detectors.alienNetworkAtypicalPorts(hist05Cur(sum_), cold).count() == 0)
   }
 
   test("p2pTalkers method 1 fires on many pairs over many local ports; ftp traffic exempt") {
@@ -334,6 +339,57 @@ class DetectorSpec extends AnyFunSuite {
     val pastMax = FlowSummary.summarize(samples(vScanProbe(6) ++ benign), myNets)
     assert(Detectors.vPortScan(pair(pastMax), myNets, profile, noHosts).collect()
       .map(_.getAs[String]("my_ip")).toSeq == Seq("10.0.0.7"))
+  }
+
+  test("maturity boundary: each profile-relative section compares a profile of size minObs, and only learns below it") {
+    import spark.implicits._
+    def profile(name: String, size: Long, buckets: (String, Double)*) =
+      Seq((name, size, buckets.toMap)).toDF("name", "size", "buckets")
+    def summary(rows: Seq[(String, String, String, String, String, Long, Long, String, Long)]) =
+      FlowSummary.summarize(samples(rows), myNets)
+    val empty = HogzillaBatch.emptyProfiles(spark)
+    val noNets = Seq.empty[String].toDF("net")
+    // the fixtures of the section tests above; fanOut: 10 partners, log bin 2
+    val served = summary((1 to 5).flatMap(i => Seq.fill(3)(
+      ("55.5.5.5", "10.0.0.12", (40000 + i).toString, "31337", "6", 100L, 1L, "0x02", 80L + i))))
+    val alienFlows = summary(Seq.fill(3)(
+      ("10.0.0.40", "77.1.2.3", "42000", "4444", "6", 500L, 1L, "0x02", 300L)))
+    val fanOut = summary((1 to 10).map(i =>
+      ("10.0.0.50", "66.4.4." + i, "43000", "8443", "6", 100L, 1L, "0x18", 500L + i)))
+    val upload = summary(Seq.fill(3)(
+      ("10.0.0.30", "88.9.9.9", "45000", "443", "6", 20000000L, 100L, "0x02", 200L)))
+    val netTouch = summary((1 to 6).map(i =>
+      ("10.0.0." + i, "66.30.1." + i, "43000", "4444", "6", 200L, 1L, "0x02", 400L + i)))
+    val hScan = summary((1 to 120).map(i =>
+      ("10.0.0.7", "66.1." + (i / 250) + "." + (i % 250), "41000", "3389", "6", 60L, 1L, "0x02", 50L + i)))
+    val vScan = summary(vScanProbe(5) ++ benign)
+    def alienPorts(hist02Size: Long, snapSize: Long, hist05Size: Long) =
+      Detectors.atypicalAlienPorts(contacts(alienFlows), hist02Cur(alienFlows), myNets,
+        profile("10.0.0.40", hist02Size, "443" -> 1.0),
+        profile("10.0.0.40", snapSize, "4444" -> 0.5, "443" -> 0.5),
+        empty, profile("77.1.2", hist05Size, "443" -> 1.0))
+    // (section and profile, threshold, the alerts against a profile of size n)
+    val sections: Seq[(String, Long, Long => DataFrame)] = Seq(
+      ("atypicalPorts, HIST01", 100L, n =>
+        Detectors.atypicalPorts(servedPort(served), profile("10.0.0.12", n, "80" -> 1.0), noHosts)),
+      ("atypicalAlienPorts, HIST02", 100L, n => alienPorts(n, 10L, 100L)),
+      ("atypicalAlienPorts, HIST02.1 snapshot", 1L, n => alienPorts(500L, n, 100L)),
+      ("atypicalAlienPorts, alien-side HIST05", 21L, n => alienPorts(500L, 10L, n)),
+      ("atypicalPairs, HIST03", 100L, n => Detectors.atypicalPairs(hostPairs(fanOut),
+        profile("10.0.0.50", n, "9" -> 1.0), minPairs = 5)),
+      ("atypicalData, HIST04", 100L, n => Detectors.atypicalData(upload, myNets,
+        profile("10.0.0.30", n, "5" -> 1.0), noNets, minBytes = 1000000L)),
+      ("alienNetworkAtypicalPorts, HIST05", 1000L, n =>
+        Detectors.alienNetworkAtypicalPorts(hist05Cur(netTouch), profile("66.30.1", n, "443" -> 1.0))),
+      ("hPortScan, HIST07", 100L, n => Detectors.hPortScan(alienPort(hScan), myNets,
+        profile("10.0.0.7", n, "3389" -> 110.0), empty, noHosts)),
+      ("vPortScan, HIST08", 10L, n => Detectors.vPortScan(pair(vScan), myNets,
+        profile("10.0.0.7", n, "4" -> 1.0), noHosts)))
+    for ((section, minObs, alerts) <- sections) {
+      assert(alerts(minObs).count() > 0, s"$section: a profile of size $minObs must be compared")
+      assert(alerts(minObs - 1).count() == 0,
+        s"$section: a profile of size ${minObs - 1} must only learn")
+    }
   }
 
   test("HogzillaBatch.run: full DAG produces the planted alerts and learns all 9 profile families") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import graft.detectors.HogzillaBatch
 
@@ -89,15 +90,16 @@ class GraftConfigSpec extends AnyFunSuite {
   private def modestSpam = (1 to 30).flatMap(i => Seq.fill(4)(
     ("10.0.0.5", "66.1.1." + i, "4000", "25", "6", 2000L, 10L, "0x18", 100L + i)))
 
+  /** The batch's alerts, collected before its pins are released. */
   private def runBatch(conf: GraftConfig): DataFrame = {
     val s = samples(modestSpam)
     val empty = HogzillaBatch.emptyProfiles(spark)
     val profiles = HogzillaBatch.emptyProfileTables(spark)
-    val (alerts, _, _, _) = HogzillaBatch.run(spark, s, myNets, profiles,
+    val (alerts, _, _, release) = HogzillaBatch.run(spark, s, myNets, profiles,
       blacklist = empty.select(col("name").as("prefix")),
       osRepos = empty.select(col("name").as("repo_ip"), col("name").as("os")),
       config = conf)
-    alerts
+    try spark.createDataFrame(alerts.collect().toSeq.asJava, alerts.schema) finally release()
   }
 
   test("a conf-file threshold override changes the alert set (SMTPTalkers.minBytes)") {
