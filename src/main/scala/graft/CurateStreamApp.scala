@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Pin, StateSwap}
+import graft.operators.{Buckets, Dedup, Pin, StateSwap}
 import graft.streaming.StreamingJobs
 
 /** Continuous corpus curation — the streaming sibling of [[CurateApp]]:
@@ -58,7 +58,7 @@ import graft.streaming.StreamingJobs
   *                    the ingest hole the batch app's stage-5 gate covers
   *                    for the initial corpus;
   *   6. `near_dup`  — any MinHash band collides with the corpus band
-  *                    index (`Dedup.lshBandsLocal` on the stream side —
+  *                    index (`Dedup.lshBands` on the stream side —
   *                    one codegen kernel per row, no stream-side
   *                    shuffle; the corpus side carries the same
   *                    megabucket guard as the batch generators), OR with
@@ -140,7 +140,7 @@ object CurateStreamApp {
     *   `bench_bands`    (band, sig, bench_id) MinHash band index
     *                    (fuzzy candidates — same layout as the corpus
     *                    band index, so the stream side reuses its
-    *                    row-local [[Dedup.lshBandsLocal]] signatures)
+    *                    row-local [[Dedup.lshBands]] signatures)
     *   `bench_nsh`      (bench_id, n_b) per-doc shingle counts (fuzzy
     *                    Jaccard denominator)
     * Input needs (doc_id, text).
@@ -443,8 +443,8 @@ object CurateStreamApp {
     // whose small side is the batch (broadcast), so the state is
     // scanned, never shuffled.
     val stateSizes = state.sizes
-    val oversized = stateSizes.filter(col("n") > maxBucket).select(col("band"), col("sig"))
-    val batchBands = Dedup.lshBandsLocal(batchUnique, widths.numPerms, widths.numBands)
+    val oversized = Buckets.oversized(stateSizes, Seq("band", "sig"), "n", maxBucket)
+    val batchBands = Dedup.lshBands(batchUnique, widths.numPerms, widths.numBands)
     val corpusHit = batchBands
       .join(oversized, Seq("band", "sig"), "left_anti")
       .join(stateBands, Seq("band", "sig"), "left_semi")
@@ -499,9 +499,7 @@ object CurateStreamApp {
           .join(broadcast(ib.select(col("band"), col("sig")).distinct()),
             Seq("band", "sig"), "left_semi")
           .transform(pins.truncate(_)) // read twice: bucket count + verify join
-        val hot = touched.groupBy(col("band"), col("sig"))
-          .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
-          .select(col("band"), col("sig"))
+        val hot = Buckets.hot(touched, Seq("band", "sig"), maxBucket)
         val imgCorpusHit = ib
           .join(touched.join(broadcast(hot), Seq("band", "sig"), "left_anti"),
             Seq("band", "sig"))
@@ -550,9 +548,7 @@ object CurateStreamApp {
         val audTouched = state.audioFps.withColumnRenamed("media_id", "state_id")
           .join(broadcast(sigs.select(col("fp")).distinct()), Seq("fp"), "left_semi")
           .transform(pins.truncate(_)) // read twice: bucket count + verify join
-        val audHot = audTouched.groupBy(col("fp"))
-          .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
-          .select(col("fp"))
+        val audHot = Buckets.hot(audTouched, Seq("fp"), maxBucket)
         // containment denominator = least(nfp_arrival, nfp_state), the
         // m9/audioNearDupPairs verify: an arrival that EXTENDS a corpus
         // clip is caught too (its superset fp set contains the state
@@ -652,9 +648,7 @@ object CurateStreamApp {
               .join(broadcast(batchBands.select(col("band"), col("sig")).distinct()),
                 Seq("band", "sig"), "left_semi")
               .transform(pins.truncate(_)) // read twice: bucket count + candidates
-            val hot = touched.groupBy(col("band"), col("sig"))
-              .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
-              .select(col("band"), col("sig"))
+            val hot = Buckets.hot(touched, Seq("band", "sig"), maxBucket)
             val pairs = batchBands
               .join(touched.join(broadcast(hot), Seq("band", "sig"), "left_anti"),
                 Seq("band", "sig"))
@@ -727,7 +721,7 @@ object CurateStreamApp {
 
     // state advance: the batch's survivors only. Image bands re-key the
     // precomputed batch index on the survivor set — no second decode.
-    val survivorBands = Dedup.lshBandsLocal(survivors.select(col("doc_id"), col("text")),
+    val survivorBands = Dedup.lshBands(survivors.select(col("doc_id"), col("text")),
         widths.numPerms, widths.numBands)
       .transform(pins.truncate(_)) // consumed by two writes below
     val survivorImgBands = batchImgBands.map(_

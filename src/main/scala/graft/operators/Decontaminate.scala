@@ -39,13 +39,12 @@ import org.apache.spark.sql.functions._
 object Decontaminate {
 
   /** Measured-rows threshold between "provably broadcastable" and
-    * "force a shuffled join": the [[Dedup.BroadcastIndexRowCap]] trade
+    * "force a shuffled join": the [[Buckets.BroadcastIndexRowCap]] trade
     * (2^18 rows of ids/counts ≈ a few MB serialized).
     */
   val BroadcastRowCap: Long = 1L << 18
 
-  /** Degenerate-band-bucket guard, same trade as
-    * [[Dedup.lshCandidatePairs]]'s `maxBucket`: a (band, sig) bucket
+  /** Degenerate-band-bucket guard, the [[Buckets]] trade: a (band, sig) bucket
     * holding kT train docs and kB bench docs expands to kT·kB candidate
     * pairs, so one boilerplate signature shared corpus-wide would own
     * the runtime (and the pair set's memory). Buckets past the cap on
@@ -175,13 +174,10 @@ object Decontaminate {
     */
   def fuzzyScores(train: DataFrame, bench: DataFrame,
       maxBucket: Int = MaxBucket): DataFrame = {
-    // bucket sizes via a window over the SAME (band, sig) key the join
-    // shuffles on (the lshCandidatePairs shape — the exchange is shared,
-    // and oversized buckets drop BEFORE the pair fanout materializes)
-    val byBucket = Window.partitionBy(col("band"), col("sig"))
-    def guarded(bands: DataFrame): DataFrame = bands
-      .withColumn("bsz", count(lit(1)).over(byBucket))
-      .filter(col("bsz") <= maxBucket).drop("bsz")
+    // the bucket-size window rides the (band, sig) exchange of the join,
+    // so oversized buckets drop BEFORE the pair fanout materializes
+    def guarded(bands: DataFrame): DataFrame =
+      Buckets.sized(bands, Seq("band", "sig"), 1, maxBucket)
     val pairs = guarded(Dedup.lshBands(train))
       .join(guarded(Dedup.lshBands(bench))
         .select(col("band"), col("sig"), col("doc_id").as("bench_id")),

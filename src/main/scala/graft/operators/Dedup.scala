@@ -74,46 +74,26 @@ object Dedup {
   /** (doc_id, band, sig): one row per LSH band; docs sharing (band, sig)
     * are near-dup candidates. Input df must have (doc_id, text).
     *
-    * Since r12 this IS [[lshBandsLocal]] — the compiled row-local
-    * [[graft.expressions.MinhashSig]] kernel, zero shuffles. The batch
-    * form it replaces (token posexplode → window-lead shingle assembly →
-    * 12 codegen `min()` aggregates) paid a full doc_id exchange of every
-    * token row plus the aggregate's own exchange; its docstring defended
-    * that against the INTERPRETED `transform`+`slice` HOF pipeline (4×
-    * slower per row), but the compiled kernel is neither — it folds
-    * shingle assembly, md5, and every permutation minimum into one
-    * codegen expression per row (~0.5 s per 5k docs vs 6-8 s for the
-    * interpreted HOFs), so the exchange bought nothing. Bit-identical
-    * output is spec-pinned against a from-scratch SQL-expression
-    * reference pipeline (PipelineSpec "lshBandsLocal … bit-identical to
-    * the SQL-expression reference"), and every LSH consumer (candidate pairs, fuzzy
-    * decontamination, incremental screens) drops two exchanges — at
-    * sf0.1: d2_minhash_lsh 1.35 → 0.9 s, d2v_minhash128 3.7 → 1.3 s,
-    * the full c5 curation pipeline 7.0 → 5.7 s. At 100 TB the win is
-    * the removed corpus-wide token exchange, which dwarfs these.
+    * Row-local: the compiled [[graft.expressions.MinhashSig]] kernel
+    * folds shingle assembly, md5 and every permutation minimum into one
+    * codegen expression per row — no window, no groupBy, zero shuffles —
+    * so it also runs as a per-row projection inside a Structured
+    * Streaming query (the stream side of a stream-static candidate
+    * join). A token-exploding batch form pays a doc_id exchange of every
+    * token row plus an aggregate exchange, and the interpreted
+    * `transform`+`slice` HOF form costs 6-8 s per 5k docs against the
+    * kernel's ~0.5 s. Bit-identical output is spec-pinned against a
+    * from-scratch SQL-expression reference pipeline (PipelineSpec
+    * "lshBands … bit-identical to the SQL-expression reference").
     */
   def lshBands(df: DataFrame, numPerms: Int = NumPerms,
-      numBands: Int = NumBands): DataFrame =
-    lshBandsLocal(df, numPerms, numBands)
-
-  /** Row-local [[lshBands]] implementation: identical (doc_id, band, sig)
-    * output, computed entirely inside each row — no window, no groupBy —
-    * which also lets it run as a per-row projection inside a Structured
-    * Streaming query (the stream side of a stream-static candidate join).
-    */
-  def lshBandsLocal(df: DataFrame, numPerms: Int = NumPerms,
       numBands: Int = NumBands): DataFrame = {
     require(numBands >= 1 && numPerms % numBands == 0,
       s"numPerms=$numPerms must divide into numBands=$numBands")
     val rows = numPerms / numBands
     val perms = permsFor(numPerms)
-    // the whole shingle-assembly → md5 → 60-bit hash → per-permutation-
-    // minimum fold runs in ONE codegen expression
-    // ([[graft.expressions.MinhashSig]]) over the token array: the HOF
-    // pipeline (shingles transform + per-permutation array_min(transform))
-    // evaluated interpreted, allocating per shingle and re-deriving the
-    // digest array once per permutation after projection collapse —
-    // measured 6–8 s per 5k-doc micro-batch vs ~0.5 s for the kernel
+    // shingle assembly → md5 → 60-bit hash → per-permutation minimum,
+    // in ONE codegen expression over the token array
     val sigArr = org.apache.spark.sql.graft.ColumnBridge.column(
       graft.expressions.MinhashSig(
         org.apache.spark.sql.graft.ColumnBridge.expression(tokens(col("text"))),
@@ -123,7 +103,7 @@ object Dedup {
         concat_ws("|", (0 until rows).map(r => col("mhs")(b * rows + r).cast("string")): _*).as("sig"))
     }
     df.select(col("doc_id"), col("text"))
-      // <ShingleSize tokens ⇒ no shingles ⇒ no signature (lshBands parity);
+      // <ShingleSize tokens ⇒ no shingles ⇒ no signature;
       // tokens-size form keeps the filter codegen and off the hash array
       .filter(size(tokens(col("text"))) >= ShingleSize)
       .select(col("doc_id"), sigArr.as("mhs"))
@@ -131,43 +111,15 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
-  /** Candidate near-dup pairs from LSH: ONE shuffle on (band, sig), then
-    * pairs expand row-locally inside each bucket — cheaper than a
-    * self-join (which would recompute every minhash twice) and quadratic
-    * only in bucket size, never in n.
-    *
-    * `maxBucket` is the degenerate-bucket guard: a bucket holding k docs
-    * expands to k·(k−1)/2 pairs, so boilerplate text shared by a million
-    * docs would detonate one task with 5·10¹¹ rows. Buckets past the cap
-    * are DROPPED (their members pair up in their other bands unless the
-    * text is pathologically common, in which case exact dedup via
-    * [[graft.functions.TextFunctions.exactFingerprint]] is the right tool
-    * anyway) — the standard recall trade for a hard task-size bound.
+  /** Candidate near-dup pairs from LSH: docs sharing a (band, sig)
+    * bucket, through [[Buckets.pairs]] (one shuffle on the bucket key,
+    * pairs expanded row-locally, buckets past `maxBucket` dropped).
     * Returns (doc1, doc2, n_bands) with doc1 < doc2.
     */
   def lshCandidatePairs(df: DataFrame, maxBucket: Int = 10000,
-      numPerms: Int = NumPerms, numBands: Int = NumBands): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // compiled pair expansion (PairCombinations — same kernel as the
-    // substring-span pipelines; the HOF flatten(transform(slice…)) form
-    // boxes elements and copies a slice per outer position)
-    val pairsInBucket = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.expressions.PairCombinations(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("ds"))))
-    // bucket sizes via a window over the SAME key the groupBy uses — the
-    // exchange is shared, and oversized buckets are dropped BEFORE
-    // collect_list ever buffers them (filtering after the collect would
-    // still materialize the megabucket in one aggregation buffer)
-    val w = Window.partitionBy(col("band"), col("sig"))
-    lshBands(df, numPerms, numBands)
-      .withColumn("bsz", count(lit(1)).over(w))
-      .filter(col("bsz").between(2, maxBucket))
-      .groupBy(col("band"), col("sig"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .select(explode(pairsInBucket).as("p"))
-      .select(col("p.doc_a").as("doc1"), col("p.doc_b").as("doc2"))
-      .groupBy(col("doc1"), col("doc2")).agg(count(lit(1)).as("n_bands"))
-  }
+      numPerms: Int = NumPerms, numBands: Int = NumBands): DataFrame =
+    Buckets.pairs(lshBands(df, numPerms, numBands), Seq("band", "sig"), "doc_id",
+      maxBucket, "doc1", "doc2", "n_bands")
 
   /** Exact n-gram Jaccard verification of candidate pairs. Shingle sets
     * are computed ONCE PER DOCUMENT over the set of docs that appear in
@@ -257,18 +209,6 @@ object Dedup {
     out
   }
 
-  /** Bit `b` (0-based, low bit first within each hex digit) of an md5 hex
-    * string: digit = substr(h, b/4+1), value via ascii arithmetic, then
-    * (value >> (b%4)) & 1 — computed with exact double pow/floor because
-    * Column shift amounts must be literals. Portable to the oracle, which
-    * uses DuckDB's native `>>`/`&`.
-    */
-  private def md5Bit(h: Column, b: Column): Column = {
-    val a = ascii(h.substr(floor(b / 4).cast("int") + 1, lit(1)))
-    val digit = when(a <= 57, a - 48).otherwise(a - 87)
-    pmod(floor(digit.cast("double") / pow(lit(2.0), (b % 4).cast("double"))).cast("int"), lit(2))
-  }
-
   /** DataFrame-level SimHash: one compiled row-local pass per document
     * ([[graft.expressions.SimhashSig]]) — per token, bit `b` of
     * md5(token) votes ±1, signature bit b is 1 iff the vote sum is
@@ -295,8 +235,8 @@ object Dedup {
     // exploded aggregate materialized a row per token, projected 16 hex
     // digits off each md5 and updated a `bits`-column hash aggregate per
     // token row. Bit-identical by construction (and pinned by the
-    // PipelineSpec parity tests against the independent row-local HOF
-    // form plus the 32/64-bit cross-checks). The zero-token filter keeps
+    // PipelineSpec parity tests against an independent row-local HOF
+    // reference plus the 32/64-bit cross-checks). The zero-token filter keeps
     // the exploded form's output contract: docs whose text tokenizes to
     // nothing produced no exploded rows and were ABSENT from the
     // aggregate's output. NOTE: one signature per input ROW — the old
@@ -307,28 +247,6 @@ object Dedup {
         bits))
     df.filter(size(tokens(col(textCol))) >= 1)
       .select(col(idCol), sh.as("sh"))
-  }
-
-  /** 32-bit SimHash of the token multiset, entirely row-local (nested
-    * higher-order functions; no explode, no shuffle): per token, bit b of
-    * md5(token) votes ±1; simhash bit b is 1 iff the vote sum is positive.
-    * Returns a non-negative long in [0, 2^32). Prefer [[simhashOf]] for
-    * whole-corpus signatures (codegen); this Column form suits small
-    * per-row uses inside a wider projection.
-    */
-  def simhash(toks: Column): Column = {
-    val votes = aggregate(
-      toks,
-      typedLit(Seq.fill(SimHashBits)(0)),
-      (acc, t) => {
-        val h = md5(t)
-        zip_with(acc, sequence(lit(0), lit(SimHashBits - 1)),
-          (a, b) => a + when(md5Bit(h, b) === 1, lit(1)).otherwise(lit(-1)))
-      })
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(SimHashBits - 1)),
-        (v, b) => when(v > 0, pow(lit(2.0), b.cast("double")).cast("long")).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc + x)
   }
 
   /** Hamming distance between two simhash values: popcount of the XOR —
@@ -482,81 +400,41 @@ object Dedup {
     * SimHash-LSH compromise.
     */
   def simhashCandidatePairs(df: DataFrame, bucketBits: Int, maxHamming: Int,
-      maxBucket: Int = 10000, bits: Int = SimHashBits): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the repartition is load-bearing: without an exchange barrier,
-    // CollapseProject inlines the (expensive) simhash expression into the
-    // join output and recomputes it PER PAIR; shuffling on the bucket
-    // materializes one signature per document, and the two join branches
-    // share the exchange (ReuseExchange). The maxBucket filter is the
-    // same degenerate-bucket guard as lshCandidatePairs — the self-join
-    // is quadratic per bucket, so one megabucket would own the runtime.
+      maxBucket: Int = 10000, bits: Int = SimHashBits): DataFrame =
     // (No clone collapse here, unlike ngramJaccardPairs: the per-pair
     // work is one scalar XOR+popcount, so this operator is bound by its
     // OUTPUT pair volume — which a collapse cannot shrink — and measured
     // collapse overhead exceeded its savings at both 1× and 10× clones.)
-    // pmod (not %) keys the bucket: at bits=64 the signature can be
-    // negative and % would emit negative buckets
-    val sh = simhashOf(df, "doc_id", "text", bits)
-      .withColumn("bucket", pmod(col("sh"), lit(1L << bucketBits)))
-      .repartition(col("bucket"))
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("bucket"))))
-      .filter(col("bsz") <= maxBucket)
-      .drop("bsz")
-    val a = sh.select(col("bucket"), col("doc_id").as("doc1"), col("sh").as("sh1"))
-    val b = sh.select(col("bucket"), col("doc_id").as("doc2"), col("sh").as("sh2"))
-    saltedBucketSelfJoin(a, b, 1 << bucketBits, maxBucket)
+    bandedHammingPairs(simhashOf(df, "doc_id", "text", bits), "doc_id", Nil,
+        bucketBits, maxHamming, maxBucket)
+      .select(col("doc1"), col("doc2"), col("hamming"))
+
+  /** The banded self-join shared by the SimHash generators: `sigs` is
+    * (id, sh, carry…); rows sharing the low `bucketBits` of `sh`
+    * pair through [[Buckets.selfJoin]] under the [[Buckets.sized]] cap.
+    * Returns (doc1, doc2, hamming, carry… suffixed 1 and 2), doc1 < doc2,
+    * hamming ≤ `maxHamming`.
+    *
+    * The repartition on the bucket is load-bearing: without an exchange
+    * barrier, CollapseProject inlines the (expensive) simhash expression
+    * into the join output and recomputes it PER PAIR; shuffling on the
+    * bucket materializes one signature per document, the bucket-size
+    * window rides that exchange, and the two join sides share it
+    * (ReuseExchange). `pmod` (not %) keys the bucket: at bits=64 the
+    * signature can be negative and % would emit negative buckets.
+    */
+  private def bandedHammingPairs(sigs: DataFrame, id: String, carry: Seq[String],
+      bucketBits: Int, maxHamming: Int, maxBucket: Int): DataFrame = {
+    val banded = Buckets.sized(
+      sigs.withColumn("bucket", pmod(col("sh"), lit(1L << bucketBits)))
+        .repartition(col("bucket")),
+      Seq("bucket"), 1, maxBucket)
+    def side(i: Int) = banded.select(col("bucket") +: col(id).as(s"doc$i") +:
+      col("sh").as(s"sh$i") +: carry.map(c => col(c).as(s"$c$i")): _*)
+    Buckets.selfJoin(side(1), side(2), col("doc2"), 1 << bucketBits, maxBucket)
       .filter(col("doc1") < col("doc2"))
       .withColumn("hamming", hammingDistance(col("sh1"), col("sh2")))
       .filter(col("hamming") <= maxHamming)
-      .select(col("doc1"), col("doc2"), col("hamming"))
-  }
-
-  /** Guarded-index rows above which the self-join stops broadcasting and
-    * falls back to the salted shuffle join. The megabucket guard bounds
-    * the joinable index at nBuckets·maxBucket rows BY CONSTRUCTION, so
-    * for small band configs (d6/d12: 16 buckets × 10k cap = 160k rows,
-    * a few MB) the bound itself proves broadcastability.
-    */
-  private val BroadcastIndexRowCap = 1L << 18
-
-  /** Within-bucket self-join of the band index, with the quadratic pair
-    * enumeration spread over ALL cores instead of one task per bucket.
-    *
-    * With few band buckets (d6/d12 use bucketBits=4 → 16 buckets) a
-    * plain bucket join lands the pair blowup on 16 tasks no matter how
-    * many cores the cluster has — AQE cannot help because its skew
-    * splitter sizes INPUT partitions, and the blowup happens at the
-    * join (bounded tiny input rows → tens of millions of pairs).
-    *
-    * Small configs (nBuckets·maxBucket ≤ [[BroadcastIndexRowCap]]):
-    * broadcast the b side — the guard makes it provably bounded — and
-    * round-robin the probe side, so every core enumerates pairs for its
-    * slice of `a` with no join shuffle at all.
-    *
-    * Large configs: salt the b side into `splits` slices and replicate
-    * the a side across them. Output identical (every (a,b) pair meets
-    * in exactly one (bucket, split) cell — the one b hashes to); join
-    * parallelism multiplied by `splits` (~4 tasks per core by default).
-    */
-  private def saltedBucketSelfJoin(a: DataFrame, b: DataFrame, nBuckets: Int,
-      maxBucket: Int, splits: Int = 0): DataFrame = {
-    val spark = a.sparkSession
-    if (nBuckets.toLong * maxBucket <= BroadcastIndexRowCap)
-      a.repartition(2 * spark.sparkContext.defaultParallelism)
-        .join(broadcast(b), Seq("bucket"))
-    else {
-      val s =
-        if (splits > 0) splits
-        else math.max(1, (4 * spark.sparkContext.defaultParallelism + nBuckets - 1) / nBuckets)
-      if (s == 1) a.join(b, Seq("bucket"))
-      else {
-        val aRep = a.withColumn("split", explode(sequence(lit(0), lit(s - 1))))
-        val bSplit = b.withColumn("split",
-          pmod(xxhash64(col("doc2")), lit(s.toLong)).cast("int"))
-        aRep.join(bSplit, Seq("bucket", "split")).drop("split")
-      }
-    }
   }
 
   /** Production form of [[simhashCandidatePairs]]: near-dup pairs at the
@@ -574,58 +452,35 @@ object Dedup {
     * the group membership reproduces [[simhashCandidatePairs]] exactly
     * while no band bucket saturates `maxBucket` (parity-tested).
     *
-    * Scale shape: the clone collapse is one md5 groupBy (the d4 pattern,
-    * [[ngramJaccardPairs]]); simhash is computed once per DISTINCT text;
-    * the band self-join runs on the collapsed set, so a pathological
-    * clone rate SHRINKS the quadratic stage instead of inflating it.
+    * Scale shape: the clone collapse is one md5 groupBy
+    * ([[Buckets.cloneGroups]]); simhash is computed once per DISTINCT
+    * text; the band self-join runs on the collapsed set.
     */
   def simhashRepPairs(df: DataFrame, bucketBits: Int, maxHamming: Int,
       maxBucket: Int = 10000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // pinned (r13): `groups` feeds THREE consumers — the rep-doc semi
     // join, the signature join, and the intra-group branch — and Catalyst
     // re-evaluated the md5-of-text groupBy per reference (the d12 plan
     // held 14 parquet scans / 30 exchanges; pinned it is one evaluation
     // and the consumers read executor-local blocks). Two narrow longs a
     // row (the fp key is dropped — no consumer reads it), one row per
-    // distinct text: cheap to materialize at any scale, and the same
-    // m8/t36 re-evaluated-subtree treatment the judge verified in r12.
-    val groups = df
-      .select(col("doc_id"), md5(col("text")).as("fp"))
-      .groupBy(col("fp"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_clones"))
-      .select(col("rep"), col("n_clones"))
+    // distinct text: cheap to materialize at any scale.
+    val groups = Buckets.cloneGroups(
+        df.select(col("doc_id"), md5(col("text")).as("fp")), Seq(col("fp")), "doc_id")
+      .drop("fp")
       .transform(Pin.truncate(_))
     // signatures once per distinct text, on each group's representative
-    val repDocs = df.join(groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-    val sh = simhashOf(repDocs, "doc_id", "text")
-    // same exchange discipline as simhashCandidatePairs: shuffle on the
-    // bucket materializes one signature per group before the self-join
-    val repSh = groups.select(col("rep"), col("n_clones"))
-      .join(sh.withColumnRenamed("doc_id", "rep"), Seq("rep"))
-      .withColumn("bucket", pmod(col("sh"), lit(1L << bucketBits)))
-      .repartition(col("bucket"))
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("bucket"))))
-      .filter(col("bsz") <= maxBucket)
-      .drop("bsz")
-    val a = repSh.select(col("bucket"), col("rep").as("doc1"),
-      col("sh").as("sh1"), col("n_clones").as("n1"))
-    val b = repSh.select(col("bucket"), col("rep").as("doc2"),
-      col("sh").as("sh2"), col("n_clones").as("n2"))
-    val cross = saltedBucketSelfJoin(a, b, 1 << bucketBits, maxBucket)
-      .filter(col("doc1") < col("doc2"))
-      .withColumn("hamming", hammingDistance(col("sh1"), col("sh2")))
-      .filter(col("hamming") <= maxHamming)
+    val repDocs = df.join(groups.select(col(Buckets.Rep).as("doc_id")), Seq("doc_id"), "left_semi")
+    val sigs = groups.select(col(Buckets.Rep), col(Buckets.Clones))
+      .join(simhashOf(repDocs, "doc_id", "text").withColumnRenamed("doc_id", Buckets.Rep),
+        Seq(Buckets.Rep))
+    val cross = bandedHammingPairs(sigs, Buckets.Rep, Seq(Buckets.Clones),
+        bucketBits, maxHamming, maxBucket)
       .select(col("doc1"), col("doc2"), col("hamming"),
-        (col("n1") * col("n2")).as("n_pairs"))
-    // intra-group rows: k byte-identical docs = k·(k−1)/2 exact-dup pairs
-    // at hamming 0 (banding can't miss them — identical text, identical
-    // signature), reported as one row on the group representative
-    val intra = groups.filter(col("n_clones") > 1)
-      .select(col("rep").as("doc1"), col("rep").as("doc2"),
-        lit(0L).as("hamming"),
-        ((col("n_clones") * (col("n_clones") - 1)) / 2).cast("long").as("n_pairs"))
-    cross.unionByName(intra)
+        (col(Buckets.Clones + "1") * col(Buckets.Clones + "2")).as("n_pairs"))
+    // intra-group rows: banding can't miss them — identical text,
+    // identical signature
+    cross.unionByName(Buckets.intraPairs(groups, "doc1", "doc2", lit(0L).as("hamming")))
   }
 
   /** Sorted-neighborhood SimHash candidates (the Manku/Das/Sarma
@@ -655,7 +510,6 @@ object Dedup {
     */
   def simhashSortedNeighborPairs(df: DataFrame, maxHamming: Int,
       window: Int = 6, blockBits: Int = 6, bits: Int = SimHashBits): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(blockBits >= 1 && blockBits <= 16, s"blockBits=$blockBits")
     require(bits % 4 == 0 && bits >= 8 && bits <= 64, s"bits=$bits")
     val nibbles = bits / 4
@@ -704,25 +558,11 @@ object Dedup {
           struct(lit(t).as("t"), rotKeys(t).as("k"))): _*)).as("r"))
       .select(col("doc_id"), col("sh"), col("r.t").as("t"), col("r.k").as("k"))
       .withColumn("blk", shiftright(col("k"), bits - blockBits))
-    val w = Window.partitionBy(col("t"), col("blk")).orderBy(col("k"), col("doc_id"))
-    // all `window` leads ride the ONE window pass, unpivoted by a single
-    // explode in a follow-up projection (per-lead union branches would
-    // re-run the WindowExec once per branch; a generator can't host
-    // window expressions directly)
-    val leads = keyedT.select(
-      col("doc_id") +: col("sh") +:
-        (1 to window).flatMap(i => Seq(
-          lead(col("doc_id"), i).over(w).as(s"d$i"),
-          lead(col("sh"), i).over(w).as(s"s$i"))): _*)
-    val rotated = leads.select(col("doc_id").as("da"), col("sh").as("sa"),
-        explode(array((1 to window).map(i =>
-          struct(col(s"d$i").as("db"), col(s"s$i").as("sb"))): _*)).as("p"))
-      .select(col("da"), col("sa"), col("p.db").as("db"), col("p.sb").as("sb"))
-      .filter(col("db").isNotNull)
-    rotated
-      .select(least(col("da"), col("db")).as("doc1"),
-        greatest(col("da"), col("db")).as("doc2"),
-        hammingDistance(col("sa"), col("sb")).as("hamming"))
+    Buckets.neighbors(keyedT, Seq(col("t"), col("blk")), Seq(col("k"), col("doc_id")),
+        Seq("doc_id", "sh"), Seq("doc_id" -> "db", "sh" -> "sb"), window)
+      .select(least(col("doc_id"), col("db")).as("doc1"),
+        greatest(col("doc_id"), col("db")).as("doc2"),
+        hammingDistance(col("sh"), col("sb")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -760,16 +600,8 @@ object Dedup {
   def blockedEditDistancePairs(df: DataFrame, idCol: String, nameCol: String,
       blockCols: Seq[org.apache.spark.sql.Column], maxDist: Int,
       maxBlock: Int = 10000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val blocked = df
-      // '|' separator matches the d10 oracle's block key exactly; a
-      // collapsible or exotic separator would let block keys drift from
-      // the oracle's and (worst case) let distinct block-col tuples
-      // collide into one block, emitting extra Spark-only pairs.
-      .withColumn("__block", concat_ws("|", blockCols: _*))
-      .repartition(col("__block"))
-      .withColumn("__bsz", count(lit(1)).over(Window.partitionBy(col("__block"))))
-      .filter(col("__bsz").between(2, maxBlock))
+    val blocked = Buckets.sized(blockedBy(df, blockCols).repartition(col("__block")),
+        Seq("__block"), 2, maxBlock)
       .select(col("__block"), col(idCol), col(nameCol))
     val reps = blocked.select(col("__block"), col(nameCol)).distinct()
     val namePairs = reps.select(col("__block"), col(nameCol).as("__n1"))
@@ -778,15 +610,32 @@ object Dedup {
       .filter(abs(length(col("__n1")) - length(col("__n2"))) <= maxDist)
       .withColumn("dist", levenshtein(col("__n1"), col("__n2"), maxDist))
       .filter(col("dist") >= 0)
+    idPairs(blocked, idCol, nameCol, namePairs)
+  }
+
+  /** `df` keyed by its linkage block: `__block` = the `blockCols` joined
+    * by '|'. The separator matches the d10 oracle's block key exactly; a
+    * collapsible or exotic separator would let block keys drift from the
+    * oracle's and (worst case) let distinct block-col tuples collide into
+    * one block, emitting extra Spark-only pairs.
+    */
+  private def blockedBy(df: DataFrame, blockCols: Seq[Column]): DataFrame =
+    df.withColumn("__block", concat_ws("|", blockCols: _*))
+
+  /** Re-expand matched (block, __n1, __n2, dist) name pairs to the id
+    * pairs of the (block, id, name) rows carrying them: (id1, id2, dist),
+    * id1 < id2. Same-name groups emit each unordered id pair once
+    * (ida < idb); cross-name groups emit every (ida, idb) combo exactly
+    * once because an id has one name, so no pair arrives via two routes.
+    */
+  private def idPairs(blocked: DataFrame, idCol: String, nameCol: String,
+      namePairs: DataFrame): DataFrame = {
     val a = blocked.select(col("__block"), col(idCol).as("__ida"),
       col(nameCol).as("__n1"))
     val b = blocked.select(col("__block"), col(idCol).as("__idb"),
       col(nameCol).as("__n2"))
     a.join(namePairs, Seq("__block", "__n1"))
       .join(b, Seq("__block", "__n2"))
-      // same-name groups emit each unordered id pair once (ida < idb);
-      // cross-name groups emit every (ida, idb) combo exactly once
-      // because an id has one name, so no pair arrives via two routes
       .filter(col("__n1") < col("__n2") || col("__ida") < col("__idb"))
       .select(least(col("__ida"), col("__idb")).as("id1"),
         greatest(col("__ida"), col("__idb")).as("id2"), col("dist"))
@@ -815,9 +664,7 @@ object Dedup {
   def sortedNeighborEditPairs(df: DataFrame, idCol: String, nameCol: String,
       blockCols: Seq[org.apache.spark.sql.Column], maxDist: Int,
       window: Int = 10): DataFrame = {
-    val blocked = df
-      .withColumn("__block", concat_ws("|", blockCols: _*))
-      .select(col("__block"), col(idCol), col(nameCol))
+    val blocked = blockedBy(df, blockCols).select(col("__block"), col(idCol), col(nameCol))
     // the distinct-name table feeds both SNM sort passes and the
     // reflexive branch — pin it once (the d13 rotation pattern)
     val names = blocked.select(col("__block"), col(nameCol).as("__n"))
@@ -825,16 +672,7 @@ object Dedup {
     val namePairs = snmNeighborNamePairs(names, maxDist, window).unionByName(
       names.select(col("__block"), col("__n").as("__n1"),
         col("__n").as("__n2"), lit(0).as("dist")))
-    val a = blocked.select(col("__block"), col(idCol).as("__ida"),
-      col(nameCol).as("__n1"))
-    val b = blocked.select(col("__block"), col(idCol).as("__idb"),
-      col(nameCol).as("__n2"))
-    a.join(namePairs, Seq("__block", "__n1"))
-      .join(b, Seq("__block", "__n2"))
-      // same pair-once argument as the blocked contract
-      .filter(col("__n1") < col("__n2") || col("__ida") < col("__idb"))
-      .select(least(col("__ida"), col("__idb")).as("id1"),
-        greatest(col("__ida"), col("__idb")).as("id2"), col("dist"))
+    idPairs(blocked, idCol, nameCol, namePairs)
   }
 
   /** The collapsed (rep-level) form of [[sortedNeighborEditPairs]] — the
@@ -853,55 +691,37 @@ object Dedup {
   def sortedNeighborRepPairs(df: DataFrame, idCol: String, nameCol: String,
       blockCols: Seq[org.apache.spark.sql.Column], maxDist: Int,
       window: Int = 10): DataFrame = {
-    val blocked = df
-      .withColumn("__block", concat_ws("|", blockCols: _*))
-      .select(col("__block"), col(idCol), col(nameCol))
     // groups feeds both SNM passes, both expansion sides, and the
     // intra branch — pin it once
-    val groups = blocked.groupBy(col("__block"), col(nameCol))
-      .agg(min(col(idCol)).as("__rep"), count(lit(1)).as("__c"))
+    val groups = Buckets.cloneGroups(blockedBy(df, blockCols),
+        Seq(col("__block"), col(nameCol)), idCol)
       .transform(Pin.truncate(_))
     val namePairs = snmNeighborNamePairs(
       groups.select(col("__block"), col(nameCol).as("__n")), maxDist, window)
-    val g1 = groups.select(col("__block"), col(nameCol).as("__n1"),
-      col("__rep").as("__r1"), col("__c").as("__c1"))
-    val g2 = groups.select(col("__block"), col(nameCol).as("__n2"),
-      col("__rep").as("__r2"), col("__c").as("__c2"))
+    def side(i: Int) = groups.select(col("__block"), col(nameCol).as(s"__n$i"),
+      col(Buckets.Rep).as(s"__r$i"), col(Buckets.Clones).as(s"__c$i"))
     val cross = namePairs
-      .join(g1, Seq("__block", "__n1"))
-      .join(g2, Seq("__block", "__n2"))
+      .join(side(1), Seq("__block", "__n1"))
+      .join(side(2), Seq("__block", "__n2"))
       .select(least(col("__r1"), col("__r2")).as("id1"),
         greatest(col("__r1"), col("__r2")).as("id2"), col("dist"),
         (col("__c1") * col("__c2")).cast("long").as("n_pairs"))
-    val intra = groups.filter(col("__c") > 1)
-      .select(col("__rep").as("id1"), col("__rep").as("id2"),
-        lit(0).as("dist"),
-        ((col("__c") * (col("__c") - 1)) / 2).cast("long").as("n_pairs"))
-    cross.unionByName(intra)
+    cross.unionByName(Buckets.intraPairs(groups, "id1", "id2", lit(0).as("dist")))
   }
 
   /** Shared SNM candidate stage: distinct (block, name) rows in, matched
     * distinct-name pairs (dist in [1, maxDist]) out — forward and
-    * reversed-string passes, `window` leads each, one WindowExec per
-    * pass (the d13 lead-array idiom). Both passes re-shuffle `names` on
-    * a different sort key — callers pass a pinned ([[Pin.truncate]])
-    * frame so the upstream distinct/aggregate runs once.
+    * reversed-string passes of [[Buckets.neighbors]], `window` leads
+    * each. Both passes re-shuffle `names` on a different sort key —
+    * callers pass a pinned ([[Pin.truncate]]) frame so the upstream
+    * distinct/aggregate runs once.
     */
   private def snmNeighborNamePairs(names: DataFrame, maxDist: Int,
-      window: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val passes = Seq(col("__n"), reverse(col("__n"))).map { key =>
-      val w = Window.partitionBy(col("__block")).orderBy(key, col("__n"))
-      // all `window` leads ride ONE window pass, unpivoted by a single
-      // explode (per-lead union branches would re-run the WindowExec)
-      names
-        .select(col("__block") +: col("__n") +:
-          (1 to window).map(i => lead(col("__n"), i).over(w).as(s"__l$i")): _*)
-        .select(col("__block"), col("__n"),
-          explode(array((1 to window).map(i => col(s"__l$i")): _*)).as("__m"))
-        .filter(col("__m").isNotNull)
-    }.reduce(_ unionByName _)
-    passes
+      window: Int): DataFrame =
+    Seq(col("__n"), reverse(col("__n")))
+      .map(key => Buckets.neighbors(names, Seq(col("__block")), Seq(key, col("__n")),
+        Seq("__block", "__n"), Seq("__n" -> "__m"), window))
+      .reduce(_ unionByName _)
       .select(col("__block"),
         least(col("__n"), col("__m")).as("__n1"),
         greatest(col("__n"), col("__m")).as("__n2"))
@@ -909,7 +729,6 @@ object Dedup {
       .filter(abs(length(col("__n1")) - length(col("__n2"))) <= maxDist)
       .withColumn("dist", levenshtein(col("__n1"), col("__n2"), maxDist))
       .filter(col("dist") >= 0)
-  }
 
   /** Exact duplicated-substring detection between documents, the
     * span-level complement of token-shingle near-dup: two docs share a
@@ -922,12 +741,11 @@ object Dedup {
     *
     * Shape: char k-grams materialize ROW-LOCALLY per doc (`transform`
     * over a position `sequence`, then `array_distinct` before the
-    * explode — no dedup shuffle); the only O(corpus-chars) exchange is
-    * the window+groupBy on the gram key, and those two share one
-    * exchange. Grams shared by more than `maxBucket` docs are dropped
-    * before `collect_list` buffers them (boilerplate guard — identical
-    * trade to [[lshCandidatePairs]]); pairs then expand row-locally
-    * inside each bucket, quadratic only in bucket size.
+    * explode — no dedup shuffle); the gram stream then runs through
+    * [[Buckets.sharedGramPairs]]: grams shared by more than `maxBucket`
+    * docs are dropped before `collect_list` buffers them (the
+    * boilerplate guard), and pairs expand row-locally inside each
+    * bucket, quadratic only in bucket size.
     *
     * `hashGrams=true` shuffles an 8-byte `xxhash64` instead of the k-byte
     * gram (the 100 TB setting — a 3× shuffle-width cut at k=24, collision
@@ -939,7 +757,6 @@ object Dedup {
     */
   def exactSubstringSpans(df: DataFrame, k: Int = 24, minShared: Int = 10,
       maxBucket: Int = 1000, hashGrams: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // hashed path: one compiled rolling-hash pass per document
     // ([[graft.expressions.KGramHashes]] — O(L) work, no substring
     // allocation); literal path: the composed substr form (kept for the
@@ -962,7 +779,7 @@ object Dedup {
     // input estimate — measured 2.2 GB written off a 44 MB estimate at
     // 100×, and a 44-wide doc-list aggregate externalized 25.8 GB there
     // where the 192-wide shape spills nothing.
-    sharedGramPairs(keyed, maxBucket, minShared, widthExpansion = 32)
+    Buckets.sharedGramPairs(keyed, maxBucket, minShared, widthExpansion = 32)
   }
 
   /** Winnowed production form of [[exactSubstringSpans]] (d11 → d18, the
@@ -991,12 +808,7 @@ object Dedup {
     */
   def winnowedSubstringSpans(df: DataFrame, k: Int = 24, w: Int = 9,
       minShared: Int = 2, maxBucket: Int = 1000): DataFrame = {
-    val keyed = df.filter(length(col("text")) >= k)
-      .select(col("doc_id"),
-        explode(org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.expressions.WinnowedGramHashes(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("text")), k, w)))
-          .as("g"))
+    val keyed = winnowedGrams(df, k, w)
     // widthExpansion 4: winnowing keeps ~2/(w+1) of the gram positions
     // (~8× the docs-frame byte estimate on the wire — measured 360 MB
     // written off a 44 MB estimate at 100×, 1/6 of exactSubstringSpans'
@@ -1005,8 +817,20 @@ object Dedup {
     // 8-core probe's fastest) < 85-wide < 192-wide, spill-free
     // throughout — the doc-list aggregate state, not the wire bytes,
     // is what the width must bound, and winnowed buckets are small.
-    sharedGramPairs(keyed, maxBucket, minShared, widthExpansion = 4)
+    Buckets.sharedGramPairs(keyed, maxBucket, minShared, widthExpansion = 4)
   }
+
+  /** (doc_id, g): one row per winnowed span fingerprint of each doc
+    * ([[graft.expressions.WinnowedGramHashes]], deduped per doc by the
+    * kernel); docs shorter than `k` have none.
+    */
+  private def winnowedGrams(df: DataFrame, k: Int, w: Int): DataFrame =
+    df.filter(length(col("text")) >= k)
+      .select(col("doc_id"),
+        explode(org.apache.spark.sql.graft.ColumnBridge.column(
+          graft.expressions.WinnowedGramHashes(
+            org.apache.spark.sql.graft.ColumnBridge.expression(col("text")), k, w)))
+          .as("g"))
 
   /** Per-document duplicated-span fraction — the PAIR-FREE span-dup
     * signal (the curation decision rule of the Gopher/RefinedWeb
@@ -1033,12 +857,6 @@ object Dedup {
     * pairs.
     */
   def dupSpanFraction(df: DataFrame, k: Int = 24, w: Int = 9): DataFrame = {
-    val keyedRaw = df.filter(length(col("text")) >= k)
-      .select(col("doc_id"),
-        explode(org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.expressions.WinnowedGramHashes(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("text")), k, w)))
-          .as("g"))
     // The frequency lookup is a co-keyed HASH join, never sort-merge:
     // left to the planner, the join of the gram stream against its own
     // frequency table planned SMJ at ladder scale and sorted the whole
@@ -1050,7 +868,7 @@ object Dedup {
     // r10 A/B also rejected an AdaptiveWidth-widened single-exchange
     // variant (one 6x-wide repartition feeding agg + probe): ~30%
     // slower at 100x and more shuffle at 400x than this shape.
-    val keyed = keyedRaw
+    val keyed = winnowedGrams(df, k, w)
     val freq = keyed.groupBy(col("g")).agg(count(lit(1)).as("df"))
     keyed.join(freq.hint("shuffle_hash"), Seq("g"))
       .groupBy(col("doc_id"))
@@ -1060,10 +878,6 @@ object Dedup {
         round(col("n_shared").cast("double") / col("n_spans"), 6).as("dup_frac"))
   }
 
-  /** Shared tail of the substring-span operators: guard degenerate gram
-    * buckets, collapse identical doc-lists, expand weighted pairs with
-    * the compiled kernel, and sum per-pair shared-gram counts.
-    */
   /** Oriented span-CONTAINMENT screen — the asymmetric dual of d18's
     * span-pair similarity, and the signal Jaccard-family near-dup
     * structurally misses: a paragraph quoted inside a much larger
@@ -1082,14 +896,9 @@ object Dedup {
   def spanContainmentPairs(df: DataFrame, k: Int = 24, w: Int = 9,
       minShared: Int = 2, minContainment: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
-    val keyed = df.filter(length(col("text")) >= k)
-      .select(col("doc_id"),
-        explode(org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.expressions.WinnowedGramHashes(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("text")), k, w)))
-          .as("g"))
+    val keyed = winnowedGrams(df, k, w)
     val perDoc = keyed.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    sharedGramPairs(keyed, maxBucket, minShared, widthExpansion = 4)
+    Buckets.sharedGramPairs(keyed, maxBucket, minShared, widthExpansion = 4)
       .join(perDoc.select(col("doc_id").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
       .join(perDoc.select(col("doc_id").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
       .withColumn("containment_a", round(col("shared_grams") / col("n_a"), 6))
@@ -1097,83 +906,6 @@ object Dedup {
       .filter(greatest(col("containment_a"), col("containment_b")) >= minContainment)
       .select(col("doc_a"), col("doc_b"), col("shared_grams"),
         col("containment_a"), col("containment_b"))
-  }
-
-  private def sharedGramPairs(keyed: DataFrame, maxBucket: Int,
-      minShared: Int, widthExpansion: Int = 8): DataFrame = {
-    // compiled pair expansion ([[graft.expressions.PairCombinations]]) —
-    // the flatten(transform(slice…)) HOF form was the dominant cost at
-    // 10⁸ pairs (boxed elements, interpreted lambdas, a slice copy per
-    // outer position)
-    val pairsInBucket = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.expressions.PairCombinations(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("ds"))))
-    // Two decisions shape this plan, both learned from stage profiles at
-    // the 100× fixture (spill figures below are that measurement):
-    //
-    // 1. Bucket sizes come from a count aggregate gating the stream via a
-    //    shuffle-hash semi-join, so only SURVIVING bucket members (shared
-    //    grams — content-bound, orders of magnitude fewer) ever reach the
-    //    doc-list aggregate. The former window-count form sorted the
-    //    ENTIRE gram stream to size buckets it was about to discard as
-    //    singletons (13 GB of 50× spill). The gram kernel runs twice
-    //    (once per branch) — recomputing a row-local O(L) hash pass is
-    //    the right trade against sorting 10⁸ rows; the hint keeps the
-    //    gate a hash join (sort-merge would re-introduce the sort).
-    //
-    // 2. The gram keys and the expanded pairs are both mostly UNIQUE
-    //    per task, so Catalyst's map-side partial aggregates combine
-    //    nothing and externalize their hash maps instead (12.7 GB +
-    //    24.7 GB of pure partial/final-agg spill at 100×). Explicit
-    //    8×-wide exchanges followed by ONE complete-mode aggregate are
-    //    no wider on the wire (unique keys ⇒ partial output ≈ input)
-    //    and keep every task's aggregation map in memory — the same
-    //    sizing decision a 1000-executor job makes by giving the
-    //    expansion stages the task count their OUTPUT needs. The
-    //    multiplier is 6, not 8: at the local default (32) that stays
-    //    under spark.shuffle.sort.bypassMergeThreshold (200), keeping
-    //    the spill-free bypass-merge shuffle writer; at cluster scale
-    //    (thousands of partitions) the threshold is moot either way.
-    //    Below the AdaptiveWidth threshold (the regime where per-task
-    //    maps trivially fit) the explicit exchanges are pure overhead
-    //    and the plain partial-aggregate shapes run instead — identical
-    //    rows either way.
-    // the regime GATE keeps its measured factor-4 calibration (the
-    // sf0.1 / 100× boundary); the WIDTH uses the caller's gram-density
-    // factor — the two answer different questions (when to widen vs how
-    // wide), and the boundary measurements pre-date the width change
-    val small = graft.plans.AdaptiveWidth.isSmallInput(keyed, expansionFactor = 4)
-    val n8 = graft.plans.AdaptiveWidth.widened(keyed, expansionFactor = widthExpansion)
-    def wideBy(df: DataFrame, cols: Column*): DataFrame =
-      if (small) df else df.repartition(n8, cols: _*)
-    val shared = wideBy(keyed, col("g"))
-      .groupBy(col("g")).agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz").between(2, maxBucket))
-      .select(col("g"))
-    wideBy(keyed, col("g"))
-      .join(shared.hint("shuffle_hash"), Seq("g"), "left_semi")
-      .groupBy(col("g"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      // collapse IDENTICAL doc-list buckets before the quadratic pair
-      // expansion: in a clone-heavy corpus every gram of a clone group
-      // produces the same sorted member list, so the k·(k−1)/2 pairs
-      // would otherwise be exploded once PER GRAM (~L−k+1 times per
-      // duplicated span). One groupBy on the list collapses them to a
-      // single weighted expansion — 1.3× end-to-end on a fully-10×-cloned
-      // corpus (the residual cost is the gram shuffle itself), ~free when
-      // buckets are mostly unique, and the win grows with clone-group
-      // size since pair expansion is quadratic in it.
-      .groupBy(col("ds")).agg(count(lit(1)).as("w"))
-      // the expansion runs at 6× parallelism (redistributing the CHEAP
-      // collapsed-bucket frame, ~200 MB) and streams pairs straight into
-      // an explicit wide exchange (no map-side combine — see decision 2
-      // above); the pair aggregate then runs complete-mode, also wide
-      .transform(wideBy(_, col("ds")))
-      .select(col("w"), explode(pairsInBucket).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"), col("w"))
-      .transform(wideBy(_, col("doc_a"), col("doc_b")))
-      .groupBy(col("doc_a"), col("doc_b")).agg(sum(col("w")).as("shared_grams"))
-      .filter(col("shared_grams") >= minShared)
   }
 
   /** Content-defined chunking dedup (the LBFS/rsync/FastCDC boundary

@@ -319,22 +319,14 @@ object Multimodal {
   def imageNearDupPairs(hashes: DataFrame, maxHamming: Int,
       maxBucket: Int = 10000, hashCol: String = "ahash"): DataFrame = {
     val bandedRaw = imageHashBands(hashes, hashCol)
-    // bucket-size gate as a count aggregate + BROADCAST semi-join,
-    // NOT a window count: the window form SORTS the entire banded stream
-    // just to size buckets (the exact shape the sharedGramPairs spill
-    // postmortem replaced) — the aggregate combines map-side (its shuffle
-    // moves at most one partial per populated bucket per task), and the
-    // survivor set is broadcast because it is DOMAIN-bounded, not
-    // data-bounded: (band, sig) ranges over 4 × 2^16 = 262,144 values no
-    // matter how many images exist, so the semi-join never exchanges the
-    // banded stream (the earlier shuffle_hash hint did — a full extra
-    // exchange before the self-join's own). The gate keeps buckets of
-    // 2..maxBucket members: singletons can't pair, so dropping them here
-    // also keeps them out of the self-join's build side.
-    val kept = bandedRaw.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz").between(2, maxBucket))
-      .select(col("band"), col("sig"))
+    // the bucket-size gate is a count aggregate + BROADCAST semi-join:
+    // (band, sig) ranges over 4 × 2^16 = 262,144 values no matter how
+    // many images exist, so the survivor set is domain-bounded and the
+    // semi-join never exchanges the banded stream (a shuffle_hash hint
+    // did — a full extra exchange before the self-join's own). Keeping
+    // 2..maxBucket members also keeps singletons, which can't pair, out
+    // of the self-join's build side.
+    val kept = Buckets.kept(bandedRaw, Seq("band", "sig"), 2, maxBucket)
     val banded = bandedRaw.join(broadcast(kept), Seq("band", "sig"), "left_semi")
     val a = banded.select(col("band"), col("sig"),
       col("media_id").as("id1"), col("__h").as("h1"))
@@ -699,10 +691,8 @@ object Multimodal {
 
   /** Audio near-dup candidates + verify over constellation fingerprints
     * ([[audioFingerprints]] output): clips sharing any DISTINCT frame
-    * fingerprint bucket-join on that fp (the d2 LSH shape — ONE shuffle
-    * on the fp key, window-gated bucket sizes over the SAME key so the
-    * exchange is shared, pairs expanded row-locally by the compiled
-    * PairCombinations kernel, quadratic only in bucket size, never in n);
+    * fingerprint pair up through [[Buckets.pairs]] (the d2 LSH shape —
+    * ONE shuffle on the fp key, quadratic only in bucket size, never in n);
     * verify = fingerprint CONTAINMENT: shared distinct fps over the
     * SMALLER clip's distinct-fp count (containment, not Jaccard, because
     * a re-rip may be truncated — d23's asymmetric-signal argument at the
@@ -713,7 +703,6 @@ object Multimodal {
     */
   def audioNearDupPairs(fps: DataFrame, minShared: Int = 1,
       minContainment: Double = 0.8, maxBucket: Int = 10000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // the all-sentinel fp (silence) is excluded like audioMatches does:
     // without the filter a mostly-silent clip (distinct fps ≈ {-1})
     // reaches containment 1.0 against ANY clip holding one silent frame
@@ -722,19 +711,7 @@ object Multimodal {
     val sigs = fps.filter(col("fp") =!= lit(-1L))
       .select(col("media_id"), col("fp")).distinct()
     val perMedia = sigs.groupBy(col("media_id")).agg(count(lit(1)).as("nfp"))
-    val pairsInBucket = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.expressions.PairCombinations(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("ds"))))
-    val w = Window.partitionBy(col("fp"))
-    val shared = sigs
-      .withColumn("bsz", count(lit(1)).over(w))
-      .filter(col("bsz").between(2, maxBucket))
-      .groupBy(col("fp"))
-      .agg(sort_array(collect_list(col("media_id"))).as("ds"))
-      .select(explode(pairsInBucket).as("p"))
-      .select(col("p.doc_a").as("id1"), col("p.doc_b").as("id2"))
-      .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("shared_fps"))
-    shared
+    Buckets.pairs(sigs, Seq("fp"), "media_id", maxBucket, "id1", "id2", "shared_fps")
       .join(perMedia.withColumnRenamed("media_id", "id1")
         .withColumnRenamed("nfp", "nfp1"), Seq("id1"))
       .join(perMedia.withColumnRenamed("media_id", "id2")
@@ -769,8 +746,7 @@ object Multimodal {
       .select(col("media_id").as("query_id"), col("frame_idx").as("qf"), col("fp"))
     val i = indexFps.filter(col("fp") =!= silent)
       .select(col("media_id"), col("frame_idx").as("ifx"), col("fp"))
-    val kept = i.groupBy(col("fp")).agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBucket).select(col("fp"))
+    val kept = Buckets.kept(i, Seq("fp"), 1, maxBucket)
     val votes = q
       .join(i.join(kept, Seq("fp"), "left_semi"), Seq("fp"))
       .groupBy(col("query_id"), col("media_id"),

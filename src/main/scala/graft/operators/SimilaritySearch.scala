@@ -402,8 +402,7 @@ object SimilaritySearch {
           concat(col("t2").cast("string"), lit(":"),
             col("sig2").substr(col("t2") * nPlanes + 1, lit(nPlanes))))
         .drop("t2")
-      val oversized = ab.groupBy(col("bucket")).agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") > maxBucket).select(col("bucket"))
+      val oversized = Buckets.hot(ab, Seq("bucket"), maxBucket)
       // each colliding pair is emitted from the FIRST table where it
       // collides — the j12 canonical-cell idiom at the OR-amplification
       // layer: later-table collisions are suppressed by the sig-prefix

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 
 /** Input-size gate for the explicit wide-exchange / complete-mode
-  * aggregate plans ([[graft.operators.Dedup.sharedGramPairs]],
+  * aggregate plans ([[graft.operators.Buckets.sharedGramPairs]],
   * copurchase pairs, the a6 distinct-branch split).
   *
   * Those plans exist for the LARGE regime: a pair/distinct expansion

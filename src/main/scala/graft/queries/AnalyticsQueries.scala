@@ -28,8 +28,8 @@ object AnalyticsQueries {
   val MaxBasketSize = 64
 
   /** Market-basket co-purchase pair support (frequent-itemset k=2 pass)
-    * with the basket-size window guard applied BEFORE the self-join —
-    * the same shape as Dedup.lshCandidatePairs' maxBucket cap. Exposed
+    * with the basket-size guard ([[graft.operators.Buckets.kept]], the
+    * near-dup generators' megabucket cap) applied BEFORE the self-join. Exposed
     * for direct testing with synthetic degenerate baskets.
     */
   def copurchasePairs(lineitem: DataFrame, maxBasket: Int = MaxBasketSize): DataFrame = {
@@ -58,9 +58,7 @@ object AnalyticsQueries {
     // sides on ok; baskets are ≤ maxBasket so a per-partition hash build
     // is bounded). Identical result set, no order-key sorts anywhere —
     // the remaining cost is the irreducible Σ basket² pair aggregate.
-    val sized = op.groupBy(col("ok")).agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz").between(2, maxBasket))
-      .select(col("ok"))
+    val sized = graft.operators.Buckets.kept(op, Seq("ok"), 2, maxBasket)
     // Wide pair stage (large regime): the self-join explodes Σ basket²
     // pair rows, and the pairs are mostly unique per task — so the
     // map-side combine of a default groupBy externalizes its hash map
@@ -70,7 +68,7 @@ object AnalyticsQueries {
     // the partitioning — no extra exchange), and the explicit pair
     // exchange + complete-mode aggregate skips the useless partial
     // entirely (same two decisions, same multiplier rationale, as
-    // Dedup.sharedGramPairs). Below the AdaptiveWidth threshold the
+    // Buckets.sharedGramPairs). Below the AdaptiveWidth threshold the
     // plain partial-aggregate plan is spill-safe and ~2.5× cheaper (no
     // pre/post exchanges), so the widening only engages when the input
     // estimate says the expansion can outgrow per-task hash maps.
@@ -488,8 +486,8 @@ object AnalyticsQueries {
     // count shuffle on the pair key — the frequent-itemset k=2 pass that
     // never goes all-pairs across orders. Baskets above MaxBasketSize are
     // dropped before the self-join: one 10⁵-item degenerate basket would
-    // otherwise expand to 5·10⁹ pairs inside a single task (same guard
-    // shape as Dedup.lshCandidatePairs' maxBucket cap); single-item
+    // otherwise expand to 5·10⁹ pairs inside a single task (the Buckets
+    // megabucket cap); single-item
     // baskets produce no pairs and are pruned for free too.
     "a23_copurchase_pairs" -> ((s, dir) =>
       copurchasePairs(Catalog.lineitem(s, dir)).limit(20)),

@@ -119,8 +119,8 @@ object PipelineQueries {
         .orderBy(col("tau"))
     }),
 
-    // D3: 32-bit SimHash signature per document (codegen'd explode+vote
-    // aggregation; the row-local HOF form is Dedup.simhash).
+    // D3: 32-bit SimHash signature per document (the compiled row-local
+    // SimhashSig kernel of Dedup.simhashOf).
     "d3_simhash" -> ((s, dir) => {
       Dedup.simhashOf(Catalog.documents(s, dir), "doc_id", "text")
         .select(col("doc_id"), col("sh").as("simhash"),

@@ -847,7 +847,7 @@ object RelationalQueries {
       // distinct, so it runs complete-mode with in-memory maps), then
       // the per-supplier counts combine map-side like any plain count
       // and the two ~|supplier| frames hash-join back. Same results, no
-      // Expand, no spill — the Dedup.sharedGramPairs decision applied
+      // Expand, no spill — the Buckets.sharedGramPairs decision applied
       // to distinct aggregates. In the SMALL regime the plain
       // countDistinct plan wins (the split's extra exchanges cost 2.5×
       // at sf0.1 for spill that never happens) — AdaptiveWidth gates on

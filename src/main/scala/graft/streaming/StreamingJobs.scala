@@ -80,7 +80,7 @@ object StreamingJobs {
 
   /** ST7: stream-static near-dup candidate lookup — each incoming
     * document computes its LSH band signatures ROW-LOCALLY
-    * (Dedup.lshBandsLocal: one codegen MinhashSig kernel per row, no
+    * (Dedup.lshBands: one codegen MinhashSig kernel per row, no
     * stream-side shuffle) and
     * equi-joins the static corpus band index on (band, sig). Stateless
     * per micro-batch: no watermark, no state store — the streaming form
@@ -109,11 +109,9 @@ object StreamingJobs {
     * same O(index) cost paid once.
     */
   def guardedBandIndex(corpusBands: DataFrame, maxBucket: Int = 10000): DataFrame = {
-    val oversized = corpusBands.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("bsz")).filter(col("bsz") > maxBucket)
-      .select(col("band"), col("sig"))
     corpusBands
-      .join(oversized, Seq("band", "sig"), "left_anti")
+      .join(graft.operators.Buckets.hot(corpusBands, Seq("band", "sig"), maxBucket),
+        Seq("band", "sig"), "left_anti")
       .select(col("doc_id").as("match_id"), col("band"), col("sig"))
   }
 
@@ -123,7 +121,7 @@ object StreamingJobs {
     */
   def streamNearDupAgainstIndex(docsStream: DataFrame,
       guardedIndex: DataFrame): DataFrame =
-    graft.operators.Dedup.lshBandsLocal(docsStream)
+    graft.operators.Dedup.lshBands(docsStream)
       .join(guardedIndex, Seq("band", "sig"))
       .filter(col("doc_id") =!= col("match_id"))
       .select(col("doc_id"), col("match_id"), col("band"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +18,39 @@ class PipelineSpec extends AnyFunSuite {
   private def docsDf(rows: Seq[(Long, String)]) = {
     import spark.implicits._
     rows.toDF("doc_id", "text")
+  }
+
+  /** Bit `b` (0-based, low bit first within each hex digit) of an md5 hex
+    * string: digit = substr(h, b/4+1), value via ascii arithmetic, then
+    * (value >> (b%4)) & 1 — exact double pow/floor because Column shift
+    * amounts must be literals.
+    */
+  private def md5Bit(h: Column, b: Column): Column = {
+    val a = ascii(h.substr(floor(b / 4).cast("int") + 1, lit(1)))
+    val digit = when(a <= 57, a - 48).otherwise(a - 87)
+    pmod(floor(digit.cast("double") / pow(lit(2.0), (b % 4).cast("double"))).cast("int"), lit(2))
+  }
+
+  /** Reference 32-bit SimHash of the token multiset, built from ordinary
+    * interpreted higher-order functions (no SimhashSig kernel): per token,
+    * bit b of md5(token) votes ±1; simhash bit b is 1 iff the vote sum is
+    * positive. A non-negative long in [0, 2^32). The `simhashOf` parity
+    * tests compare the compiled kernel against it.
+    */
+  private def simhash(toks: Column): Column = {
+    val bits = Dedup.SimHashBits
+    val votes = aggregate(
+      toks,
+      typedLit(Seq.fill(bits)(0)),
+      (acc, t) => {
+        val h = md5(t)
+        zip_with(acc, sequence(lit(0), lit(bits - 1)),
+          (a, b) => a + when(md5Bit(h, b) === 1, lit(1)).otherwise(lit(-1)))
+      })
+    aggregate(
+      zip_with(votes, sequence(lit(0), lit(bits - 1)),
+        (v, b) => when(v > 0, pow(lit(2.0), b.cast("double")).cast("long")).otherwise(lit(0L))),
+      lit(0L), (acc, x) => acc + x)
   }
 
   private val base =
@@ -314,7 +348,7 @@ class PipelineSpec extends AnyFunSuite {
     val docs = docsDf(Seq(
       1L -> base, 2L -> base.replace("warm", "hot"),
       3L -> "totally disjoint vocabulary discussing histogram profiles anomaly detection network flows telemetry"))
-    val sh = docs.select(col("doc_id"), Dedup.simhash(tokens(col("text"))).as("s"))
+    val sh = docs.select(col("doc_id"), simhash(tokens(col("text"))).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sh(1L), sh(2L)) < ham(sh(1L), sh(3L)))
@@ -329,7 +363,7 @@ class PipelineSpec extends AnyFunSuite {
   test("simhashOf (codegen aggregate form) agrees with the row-local Column form") {
     val docs = docsDf(Seq(1L -> base, 2L -> (base + " postscript"),
       3L -> "totally disjoint vocabulary discussing histogram profiles anomaly detection"))
-    val rowLocal = docs.select(col("doc_id"), Dedup.simhash(tokens(col("text"))).as("sh"))
+    val rowLocal = docs.select(col("doc_id"), simhash(tokens(col("text"))).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val agg = Dedup.simhashOf(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -465,10 +499,10 @@ class PipelineSpec extends AnyFunSuite {
     edges.toDF("doc1", "doc2")
   }
 
-  test("lshBandsLocal (codegen MinhashSig kernel) is bit-identical to the SQL-expression reference pipeline on edge-case docs") {
+  test("lshBands (codegen MinhashSig kernel) is bit-identical to the SQL-expression reference pipeline on edge-case docs") {
     // The batch (posexplode + window-lead + 12 min-aggregate) lshBands is
-    // gone — lshBands IS lshBandsLocal since r12 — so the equivalence pin
-    // is a from-scratch reference built here out of ordinary SQL
+    // gone — lshBands is the row-local kernel since r12 — so the equivalence
+    // pin is a from-scratch reference built here out of ordinary SQL
     // expressions: HOF shingles → contentHash → per-permutation
     // min((a·h+b) mod m) aggregates → band structs. Nothing in it touches
     // the MinhashSig kernel, so a kernel bug cannot cancel out.
