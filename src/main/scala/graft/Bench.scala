@@ -56,12 +56,7 @@ object Bench {
     System.err.println(s"[bench] selected ${selected.size} of " +
       s"${SparkEntry.queries.size} queries" +
       (if (exclude.nonEmpty) s"; excluded: ${exclude.sorted.mkString(",")}" else ""))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
     // untimed warmup: run EVERY query once at the smallest scale factor
     // so Janino codegen compilation + JIT of each query's generated
     // classes isn't charged to its timed run (cold-vs-warm differs by

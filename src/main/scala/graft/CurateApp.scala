@@ -16,7 +16,8 @@ import graft.sources.Catalog
   *   spark-submit --class graft.CurateApp <jar> <inDir> <outDir> [confPath]
   *
   * Thresholds come from the conf file's `curation.*` keys (see
-  * `conf/graft.conf`); programmatic callers use [[run]]'s parameters.
+  * `conf/graft.conf`), read into one [[Curation]] value; programmatic
+  * callers pass a [[Curation]] to [[run]], [[tagged]] or [[taggedCached]].
   *
   * Stages, in drop-precedence order (each doc is attributed to the FIRST
   * stage that rejects it, so the report partitions the corpus exactly):
@@ -80,19 +81,7 @@ object CurateApp {
     // pipeline counterpart of the reference's sflow.conf detector knobs)
     val c = if (args.length > 2) GraftConfig.load(args(2)) else GraftConfig.empty
     val spark = GraftSession.build()
-    val report = run(spark, inDir, outDir,
-      qualityMin = c.getDouble("curation.qualityMin", 0.5),
-      benchMod = c.getInt("curation.benchMod", 50),
-      maxOverlap = c.getDouble("curation.maxOverlap", 0.5),
-      widths = DedupWidths.fromConfig(c),
-      qualityGate = c.getString("curation.qualityGate", "score"),
-      maxAvgNllE6 = c.getLong("curation.perplexityMaxNllE6",
-        operators.PerplexityGate.DefaultMaxAvgNllE6),
-      contamGate = c.getString("curation.contamGate", "overlap"),
-      fuzzyMinJaccard = c.getDouble("curation.fuzzyMinJaccard", 0.5),
-      surgeryMinKeepFrac = c.getDouble("curation.surgeryMinKeepFrac", 0.5),
-      surgeryNGram = c.getInt("curation.surgeryNGram", 5),
-      surgeryPad = c.getInt("curation.surgeryPad", 5))
+    val report = run(spark, inDir, outDir, Curation.fromConfig(c))
     report.orderBy(col("stage")).show(20, truncate = false)
     spark.stop()
   }
@@ -108,18 +97,8 @@ object CurateApp {
     * curation service) accumulates no cached blocks across runs.
     */
   def run(spark: SparkSession, inDir: String, outDir: String,
-          qualityMin: Double = 0.5, benchMod: Int = 50,
-          maxOverlap: Double = 0.5,
-          widths: DedupWidths = DedupWidths.default,
-          qualityGate: String = "score",
-          maxAvgNllE6: Long = operators.PerplexityGate.DefaultMaxAvgNllE6,
-          contamGate: String = "overlap",
-          fuzzyMinJaccard: Double = 0.5,
-          surgeryMinKeepFrac: Double = 0.5,
-          surgeryNGram: Int = 5, surgeryPad: Int = 5): DataFrame = {
-    val (frame, release) = taggedCached(spark, inDir, qualityMin, benchMod,
-      maxOverlap, widths, qualityGate, maxAvgNllE6, contamGate, fuzzyMinJaccard,
-      surgeryMinKeepFrac, surgeryNGram, surgeryPad)
+          curation: Curation = Curation.default): DataFrame = {
+    val (frame, release) = taggedCached(Catalog.documents(spark, inDir), curation)
     try {
       frame.filter(col("stage") === "kept")
         .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
@@ -136,27 +115,17 @@ object CurateApp {
     taggedDocs.groupBy(col("stage"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
 
-  /** Every input doc with its curation verdict: the FIRST stage that
-    * rejects it in `stage`, or `kept`. One lazy DAG — see the object doc.
-    * Fully lazy and persist-free: composing callers that run exactly one
-    * action over the result pay one pipeline execution and leak nothing.
-    * Callers that run SEVERAL actions (curated write + report write, or
-    * repeated aggregation) should use [[taggedCached]] instead.
+  /** Every doc of `docs` (the documents-table columns, plus `embedding`
+    * for the semantic near-dup method) with its curation verdict: the
+    * FIRST stage that rejects it in `stage`, or `kept`. One lazy DAG —
+    * see the object doc. Fully lazy and persist-free: composing callers
+    * that run exactly one action over the result pay one pipeline
+    * execution and leak nothing. Callers that run SEVERAL actions
+    * (curated write + report write, or repeated aggregation) should use
+    * [[taggedCached]] instead.
     */
-  def tagged(spark: SparkSession, inDir: String,
-             qualityMin: Double = 0.5, benchMod: Int = 50,
-             maxOverlap: Double = 0.5,
-             widths: DedupWidths = DedupWidths.default,
-             qualityGate: String = "score",
-             maxAvgNllE6: Long = operators.PerplexityGate.DefaultMaxAvgNllE6,
-             contamGate: String = "overlap",
-             fuzzyMinJaccard: Double = 0.5,
-             surgeryMinKeepFrac: Double = 0.5,
-             surgeryNGram: Int = 5, surgeryPad: Int = 5): DataFrame =
-    build(spark, Catalog.documents(spark, inDir), qualityMin, benchMod,
-      maxOverlap, widths, qualityGate, maxAvgNllE6, contamGate,
-      fuzzyMinJaccard, surgeryMinKeepFrac, surgeryNGram, surgeryPad,
-      persistShared = false)._1
+  def tagged(docs: DataFrame, curation: Curation = Curation.default): DataFrame =
+    build(docs, curation, persistShared = false)._1
 
   /** [[tagged]] with the three stages the DAG reuses — the row-local
     * verdict frame, the fingerprint-joined frame, and the near-dup
@@ -165,50 +134,13 @@ object CurateApp {
     * the thunk drops all shared stages, so nothing outlives the run. A
     * truncated frame must not be read after `release()`.
     */
-  def taggedCached(spark: SparkSession, inDir: String,
-                   qualityMin: Double = 0.5, benchMod: Int = 50,
-                   maxOverlap: Double = 0.5,
-                   widths: DedupWidths = DedupWidths.default,
-                   qualityGate: String = "score",
-                   maxAvgNllE6: Long = operators.PerplexityGate.DefaultMaxAvgNllE6,
-                   contamGate: String = "overlap",
-                   fuzzyMinJaccard: Double = 0.5,
-                   surgeryMinKeepFrac: Double = 0.5,
-                   surgeryNGram: Int = 5, surgeryPad: Int = 5): (DataFrame, () => Unit) =
-    build(spark, Catalog.documents(spark, inDir), qualityMin, benchMod,
-      maxOverlap, widths, qualityGate, maxAvgNllE6, contamGate,
-      fuzzyMinJaccard, surgeryMinKeepFrac, surgeryNGram, surgeryPad,
-      persistShared = true)
+  def taggedCached(docs: DataFrame, curation: Curation = Curation.default)
+      : (DataFrame, () => Unit) =
+    build(docs, curation, persistShared = true)
 
-  /** [[taggedCached]] over an in-memory corpus frame (the documents-table
-    * columns, plus `embedding` for the semantic near-dup method) — what
-    * lets an embedding-bearing corpus (documents ⋈ embeddings) run the
-    * pipeline without a staging write. A distinct name, not an overload:
-    * two overloads cannot both carry this default-argument list.
-    */
-  def taggedCachedOn(spark: SparkSession, docs: DataFrame,
-                     qualityMin: Double = 0.5, benchMod: Int = 50,
-                     maxOverlap: Double = 0.5,
-                     widths: DedupWidths = DedupWidths.default,
-                     qualityGate: String = "score",
-                     maxAvgNllE6: Long = operators.PerplexityGate.DefaultMaxAvgNllE6,
-                     contamGate: String = "overlap",
-                     fuzzyMinJaccard: Double = 0.5,
-                     surgeryMinKeepFrac: Double = 0.5,
-                     surgeryNGram: Int = 5, surgeryPad: Int = 5): (DataFrame, () => Unit) =
-    build(spark, docs, qualityMin, benchMod, maxOverlap, widths,
-      qualityGate, maxAvgNllE6, contamGate, fuzzyMinJaccard,
-      surgeryMinKeepFrac, surgeryNGram, surgeryPad,
-      persistShared = true)
-
-  private def build(spark: SparkSession, docs: DataFrame,
-                    qualityMin: Double, benchMod: Int, maxOverlap: Double,
-                    widths: DedupWidths, qualityGate: String,
-                    maxAvgNllE6: Long, contamGate: String,
-                    fuzzyMinJaccard: Double,
-                    surgeryMinKeepFrac: Double,
-                    surgeryNGram: Int, surgeryPad: Int,
+  private def build(docs: DataFrame, curation: Curation,
                     persistShared: Boolean): (DataFrame, () => Unit) = {
+    import curation._
     // quality scores, tokenization, fingerprints and the LSH+CC near-dup
     // verdict each feed 2-3 downstream branches; recomputing them per
     // branch triples the scan+tokenize cost (the r4 bench's slowest query).
@@ -223,7 +155,7 @@ object CurateApp {
     // methods read shingle signatures — demand the column up front, with
     // a configuration-shaped message, not an analysis error mid-DAG
     require(widths.method != "semantic" || docs.columns.contains("embedding"),
-      "curation.nearDupMethod=semantic needs an `embedding` column on the " +
+      "nearDupMethod=semantic needs an `embedding` column on the " +
         "input corpus (an embedding-bearing documents frame, e.g. " +
         "documents ⋈ embeddings)")
 
@@ -240,14 +172,9 @@ object CurateApp {
     val base0 = docs
       .withColumn("n_tokens", size(toks).cast("long"))
       .withColumn("is_bench", col("doc_id") % benchMod === 0)
-    val tagged0 = sharedStage(qualityGate match {
-      case "gopher" =>
-        val g = gopherFlags(col("text"), toks)
-        base0.withColumn("low_quality",
-          (g("ok_word_count") * g("ok_mean_word_len") * g("ok_symbol_ratio")
-            * g("ok_bullets") * g("ok_ellipses") * g("ok_alpha_words")
-            * g("ok_stopwords")) === 0)
-      case "perplexity" =>
+    val tagged0 = sharedStage(lowQuality(col("text"), toks) match {
+      case Some(reject) => base0.withColumn("low_quality", reject)
+      case None =>
         // the verdict frame feeds tagged0, which the DAG references from
         // several consumers (survivor filter, bench shingles, attribution)
         // and Catalyst re-evaluates a subtree per reference — unpinned,
@@ -263,12 +190,8 @@ object CurateApp {
           .withColumn("low_quality",
             !operators.PerplexityGate.keepExpr(
               coalesce(col("n_bigrams"), lit(0L)),
-              coalesce(col("sum_logp_e6"), lit(0L)), maxAvgNllE6))
+              coalesce(col("sum_logp_e6"), lit(0L)), perplexityMaxNllE6))
           .drop("n_bigrams", "sum_logp_e6")
-      case "score" =>
-        base0.withColumn("low_quality", qualityScore(col("text"), toks) < qualityMin)
-      case other => sys.error(
-        s"curation.qualityGate must be score|gopher|perplexity, got '$other'")
     })
 
     // stage 3: exact dedup among docs surviving 1+2 — first occurrence
@@ -361,8 +284,6 @@ object CurateApp {
             when(col("n_hits") > 0 && col("kept_frac") >= surgeryMinKeepFrac,
               col("cleaned_text")).as("surgery_text"),
             when(col("n_hits") > 0, col("removed_tokens")).as("surgery_removed"))
-      case other => sys.error(
-        s"curation.contamGate must be overlap|fuzzy|surgery, got '$other'")
     }
 
     // attribution: FIRST failing stage tags the doc; survivors are kept.

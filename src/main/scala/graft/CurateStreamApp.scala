@@ -357,38 +357,33 @@ object CurateStreamApp {
       fs.delete(new org.apache.hadoop.fs.Path(s"$deltaRoot/batch=$b"), true))
   }
 
-  /** One micro-batch: screen, write survivors, commit the state advance.
-    * `batchId < 0` (direct test/tool invocations) appends to the output
-    * root, skips replay tracking, and folds its state advance straight
-    * into the base tables.
+  /** One micro-batch: screen, write survivors to
+    * `<outDir>/curated/batch=<batchId>`, commit the state advance as the
+    * delta `batch=<batchId>`. A batch id already applied is a no-op.
     */
   def processBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
                    outDir: String, config: GraftConfig = GraftConfig.empty,
-                   batchId: Long = -1L): Unit = {
+                   batchId: Long): Unit = {
     val pins = Pin.scope() // every pin of the batch is read only by its own writes
-    try screenBatch(spark, batch, stateDir, outDir, config, batchId, pins) finally pins.release()
+    try screenBatch(spark, batch, stateDir, outDir, Curation.fromConfig(config), batchId, pins)
+    finally pins.release()
+  }
+
+  /** First occurrence (min doc_id) per fingerprint `fp` among `docs`,
+    * minus the fingerprints the corpus state already holds.
+    */
+  private def firstUnseen(docs: DataFrame, stateFps: DataFrame): DataFrame = {
+    val byFp = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
+    docs.withColumn("fp_canon", min(col("doc_id")).over(byFp))
+      .filter(col("doc_id") === col("fp_canon")).drop("fp_canon")
+      .join(stateFps.select(col("fp")), Seq("fp"), "left_anti")
   }
 
   private def screenBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
-      outDir: String, config: GraftConfig, batchId: Long, pins: Pin.Scope): Unit = {
-    val qualityMin = config.getDouble("curation.qualityMin", 0.5)
-    val qualityGate = config.getString("curation.qualityGate", "score")
-    val maxAvgNllE6 = config.getLong("curation.perplexityMaxNllE6",
-      operators.PerplexityGate.DefaultMaxAvgNllE6)
-    val maxBucket = config.getInt("curation.maxBucket", 10000)
-    val foldEvery = config.getInt("curation.foldEvery", 8)
-    // production MinHash widths (curation.minhash.* keys). The stream's
-    // near-dup screen is band-index-shaped, so only the MinHash dials
-    // apply here (curation.nearDupMethod selects SimHash in the BATCH
-    // app only); see the DedupWidths scaladoc for the state-directory
-    // width-compatibility contract.
-    val widths = DedupWidths.fromConfig(config)
-    val stateRoot = s"$stateDir/corpus_state"
-    val deltaRoot = s"$stateDir/corpus_deltas"
-
+      outDir: String, curation: Curation, batchId: Long, pins: Pin.Scope): Unit = {
+    import curation._
     val state = readCorpusState(spark, stateDir)
-    if (batchId >= 0 &&
-      (batchId <= state.appliedThrough || state.liveDeltas.contains(batchId))) return
+    if (batchId <= state.appliedThrough || state.liveDeltas.contains(batchId)) return
     val stateFps = state.fps
     val stateBands = state.bands
 
@@ -401,37 +396,24 @@ object CurateStreamApp {
     // shuffled, exactly like the band-index lookup below)
     val toks = tokens(col("text"))
     val fingered = batch.withColumn("fp", exactFingerprint(col("text")))
-    val qualified = qualityGate match {
-      case "score" =>
-        fingered.filter(qualityScore(col("text"), toks) >= qualityMin)
-      case "gopher" =>
-        val g = gopherFlags(col("text"), toks)
-        fingered.filter(
-          (g("ok_word_count") * g("ok_mean_word_len") * g("ok_symbol_ratio")
-            * g("ok_bullets") * g("ok_ellipses") * g("ok_alpha_words")
-            * g("ok_stopwords")) === 1)
-      case "perplexity" =>
+    val qualified = lowQuality(col("text"), toks) match {
+      case Some(reject) => fingered.filter(!reject)
+      case None =>
         val lm = readLmState(spark, stateDir).getOrElse(sys.error(
-          s"curation.qualityGate=perplexity but no LM state under $stateDir/lm_state — " +
+          s"qualityGate=perplexity but no LM state under $stateDir/lm_state — " +
             "run CurateStreamApp.bootstrapLm over the reference corpus first"))
         val scored = operators.PerplexityGate.scoreAgainstLm(
           batch.select(col("doc_id"), col("text")), lm._1, lm._2, lm._3)
         fingered.join(scored, Seq("doc_id"), "left")
           .filter(operators.PerplexityGate.keepExpr(
             coalesce(col("n_bigrams"), lit(0L)),
-            coalesce(col("sum_logp_e6"), lit(0L)), maxAvgNllE6))
+            coalesce(col("sum_logp_e6"), lit(0L)), perplexityMaxNllE6))
           .drop("n_bigrams", "sum_logp_e6")
-      case other => sys.error(
-        s"curation.qualityGate must be score|gopher|perplexity, got '$other'")
     }
 
     // 2. exact dedup: first-in-batch occurrence keeps (window min over
     // the fingerprint), then drop anything the corpus already has
-    val byFp = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-    val batchUnique = qualified
-      .withColumn("fp_canon", min(col("doc_id")).over(byFp))
-      .filter(col("doc_id") === col("fp_canon")).drop("fp_canon")
-      .join(stateFps.select(col("fp")), Seq("fp"), "left_anti")
+    val batchUnique = firstUnseen(qualified, stateFps)
 
     // 3. near-dup screen: row-local band signatures against the corpus
     // band index, with the st7 megabucket guard driven by the
@@ -444,6 +426,9 @@ object CurateStreamApp {
     // scanned, never shuffled.
     val stateSizes = state.sizes
     val oversized = Buckets.oversized(stateSizes, Seq("band", "sig"), "n", maxBucket)
+    // Only the MinHash widths apply here (nearDupMethod selects the BATCH
+    // app's generator only); see the DedupWidths scaladoc for the
+    // state-directory width-compatibility contract.
     val batchBands = Dedup.lshBands(batchUnique, widths.numPerms, widths.numBands)
     val corpusHit = batchBands
       .join(oversized, Seq("band", "sig"), "left_anti")
@@ -471,13 +456,9 @@ object CurateStreamApp {
     // batch side is tiny (broadcast); the index is scanned, never
     // shuffled. Rows without media columns (text-only streams) skip the
     // screen entirely.
-    val imageScreen = config.getString("curation.imageScreen", "off")
     val hasMedia = batch.columns.contains("kind") && batch.columns.contains("bytes")
-    val imgMaxHamming = config.getInt("curation.image.maxHamming", 6)
     val batchImgBands: Option[DataFrame] =
       if (imageScreen == "off" || !hasMedia) None
-      else if (imageScreen != "phash") sys.error(
-        s"curation.imageScreen must be off|phash, got '$imageScreen'")
       else Some(operators.Multimodal.imageHashBands(
         operators.Multimodal.imagePHashes(
           batchUnique.select(col("doc_id").as("media_id"), col("kind"), col("bytes"))),
@@ -503,14 +484,14 @@ object CurateStreamApp {
         val imgCorpusHit = ib
           .join(touched.join(broadcast(hot), Seq("band", "sig"), "left_anti"),
             Seq("band", "sig"))
-          .filter(bit_count(col("__h").bitwiseXOR(col("state_ph"))) <= imgMaxHamming)
+          .filter(bit_count(col("__h").bitwiseXOR(col("state_ph"))) <= imageMaxHamming)
           .select(col("media_id").as("doc_id")).distinct()
         val a = ib.select(col("band"), col("sig"),
           col("media_id").as("id1"), col("__h").as("h1"))
         val imgInBatchHit = ib
           .join(a, Seq("band", "sig"))
           .filter(col("id1") < col("media_id") &&
-            bit_count(col("__h").bitwiseXOR(col("h1"))) <= imgMaxHamming)
+            bit_count(col("__h").bitwiseXOR(col("h1"))) <= imageMaxHamming)
           .select(col("media_id").as("doc_id")).distinct()
         collidingText.unionByName(imgCorpusHit).unionByName(imgInBatchHit).distinct()
     }
@@ -523,12 +504,8 @@ object CurateStreamApp {
     // an earlier in-batch clip (greedy first-keeps via the m9 pair
     // generator on the batch-sized frame set). The state index is
     // (clip, distinct fp) rows, scanned via one fp equi-join.
-    val audioScreen = config.getString("curation.audioScreen", "off")
-    val audMinContainment = config.getDouble("curation.audio.minContainment", 0.8)
     val batchAudioFps: Option[DataFrame] =
       if (audioScreen == "off" || !hasMedia) None
-      else if (audioScreen != "fingerprint") sys.error(
-        s"curation.audioScreen must be off|fingerprint, got '$audioScreen'")
       else Some(operators.Multimodal.audioFingerprints(
           batchUnique.select(col("doc_id").as("media_id"), col("kind"), col("bytes")))
         .transform(pins.truncate(_))) // codec runs once, feeds 3 consumers
@@ -569,10 +546,10 @@ object CurateStreamApp {
           .join(nfp, Seq("media_id"))
           .join(stateNfp, Seq("state_id"))
           .filter(col("shared") >=
-            least(col("nfp"), col("nfp_state")) * audMinContainment)
+            least(col("nfp"), col("nfp_state")) * audioMinContainment)
           .select(col("media_id").as("doc_id")).distinct()
         val audInBatchHit = operators.Multimodal
-          .audioNearDupPairs(af, minContainment = audMinContainment)
+          .audioNearDupPairs(af, minContainment = audioMinContainment)
           .select(col("id2").as("doc_id")).distinct() // greedy: earlier id keeps
         collidingImg.unionByName(audCorpusHit).unionByName(audInBatchHit).distinct()
     }
@@ -585,9 +562,6 @@ object CurateStreamApp {
     // lm_state pattern — fail loud if missing); every batch pays shingle
     // assembly on its own rows plus index scans with the batch side
     // broadcast, never an aggregation over the bench corpus.
-    val contamScreen = config.getString("curation.contamScreen", "off")
-    val maxOverlap = config.getDouble("curation.maxOverlap", 0.5)
-    val fuzzyMinJaccard = config.getDouble("curation.fuzzyMinJaccard", 0.5)
     val (collidingAll, surgeryRewrite) = contamScreen match {
       case "off" => (colliding, None)
       case "surgery" =>
@@ -600,27 +574,26 @@ object CurateStreamApp {
         // state is never rewritten.
         val (benchSh, _, _) = readBenchState(spark, stateDir)
           .getOrElse(sys.error(
-            s"curation.contamScreen=surgery but no bench state under " +
+            s"contamScreen=surgery but no bench state under " +
               s"$stateDir/bench_state — run CurateStreamApp.bootstrapBench " +
               "over the benchmark corpus first"))
         val surg = operators.Decontaminate.surgerySpansAgainst(
             batchUnique.select(col("doc_id"), col("text")),
             benchSh.select(col("shingle").as("fp")).distinct(),
             nGram = 3,
-            pad = config.getInt("curation.surgeryPad", 5),
+            pad = surgeryPad,
             hashFps = false)
           .filter(col("n_hits") > 0) // untouched arrivals never join back
           .transform(pins.truncate(_))     // feeds the drop set AND the rewrite
-        val minKeep = config.getDouble("curation.surgeryMinKeepFrac", 0.5)
-        val dropped = surg.filter(col("kept_frac") < minKeep)
+        val dropped = surg.filter(col("kept_frac") < surgeryMinKeepFrac)
           .select(col("doc_id"))
         (colliding.unionByName(dropped).distinct(),
-          Some(surg.filter(col("kept_frac") >= minKeep)
+          Some(surg.filter(col("kept_frac") >= surgeryMinKeepFrac)
             .select(col("doc_id"), col("cleaned_text"))))
       case mode @ ("overlap" | "fuzzy") =>
         val (benchSh, benchBands, benchNsh) = readBenchState(spark, stateDir)
           .getOrElse(sys.error(
-            s"curation.contamScreen=$mode but no bench state under " +
+            s"contamScreen=$mode but no bench state under " +
               s"$stateDir/bench_state — run CurateStreamApp.bootstrapBench " +
               "over the benchmark corpus first"))
         val arrSh = graft.functions.TextFunctions.explodedShingles(
@@ -674,8 +647,6 @@ object CurateStreamApp {
               .select(col("doc_id")).distinct()
           }
         (colliding.unionByName(contamHit).distinct(), None)
-      case other => sys.error(
-        s"curation.contamScreen must be off|overlap|fuzzy|surgery, got '$other'")
     }
     // materialized EAGERLY: the survivor plan reads all three state
     // tables and feeds three consumers (curated write, fp merge, band
@@ -706,24 +677,16 @@ object CurateStreamApp {
         // two arrivals whose texts differ only inside excised spans
         // converge on one cleaned fingerprint — first-keeps again on the
         // REWRITTEN fp (batch-sized window), then the state re-check
-        val byNewFp = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("fp"))
-        rewritten
-          .withColumn("fp_canon", min(col("doc_id")).over(byNewFp))
-          .filter(col("doc_id") === col("fp_canon")).drop("fp_canon")
-          .join(stateFps.select(col("fp")), Seq("fp"), "left_anti")
+        firstUnseen(rewritten, stateFps)
     }).transform(pins.truncate(_))
 
-    if (batchId >= 0)
-      survivors.drop("fp").write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/curated/batch=$batchId")
-    else survivors.drop("fp").write.mode(SaveMode.Append).parquet(s"$outDir/curated")
+    survivors.drop("fp").write.mode(SaveMode.Overwrite)
+      .parquet(s"$outDir/curated/batch=$batchId")
 
     // state advance: the batch's survivors only. Image bands re-key the
     // precomputed batch index on the survivor set — no second decode.
     val survivorBands = Dedup.lshBands(survivors.select(col("doc_id"), col("text")),
-        widths.numPerms, widths.numBands)
-      .transform(pins.truncate(_)) // consumed by two writes below
+      widths.numPerms, widths.numBands)
     val survivorImgBands = batchImgBands.map(_
       .join(survivors.select(col("doc_id").as("media_id")), Seq("media_id"), "left_semi")
       .select(col("band"), col("sig"), col("media_id"), col("__h").as("phash")))
@@ -731,39 +694,14 @@ object CurateStreamApp {
       .filter(col("fp") =!= lit(-1L)) // index stays sentinel-free (m9 parity)
       .select(col("media_id"), col("fp")).distinct()
       .join(survivors.select(col("doc_id").as("media_id")), Seq("media_id"), "left_semi"))
-    if (batchId >= 0) {
-      // O(batch) commit: one immutable delta directory, one atomic
-      // rename — per-batch cost is independent of corpus size, unlike a
-      // full-state swap, which at 100 TB would rewrite the entire index
-      // every 10-second trigger. The base rewrite happens once per
-      // `foldEvery` batches instead.
-      writeDelta(spark, deltaRoot, batchId,
-        survivors.select(col("fp"), col("doc_id")), survivorBands,
-        survivorImgBands, survivorAudioFps)
-      if (state.liveDeltas.size + 1 >= foldEvery) foldDeltas(spark, stateDir)
-    } else {
-      // direct invocation: compact any live deltas first (so the base IS
-      // the whole state), then fold the advance into it via one atomic
-      // multi-table swap (the marker, if any, is preserved)
-      if (state.liveDeltas.nonEmpty) foldDeltas(spark, stateDir)
-      val base = readCorpusState(spark, stateDir)
-      val newFps = base.fps.unionByName(survivors.select(col("fp"), col("doc_id")))
-      val withMarker =
-        if (base.appliedThrough < 0) newFps
-        else newFps.unionByName(spark.range(1)
-          .select(lit(BatchMarker).as("fp"), lit(base.appliedThrough).as("doc_id")))
-      val newBands = base.bands.unionByName(survivorBands)
-      val batchSizes = survivorBands.groupBy(col("band"), col("sig"))
-        .agg(count(lit(1)).as("add"))
-      val newSizes = base.sizes
-        .join(batchSizes, Seq("band", "sig"), "full_outer")
-        .select(col("band"), col("sig"),
-          (coalesce(col("n"), lit(0L)) + coalesce(col("add"), lit(0L))).as("n"))
-      val newImg = survivorImgBands.fold(base.imgBands)(base.imgBands.unionByName(_))
-      val newAud = survivorAudioFps.fold(base.audioFps)(base.audioFps.unionByName(_))
-      StateSwap.swapAll(stateRoot, Seq(
-        "fps" -> withMarker, "bands" -> newBands, "bucket_sizes" -> newSizes,
-        "img_bands" -> newImg, "audio_fps" -> newAud))
-    }
+    // O(batch) commit: one immutable delta directory, one atomic
+    // rename — per-batch cost is independent of corpus size, unlike a
+    // full-state swap, which at 100 TB would rewrite the entire index
+    // every 10-second trigger. The base rewrite happens once per
+    // `foldEvery` batches instead.
+    writeDelta(spark, s"$stateDir/corpus_deltas", batchId,
+      survivors.select(col("fp"), col("doc_id")), survivorBands,
+      survivorImgBands, survivorAudioFps)
+    if (state.liveDeltas.size + 1 >= foldEvery) foldDeltas(spark, stateDir)
   }
 }

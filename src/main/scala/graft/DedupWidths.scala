@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions.col
 
 import graft.operators.Dedup
 
-/** Near-dup signature widths for the curation entry points, loaded from
-  * the `curation.*` conf keys (see `conf/graft.conf`) — the production
-  * recall/precision dials. The library operators have taken widths as
-  * parameters since the `d2v`/`d3v`/`d13v` oracle queries proved the
-  * math at 128 permutations / 64 bits; this type is what wires a
-  * DEPLOYED [[CurateApp]]/[[CurateStreamApp]] to those dials without a
-  * recompile.
+/** Near-dup signature widths for the curation entry points — the
+  * production recall/precision dials, read from the conf file as the
+  * `widths` field of [[Curation]]. The library operators have taken
+  * widths as parameters since the `d2v`/`d3v`/`d13v` oracle queries
+  * proved the math at 128 permutations / 64 bits; this type is what
+  * wires a DEPLOYED [[CurateApp]]/[[CurateStreamApp]] to those dials
+  * without a recompile.
   *
   * The compiled-in defaults are the fixture widths (12 perms / 3 bands,
   * 32-bit SimHash), so an absent conf file changes nothing.
@@ -33,7 +33,7 @@ final case class DedupWidths(
     semanticTargetCluster: Int = 128) {
 
   require(method == "minhash" || method == "simhash" || method == "semantic",
-    s"curation.nearDupMethod must be minhash|simhash|semantic, got '$method'")
+    s"nearDupMethod must be minhash|simhash|semantic, got '$method'")
 
   /** Candidate (doc1, doc2) pairs for the configured method — distinct
     * pairs in every branch (the LSH form aggregates per pair across
@@ -54,7 +54,7 @@ final case class DedupWidths(
           maxBucket, simhashBits).select(col("doc1"), col("doc2"))
       case "semantic" =>
         require(docs.columns.contains("embedding"),
-          "curation.nearDupMethod=semantic needs an `embedding` column on " +
+          "nearDupMethod=semantic needs an `embedding` column on " +
             "the documents table (an embedding-bearing corpus); got only " +
             docs.columns.mkString("(", ", ", ")"))
         graft.operators.SimilaritySearch.semanticCandidatePairs(
@@ -77,15 +77,4 @@ object DedupWidths {
     simhashBits = Dedup.SimHashBits,
     simhashBucketBits = 12,
     simhashMaxHamming = 3)
-
-  def fromConfig(c: GraftConfig): DedupWidths = DedupWidths(
-    method = c.getString("curation.nearDupMethod", default.method),
-    numPerms = c.getInt("curation.minhash.numPerms", default.numPerms),
-    numBands = c.getInt("curation.minhash.numBands", default.numBands),
-    simhashBits = c.getInt("curation.simhash.bits", default.simhashBits),
-    simhashBucketBits = c.getInt("curation.simhash.bucketBits", default.simhashBucketBits),
-    simhashMaxHamming = c.getInt("curation.simhash.maxHamming", default.simhashMaxHamming),
-    semanticTau = c.getDouble("curation.semantic.tau", default.semanticTau),
-    semanticTargetCluster =
-      c.getInt("curation.semantic.targetCluster", default.semanticTargetCluster))
 }

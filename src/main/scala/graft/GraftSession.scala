@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Canonical session factory: every knob here is a scale decision, not a
-  * convenience default. Library users call `GraftSession.build()`; the
-  * driver-facing mains (Verify/Bench) configure equivalently.
+  * convenience default. The apps, the driver-facing mains (Verify/Bench)
+  * and the perfbench harness all build their session here, so a
+  * correctness dump, a bench number and a production run share one
+  * configuration (`GraftExtensions` included).
   */
 object GraftSession {
 

@@ -421,7 +421,7 @@ object PipelineQueries {
     // (partition pruning at the source). Output-identical to v4.
     "v10_ivf_persisted" -> ((s, dir) => {
       val emb = Catalog.embeddings(s, dir)
-      val idx = java.nio.file.Files.createTempDirectory("ivf_idx_").toString
+      val idx = ScratchDirs.create("ivf_idx_")
       SimilaritySearch.buildIvfIndex(emb, "label", idx)
       SimilaritySearch.queryIvfIndex(s, idx, emb.filter(col("vec_id") < 10),
           k = 5, nProbe = 2)
@@ -893,7 +893,7 @@ object PipelineQueries {
     // stage's doc/token attrition machine-checked against a DuckDB
     // replica of the whole pipeline.
     "c5_curate_report" -> ((s, dir) => {
-      val (frame, release) = graft.CurateApp.taggedCached(s, dir)
+      val (frame, release) = graft.CurateApp.taggedCached(Catalog.documents(s, dir))
       val rep = graft.CurateApp.report(frame).orderBy(col("stage"))
       // the report is ≤6 rows by construction (the stage enum), so an
       // eager driver materialization is bounded and lets the shared-stage
@@ -910,8 +910,8 @@ object PipelineQueries {
     // pipeline with the t35 LM CTEs substituted for the score CTEs, so
     // the gate switch is machine-checked end-to-end, not just per-doc.
     "c5v_curate_report_ppl" -> ((s, dir) => {
-      val (frame, release) = graft.CurateApp.taggedCached(s, dir,
-        qualityGate = "perplexity")
+      val (frame, release) = graft.CurateApp.taggedCached(Catalog.documents(s, dir),
+        graft.Curation.default.copy(qualityGate = "perplexity"))
       val rep = graft.CurateApp.report(frame).orderBy(col("stage"))
       val rows = rep.collect() // ≤6 rows by construction (the stage enum)
       release()
@@ -924,8 +924,8 @@ object PipelineQueries {
     // instead of shingle-overlap mass. The oracle replays the whole
     // pipeline with the t36 CTEs banded over the survivor∪bench slice.
     "c5w_curate_report_fuzzy" -> ((s, dir) => {
-      val (frame, release) = graft.CurateApp.taggedCached(s, dir,
-        contamGate = "fuzzy")
+      val (frame, release) = graft.CurateApp.taggedCached(Catalog.documents(s, dir),
+        graft.Curation.default.copy(contamGate = "fuzzy"))
       val rep = graft.CurateApp.report(frame).orderBy(col("stage"))
       val rows = rep.collect() // ≤6 rows by construction (the stage enum)
       release()
@@ -952,9 +952,9 @@ object PipelineQueries {
         Catalog.embeddings(s, dir)
           .select(col("vec_id").as("doc_id"), col("embedding")),
         Seq("doc_id"))
-      val (frame, release) = graft.CurateApp.taggedCachedOn(s, corpus,
-        widths = graft.DedupWidths.default.copy(
-          method = "semantic", semanticTau = 0.35))
+      val (frame, release) = graft.CurateApp.taggedCached(corpus,
+        graft.Curation.default.copy(widths = graft.DedupWidths.default.copy(
+          method = "semantic", semanticTau = 0.35)))
       val rep = graft.CurateApp.report(frame).orderBy(col("stage"))
       val rows = rep.collect() // ≤6 rows by construction (the stage enum)
       release()
@@ -973,8 +973,8 @@ object PipelineQueries {
     // TEXT equality is t39's own oracle contract, so counts here pin
     // which docs were cut, dropped, and kept.
     "c5y_curate_report_surgery" -> ((s, dir) => {
-      val (frame, release) = graft.CurateApp.taggedCached(s, dir,
-        contamGate = "surgery", surgeryNGram = 3, surgeryPad = 5)
+      val (frame, release) = graft.CurateApp.taggedCached(Catalog.documents(s, dir),
+        graft.Curation.default.copy(contamGate = "surgery", surgeryNGram = 3, surgeryPad = 5))
       val rep = frame.groupBy(col("stage"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
           sum(col("surgered").cast("long")).as("n_surgered"),

@@ -102,8 +102,7 @@ object StreamingQueries {
       // per-trigger window over the corpus) and clustered on the join
       // key (band, sig). Each micro-batch then pays only a parquet scan
       // + hash join — no recompute, no session-lifetime cache.
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("st7_bands_").toString + "/bands"
+      val idxDir = ScratchDirs.create("st7_bands_") + "/bands"
       StreamingJobs.guardedBandIndex(graft.operators.Dedup.lshBands(
           graft.sources.Catalog.documents(s, dir)))
         .repartition(col("band"), col("sig"))
@@ -132,8 +131,7 @@ object StreamingQueries {
         col("o_orderdate").as("ts"),
         col("o_orderkey").as("seq"),
         col("o_totalprice").as("acctbal"))
-      val stateDir = java.nio.file.Files
-        .createTempDirectory("st8_cdc_").toString + "/state"
+      val stateDir = ScratchDirs.create("st8_cdc_") + "/state"
       val q = StreamingJobs.cdcUpsertMicroBatches(changes, stateDir,
         Seq("custkey"), "op", "ts", Seq("acctbal"), orderCols = Seq("seq"),
         intervalSecs = 1)

@@ -14,6 +14,8 @@ class CurateAppSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val sfDir = "/root/testdata/sf0.001"
 
+  private def docsOf(dir: String) = graft.sources.Catalog.documents(spark, dir)
+
   private lazy val outDir =
     java.nio.file.Files.createTempDirectory("curate_").toString
 
@@ -84,7 +86,7 @@ class CurateAppSpec extends AnyFunSuite {
 
   test("release() synchronously frees the shared checkpointed stages") {
     val pre = spark.sparkContext.getPersistentRDDs.keySet
-    val (frame, release) = CurateApp.taggedCached(spark, sfDir)
+    val (frame, release) = CurateApp.taggedCached(docsOf(sfDir))
     frame.groupBy(col("stage")).count().collect() // materialize the stages
     val mid = (spark.sparkContext.getPersistentRDDs.keySet -- pre).toSet
     assert(mid.nonEmpty, "expected the shared stages to be materialized")
@@ -103,7 +105,7 @@ class CurateAppSpec extends AnyFunSuite {
     val docs = graft.sources.Catalog.documents(spark, sfDir)
 
     def qualityDocs(gate: String) =
-      CurateApp.tagged(spark, sfDir, qualityGate = gate)
+      CurateApp.tagged(docsOf(sfDir), Curation.default.copy(qualityGate = gate))
         .filter(col("stage") === "quality")
         .select(col("doc_id")).collect().map(_.getLong(0)).toSet
 
@@ -135,7 +137,7 @@ class CurateAppSpec extends AnyFunSuite {
 
     // unknown gate fails loudly, not silently-keep-everything
     intercept[RuntimeException] {
-      CurateApp.tagged(spark, sfDir, qualityGate = "nope").collect()
+      CurateApp.tagged(docsOf(sfDir), Curation.default.copy(qualityGate = "nope")).collect()
     }
   }
 
@@ -144,7 +146,7 @@ class CurateAppSpec extends AnyFunSuite {
     val docs = graft.sources.Catalog.documents(spark, sfDir)
 
     def byStage(gate: String) =
-      CurateApp.tagged(spark, sfDir, contamGate = gate)
+      CurateApp.tagged(docsOf(sfDir), Curation.default.copy(contamGate = gate))
         .select(col("doc_id"), col("stage")).collect()
         .groupBy(_.getString(1)).map { case (k, v) => k -> v.map(_.getLong(0)).toSet }
 
@@ -164,7 +166,7 @@ class CurateAppSpec extends AnyFunSuite {
     // the stages still partition the corpus, and an unknown gate is loud
     assert(fuzzy.values.map(_.size).sum == docs.count())
     intercept[RuntimeException] {
-      CurateApp.tagged(spark, sfDir, contamGate = "nope").collect()
+      CurateApp.tagged(docsOf(sfDir), Curation.default.copy(contamGate = "nope")).collect()
     }
   }
 
@@ -182,9 +184,9 @@ class CurateAppSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
 
     def frame(gate: String) = {
-      val (f, release) = CurateApp.taggedCachedOn(spark, docs,
+      val (f, release) = CurateApp.taggedCached(docs, Curation.default.copy(
         qualityMin = 0.0, contamGate = gate,
-        surgeryNGram = 3, surgeryPad = 2, surgeryMinKeepFrac = 0.5)
+        surgeryNGram = 3, surgeryPad = 2, surgeryMinKeepFrac = 0.5))
       val rows = f.select(col("doc_id"), col("stage"), col("text"),
           col("n_chars")).collect()
         .map(r => r.getLong(0) -> (r.getString(1), r.getString(2), r.getLong(3)))
@@ -208,9 +210,9 @@ class CurateAppSpec extends AnyFunSuite {
     assert(surg(3L)._1 == "kept" && surg(3L)._2 == clean)
 
     // the excised-mass column: only doc 1 carries removed tokens
-    val (f2, release2) = CurateApp.taggedCachedOn(spark, docs,
+    val (f2, release2) = CurateApp.taggedCached(docs, Curation.default.copy(
       qualityMin = 0.0, contamGate = "surgery",
-      surgeryNGram = 3, surgeryPad = 2, surgeryMinKeepFrac = 0.5)
+      surgeryNGram = 3, surgeryPad = 2, surgeryMinKeepFrac = 0.5))
     val removed = f2.select(col("doc_id"), col("surgery_removed_tokens"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     release2()
@@ -265,7 +267,7 @@ class CurateAppSpec extends AnyFunSuite {
 
     val sem = DedupWidths.default.copy(method = "semantic")
     def stages(w: DedupWidths) =
-      CurateApp.tagged(spark, in, widths = w)
+      CurateApp.tagged(docsOf(in), Curation.default.copy(widths = w))
         .select(col("doc_id"), col("stage")).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(stages(sem) == Map(1L -> "kept", 2L -> "near_dup",
@@ -279,7 +281,7 @@ class CurateAppSpec extends AnyFunSuite {
 
     // semantic over a text-only corpus fails loudly, not no-op dedup
     intercept[IllegalArgumentException] {
-      CurateApp.tagged(spark, sfDir, widths = sem).collect()
+      CurateApp.tagged(docsOf(sfDir), Curation.default.copy(widths = sem)).collect()
     }
   }
 

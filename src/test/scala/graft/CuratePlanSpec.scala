@@ -50,8 +50,9 @@ class CuratePlanSpec extends AnyFunSuite {
 
   goldens.toSeq.sortBy(_.toString).foreach { case ((q, c), want) =>
     test(s"curation DAG fingerprint: qualityGate=$q contamGate=$c") {
-      val got = PlanFingerprint.of(CurateApp.tagged(spark, SparkTestSession.sfDir,
-        qualityGate = q, contamGate = c))
+      val got = PlanFingerprint.of(CurateApp.tagged(
+        graft.sources.Catalog.documents(spark, SparkTestSession.sfDir),
+        Curation.default.copy(qualityGate = q, contamGate = c)))
       assert(got == want,
         s"\ncuration DAG ($q, $c) changed:\n  golden: $want\n  got:    $got\n" +
           "If intentional, regenerate via tools/devtools/PrintCuratePlans.scala.")

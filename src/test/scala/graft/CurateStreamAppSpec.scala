@@ -236,6 +236,22 @@ class CurateStreamAppSpec extends AnyFunSuite {
       .contains(40L), "maxBucket=0 should disable the corpus image lookup")
   }
 
+  test("a misspelled screen selector fails a text-only batch too") {
+    val root = Files.createTempDirectory("curatestream_badsel").toFile.getAbsolutePath
+    val stateDir = s"$root/state"; val outDir = s"$root/out"
+    new java.io.File(stateDir).mkdirs()
+    for (conf <- Seq("""curation { imageScreen = "phsh" }""",
+        """curation { audioScreen = "fingerprnt" }""",
+        """curation { contamScreen = "fuzy" }""")) {
+      val e = intercept[IllegalArgumentException] {
+        CurateStreamApp.processBatch(spark, docs(1L -> baseText),
+          stateDir, outDir, GraftConfig.parse(conf), batchId = 0L)
+      }
+      assert(e.getMessage.contains("must be off|"), e.getMessage)
+    }
+    assert(!new java.io.File(s"$outDir/curated").exists(), "a rejected conf wrote output")
+  }
+
   test("refreshState retrains the LM from the drifted corpus: verdicts change, replay stays a no-op") {
     val root = Files.createTempDirectory("curatestream_refresh").toFile.getAbsolutePath
     val stateDir = s"$root/state"; val outDir = s"$root/out"

@@ -28,13 +28,13 @@ class DedupWidthsSpec extends AnyFunSuite {
       |""".stripMargin
 
   test("fromConfig: the curation.* width keys parse; missing keys are fixture widths") {
-    val w = DedupWidths.fromConfig(GraftConfig.parse(confText))
+    val w = Curation.fromConfig(GraftConfig.parse(confText)).widths
     assert(w == DedupWidths("minhash", 128, 32, 64, 10, 4))
-    assert(DedupWidths.fromConfig(GraftConfig.empty) == DedupWidths.default)
+    assert(Curation.fromConfig(GraftConfig.empty).widths == DedupWidths.default)
     assert(DedupWidths.default ==
       DedupWidths("minhash", Dedup.NumPerms, Dedup.NumBands, Dedup.SimHashBits, 12, 3))
     intercept[IllegalArgumentException] {
-      DedupWidths.fromConfig(GraftConfig.parse(
+      Curation.fromConfig(GraftConfig.parse(
         "curation { nearDupMethod = \"sketchy\" }"))
     }
   }
@@ -59,7 +59,8 @@ class DedupWidthsSpec extends AnyFunSuite {
 
   test("CurateApp plumbs widths: the near_dup stage reacts to the override") {
     def nearDups(w: DedupWidths) =
-      CurateApp.tagged(spark, sfDir, widths = w)
+      CurateApp.tagged(graft.sources.Catalog.documents(spark, sfDir),
+          Curation.default.copy(widths = w))
         .filter(col("stage") === "near_dup")
         .select("doc_id").collect().map(_.getLong(0)).toSet
     val fixture = nearDups(DedupWidths.default)
@@ -70,7 +71,8 @@ class DedupWidthsSpec extends AnyFunSuite {
     // pipeline green (the attrition stages still partition the corpus)
     for (w <- Seq(DedupWidths.default.copy(numPerms = 128, numBands = 32),
         DedupWidths.default.copy(method = "simhash", simhashBits = 64))) {
-      val frame = CurateApp.tagged(spark, sfDir, widths = w)
+      val frame = CurateApp.tagged(graft.sources.Catalog.documents(spark, sfDir),
+        Curation.default.copy(widths = w))
       assert(frame.count() ==
         graft.sources.Catalog.documents(spark, sfDir).count())
       assert(frame.filter(col("stage") === "kept").count() > 0)
@@ -88,7 +90,8 @@ class DedupWidthsSpec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")).cast("long"))
     val conf = GraftConfig.parse(
       "curation { minhash.numPerms = \"128\"\nminhash.numBands = \"32\" }")
-    CurateStreamApp.processBatch(spark, batch, stateDir, outDir, conf)
+    CurateStreamApp.processBatch(spark, batch, stateDir, outDir, conf, batchId = 0L)
+    CurateStreamApp.foldDeltas(spark, stateDir) // the delta's bands into corpus_state
     val bands = spark.read.parquet(s"$stateDir/corpus_state/bands")
     assert(bands.select("band").distinct().count() == 32)
     assert(bands.agg(max(col("band"))).head().getInt(0) == 31)

@@ -84,7 +84,7 @@ class PinSpec extends AnyFunSuite {
       .map { case (id, t) => (id, t, t.length.toLong, "en", "test") }
       .toDF("doc_id", "text", "n_chars", "lang", "source")
     val before = persistedIds
-    CurateStreamApp.processBatch(spark, batch, s"$root/state", s"$root/out")
+    CurateStreamApp.processBatch(spark, batch, s"$root/state", s"$root/out", batchId = 0L)
     assert(spark.read.parquet(s"$root/out/curated").count() > 0)
     val left = persistedIds -- before
     assert(left.isEmpty, s"RDDs persisted by the batch are still persisted: $left")
@@ -94,13 +94,14 @@ class PinSpec extends AnyFunSuite {
     val sfDir = SparkTestSession.sfDir
     def reportOf(df: DataFrame) = CurateApp.report(df)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val (plain, releasePlain) = CurateApp.taggedCached(spark, sfDir)
+    val docs = graft.sources.Catalog.documents(spark, sfDir)
+    val (plain, releasePlain) = CurateApp.taggedCached(docs)
     val expected = try reportOf(plain) finally releasePlain()
 
     val dir = Files.createTempDirectory("graft_pin_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
-      val (frame, release) = CurateApp.taggedCached(spark, sfDir)
+      val (frame, release) = CurateApp.taggedCached(docs)
       try {
         assert(reportOf(frame) == expected)
         val stages = backingRdds(frame).distinctBy(_.id)

@@ -26,9 +26,9 @@ object GenC5xGolden {
       Seq("doc_id"))
     // the stage column encodes first-rejecting-stage, so "not rejected by
     // stages 1-3" IS the s3 slice the candidate generator ran on
-    val (frame, release) = graft.CurateApp.taggedCachedOn(spark, corpus,
-      widths = graft.DedupWidths.default.copy(
-        method = "semantic", semanticTau = 0.35))
+    val (frame, release) = graft.CurateApp.taggedCached(corpus,
+      graft.Curation.default.copy(widths = graft.DedupWidths.default.copy(
+        method = "semantic", semanticTau = 0.35)))
     val s3 = corpus.join(
         frame.filter(!col("stage").isin("benchmark", "quality", "exact_dup"))
           .select(col("doc_id")),

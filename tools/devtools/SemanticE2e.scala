@@ -32,8 +32,8 @@ object SemanticE2e {
     val nDocs = spark.read.parquet(s"$work/in/documents.parquet").count()
     val t0 = System.nanoTime()
     val report = graft.CurateApp.run(spark, s"$work/in", s"$work/out",
-        widths = graft.DedupWidths.default.copy(
-          method = "semantic", semanticTau = tau))
+        graft.Curation.default.copy(widths = graft.DedupWidths.default.copy(
+          method = "semantic", semanticTau = tau)))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val sec = (System.nanoTime() - t0) / 1e9
     val json =
