@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,18 +74,23 @@ import graft.streaming.StreamingJobs
   *
   * Delivery contract: foreachBatch is at-least-once, so every batch's
   * state advance commits as one immutable DELTA directory
-  * (`corpus_deltas/batch=<id>`, staged then atomically renamed) whose
-  * existence is the applied marker — a replay is detected and skipped,
-  * and the per-batch-id output directory is overwritten, never appended,
-  * so a replayed write replaces itself. Every `curation.foldEvery`
-  * batches the delta log folds into the compacted BASE tables under
-  * `corpus_state` in a single [[StateSwap.swapAll]] (fingerprints, band
-  * index, bucket sizes advance together; the fold-through marker rides
-  * inside the fp table), and the folded deltas are reaped. Per-batch
-  * write cost is therefore O(batch), not O(corpus): at 100 TB a
-  * full-state rewrite per 10-second trigger would be the pipeline's
-  * entire IO budget, while the delta log amortizes the corpus rewrite
-  * across the fold interval (or hands it to an out-of-band compactor).
+  * (`corpus_deltas/batch=<id>`, committed by [[StateSwap.swapAll]] like
+  * every other state root — see [[StateSwap]] for the one protocol and
+  * its recovery) whose existence is the applied marker — a replay is
+  * detected and skipped, and the per-batch-id output directory is
+  * overwritten, never appended, so a replayed write replaces itself. A
+  * commit killed before its promotion leaves no `batch=<id>`, so the
+  * replay runs again and its own commit recovers the debris first; one
+  * killed after it is skipped, and the next fold reaps its side entries.
+  * Every `curation.foldEvery` batches the delta log folds into the
+  * compacted BASE tables under `corpus_state` in a single
+  * [[StateSwap.swapAll]] (fingerprints, band index, bucket sizes advance
+  * together; the fold-through marker rides inside the fp table), and the
+  * folded deltas are reaped. Per-batch write cost is therefore O(batch),
+  * not O(corpus): at 100 TB a full-state rewrite per 10-second trigger
+  * would be the pipeline's entire IO budget, while the delta log
+  * amortizes the corpus rewrite across the fold interval (or hands it to
+  * an out-of-band compactor).
   *
   * Scale shape: state lookups are semi/anti joins on content-hash keys
   * (broadcast-able while the batch is small, hash-join on the band key
@@ -117,14 +123,9 @@ object CurateStreamApp {
     * vocab), or None if [[bootstrapLm]] has never run for this state dir.
     */
   private[graft] def readLmState(spark: SparkSession, stateDir: String)
-      : Option[(DataFrame, DataFrame, DataFrame)] = {
-    val root = s"$stateDir/lm_state"
-    if (!StateSwap.exists(spark, root)) None
-    else Some((
-      StateSwap.readTableOrElse(spark, root, "lm_bigrams", sys.error("lm_bigrams missing")),
-      StateSwap.readTableOrElse(spark, root, "lm_heads", sys.error("lm_heads missing")),
-      StateSwap.readTableOrElse(spark, root, "lm_meta", sys.error("lm_meta missing"))))
-  }
+      : Option[(DataFrame, DataFrame, DataFrame)] =
+    StateSwap.readGroup(spark, s"$stateDir/lm_state", "lm_bigrams", "lm_heads", "lm_meta")
+      .map { case Seq(bigrams, heads, meta) => (bigrams, heads, meta) }
 
   /** Index the benchmark/eval corpus for the streaming contamination
     * screen and persist it under `<stateDir>/bench_state` (its own swap
@@ -191,14 +192,10 @@ object CurateStreamApp {
     * if [[bootstrapBench]] has never run for this state dir.
     */
   private[graft] def readBenchState(spark: SparkSession, stateDir: String)
-      : Option[(DataFrame, DataFrame, DataFrame)] = {
-    val root = s"$stateDir/bench_state"
-    if (!StateSwap.exists(spark, root)) None
-    else Some((
-      StateSwap.readTableOrElse(spark, root, "bench_shingles", sys.error("bench_shingles missing")),
-      StateSwap.readTableOrElse(spark, root, "bench_bands", sys.error("bench_bands missing")),
-      StateSwap.readTableOrElse(spark, root, "bench_nsh", sys.error("bench_nsh missing"))))
-  }
+      : Option[(DataFrame, DataFrame, DataFrame)] =
+    StateSwap.readGroup(spark, s"$stateDir/bench_state",
+        "bench_shingles", "bench_bands", "bench_nsh")
+      .map { case Seq(shingles, bands, nsh) => (shingles, bands, nsh) }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
@@ -240,13 +237,21 @@ object CurateStreamApp {
       sizes: DataFrame, imgBands: DataFrame, audioFps: DataFrame,
       appliedThrough: Long, liveDeltas: Seq[Long])
 
-  private def deltaDirs(spark: SparkSession, deltaRoot: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(deltaRoot)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-      .filter(n => n.startsWith("batch=") && !n.endsWith(".staging"))
-      .map(_.stripPrefix("batch=").toLong).sorted
+  /** A delta log entry: the committed `batch=<id>` directory, or one of
+    * [[StateSwap]]'s side entries (`.staging`, `.swap`, `.old`) that a
+    * commit killed mid-swap leaves beside it.
+    */
+  private val DeltaEntry = """batch=(\d+)(\..*)?""".r
+
+  /** The delta log's entries as (path, batch id, committed?). */
+  private def deltaEntries(spark: SparkSession, deltaRoot: String): Seq[(Path, Long, Boolean)] = {
+    val fs = StateSwap.fileSystem(spark, deltaRoot)
+    val root = new Path(deltaRoot)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.map(_.getPath).flatMap(p => p.getName match {
+      case DeltaEntry(id, side) => Some((p, id.toLong, side == null))
+      case _ => None
+    })
   }
 
   private[graft] def readCorpusState(spark: SparkSession, stateDir: String): CorpusState = {
@@ -275,20 +280,19 @@ object CurateStreamApp {
     def emptyAudioFps = spark.range(0).select(
       col("id").as("media_id"), col("id").as("fp"))
     val baseAud = StateSwap.readTableOrElse(spark, stateRoot, "audio_fps", emptyAudioFps)
-    val live = deltaDirs(spark, deltaRoot).filter(_ > appliedThrough)
+    val live = deltaEntries(spark, deltaRoot)
+      .collect { case (_, id, true) if id > appliedThrough => id }.sorted
     if (live.isEmpty)
       CorpusState(baseFps, baseBands, baseSizes, baseImg, baseAud, appliedThrough, live)
     else {
-      val fsRoot = new org.apache.hadoop.fs.Path(deltaRoot)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fsRoot = StateSwap.fileSystem(spark, deltaRoot)
       val dFps = live.map(b => spark.read.parquet(s"$deltaRoot/batch=$b/fps"))
         .reduce(_ unionByName _)
       val dBands = live.map(b => spark.read.parquet(s"$deltaRoot/batch=$b/bands"))
         .reduce(_ unionByName _)
       // media tables are only present in deltas whose batch admitted media
       def foldMedia(base: DataFrame, table: String) = live
-        .filter(b => fsRoot.exists(
-          new org.apache.hadoop.fs.Path(s"$deltaRoot/batch=$b/$table")))
+        .filter(b => fsRoot.exists(new Path(s"$deltaRoot/batch=$b/$table")))
         .map(b => spark.read.parquet(s"$deltaRoot/batch=$b/$table"))
         .foldLeft(base)(_ unionByName _)
       val sizes = baseSizes
@@ -302,39 +306,12 @@ object CurateStreamApp {
     }
   }
 
-  /** Commit one batch's state advance as an immutable delta directory —
-    * stage, then ONE atomic rename. O(batch) bytes written, independent
-    * of corpus size; the existence of `batch=<id>` IS the applied marker.
-    */
-  private def writeDelta(spark: SparkSession, deltaRoot: String, batchId: Long,
-                         fps: DataFrame, bands: DataFrame,
-                         imgBands: Option[DataFrame] = None,
-                         audioFps: Option[DataFrame] = None): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val target = new org.apache.hadoop.fs.Path(s"$deltaRoot/batch=$batchId")
-    val fs = target.getFileSystem(conf)
-    val staging = new org.apache.hadoop.fs.Path(s"$deltaRoot/batch=$batchId.staging")
-    fs.delete(staging, true) // marker-less staging debris from a crash
-    // deltas are batch-sized: one file per table keeps the pre-fold file
-    // count at 2-3 per batch (img_bands only when the batch admitted images)
-    fps.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(staging, "fps").toString)
-    bands.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(staging, "bands").toString)
-    imgBands.foreach(_.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(staging, "img_bands").toString))
-    audioFps.foreach(_.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(staging, "audio_fps").toString))
-    fs.mkdirs(target.getParent)
-    if (!fs.rename(staging, target))
-      sys.error(s"CurateStreamApp: delta commit rename $staging -> $target failed")
-  }
-
   /** Compact the delta log into the base tables: fold every live delta
     * into `corpus_state` (one [[StateSwap.swapAll]], marker = highest
-    * folded batch id), then delete the folded delta directories. A crash
-    * after the swap leaves deltas at or below the marker on disk — they
-    * are ignored by [[readCorpusState]] and reaped here next time.
+    * folded batch id), then delete the folded delta directories and any
+    * side entries a killed commit left beside them. A crash after the
+    * swap leaves deltas at or below the marker on disk — they are
+    * ignored by [[readCorpusState]] and reaped here next time.
     * Amortizes the O(corpus) rewrite across `curation.foldEvery` batches;
     * at production scale this fold can also run out-of-band.
     */
@@ -351,10 +328,10 @@ object CurateStreamApp {
         "bucket_sizes" -> state.sizes, "img_bands" -> state.imgBands,
         "audio_fps" -> state.audioFps))
     }
-    val p = new org.apache.hadoop.fs.Path(deltaRoot)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    deltaDirs(spark, deltaRoot).filter(_ <= upTo).foreach(b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$deltaRoot/batch=$b"), true))
+    val fs = StateSwap.fileSystem(spark, deltaRoot)
+    deltaEntries(spark, deltaRoot).foreach { case (p, id, _) =>
+      if (id <= upTo) fs.delete(p, true)
+    }
   }
 
   /** One micro-batch: screen, write survivors to
@@ -694,14 +671,17 @@ object CurateStreamApp {
       .filter(col("fp") =!= lit(-1L)) // index stays sentinel-free (m9 parity)
       .select(col("media_id"), col("fp")).distinct()
       .join(survivors.select(col("doc_id").as("media_id")), Seq("media_id"), "left_semi"))
-    // O(batch) commit: one immutable delta directory, one atomic
-    // rename — per-batch cost is independent of corpus size, unlike a
-    // full-state swap, which at 100 TB would rewrite the entire index
-    // every 10-second trigger. The base rewrite happens once per
-    // `foldEvery` batches instead.
-    writeDelta(spark, s"$stateDir/corpus_deltas", batchId,
-      survivors.select(col("fp"), col("doc_id")), survivorBands,
-      survivorImgBands, survivorAudioFps)
+    // O(batch) commit: one immutable delta directory, one atomic swap —
+    // per-batch cost is independent of corpus size, unlike a full-state
+    // swap, which at 100 TB would rewrite the entire index every
+    // 10-second trigger. The base rewrite happens once per `foldEvery`
+    // batches instead. Deltas are batch-sized: one file per table keeps
+    // the pre-fold file count at 2-4 per batch (the media tables only
+    // when the batch admitted media).
+    StateSwap.swapAll(s"$stateDir/corpus_deltas/batch=$batchId",
+      (Seq("fps" -> survivors.select(col("fp"), col("doc_id")), "bands" -> survivorBands) ++
+        survivorImgBands.map("img_bands" -> _) ++ survivorAudioFps.map("audio_fps" -> _))
+        .map { case (name, df) => name -> df.coalesce(1) })
     if (state.liveDeltas.size + 1 >= foldEvery) foldDeltas(spark, stateDir)
   }
 }

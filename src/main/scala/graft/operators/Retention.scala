@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Retention purge (SURVEY T4, `HogPrepare.scala:52-141`): the reference
@@ -9,6 +9,13 @@ import org.apache.spark.sql.functions._
   * retention is a partition-level operation on a date-partitioned table —
   * old partitions drop without touching surviving rows (the
   * `.par`-scan/delete machinery disappears entirely).
+  *
+  * [[purgeOlderThan]] and [[deleteKeys]] are one partition rewrite
+  * (`rewrite` below) on two staging dirs. It is [[StateSwap]]'s
+  * stage → mark → finish → recover protocol applied to partition files
+  * instead of a whole directory: the filesystem is resolved from the
+  * table path and every rename is StateSwap's checked rename, so a
+  * failed restore fails loudly instead of dropping the survivors.
   */
 object Retention {
 
@@ -20,20 +27,23 @@ object Retention {
     df.withColumn("ds", date_format(col(tsCol), "yyyy-MM-dd"))
       .write.partitionBy("ds").mode("overwrite").parquet(path)
 
-  /** Underscore prefix keeps the staging dirs invisible to parquet
-    * readers of `path` (Spark skips `_`/`.`-prefixed children).
+  /** One kind of partition rewrite: its staging dir (the underscore
+    * prefix keeps it invisible to parquet readers of the table), its
+    * marker file inside that dir, and which `ds` values die given the
+    * marker's first line.
     */
-  private def stagingDir(path: String) = new Path(path, "_purge_staging")
-  private def markerFile(path: String) = new Path(stagingDir(path), "_CUTOFF")
-  private def delStagingDir(path: String) = new Path(path, "_delete_staging")
-  private def delMarkerFile(path: String) = new Path(delStagingDir(path), "_KEYS")
+  private final case class Rewrite(staging: String, marker: String,
+      dies: String => String => Boolean)
+
+  private val Purge = Rewrite("_purge_staging", "_CUTOFF", cutoff => _ < cutoff)
+  private val Erase = Rewrite("_delete_staging", "_KEYS", dsList => dsList.split(",").toSet)
 
   /** Drop partitions older than `cutoffDate` (yyyy-MM-dd), keeping rows
     * matching `keepPredicate` (the reference's "flows with priority-1
     * events survive the purge" exemption, HogPrepare.scala:52-84).
     *
     * Crash-safe sequencing — survivors are DURABLE before any delete:
-    *   1. finish any swap a previous crashed run left behind;
+    *   1. finish any purge a previous crashed run left behind;
     *   2. write survivors to `_purge_staging/` (a real parquet write,
     *      not a cache — at 100 TB "survivors in executor memory" is not
     *      durability), then a `_CUTOFF` marker naming cutoff + run id;
@@ -48,76 +58,104 @@ object Retention {
     * metadata ops — no surviving row is ever rewritten.
     */
   def purgeOlderThan(spark: SparkSession, path: String, cutoffDate: String,
-      keepPredicate: Option[org.apache.spark.sql.Column] = None): Unit = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      keepPredicate: Option[Column] = None): Unit = {
     recoverPendingPurge(spark, path) // a crashed predecessor commits first
-
     val old = spark.read.parquet(path).filter(col("ds") < cutoffDate)
-    val survivors = keepPredicate.map(old.filter).getOrElse(old.limit(0))
-    val staging = stagingDir(path)
-    fs.delete(staging, true)
-    survivors.write.partitionBy("ds").mode("overwrite").parquet(staging.toString)
-
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    writeMarker(fs, path, s"$cutoffDate\n$runId")
-    deleteOldPartitions(fs, path, cutoffDate, runId)
-    restoreStaged(fs, path, runId)
-    fs.delete(staging, true)
+    rewrite(spark, path, Purge, cutoffDate,
+      keepPredicate.map(old.filter).getOrElse(old.limit(0)))
   }
 
   /** Complete a purge whose process died between staging and commit.
     * No-op when nothing is pending. Safe to call any time.
     */
-  def recoverPendingPurge(spark: SparkSession, path: String): Unit = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val staging = stagingDir(path)
+  def recoverPendingPurge(spark: SparkSession, path: String): Unit =
+    recoverPending(spark, path, Purge)
+
+  /** Delete every row whose `keyCol` value appears in `keys` (the GDPR /
+    * right-to-erasure pass), rewriting ONLY partitions that contain at
+    * least one matching row — erasing one user from a 100 TB table costs
+    * the partitions that user touched, not a full rewrite. Same
+    * survivors-durable-before-delete sequencing and crash contract as
+    * [[purgeOlderThan]], on its own staging dir (`_delete_staging`, marker
+    * `_KEYS` naming the affected dates) so the two operations can't
+    * corrupt each other's recovery.
+    */
+  def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
+      keyCol: String): Unit = {
+    recoverPendingDelete(spark, path)
+    val table = spark.read.parquet(path)
+    val k = keys.select(col(keyCol)).distinct()
+    // the affected-partition list is dates — tiny — so the collect is safe
+    val affected = table.join(k, Seq(keyCol), "left_semi")
+      .select(col("ds").cast("string")).distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
+    if (affected.isEmpty) return
+    rewrite(spark, path, Erase, affected.mkString(","), table
+      .filter(col("ds").cast("string").isin(affected: _*))
+      .join(k, Seq(keyCol), "left_anti"))
+  }
+
+  /** Complete a keyed delete whose process died mid-swap; no-op
+    * otherwise. Same partial-marker semantics as [[recoverPendingPurge]].
+    */
+  def recoverPendingDelete(spark: SparkSession, path: String): Unit =
+    recoverPending(spark, path, Erase)
+
+  /** Stage `survivors` of the partitions `op.dies(scope)` selects, mark
+    * the run (`scope` and a run id, closed before any delete), then
+    * [[finish]].
+    */
+  private def rewrite(spark: SparkSession, path: String, op: Rewrite,
+      scope: String, survivors: DataFrame): Unit = {
+    val fs = StateSwap.fileSystem(spark, path)
+    val staging = new Path(path, op.staging)
+    fs.delete(staging, true)
+    survivors.write.partitionBy("ds").mode("overwrite").parquet(staging.toString)
+    val runId = java.util.UUID.randomUUID().toString.take(8)
+    val out = fs.create(new Path(staging, op.marker), true)
+    try out.write(s"$scope\n$runId".getBytes("UTF-8")) finally out.close()
+    finish(fs, path, op, scope, runId)
+  }
+
+  private def recoverPending(spark: SparkSession, path: String, op: Rewrite): Unit = {
+    val fs = StateSwap.fileSystem(spark, path)
+    val staging = new Path(path, op.staging)
     if (!fs.exists(staging)) return
     // a missing OR partially-written marker both mean the crash happened
     // BEFORE any delete ran (the marker is written, and closed, first):
     // dropping the staging dir restores the pre-call state exactly
-    val marker =
-      if (fs.exists(markerFile(path))) readMarker(fs, path).trim.split("\n") else Array[String]()
-    if (marker.length != 2 || marker.exists(_.isEmpty)) {
-      fs.delete(staging, true)
-      return
-    }
-    val Array(cutoffDate, runId) = marker
-    deleteOldPartitions(fs, path, cutoffDate, runId)
-    restoreStaged(fs, path, runId)
-    fs.delete(staging, true)
+    val marker = new Path(staging, op.marker)
+    val lines =
+      if (!fs.exists(marker)) Array[String]()
+      else {
+        val in = fs.open(marker)
+        try new String(in.readAllBytes(), "UTF-8").trim.split("\n") finally in.close()
+      }
+    if (lines.length != 2 || lines.exists(_.isEmpty)) fs.delete(staging, true)
+    else finish(fs, path, op, lines(0), lines(1))
   }
 
-  /** Delete pre-cutoff partition files, sparing files already restored by
-    * run `runId` (so a recovery re-run never eats its own survivors).
-    * Files restored by EARLIER runs are regular data and do get purged.
+  /** Steps 3–5, idempotent under re-run: delete the dying partitions'
+    * files, sparing files already restored by run `runId` (so a recovery
+    * re-run never eats its own survivors; files restored by EARLIER runs
+    * are regular data and do get purged), then rename each staged file
+    * into its partition dir under a `restored-<runId>-` name, then drop
+    * the staging dir.
     */
-  private def deleteOldPartitions(fs: FileSystem, path: String,
-      cutoffDate: String, runId: String): Unit =
-    deleteMatchingPartitions(fs, path, _ < cutoffDate, runId)
-
-  /** Same spare-the-restored semantics, generic over which ds values die. */
-  private def deleteMatchingPartitions(fs: FileSystem, path: String,
-      dsPred: String => Boolean, runId: String): Unit =
+  private def finish(fs: FileSystem, path: String, op: Rewrite,
+      scope: String, runId: String): Unit = {
+    val restored = s"restored-$runId-"
+    val dies = op.dies(scope)
     fs.listStatus(new Path(path))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("ds="))
-      .filter(s => dsPred(s.getPath.getName.stripPrefix("ds=")))
+      .filter(s => dies(s.getPath.getName.stripPrefix("ds=")))
       .foreach { dir =>
-        val files = fs.listStatus(dir.getPath)
-        val (keep, drop) = files.partition(_.getPath.getName.startsWith(s"restored-$runId-"))
+        val (keep, drop) = fs.listStatus(dir.getPath)
+          .partition(_.getPath.getName.startsWith(restored))
         drop.foreach(f => fs.delete(f.getPath, true))
         if (keep.isEmpty) fs.delete(dir.getPath, true)
       }
-
-  /** Rename staged survivor files into their partition dirs under a
-    * `restored-<runId>-` name: rename is a metadata op, and the prefix
-    * is what [[deleteOldPartitions]] keys its idempotence on.
-    */
-  private def restoreStaged(fs: FileSystem, path: String, runId: String): Unit =
-    restoreStagedFrom(fs, path, stagingDir(path), runId)
-
-  private def restoreStagedFrom(fs: FileSystem, path: String,
-      staging: Path, runId: String): Unit = {
-    if (!fs.exists(staging)) return
+    val staging = new Path(path, op.staging)
     fs.listStatus(staging)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("ds="))
       .foreach { dsDir =>
@@ -126,85 +164,10 @@ object Retention {
         fs.listStatus(dsDir.getPath)
           .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
           .foreach { f =>
-            val dst = new Path(target, s"restored-$runId-${f.getPath.getName}")
-            if (!fs.exists(dst)) fs.rename(f.getPath, dst)
+            val dst = new Path(target, restored + f.getPath.getName)
+            if (!fs.exists(dst)) StateSwap.renameOrDie(fs, f.getPath, dst)
           }
       }
-  }
-
-  /** Delete every row whose `keyCol` value appears in `keys` (the GDPR /
-    * right-to-erasure pass), rewriting ONLY partitions that contain at
-    * least one matching row — erasing one user from a 100 TB table costs
-    * the partitions that user touched, not a full rewrite. Same
-    * survivors-durable-before-delete sequencing and crash contract as
-    * [[purgeOlderThan]], on its own staging dir so the two operations
-    * can't corrupt each other's recovery.
-    */
-  def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
-      keyCol: String): Unit = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    recoverPendingDelete(spark, path)
-    val table = spark.read.parquet(path)
-    val k = keys.select(col(keyCol)).distinct()
-    // the affected-partition list is dates — tiny — so the collect is safe
-    val affected = table.join(k, Seq(keyCol), "left_semi")
-      .select(col("ds").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (affected.isEmpty) return
-    val survivors = table
-      .filter(col("ds").cast("string").isin(affected.toSeq: _*))
-      .join(k, Seq(keyCol), "left_anti")
-    val staging = delStagingDir(path)
     fs.delete(staging, true)
-    survivors.write.partitionBy("ds").mode("overwrite").parquet(staging.toString)
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    writeMarkerTo(fs, delMarkerFile(path), affected.toSeq.sorted.mkString(",") + "\n" + runId)
-    deleteMatchingPartitions(fs, path, affected.contains, runId)
-    restoreStagedFrom(fs, path, staging, runId)
-    fs.delete(staging, true)
-  }
-
-  /** Complete a keyed delete whose process died mid-swap; no-op
-    * otherwise. Same partial-marker semantics as [[recoverPendingPurge]].
-    */
-  def recoverPendingDelete(spark: SparkSession, path: String): Unit = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val staging = delStagingDir(path)
-    if (!fs.exists(staging)) return
-    val marker =
-      if (fs.exists(delMarkerFile(path)))
-        readMarkerFrom(fs, delMarkerFile(path)).trim.split("\n")
-      else Array[String]()
-    if (marker.length != 2 || marker.exists(_.isEmpty)) {
-      fs.delete(staging, true)
-      return
-    }
-    val Array(dsList, runId) = marker
-    val affected = dsList.split(",").toSet
-    deleteMatchingPartitions(fs, path, affected.contains, runId)
-    restoreStagedFrom(fs, path, staging, runId)
-    fs.delete(staging, true)
-  }
-
-  private def writeMarker(fs: FileSystem, path: String, content: String): Unit =
-    writeMarkerTo(fs, markerFile(path), content)
-
-  private def writeMarkerTo(fs: FileSystem, marker: Path, content: String): Unit = {
-    val out = fs.create(marker, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readMarker(fs: FileSystem, path: String): String =
-    readMarkerFrom(fs, markerFile(path))
-
-  private def readMarkerFrom(fs: FileSystem, marker: Path): String = {
-    val in = fs.open(marker)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](4096)
-      var n = in.read(tmp)
-      while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-      buf.toString("UTF-8")
-    } finally in.close()
   }
 }

@@ -1,20 +1,19 @@
 package graft.operators
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Crash-safe replace-a-state-directory primitive shared by the batch and
-  * continuous entry points (reference semantics: the HBase profile tables
-  * are replaced wholesale per run — `HogzillaBatch`/`HogAuth` overwrite
-  * learned state each cycle).
+/** The one crash-safe commit path: the only code that stages, marks,
+  * renames or recovers a state directory (reference semantics: the HBase
+  * profile tables are replaced wholesale per run — `HogzillaBatch`/
+  * `HogAuth` overwrite learned state each cycle).
   *
-  * Uses the Hadoop FileSystem API throughout, so state can live on
-  * HDFS/S3A as well as local disk (the `spark-submit` production story),
-  * and — unlike a bare `java.io.File.renameTo` chain — every rename
-  * checks its return value and fails loudly, and a marker file makes a
-  * crash between the two renames recoverable instead of a silent
-  * cold-start.
+  * Uses the Hadoop FileSystem API throughout, resolved from the state
+  * path, so state can live on HDFS/S3A as well as local disk (the
+  * `spark-submit` production story), and — unlike a bare
+  * `java.io.File.renameTo` chain — every rename checks its return value
+  * and fails loudly, and a marker file makes a crash between the two
+  * renames recoverable instead of a silent cold-start.
   *
   * Protocol (all paths derived from `target`):
   *  1. write the new state to `<target>.staging`
@@ -26,47 +25,51 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * [[recover]] completes a swap that died at any point after step 2: the
   * marker says staging is complete, so the staged state simply finishes
   * its promotion. A staging dir with NO marker is an incomplete write and
-  * is discarded. Readers call [[readOrElse]], which recovers first.
+  * is discarded. A commit runs steps 3-5 by calling [[recover]] too, so
+  * the recovery code is the code every swap runs. Every read recovers
+  * first ([[readOrElse]], [[readTableOrElse]], [[readGroup]]).
+  *
+  * Callers:
+  *  - the nine GraftApp profile tables ([[swap]], one per HIST table);
+  *  - the auth (`auth_state`) and curation (`corpus_state`, `lm_state`,
+  *    `bench_state`) multi-table roots ([[swapAll]]);
+  *  - the curation delta log, one `corpus_deltas/batch=<id>` per applied
+  *    micro-batch ([[swapStaged]]);
+  *  - IVF index rebalance ([[swapStaged]]) and [[Compaction]] ([[swap]]);
+  *  - cdc upsert (`StreamingJobs.cdcUpsertMicroBatches`, [[swap]]);
+  *  - [[Retention]], whose partition rewrites keep their own markers but
+  *    resolve their filesystem ([[fileSystem]]) and rename
+  *    ([[renameOrDie]]) here.
   */
 object StateSwap {
 
-  private def fsFor(p: Path, conf: Configuration): FileSystem = p.getFileSystem(conf)
+  /** The filesystem that holds `path` (not the default filesystem). */
+  private[graft] def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def stagingOf(t: Path) = new Path(t.getParent, t.getName + ".staging")
   private def oldOf(t: Path)     = new Path(t.getParent, t.getName + ".old")
   private def markerOf(t: Path)  = new Path(t.getParent, t.getName + ".swap")
 
-  private def renameOrDie(fs: FileSystem, src: Path, dst: Path): Unit =
+  private[operators] def renameOrDie(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       sys.error(s"StateSwap: rename $src -> $dst failed (state left recoverable; " +
-        "rerun recover/readOrElse)")
+        "rerun the operation)")
 
   /** Replace `target` with `df` via stage-then-swap. Loud on any failed
     * rename; a crash at any point leaves the state recoverable by
     * [[recover]] (old or new is always observable, never partial).
     */
-  def swap(df: DataFrame, target: String): Unit = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val t = new Path(target)
-    val fs = fsFor(t, conf)
-    recover(df.sparkSession, target) // finish any prior in-flight swap first
-    val staging = stagingOf(t)
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    fs.create(markerOf(t), true).close()
-    if (fs.exists(t)) renameOrDie(fs, t, oldOf(t))
-    renameOrDie(fs, staging, t)
-    fs.delete(oldOf(t), true)
-    fs.delete(markerOf(t), false)
-  }
+  def swap(df: DataFrame, target: String): Unit =
+    swapStaged(df.sparkSession, target)(df.write.mode(SaveMode.Overwrite).parquet(_))
 
   /** Complete a swap that died mid-flight; discard incomplete staging
     * writes. No-op when the state is clean. Safe to call unconditionally
     * before any read.
     */
   def recover(spark: SparkSession, target: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = fileSystem(spark, target)
     val t = new Path(target)
-    val fs = fsFor(t, conf)
     val (staging, old, marker) = (stagingOf(t), oldOf(t), markerOf(t))
     if (fs.exists(marker)) {
       // marker ⇒ staging finished writing; promote it if that didn't happen
@@ -106,29 +109,24 @@ object StateSwap {
     }
   }
 
-  /** Generalized staged swap: the caller populates the staging directory
-    * however it likes (Spark writes, raw file copies, a mix), then the
-    * whole root promotes under the same marker protocol as [[swapAll]].
-    * This is the primitive for maintenance jobs that REWRITE part of a
-    * state root and CARRY OVER the rest byte-for-byte (e.g.
-    * [[SimilaritySearch.rebalanceIvfIndex]] copying unchanged IVF cell
-    * directories instead of re-encoding them): the staged content may
-    * read or copy from the CURRENT root, which is untouched until
-    * `stage` returns.
+  /** Generalized staged swap, the one protocol every other entry point
+    * runs: the caller populates the staging directory however it likes
+    * (Spark writes, raw file copies, a mix), then `root` promotes under
+    * the marker protocol above. This is the primitive for maintenance
+    * jobs that REWRITE part of a state root and CARRY OVER the rest
+    * byte-for-byte (e.g. [[SimilaritySearch.rebalanceIvfIndex]] copying
+    * unchanged IVF cell directories instead of re-encoding them): the
+    * staged content may read or copy from the CURRENT root, which is
+    * untouched until `stage` returns.
     */
   def swapStaged(spark: SparkSession, root: String)(stage: String => Unit): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = fileSystem(spark, root)
     val t = new Path(root)
-    val fs = fsFor(t, conf)
-    recover(spark, root) // finish any prior in-flight swap first
-    val staging = stagingOf(t)
-    fs.delete(staging, true) // drop any marker-less (incomplete) staging debris
-    stage(staging.toString)
+    recover(spark, root) // finish any prior in-flight swap, drop marker-less staging
+    stage(stagingOf(t).toString)
+    if (!fs.exists(stagingOf(t))) sys.error(s"StateSwap: nothing staged for $root")
     fs.create(markerOf(t), true).close()
-    if (fs.exists(t)) renameOrDie(fs, t, oldOf(t))
-    renameOrDie(fs, staging, t)
-    fs.delete(oldOf(t), true)
-    fs.delete(markerOf(t), false)
+    recover(spark, root) // steps 3-5: the marker makes recovery promote the staging dir
   }
 
   /** Recover-then-read for one table of a [[swapAll]] group: recovery
@@ -136,27 +134,29 @@ object StateSwap {
     * read if the group exists.
     */
   def readTableOrElse(spark: SparkSession, root: String, name: String,
-                      default: => DataFrame): DataFrame = {
-    recover(spark, root)
-    val p = new Path(root, name)
-    if (fsFor(p, spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.parquet(p.toString)
-    else default
-  }
+                      default: => DataFrame): DataFrame =
+    readAfterRecover(spark, root, new Path(root, name).toString, default)
 
   /** Recover-then-read: the one way state tables should be loaded. */
   def readOrElse(spark: SparkSession, target: String,
-                 default: => DataFrame): DataFrame = {
-    recover(spark, target)
-    val t = new Path(target)
-    if (fsFor(t, spark.sparkContext.hadoopConfiguration).exists(t))
-      spark.read.parquet(target)
+                 default: => DataFrame): DataFrame =
+    readAfterRecover(spark, target, target, default)
+
+  private def readAfterRecover(spark: SparkSession, root: String, table: String,
+                               default: => DataFrame): DataFrame = {
+    recover(spark, root)
+    if (fileSystem(spark, table).exists(new Path(table))) spark.read.parquet(table)
     else default
   }
 
-  /** Hadoop-FS existence check (works on HDFS/S3A, not just local). */
-  def exists(spark: SparkSession, target: String): Boolean = {
-    val t = new Path(target)
-    fsFor(t, spark.sparkContext.hadoopConfiguration).exists(t)
+  /** Recover-then-read every named table of a [[swapAll]] group, or None
+    * when the group has never been written. Existence is checked AFTER
+    * recovery, so a crash between the two renames (no `root`, only
+    * `root.old` + `root.staging` + marker) reads the new generation.
+    */
+  def readGroup(spark: SparkSession, root: String, names: String*): Option[Seq[DataFrame]] = {
+    recover(spark, root)
+    if (!fileSystem(spark, root).exists(new Path(root))) None
+    else Some(names.map(n => spark.read.parquet(new Path(root, n).toString)))
   }
 }

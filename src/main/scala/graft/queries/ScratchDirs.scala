@@ -7,11 +7,12 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.util.control.NonFatal
 
 /** Temp directories for queries whose result frame reads data the query
-  * wrote (an index, a state table). The frame reads its directory lazily,
-  * so the directory cannot go when the query returns; every directory
-  * made here is deleted, recursively, when the JVM exits.
+  * wrote (an index, a state table), and for the specs' scratch state. The
+  * frame reads its directory lazily, so the directory cannot go when the
+  * query returns; every directory made here is deleted, recursively, when
+  * the JVM exits.
   */
-private[queries] object ScratchDirs {
+private[graft] object ScratchDirs {
 
   private val made = new ConcurrentLinkedQueue[Path]()
 

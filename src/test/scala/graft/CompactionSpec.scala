@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Compaction
+import graft.queries.ScratchDirs
 
 /** Compaction rewrites a many-small-files table into few sized files,
   * atomically, without changing its contents.
@@ -12,7 +13,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("compact merges small files, preserves rows, leaves no staging debris") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact_").toString + "/t"
+    val dir = ScratchDirs.create("compact_") + "/t"
     (1L to 10000L).map(i => (i, s"row $i")).toDF("id", "v")
       .repartition(64).write.parquet(dir)
     val before = spark.read.parquet(dir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextFunctions.exactFingerprint
+import graft.queries.ScratchDirs
 
 /** End-to-end checks of the corpus-curation entry point on the sf0.001
   * fixture: the report must partition the corpus exactly, the curated
@@ -17,7 +18,7 @@ class CurateAppSpec extends AnyFunSuite {
   private def docsOf(dir: String) = graft.sources.Catalog.documents(spark, dir)
 
   private lazy val outDir =
-    java.nio.file.Files.createTempDirectory("curate_").toString
+    ScratchDirs.create("curate_")
 
   private lazy val report = CurateApp.run(spark, sfDir, outDir)
     .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -43,10 +44,10 @@ class CurateAppSpec extends AnyFunSuite {
 
   test("curation is idempotent: a second pass keeps every curated doc") {
     // stage the curated output as a documents table for a re-run
-    val in2 = java.nio.file.Files.createTempDirectory("curate2_in_").toString
+    val in2 = ScratchDirs.create("curate2_in_")
     spark.read.parquet(s"$outDir/curated")
       .write.mode("overwrite").parquet(s"$in2/documents.parquet")
-    val out2 = java.nio.file.Files.createTempDirectory("curate2_out_").toString
+    val out2 = ScratchDirs.create("curate2_out_")
     val report2 = CurateApp.run(spark, in2, out2)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(report2 == Map("kept" -> report("kept")), report2.toString)
@@ -55,10 +56,10 @@ class CurateAppSpec extends AnyFunSuite {
   test("no cached block outlives a CurateApp run") {
     report // force the first run so outDir/curated exists
     val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-    val in3 = java.nio.file.Files.createTempDirectory("curate3_in_").toString
+    val in3 = ScratchDirs.create("curate3_in_")
     spark.read.parquet(s"$outDir/curated")
       .write.mode("overwrite").parquet(s"$in3/documents.parquet")
-    val out3 = java.nio.file.Files.createTempDirectory("curate3_out_").toString
+    val out3 = ScratchDirs.create("curate3_out_")
     CurateApp.run(spark, in3, out3).collect()
     // Two different lifetimes, asserted separately so the test never
     // depends on GC timing for the part run() controls synchronously:
@@ -253,7 +254,7 @@ class CurateAppSpec extends AnyFunSuite {
       "noon almost every single market day this season ") * 3
     val tD = ("night trains carry timber north across the frozen plateau " +
       "while dispatchers trade weather notes by radio ") * 2
-    val in = java.nio.file.Files.createTempDirectory("curate_sem_").toString
+    val in = ScratchDirs.create("curate_sem_")
     Seq(
         (1L, tA, unit(Seq(1, 0.01, 0, 0, 0, 0, 0, 0))),
         (2L, tB, unit(Seq(1, 0, 0, 0, 0, 0, 0, 0))),

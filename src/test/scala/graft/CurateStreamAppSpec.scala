@@ -1,9 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.queries.ScratchDirs
 
 /** The continuous-curation entry point: each micro-batch is screened
   * against the evolving corpus state (quality → exact-dup → LSH
@@ -27,7 +29,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     "carrying spices and silk toward distant harbors under a bright morning sky ") * 3
 
   test("stream curation: quality, exact-dup, and near-dup gates against evolving state; replay is a no-op") {
-    val root = Files.createTempDirectory("curatestream").toFile.getAbsolutePath
+    val root = ScratchDirs.create("curatestream")
     val stateDir = s"$root/state"; val outDir = s"$root/out"
     new java.io.File(stateDir).mkdirs()
 
@@ -104,7 +106,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
   }
 
   test("perplexity gate: batches screen against the bootstrapped LM state; replay still a no-op") {
-    val root = Files.createTempDirectory("curatestream_ppl").toFile.getAbsolutePath
+    val root = ScratchDirs.create("curatestream_ppl")
     val stateDir = s"$root/state"; val outDir = s"$root/out"
     new java.io.File(stateDir).mkdirs()
     val conf = GraftConfig.parse(
@@ -154,7 +156,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
   test("image screen: near-dup images drop against evolving band state; replay a no-op") {
     import spark.implicits._
     import graft.operators.Multimodal
-    val root = Files.createTempDirectory("curatestream_img").toFile.getAbsolutePath
+    val root = ScratchDirs.create("curatestream_img")
     val stateDir = s"$root/state"; val outDir = s"$root/out"
     new java.io.File(stateDir).mkdirs()
     val conf = GraftConfig.parse(
@@ -237,7 +239,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
   }
 
   test("a misspelled screen selector fails a text-only batch too") {
-    val root = Files.createTempDirectory("curatestream_badsel").toFile.getAbsolutePath
+    val root = ScratchDirs.create("curatestream_badsel")
     val stateDir = s"$root/state"; val outDir = s"$root/out"
     new java.io.File(stateDir).mkdirs()
     for (conf <- Seq("""curation { imageScreen = "phsh" }""",
@@ -253,7 +255,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
   }
 
   test("refreshState retrains the LM from the drifted corpus: verdicts change, replay stays a no-op") {
-    val root = Files.createTempDirectory("curatestream_refresh").toFile.getAbsolutePath
+    val root = ScratchDirs.create("curatestream_refresh")
     val stateDir = s"$root/state"; val outDir = s"$root/out"
     new java.io.File(stateDir).mkdirs()
     val pplConf = GraftConfig.parse("""curation { qualityGate = "perplexity" }""")
@@ -330,8 +332,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     val quoter = benchB.split(" ").take(18).mkString(" ")
 
     for (mode <- Seq("overlap", "fuzzy")) {
-      val root = Files.createTempDirectory(s"curatestream_contam_$mode")
-        .toFile.getAbsolutePath
+      val root = ScratchDirs.create(s"curatestream_contam_$mode")
       val stateDir = s"$root/state"; val outDir = s"$root/out"
       new java.io.File(stateDir).mkdirs()
       val conf = GraftConfig.parse(
@@ -390,8 +391,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     val fresh = (1 to 20).map(i => s"c$i").mkString(" ")
     val heavy = s"$benchB zzz" // nearly every position hits
 
-    val root = Files.createTempDirectory("curatestream_surg")
-      .toFile.getAbsolutePath
+    val root = ScratchDirs.create("curatestream_surg")
     val stateDir = s"$root/state"; val outDir = s"$root/out"
     new java.io.File(stateDir).mkdirs()
     val conf = GraftConfig.parse(
@@ -436,7 +436,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
   test("audio screen: gain-variant re-rips drop against the fp state; fresh tones pass") {
     import spark.implicits._
     import graft.operators.Multimodal
-    val root = Files.createTempDirectory("curatestream_aud").toFile.getAbsolutePath
+    val root = ScratchDirs.create("curatestream_aud")
     val stateDir = s"$root/state"; val outDir = s"$root/out"
     new java.io.File(stateDir).mkdirs()
     val conf = GraftConfig.parse(
@@ -510,7 +510,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
   test("audio screen: an arrival EXTENDING a corpus clip drops (min-side containment, m9 parity)") {
     import spark.implicits._
     import graft.operators.Multimodal
-    val root = Files.createTempDirectory("curatestream_aud_ext").toFile.getAbsolutePath
+    val root = ScratchDirs.create("curatestream_aud_ext")
     val stateDir = s"$root/state"; val outDir = s"$root/out"
     new java.io.File(stateDir).mkdirs()
     val conf = GraftConfig.parse(
@@ -571,5 +571,100 @@ class CurateStreamAppSpec extends AnyFunSuite {
       stateDir, outDir, conf, batchId = 2L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 20L))
+  }
+
+  private def fsOf(path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** `<dir><ext>`: one of StateSwap's side entries of `dir`. */
+  private def side(dir: Path, ext: String) = new Path(dir.getParent, dir.getName + ext)
+
+  private def curatedIds(outDir: String) =
+    spark.read.parquet(s"$outDir/curated").select("doc_id").collect().map(_.getLong(0)).toSet
+
+  test("perplexity gate reads the new LM generation after a crash between swapAll's two renames") {
+    val conf = GraftConfig.parse("""curation { qualityGate = "perplexity" }""")
+    val gibberish = ("zq vx qkj wpf xuz bnm qrt lkp zzv " +
+      "mxw pqd fhz vvk juw qnc rbl tzx ") * 3
+    val reference = docs(100L -> baseText, 101L -> shipText)
+    val batch = docs(1L -> baseText, 2L -> gibberish)
+
+    val clean = ScratchDirs.create("curatestream_lm_clean")
+    CurateStreamApp.bootstrapLm(spark, reference, s"$clean/state")
+    CurateStreamApp.processBatch(spark, batch, s"$clean/state", s"$clean/out", conf, batchId = 0L)
+    assert(curatedIds(s"$clean/out") == Set(1L))
+
+    // the old generation learned the gibberish register; the new one (the
+    // reference) was staged and marked, the live root renamed to .old,
+    // and the process died before the staging dir was promoted
+    val root = ScratchDirs.create("curatestream_lm_crash")
+    val stateDir = s"$root/state"
+    CurateStreamApp.bootstrapLm(spark, docs(200L -> gibberish), stateDir)
+    CurateStreamApp.bootstrapLm(spark, reference, s"$root/next")
+    val fs = fsOf(root)
+    val lm = new Path(s"$stateDir/lm_state")
+    assert(fs.rename(lm, side(lm, ".old")))
+    assert(fs.rename(new Path(s"$root/next/lm_state"), side(lm, ".staging")))
+    fs.create(side(lm, ".swap"), true).close()
+    assert(!fs.exists(lm))
+
+    CurateStreamApp.processBatch(spark, batch, stateDir, s"$root/out", conf, batchId = 0L)
+    assert(curatedIds(s"$root/out") == curatedIds(s"$clean/out"))
+    assert(fs.exists(lm) && Seq(".old", ".staging", ".swap").forall(e => !fs.exists(side(lm, e))))
+  }
+
+  test("a delta commit killed at any point of its swap replays to a clean run's state and output") {
+    val fresh = ("completely different subject matter entirely about rivers " +
+      "and mountains flowing gently through the green valley all day long ") * 3
+    val b0 = docs(1L -> baseText, 2L -> shipText)
+    val b1 = docs(10L -> baseText, 13L -> fresh)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    /** Run batches 0 and 1 under `root`, then `crash` batch 1's delta. */
+    def run(root: String)(crash: (FileSystem, Path) => Unit): (String, String) = {
+      val (stateDir, outDir) = (s"$root/state", s"$root/out")
+      CurateStreamApp.processBatch(spark, b0, stateDir, outDir, batchId = 0L)
+      CurateStreamApp.processBatch(spark, b1, stateDir, outDir, batchId = 1L)
+      crash(fsOf(root), new Path(s"$stateDir/corpus_deltas/batch=1"))
+      (stateDir, outDir)
+    }
+    def snapshot(stateDir: String, outDir: String) = {
+      val st = CurateStreamApp.readCorpusState(spark, stateDir)
+      (rows(st.fps), rows(st.bands), rows(st.sizes), st.appliedThrough, st.liveDeltas,
+        rows(spark.read.parquet(s"$outDir/curated/batch=1")))
+    }
+    val (cleanState, cleanOut) = run(ScratchDirs.create("curatestream_delta_clean"))((_, _) => ())
+    val expected = snapshot(cleanState, cleanOut)
+    assert(expected._5 == Seq(0L, 1L) && expected._6.map(_.head) == Set(13L))
+
+    def copy(fs: FileSystem, from: Path, to: Path) =
+      assert(FileUtil.copy(fs, from, fs, to, false, spark.sparkContext.hadoopConfiguration))
+    val layouts: Seq[(String, (FileSystem, Path) => Unit)] = Seq(
+      "killed while staging (no marker)" -> { (fs, d) =>
+        assert(fs.rename(d, side(d, ".staging")))
+        fs.delete(new Path(side(d, ".staging"), "bands"), true)
+      },
+      "killed after the marker, before any rename" -> { (fs, d) =>
+        assert(fs.rename(d, side(d, ".staging")))
+        fs.create(side(d, ".swap"), true).close()
+      },
+      "a replayed commit killed between its two renames" -> { (fs, d) =>
+        copy(fs, d, side(d, ".old"))
+        assert(fs.rename(d, side(d, ".staging")))
+        fs.create(side(d, ".swap"), true).close()
+      },
+      "a replayed commit killed after promotion, before cleanup" -> { (fs, d) =>
+        copy(fs, d, side(d, ".old"))
+        fs.create(side(d, ".swap"), true).close()
+      })
+    for ((name, crash) <- layouts) {
+      val (stateDir, outDir) =
+        run(ScratchDirs.create("curatestream_delta_crash"))(crash)
+      CurateStreamApp.processBatch(spark, b1, stateDir, outDir, batchId = 1L)
+      assert(snapshot(stateDir, outDir) == expected, name)
+      // the next fold reaps every delta entry, side entries included
+      CurateStreamApp.foldDeltas(spark, stateDir)
+      assert(fsOf(stateDir).listStatus(new Path(s"$stateDir/corpus_deltas")).isEmpty, name)
+      assert(rows(CurateStreamApp.readCorpusState(spark, stateDir).fps) == expected._1, name)
+    }
   }
 }

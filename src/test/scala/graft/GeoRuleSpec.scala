@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extensions.GraftFunctions
 import graft.functions.NetFunctions
+import graft.queries.ScratchDirs
 
 /** The GeoRadiusPrefilter optimizer rule: a haversine radius predicate
   * gains conjoined lat/lon range bounds (a strict superset of the
@@ -22,7 +23,7 @@ class GeoRuleSpec extends AnyFunSuite {
   // LocalRelation before the plan can show the injected conjuncts
   private lazy val ptsPath: String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("geo_pts").toString + "/pts"
+    val dir = ScratchDirs.create("geo_pts") + "/pts"
     (1L to 1000L).map(i => (i, (i % 180).toDouble - 90 + 0.3, (i % 360).toDouble - 180 + 0.7))
       .toDF("id", "lat", "lon").write.parquet(dir)
     dir

@@ -8,6 +8,7 @@ import org.apache.spark.sql.graft.CacheProbe
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.detectors.FlowSummary
+import graft.queries.ScratchDirs
 
 /** Executor-side buffer sink for the notification test: local-mode
   * executors share the JVM, so a static queue observes deliveries.
@@ -23,7 +24,7 @@ class GraftAppSpec extends AnyFunSuite {
 
   test("GraftApp.run: cold start then warm run — alerts append, state swaps") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graftapp").toFile.getAbsolutePath
+    val root = ScratchDirs.create("graftapp")
     val samplesPath = s"$root/samples"
     val stateDir = s"$root/state"; val outDir = s"$root/out"
     new java.io.File(stateDir).mkdirs()
@@ -95,7 +96,7 @@ class GraftAppSpec extends AnyFunSuite {
 
   test("GraftApp.run: a failed alerts write still releases the batch's pins") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graftapp_fail").toFile.getAbsolutePath
+    val root = ScratchDirs.create("graftapp_fail")
     val samplesPath = s"$root/samples"
     (1 to 6).map(i => ("10.0.0.9", "93.9.9." + i, "1900", "53713", "17", 5000L, 10L, "0x00", 100L + i))
       .toDF("srcIP", "dstIP", "srcPort", "dstPort",
@@ -116,7 +117,7 @@ class GraftAppSpec extends AnyFunSuite {
 
   test("GraftApp.run: a batch that fails in its first job still releases the summary pin") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graftapp_badrow").toFile.getAbsolutePath
+    val root = ScratchDirs.create("graftapp_badrow")
     val samplesPath = s"$root/samples"
     // a packetSize that does not parse: the eager summary fill throws
     // under ANSI casts, before run returns its release
@@ -134,7 +135,7 @@ class GraftAppSpec extends AnyFunSuite {
 
   test("FileSink: GraftApp delivers alert files via alert.notify=file:<dir>") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graftapp_fsink").toFile.getAbsolutePath
+    val root = ScratchDirs.create("graftapp_fsink")
     val samplesPath = s"$root/samples"
     val rows =
       (1 to 6).map(i => ("10.0.0.9", "93.9.9." + i, "1900", "53713", "17", 5000L, 10L, "0x00", 100L + i))
@@ -157,7 +158,7 @@ class GraftAppSpec extends AnyFunSuite {
   }
 
   test("FileSink: transient write failures retry, then deliver") {
-    val dir = Files.createTempDirectory("fsink_retry").toFile.getAbsolutePath
+    val dir = ScratchDirs.create("fsink_retry")
     val attempts = new java.util.concurrent.atomic.AtomicInteger
     val sink = new graft.operators.AlertSink.FileSink(dir, maxAttempts = 3, backoffMs = 1L) {
       override protected def writeOnce(path: java.nio.file.Path,
@@ -176,7 +177,7 @@ class GraftAppSpec extends AnyFunSuite {
   }
 
   test("FileSink: a permanently failing delivery parks the payload in dead_letter") {
-    val dir = Files.createTempDirectory("fsink_dead").toFile.getAbsolutePath
+    val dir = ScratchDirs.create("fsink_dead")
     val attempts = new java.util.concurrent.atomic.AtomicInteger
     val sink = new graft.operators.AlertSink.FileSink(dir, maxAttempts = 3, backoffMs = 1L) {
       override protected def writeOnce(path: java.nio.file.Path,

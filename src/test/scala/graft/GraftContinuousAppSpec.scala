@@ -1,11 +1,12 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.queries.ScratchDirs
 
 class GraftContinuousAppSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -14,7 +15,7 @@ class GraftContinuousAppSpec extends AnyFunSuite {
 
   test("continuous auth mode: learn batch then detect batch, state persists") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graftcont").toFile.getAbsolutePath
+    val root = ScratchDirs.create("graftcont")
     val stateDir = s"$root/state"; val outDir = s"$root/out"
     new java.io.File(stateDir).mkdirs()
     val sp = "-23.55,-46.63" // São Paulo
@@ -57,7 +58,7 @@ class GraftContinuousAppSpec extends AnyFunSuite {
 
   test("a replayed micro-batch is a no-op: no double-merge, no duplicate alerts") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graftreplay").toFile.getAbsolutePath
+    val root = ScratchDirs.create("graftreplay")
     val stateDir = s"$root/state"; val outDir = s"$root/out"
     new java.io.File(stateDir).mkdirs()
     val batch = (1 to 8).map(i =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SimilaritySearch
+import graft.queries.ScratchDirs
 import graft.sources.Catalog
 
 /** The persisted IVF index: the serving path (build once, query against
@@ -16,7 +17,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   private lazy val emb = Catalog.embeddings(spark, SparkTestSession.sfDir)
   private lazy val idxDir = {
-    val d = java.nio.file.Files.createTempDirectory("ivf_spec_").toString
+    val d = ScratchDirs.create("ivf_spec_")
     SimilaritySearch.buildIvfIndex(emb, "label", d)
     d
   }
@@ -34,7 +35,7 @@ class IvfIndexSpec extends AnyFunSuite {
   }
 
   test("appendToIvfIndex lands each new vector in its nearest existing cell and makes it findable") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_app_").toString
+    val dir = ScratchDirs.create("ivf_app_")
     val base = emb.filter(col("vec_id") % 2 === 0)
     val extra = emb.filter(col("vec_id") % 2 === 1)
     SimilaritySearch.buildIvfIndex(base, "label", dir)
@@ -71,7 +72,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("rebalanceIvfIndex restores recall after distribution drift") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf_reb_").toString
+    val dir = ScratchDirs.create("ivf_reb_")
     SimilaritySearch.buildIvfIndex(emb, "label", dir)
     // Worst-case drift for append-only maintenance: a tight new cluster at
     // the EXACT midpoint of two fitted centroids, so appendToIvfIndex

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Pin}
+import graft.queries.ScratchDirs
 
 /** The pin policy lives in `graft.operators.Pin` alone: no other main
   * source pins a frame by hand, scoped pins are released when their run
@@ -76,7 +77,7 @@ class PinSpec extends AnyFunSuite {
 
   test("CurateStreamApp.processBatch releases every pin of its batch") {
     import spark.implicits._
-    val root = Files.createTempDirectory("pin_stream").toFile.getAbsolutePath
+    val root = ScratchDirs.create("pin_stream")
     new java.io.File(s"$root/state").mkdirs()
     val text = ("completely different subject matter entirely about rivers " +
       "and mountains flowing gently through the green valley all day long ") * 3
@@ -98,7 +99,7 @@ class PinSpec extends AnyFunSuite {
     val (plain, releasePlain) = CurateApp.taggedCached(docs)
     val expected = try reportOf(plain) finally releasePlain()
 
-    val dir = Files.createTempDirectory("graft_pin_ckpt").toString
+    val dir = ScratchDirs.create("graft_pin_ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     try {
       val (frame, release) = CurateApp.taggedCached(docs)

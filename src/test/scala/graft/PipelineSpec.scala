@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.operators.{Dedup, SimilaritySearch}
+import graft.queries.ScratchDirs
 
 /** Behavioral tests for the dedup / similarity operators on constructed
   * data where ground truth is known (the oracle queries check engine
@@ -778,7 +779,7 @@ class PipelineSpec extends AnyFunSuite {
     val cycle = (vocab ++ vocab ++ vocab).mkString(" ") // 3 cycles per doc
     val junk = (0 until 119).map(i => vocab((i * 17) % 40)).mkString(" ") // stride-17 shuffle
     def run(rows: Seq[(Long, String, String)]) = {
-      val dir = java.nio.file.Files.createTempDirectory("t35_").toString
+      val dir = ScratchDirs.create("t35_")
       rows.toDF("doc_id", "text", "lang").write.parquet(s"$dir/documents.parquet")
       SparkEntry.queries("t35_perplexity_filter")(spark, dir)
         .collect().map(r => r.getLong(0) -> ((r.getLong(2), r.getLong(3), r.getInt(4)))).toMap

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AsOfJoin, Dedup, RangeJoin}
+import graft.queries.ScratchDirs
 
 /** Randomized parity: each distributed operator vs a naive in-memory
   * reference implementation on seeded random inputs (seeded so failures
@@ -48,7 +49,7 @@ class RandomizedParitySpec extends AnyFunSuite {
       .filter { case (a, b) => a != b }
     val local = Dedup.connectedComponents(edges.toDF("doc1", "doc2"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    val dir = ScratchDirs.create("graft_cc_ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     try {
       val durable = Dedup.connectedComponents(edges.toDF("doc1", "doc2"))

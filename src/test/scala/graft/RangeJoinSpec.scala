@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.RangeJoin
+import graft.queries.ScratchDirs
 
 class RangeJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -57,7 +58,7 @@ class RangeJoinSpec extends AnyFunSuite {
     // column, which Catalyst column pruning removed on parquet sources —
     // it only ever fired on LocalRelation inputs. Parquet-backed inputs
     // are therefore the load-bearing shape for this test.
-    val dir = java.nio.file.Files.createTempDirectory("rj-guard").toString
+    val dir = ScratchDirs.create("rj-guard")
     Seq((1L, 0L, 10L), (2L, 0L, 1000000L)).toDF("iid", "s", "e")
       .write.mode("overwrite").parquet(s"$dir/intervals")
     Seq((100L, 5L)).toDF("pid", "v")

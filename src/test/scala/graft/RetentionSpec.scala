@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.Models
 import graft.operators.Retention
+import graft.queries.ScratchDirs
 
 /** T4 retention purge on a date-partitioned table + the dormant SVM path. */
 class RetentionSpec extends AnyFunSuite {
@@ -12,7 +13,7 @@ class RetentionSpec extends AnyFunSuite {
 
   test("purgeOlderThan drops old partitions wholesale but keeps exempted rows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_retention").toString
+    val dir = ScratchDirs.create("graft_retention")
     val rows = Seq(
       ("2026-01-01 10:00:00", 1L, 0), ("2026-01-02 10:00:00", 2L, 1), // old; id=2 exempt
       ("2026-01-10 10:00:00", 3L, 0), ("2026-01-11 10:00:00", 4L, 0)) // recent
@@ -31,7 +32,7 @@ class RetentionSpec extends AnyFunSuite {
 
   test("a purge killed between delete and restore is completed on recovery") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_retention_crash").toString
+    val dir = ScratchDirs.create("graft_retention_crash")
     val rows = Seq(
       ("2026-01-01 10:00:00", 1L, 0), ("2026-01-02 10:00:00", 2L, 1), // old; id=2 exempt
       ("2026-01-10 10:00:00", 3L, 0))                                 // recent
@@ -62,7 +63,7 @@ class RetentionSpec extends AnyFunSuite {
 
   test("a staging write with no marker is rolled back untouched") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_retention_nomark").toString
+    val dir = ScratchDirs.create("graft_retention_nomark")
     val rows = Seq(("2026-01-01 10:00:00", 1L, 0), ("2026-01-10 10:00:00", 2L, 0))
       .toDF("ts_s", "id", "priority")
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
@@ -77,7 +78,7 @@ class RetentionSpec extends AnyFunSuite {
 
   test("a corrupt (partially-written) marker rolls the staging back safely") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_retention_badmark").toString
+    val dir = ScratchDirs.create("graft_retention_badmark")
     val rows = Seq(("2026-01-01 10:00:00", 1L, 0), ("2026-01-10 10:00:00", 2L, 0))
       .toDF("ts_s", "id", "priority")
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
@@ -94,7 +95,7 @@ class RetentionSpec extends AnyFunSuite {
 
   test("deleteKeys erases listed keys, rewriting only affected partitions") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_delkeys").toString
+    val dir = ScratchDirs.create("graft_delkeys")
     val rows = Seq(
       ("2026-01-01 10:00:00", 1L, 10), ("2026-01-01 11:00:00", 2L, 20),
       ("2026-01-02 10:00:00", 1L, 30), ("2026-01-03 10:00:00", 3L, 40))
@@ -118,7 +119,7 @@ class RetentionSpec extends AnyFunSuite {
 
   test("a keyed delete killed mid-swap completes on recovery") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_delkeys_crash").toString
+    val dir = ScratchDirs.create("graft_delkeys_crash")
     val rows = Seq(
       ("2026-01-01 10:00:00", 1L, 10), ("2026-01-01 11:00:00", 2L, 20),
       ("2026-01-02 10:00:00", 3L, 30))

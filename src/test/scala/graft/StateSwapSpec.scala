@@ -1,16 +1,23 @@
 package graft
 
+import java.nio.file.{Files, Paths, Path => JPath}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.StateSwap
+import graft.queries.ScratchDirs
 
 /** Crash-safety contract of the shared state-swap primitive: every
   * interruption point between "staging written" and "debris deleted"
   * must recover to the NEW state, and an interrupted staging write (no
   * marker yet) must fall back to the OLD state — never a cold start,
-  * never a partial directory.
+  * never a partial directory. And StateSwap is the only main source
+  * that renames, or that picks a filesystem other than the one holding
+  * the path.
   */
 class StateSwapSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -24,7 +31,7 @@ class StateSwapSpec extends AnyFunSuite {
     StateSwap.readOrElse(spark, target, df(-1)).select("gen").collect()(0).getInt(0)
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString + "/state"
+    ScratchDirs.create(name) + "/state"
 
   test("swap replaces old state and cleans up all side files") {
     val t = tmp("swap_basic")
@@ -127,5 +134,22 @@ class StateSwapSpec extends AnyFunSuite {
     assert(readTableGen(t, "a") == 1 && readTableGen(t, "b") == 10)
     val fs = new Path(t).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new Path(t + ".staging")))
+  }
+
+  test("no main source outside StateSwap.scala renames, and none asks for the default filesystem") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val sources = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    def rel(p: JPath) = root.relativize(p).toString.replace('\\', '/')
+    val hits = for {
+      p <- sources
+      (line, n) <- Files.readAllLines(p).asScala.zipWithIndex
+      token <- Seq("FileSystem.get(") ++
+        (if (rel(p) == "graft/operators/StateSwap.scala") Nil else Seq(".rename("))
+      if line.contains(token)
+    } yield s"${rel(p)}:${n + 1}: $token"
+    assert(sources.size > 50, s"scanned only ${sources.size} files")
+    assert(hits.isEmpty, hits.mkString("renames or default-filesystem lookups outside StateSwap:\n", "\n", ""))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.ScratchDirs
 import graft.streaming.StreamingJobs
 import graft.streaming.StreamingJobs.{Alert, EventRow}
 
@@ -107,7 +108,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("cdcUpsertMicroBatches folds a changelog stream into durable post-image state") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cdc_state_").toString + "/state"
+    val dir = ScratchDirs.create("cdc_state_") + "/state"
     val source = MemoryStream[(Long, String, java.sql.Timestamp, Long, String)](spark, 41)
     val stream = source.toDF().toDF("k", "op", "ts", "seq", "v")
     val q = StreamingJobs.cdcUpsertMicroBatches(stream, dir,
