@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.Column
 
+import graft.GraftConfig.Literal
 import graft.functions.TextFunctions.{gopherFlags, qualityScore}
 import graft.operators.PerplexityGate
 
@@ -92,37 +93,42 @@ object Curation {
     audioMinContainment = 0.8,
     contamScreen = "off")
 
-  /** The `curation.*` keys of `c`; a missing key keeps its default. */
+  /** The `curation.*` keys of `c`; a missing key keeps its default, a
+    * value that does not parse throws (as in [[Detection.fromConfig]]).
+    */
   def fromConfig(c: GraftConfig): Curation = {
     val d = default
     val w = d.widths
+    def int(key: String, default: Int) = c.strict(key, default, Literal.Int)
+    def long(key: String, default: Long) = c.strict(key, default, Literal.Long)
+    def double(key: String, default: Double) = c.strict(key, default, Literal.Double)
     Curation(
       qualityGate = c.getString("curation.qualityGate", d.qualityGate),
-      qualityMin = c.getDouble("curation.qualityMin", d.qualityMin),
-      perplexityMaxNllE6 = c.getLong("curation.perplexityMaxNllE6", d.perplexityMaxNllE6),
-      benchMod = c.getInt("curation.benchMod", d.benchMod),
+      qualityMin = double("curation.qualityMin", d.qualityMin),
+      perplexityMaxNllE6 = long("curation.perplexityMaxNllE6", d.perplexityMaxNllE6),
+      benchMod = int("curation.benchMod", d.benchMod),
       contamGate = c.getString("curation.contamGate", d.contamGate),
-      maxOverlap = c.getDouble("curation.maxOverlap", d.maxOverlap),
-      fuzzyMinJaccard = c.getDouble("curation.fuzzyMinJaccard", d.fuzzyMinJaccard),
-      surgeryMinKeepFrac = c.getDouble("curation.surgeryMinKeepFrac", d.surgeryMinKeepFrac),
-      surgeryNGram = c.getInt("curation.surgeryNGram", d.surgeryNGram),
-      surgeryPad = c.getInt("curation.surgeryPad", d.surgeryPad),
-      maxBucket = c.getInt("curation.maxBucket", d.maxBucket),
-      foldEvery = c.getInt("curation.foldEvery", d.foldEvery),
+      maxOverlap = double("curation.maxOverlap", d.maxOverlap),
+      fuzzyMinJaccard = double("curation.fuzzyMinJaccard", d.fuzzyMinJaccard),
+      surgeryMinKeepFrac = double("curation.surgeryMinKeepFrac", d.surgeryMinKeepFrac),
+      surgeryNGram = int("curation.surgeryNGram", d.surgeryNGram),
+      surgeryPad = int("curation.surgeryPad", d.surgeryPad),
+      maxBucket = int("curation.maxBucket", d.maxBucket),
+      foldEvery = int("curation.foldEvery", d.foldEvery),
       widths = DedupWidths(
         method = c.getString("curation.nearDupMethod", w.method),
-        numPerms = c.getInt("curation.minhash.numPerms", w.numPerms),
-        numBands = c.getInt("curation.minhash.numBands", w.numBands),
-        simhashBits = c.getInt("curation.simhash.bits", w.simhashBits),
-        simhashBucketBits = c.getInt("curation.simhash.bucketBits", w.simhashBucketBits),
-        simhashMaxHamming = c.getInt("curation.simhash.maxHamming", w.simhashMaxHamming),
-        semanticTau = c.getDouble("curation.semantic.tau", w.semanticTau),
+        numPerms = int("curation.minhash.numPerms", w.numPerms),
+        numBands = int("curation.minhash.numBands", w.numBands),
+        simhashBits = int("curation.simhash.bits", w.simhashBits),
+        simhashBucketBits = int("curation.simhash.bucketBits", w.simhashBucketBits),
+        simhashMaxHamming = int("curation.simhash.maxHamming", w.simhashMaxHamming),
+        semanticTau = double("curation.semantic.tau", w.semanticTau),
         semanticTargetCluster =
-          c.getInt("curation.semantic.targetCluster", w.semanticTargetCluster)),
+          int("curation.semantic.targetCluster", w.semanticTargetCluster)),
       imageScreen = c.getString("curation.imageScreen", d.imageScreen),
-      imageMaxHamming = c.getInt("curation.image.maxHamming", d.imageMaxHamming),
+      imageMaxHamming = int("curation.image.maxHamming", d.imageMaxHamming),
       audioScreen = c.getString("curation.audioScreen", d.audioScreen),
-      audioMinContainment = c.getDouble("curation.audio.minContainment", d.audioMinContainment),
+      audioMinContainment = double("curation.audio.minContainment", d.audioMinContainment),
       contamScreen = c.getString("curation.contamScreen", d.contamScreen))
   }
 }

@@ -50,17 +50,18 @@ object GraftApp {
   }
 
   /** One batch pass; factored out of main so tests can drive it.
-    * `config`: the reference's sflow.conf surface (thresholds, disabled
-    * flags, exclusion sets) — see [[GraftConfig]] / HogzillaBatch.run.
+    * `config`: the reference's sflow.conf surface, read as a [[Detection]]
+    * (thresholds, disabled flags, exclusion sets) — see HogzillaBatch.run.
     * `sink`: optional notification transport for this run's alerts (the
-    * reference's mailer role); defaults from `alert.notify` in the conf
-    * ("log" → stderr lines, "file:<dir>" → JSON-line files with retry +
-    * dead-letter, anything else → no delivery).
+    * reference's mailer role); defaults to the one `alert.notify` names
+    * ([[Detection.Notify]]).
     */
   def run(spark: SparkSession, samplesPath: String, stateDir: String,
           outDir: String, myNets: Seq[String],
           config: GraftConfig = GraftConfig.empty,
           sink: Option[graft.operators.AlertSink.Sink] = None): Unit = {
+    // read first, so a broken conf fails before any Spark work
+    val alertNotify = Detection.fromConfig(config).alertNotify
     val samples = spark.read.parquet(samplesPath)
     val profiles = ProfileTables.fromSeq(ProfileTables.Names.map(h =>
       StateSwap.readOrElse(spark, s"$stateDir/$h", HogzillaBatch.emptyProfiles(spark))))
@@ -79,12 +80,7 @@ object GraftApp {
       alerts.write.mode(SaveMode.Append).parquet(s"$outDir/alerts")
       // notification delivery (the reference's mailer role): render the
       // payload per alert and hand it to the pluggable transport
-      sink.orElse(config.getString("alert.notify", "off") match {
-        case "log" => Some(graft.operators.AlertSink.LogSink)
-        case s if s.startsWith("file:") => // e.g. alert.notify = file:/var/spool/alerts
-          Some(new graft.operators.AlertSink.FileSink(s.stripPrefix("file:")))
-        case _ => None
-      }).foreach(graft.operators.AlertSink.deliver(alerts, _))
+      sink.orElse(alertNotify.sink).foreach(graft.operators.AlertSink.deliver(alerts, _))
       reputation.proxies.write.mode(SaveMode.Overwrite).parquet(s"$outDir/proxies")
       reputation.bigProviders.write.mode(SaveMode.Overwrite)
         .parquet(s"$outDir/big_providers")

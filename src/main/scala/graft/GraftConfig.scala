@@ -11,62 +11,88 @@ package graft
   * scalar values, `#`/`//` comments, `Set(...)` literals for exclusion
   * lists, last duplicate key wins. Parsed with a ~40-line reader because
   * the runtime classpath ships no config library and the project rule is
-  * zero extra dependencies; accessors mirror the reference's
-  * (`getInt`/`getLong`/`getDouble`/`getSetString`/`getSetInt`, default
-  * on missing key, empty value, or parse failure — the reference's
-  * fail-soft contract).
+  * zero extra dependencies.
+  *
+  * The accessors (`getString`/`getInt`/`getLong`/`getDouble`/
+  * `getSetString`/`getSetInt`) are the generic, lenient surface and
+  * mirror the reference's: the default on a missing key, an empty value
+  * or a value that does not parse (the reference's fail-soft contract).
+  * The apps do not use them: they read one settings value,
+  * [[Detection]] or [[Curation]], through [[strict]], which parses the
+  * same [[GraftConfig.Literal]]s but fails on a value that does not
+  * parse.
   */
 final class GraftConfig private[graft] (val entries: Map[String, String]) {
+  import GraftConfig.Literal
+
+  /** `key`'s value as `lit`: the default when the key is missing or its
+    * value is empty, else `malformed` of a message naming the key and the
+    * value when the value does not parse. The lenient and strict reads
+    * differ only in `malformed`.
+    */
+  private def read[T](key: String, default: T, lit: Literal[T])(malformed: String => T): T =
+    entries.get(key).filter(_.nonEmpty) match {
+      case None => default
+      case Some(v) => lit.parse(v.trim).getOrElse(malformed(s"$key => '$v' is not ${lit.what}"))
+    }
+
+  private def lenient[T](key: String, default: T, lit: Literal[T]): T =
+    read(key, default, lit) { msg =>
+      System.err.println(s"[GraftConfig] $msg; using default $default")
+      default
+    }
+
+  /** The settings values' read: as the accessors, but a value that does
+    * not parse throws an `IllegalArgumentException` naming the key and the
+    * value, so a broken deployment fails before it runs.
+    */
+  private[graft] def strict[T](key: String, default: T, lit: Literal[T]): T =
+    read(key, default, lit)(msg => throw new IllegalArgumentException(msg))
 
   def getString(key: String, default: String): String =
     entries.get(key).filter(_.nonEmpty).getOrElse(default)
 
-  private def numeric[T](key: String, default: T)(parse: String => T): T =
-    entries.get(key).filter(_.nonEmpty) match {
-      case None => default
-      case Some(v) =>
-        try parse(v.trim)
-        catch { case _: NumberFormatException =>
-          System.err.println(s"[GraftConfig] unparseable $key => '$v'; using default $default")
-          default
-        }
-    }
-
-  def getInt(key: String, default: Int): Int = numeric(key, default)(_.toInt)
-  def getLong(key: String, default: Long): Long = numeric(key, default)(_.toLong)
-  def getDouble(key: String, default: Double): Double = numeric(key, default)(_.toDouble)
+  def getInt(key: String, default: Int): Int = lenient(key, default, Literal.Int)
+  def getLong(key: String, default: Long): Long = lenient(key, default, Literal.Long)
+  def getDouble(key: String, default: Double): Double = lenient(key, default, Literal.Double)
 
   /** `Set(a,b,c)` literal (the reference's exclusion-list syntax);
     * `Set()` is explicitly empty, a missing key yields the default.
     */
   def getSetString(key: String, default: Set[String]): Set[String] =
-    entries.get(key).filter(_.nonEmpty) match {
-      case None => default
-      case Some(v) =>
-        val body = v.trim.stripPrefix("Set(").stripSuffix(")")
-        if (!v.trim.startsWith("Set(") || !v.trim.endsWith(")")) {
-          System.err.println(s"[GraftConfig] $key => '$v' is not a Set(...) literal; using default")
-          default
-        } else if (body.trim.isEmpty) Set.empty
-        else body.split(",").map(_.trim).filter(_.nonEmpty).toSet
-    }
+    lenient(key, default, Literal.SetString)
 
-  def getSetInt(key: String, default: Set[Int]): Set[Int] =
-    try getSetString(key, default.map(_.toString)).map(_.toInt)
-    catch { case _: NumberFormatException =>
-      System.err.println(s"[GraftConfig] $key is not all-integer; using default")
-      default
-    }
-
-  /** The reference's `<section>.disabled` convention: any non-zero
-    * disables the detector (`HogSFlow.scala:154-170`).
-    */
-  def isDisabled(section: String): Boolean = getInt(s"$section.disabled", 0) != 0
+  def getSetInt(key: String, default: Set[Int]): Set[Int] = lenient(key, default, Literal.SetInt)
 }
 
 object GraftConfig {
 
   val empty = new GraftConfig(Map.empty)
+
+  /** How one kind of value is written in a conf file: `parse` of the
+    * trimmed value, None when the value is not `what`.
+    */
+  final case class Literal[T](what: String, parse: String => Option[T])
+
+  object Literal {
+    private def number[T](what: String, parse: String => T) = Literal[T](what, v =>
+      try Some(parse(v)) catch { case _: NumberFormatException => None })
+
+    val Int: Literal[Int] = number("an integer", _.toInt)
+    val Long: Literal[Long] = number("an integer", _.toLong)
+    val Double: Literal[Double] = number("a number", _.toDouble)
+
+    val SetString: Literal[Set[String]] = Literal("a Set(...) literal", v =>
+      if (!v.startsWith("Set(") || !v.endsWith(")")) None
+      else Some(v.stripPrefix("Set(").stripSuffix(")").split(",").map(_.trim)
+        .filter(_.nonEmpty).toSet))
+
+    val SetInt: Literal[Set[Int]] = Literal("a Set(...) of integers", v =>
+      SetString.parse(v).flatMap { s =>
+        val ints = s.map(Int.parse)
+        if (ints.forall(_.isDefined)) Some(ints.flatten) else None
+      })
+  }
 
   /** Parse conf text. Sections flatten to dotted key prefixes; values
     * keep their literal form (quotes stripped) for the typed accessors.

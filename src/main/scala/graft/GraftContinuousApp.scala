@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.detectors.AuthProfiling
+import graft.detectors.{AuthProfiling, SignatureCatalog}
 import graft.functions.HistogramFunctions
 import graft.operators.{ProfileStore, StateSwap}
 import graft.streaming.StreamingJobs
@@ -27,9 +27,6 @@ import graft.streaming.StreamingJobs
   * reference's ordering).
   */
 object GraftContinuousApp {
-
-  private val Families = Seq(
-    ("HIST20", "city"), ("HIST21", "user_agent"), ("HIST22", "service"))
 
   /** Marker row carried inside the swapped profile state recording the
     * last APPLIED batch id — the replay-idempotence anchor (see [[run]]).
@@ -81,6 +78,7 @@ object GraftContinuousApp {
   def processBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
                    outDir: String, batchId: Long,
                    config: GraftConfig = GraftConfig.empty): Unit = {
+    val d = Detection.fromConfig(config)
     // both state tables (profiles + city coords) live under one root and
     // promote in a single StateSwap.swapAll, so the replay marker inside
     // the profiles is provably in sync with the coords table too
@@ -111,21 +109,15 @@ object GraftContinuousApp {
     // reference conf levels (HogAuth.scala:83-85): 0 = detect+learn,
     // 1 = just training (suppress this family's alerts, keep learning),
     // 2 = nothing (also skip learning below)
-    val familyLevel = Map(
-      "HIST20" -> config.getInt("location.disabled", 0),
-      "HIST21" -> config.getInt("useragent.disabled", 0),
-      "HIST22" -> config.getInt("system.disabled", 0))
-    def gated(flag: String, family: String) =
-      if (familyLevel(family) != 0) lit(0) else col(flag)
+    def gated(flag: String, level: Int) = if (level != 0) lit(0) else col(flag)
     val atypical = AuthProfiling.atypicalAccess(batch, profiles, cityCoords,
-        radiusKm = config.getDouble("location.allowedRadix", AuthProfiling.CityRadiusKm))
-      .withColumn("atypical_city", gated("atypical_city", "HIST20"))
-      .withColumn("atypical_ua", gated("atypical_ua", "HIST21"))
-      .withColumn("atypical_service", gated("atypical_service", "HIST22"))
+        radiusKm = d.allowedRadixKm)
+      .withColumn("atypical_city", gated("atypical_city", d.locationLevel))
+      .withColumn("atypical_ua", gated("atypical_ua", d.userAgentLevel))
+      .withColumn("atypical_service", gated("atypical_service", d.systemLevel))
       .filter(col("atypical_city") + col("atypical_ua") + col("atypical_service") > 0)
       .withColumn("detector", lit("atypicalAccess"))
-    val travel = AuthProfiling.impossibleTravel(batch,
-        maxKmh = config.getDouble("travel.maxKmh", 900.0))
+    val travel = AuthProfiling.impossibleTravel(batch, maxKmh = d.travelMaxKmh)
       .select(col("user_name"), col("city"), lit(null).cast("string").as("user_agent"),
         lit(null).cast("string").as("service"), col("speed_kmh").as("min_city_dist_km"),
         lit(1).as("atypical_city"), lit(0).as("atypical_ua"), lit(0).as("atypical_service"))
@@ -137,12 +129,9 @@ object GraftContinuousApp {
     val alertRows = atypical.unionByName(travel)
       .withColumn("signature_id",
         when(col("detector") === "impossibleTravel",
-            lit(graft.detectors.SignatureCatalog.byDetector("impossibleTravel")))
-          .when(col("atypical_city") + col("atypical_ua") + col("atypical_service") > 1,
-            lit(826001204L)) // HZ/Auth: Atypical user access (HogAuth.scala:71)
-          .when(col("atypical_city") === 1, lit(826001201L))
-          .when(col("atypical_ua") === 1, lit(826001202L))
-          .otherwise(lit(826001203L)))
+            lit(SignatureCatalog.byDetector("impossibleTravel")))
+          .otherwise(SignatureCatalog.authSignature(
+            col("atypical_city"), col("atypical_ua"), col("atypical_service"))))
       .withColumn("username", col("user_name"))
       .join(broadcast(cityCoords.withColumnRenamed("coords", "coords_known")), Seq("city"), "left")
       .withColumn("coords", col("coords_known")).drop("coords_known")
@@ -153,10 +142,12 @@ object GraftContinuousApp {
     alertRows.write.mode(SaveMode.Overwrite).parquet(s"$outDir/auth_alerts/batch=$batchId")
 
     // learn pass: merge this batch into every family's histograms
-    val learning = Families.filter { case (family, _) => familyLevel(family) != 2 }
+    val learning = Seq(("HIST20", "city", d.locationLevel),
+        ("HIST21", "user_agent", d.userAgentLevel), ("HIST22", "service", d.systemLevel))
+      .filter(_._3 != 2)
     val updated =
       if (learning.isEmpty) profiles
-      else ProfileStore.update(profiles, learning.map { case (family, column) =>
+      else ProfileStore.update(profiles, learning.map { case (family, column, _) =>
         HistogramFunctions.buildHistogram(
           batch.groupBy(concat(lit(s"$family-"), col("user_name")).as("name"),
               col(column).as("bucket"))

@@ -3,6 +3,7 @@ package graft.detectors
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Detection
 import graft.functions.HistogramFunctions
 import graft.functions.NetFunctions
 
@@ -26,7 +27,6 @@ import graft.functions.NetFunctions
 object AuthProfiling {
 
   val ColdStart = 10L // HogAuth.scala:349 learn-only threshold
-  val CityRadiusKm = 400.0 // HogAuth.scala:352-369 same-region tolerance
 
   private def profile(profiles: DataFrame, family: String) =
     profiles
@@ -38,7 +38,7 @@ object AuthProfiling {
     * {city, user_agent, service}.
     */
   def atypicalAccess(auth: DataFrame, profiles: DataFrame,
-      cityCoords: DataFrame, radiusKm: Double = CityRadiusKm,
+      cityCoords: DataFrame, radiusKm: Double = Detection.default.allowedRadixKm,
       coldStart: Long = ColdStart): DataFrame = {
     // cityCoords: (city, coords) — known coordinates per profile city,
     // broadcast; the reference carries coords inside the histogram labels
@@ -91,7 +91,8 @@ object AuthProfiling {
     * sort); zero or negative gaps (clock skew, duplicate events) and
     * unknown coordinates are skipped, not alerted.
     */
-  def impossibleTravel(auth: DataFrame, maxKmh: Double = 900.0): DataFrame = {
+  def impossibleTravel(auth: DataFrame,
+      maxKmh: Double = Detection.default.travelMaxKmh): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_name")).orderBy(col("ts"))
     auth

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Detection
 import graft.functions.HistogramFunctions
 import graft.functions.NetFunctions
 import graft.operators.ProfileStore
@@ -107,7 +108,12 @@ case class FlowLineFields(myIp: String, myPort: String, alienIp: String,
   */
 object Detectors {
 
-  val FlowListLimit = 1000 // alert.maxFlowList
+  /** The compiled-in settings, which name every parameter default below
+    * that is a conf key.
+    */
+  private val Defaults = Detection.default
+
+  val FlowListLimit: Int = Defaults.maxFlowList
 
   private def alert(detector: String, myIp: Column, alienIp: Column,
       metric: Column, nFlows: Column, note: Column,
@@ -233,9 +239,10 @@ object Detectors {
     * `udpMinPkts`/`ampPorts` and `icmpMinPktSize` are udpAmplifier's and
     * icmpTunnel's row filters.
     */
-  def hostFeatures(summary: DataFrame, myNets: Seq[String], udpMinPkts: Int = 2000,
+  def hostFeatures(summary: DataFrame, myNets: Seq[String],
+      udpMinPkts: Int = Defaults.udpMinPktsPerFlow,
       ampPorts: Seq[String] = Seq("19", "53", "123", "161", "389", "1900"),
-      icmpMinPktSize: Int = 200): DataFrame = {
+      icmpMinPktSize: Int = Defaults.icmpMinPacket): DataFrame = {
     val smtp = col("alien_port") === "25" && col("n_pkts") > 3 &&
       !FlowSummary.isLocalIp(col("alien_ip"), myNets)
     val udp = col("proto") === "17" && col("my_port").isin(ampPorts: _*) &&
@@ -263,9 +270,11 @@ object Detectors {
     * than `minPktsPerFlow` packets) and hPortScan's probes (`probe_nf`:
     * <5 packets).
     */
-  def contacts(summary: DataFrame, mediaMinDuration: Int = 300,
-      mediaMaxDuration: Int = 7200, mediaExcludePorts: Seq[String] = Seq("1194"),
-      vScanMaxPort: Int = 1024, minPktsPerFlow: Int = 2): DataFrame = {
+  def contacts(summary: DataFrame, mediaMinDuration: Int = Defaults.mediaMinDuration,
+      mediaMaxDuration: Int = Defaults.mediaMaxDuration,
+      mediaExcludePorts: Seq[String] = Defaults.mediaExcludePorts.toSeq.sorted,
+      vScanMaxPort: Int = Defaults.vScanMaxPortNumber,
+      minPktsPerFlow: Int = Defaults.alienPortsMinPacketsPerFlow): DataFrame = {
     val media = !col("alien_port").isin(mediaExcludePorts: _*) &&
       (col("t_max") - col("t_min")).between(mediaMinDuration, mediaMaxDuration)
     val smtp = col("alien_port") === "25"
@@ -366,7 +375,7 @@ object Detectors {
     * same run — explicit two-pass sequencing instead of a side-channel store.
     */
   def bigProviders(alienNet: DataFrame, minDistinctHosts: Int = 4,
-      minBytes: Long = 1073741824L): DataFrame =
+      minBytes: Long = Defaults.bigProvidersMinBytes): DataFrame =
     alienNet.filter(col("hosts") > minDistinctHosts && col("max_up") > minBytes)
       .select("net")
 
@@ -385,7 +394,7 @@ object Detectors {
     * per its HIST01/HIST02 profiles (J5/H6).
     */
   def smtpTalkers(host: DataFrame, hist01: DataFrame, hist02: DataFrame,
-      minBytes: Long = 20971520L, k: Int = 100): DataFrame = {
+      minBytes: Long = Defaults.smtpMinBytes, k: Int = 100): DataFrame = {
     val rolled = host
       .filter(col("smtp_nf") > 1 && col("smtp_bytes") > minBytes && col("smtp_pkts") > 20)
     val smtpServer = profileTypical(hist01, "25").withColumnRenamed("name", "my_ip")
@@ -409,8 +418,10 @@ object Detectors {
     * pairs, >minPorts2 distinct alien ports, >minBytes2 bytes.
     */
   def p2pTalkers(summary: DataFrame, myNets: Seq[String], ftpPairs: DataFrame,
-      ftpSrv: DataFrame, minPairs: Int = 5, minPorts: Int = 4,
-      minPairs2: Int = 10, minPorts2: Int = 10, minBytes2: Long = 10000000L): DataFrame = {
+      ftpSrv: DataFrame, minPairs: Int = Defaults.p2pMinPairs,
+      minPorts: Int = Defaults.p2pMinPorts, minPairs2: Int = Defaults.p2pMinPairs2nd,
+      minPorts2: Int = Defaults.p2pMinPorts2nd,
+      minBytes2: Long = Defaults.p2pMinBytes2nd): DataFrame = {
     val external = summary
       .filter(!FlowSummary.isLocalIp(col("alien_ip"), myNets))
       .join(ftpPairs, Seq("my_ip", "alien_ip"), "left_anti")
@@ -443,7 +454,8 @@ object Detectors {
     * filters are [[contacts]]' `media*` columns.
     */
   def mediaStreamingClients(pair: DataFrame, myNets: Seq[String], p2pHosts: DataFrame,
-      maxUpload: Long = 10000000L, minDownload: Long = 1000000L): DataFrame =
+      maxUpload: Long = Defaults.mediaMaxUploadBytes,
+      minDownload: Long = Defaults.mediaMinDownloadBytes): DataFrame =
     pair
       .filter(col("media_nf") > 0 && !FlowSummary.isLocalIp(col("alien_ip"), myNets) &&
         col("media_down") > minDownload && col("media_up") < maxUpload)
@@ -463,7 +475,7 @@ object Detectors {
     */
   def atypicalPorts(servedPort: DataFrame, hist01: DataFrame, proxies: DataFrame,
       minObs: Long = 100,
-      excludePorts: Seq[String] = Seq("80", "443", "587", "465", "993", "995")): DataFrame = {
+      excludePorts: Seq[String] = Defaults.atypicalPortsExcludePorts.toSeq.sorted): DataFrame = {
     val current = HistogramFunctions.buildHistogram(
       servedPort
         .join(proxies.withColumn("is_proxy", lit(true)), Seq("my_ip"), "left")
@@ -606,7 +618,7 @@ object Detectors {
     * log bin the mature profile has never seen.
     */
   def atypicalPairs(hostPairs: DataFrame, hist03: DataFrame, minObs: Long = 100,
-      minPairs: Int = 300): DataFrame =
+      minPairs: Int = Defaults.atypicalPairsMinPairs): DataFrame =
     hostPairs.filter(col("pairs") > minPairs)
       .withColumn("bin", logBinKey(col("pairs")))
       .join(ProfileStore.mature(hist03, minObs, "my_ip"), Seq("my_ip"))
@@ -625,7 +637,7 @@ object Detectors {
     */
   def atypicalData(summary: DataFrame, myNets: Seq[String], hist04: DataFrame,
       bigProviderNets: DataFrame, minObs: Long = 100,
-      minBytes: Long = 5737418240L): DataFrame = {
+      minBytes: Long = Defaults.atypicalDataMinBytes): DataFrame = {
     val vol = summary
       .filter(col("direction") > -1 && col("my_port").cast("int") > 1024 &&
         col("my_port") =!= "8080" && !FlowSummary.isLocalIp(col("alien_ip"), myNets))
@@ -646,7 +658,8 @@ object Detectors {
     * HogSFlow.scala:1993-2113): one external host touching many local
     * pairs.
     */
-  def alienAccess(summary: DataFrame, myNets: Seq[String], minPairs: Int = 20): DataFrame =
+  def alienAccess(summary: DataFrame, myNets: Seq[String], minPairs: Int = Defaults.alienMinPairs)
+      : DataFrame =
     summary
       .filter(!FlowSummary.isLocalIp(col("alien_ip"), myNets))
       .groupBy("alien_ip")
@@ -671,7 +684,8 @@ object Detectors {
         col("udp_pkts"), col("udp_nf"), lit("amplification reflector")): _*)
 
   /** Abused SMTP relay (keyed by pair, HogSFlow.scala:2219-2252). */
-  def abusedSmtp(pair: DataFrame, minBytes: Long = 50000000L, k: Int = 100): DataFrame =
+  def abusedSmtp(pair: DataFrame, minBytes: Long = Defaults.abusedSmtpMinBytes, k: Int = 100)
+      : DataFrame =
     pair.filter(col("smtp_nf") > 0 && col("smtp_bytes") > minBytes)
       .orderBy(col("smtp_bytes").desc, col("my_ip"), col("alien_ip")).limit(k)
       .select(alert("abusedSMTP", col("my_ip"), col("alien_ip"),
@@ -680,7 +694,8 @@ object Detectors {
   /** DNS tunnel (HogSFlow.scala:2281-2309): port-53 volume way past name
     * resolution.
     */
-  def dnsTunnel(host: DataFrame, minBytes: Long = 25000000L, k: Int = 30): DataFrame =
+  def dnsTunnel(host: DataFrame, minBytes: Long = Defaults.dnsTunnelMinBytes, k: Int = 30)
+      : DataFrame =
     host.filter(col("dns_nf") > 0 && col("dns_bytes") > minBytes)
       .orderBy(col("dns_bytes").desc, col("my_ip")).limit(k)
       .select(alert("dnsTunnel", col("my_ip"), lit(null).cast("string"),
@@ -689,7 +704,7 @@ object Detectors {
   /** ICMP tunnel (A2 shape, HogSFlow.scala:2341-2370): big ICMP payloads
     * ([[hostFeatures]]' `icmpMinPktSize`), big totals.
     */
-  def icmpTunnel(host: DataFrame, minBytes: Long = 100000000L, k: Int = 30): DataFrame =
+  def icmpTunnel(host: DataFrame, minBytes: Long = Defaults.icmpMinBytes, k: Int = 30): DataFrame =
     host.filter(col("icmp_nf") > 0 && col("icmp_bytes") > minBytes)
       .orderBy(col("icmp_bytes").desc, col("my_ip")).limit(k)
       .select(alert("icmpTunnel", col("my_ip"), lit(null).cast("string"),
@@ -713,8 +728,7 @@ object Detectors {
     * as a count map.
     */
   private[detectors] def hist07Current(alienPort: DataFrame, p2pHosts: DataFrame,
-      minPairsPort: Int = 100,
-      excludeAlienPorts: Seq[String] = Seq("80", "443", "53")): DataFrame =
+      minPairsPort: Int, excludeAlienPorts: Seq[String]): DataFrame =
     HistogramFunctions.buildCountMap(
       scannedPorts(alienPort, p2pHosts, minPairsPort, excludeAlienPorts)
         .select(col("my_ip"), col("alien_port").as("bucket"), col("probe_aliens").as("cnt")),
@@ -730,9 +744,9 @@ object Detectors {
     * (size < minObs) learn only.
     */
   def hPortScan(alienPort: DataFrame, myNets: Seq[String], hist07: DataFrame,
-      hist01: DataFrame, p2pHosts: DataFrame, minPairsPort: Int = 100,
-      minObs: Long = 100,
-      excludeAlienPorts: Seq[String] = Seq("80", "443", "53")): DataFrame = {
+      hist01: DataFrame, p2pHosts: DataFrame,
+      minPairsPort: Int = Defaults.hScanMinFlows, minObs: Long = 100,
+      excludeAlienPorts: Seq[String] = Defaults.hScanExcludeAlienPorts.toSeq.sorted): DataFrame = {
     val current = scannedPorts(alienPort, p2pHosts, minPairsPort, excludeAlienPorts)
       .select(col("my_ip"), col("alien_port").as("port"), col("probe_aliens").as("pairs"),
         col("probe_nf").as("nf"))
@@ -763,8 +777,8 @@ object Detectors {
     * pair bursts touched — one observation per qualifying (my_ip, alien_ip)
     * pair, keyed by the port count as a string.
     */
-  private[detectors] def hist08Current(pair: DataFrame, p2pHosts: DataFrame,
-      minPorts: Int = 3): DataFrame =
+  private[detectors] def hist08Current(pair: DataFrame, p2pHosts: DataFrame, minPorts: Int)
+      : DataFrame =
     HistogramFunctions.buildHistogram(
       scanningPairs(pair, p2pHosts, minPorts)
         .groupBy(col("my_ip"), col("vscan_ports").cast("string").as("bucket"))
@@ -779,7 +793,7 @@ object Detectors {
     * profiles learn only.
     */
   def vPortScan(pair: DataFrame, myNets: Seq[String], hist08: DataFrame,
-      p2pHosts: DataFrame, minPorts: Int = 3, minObs: Long = 10): DataFrame =
+      p2pHosts: DataFrame, minPorts: Int = Defaults.vScanMinPorts, minObs: Long = 10): DataFrame =
     scanningPairs(pair, p2pHosts, minPorts)
       .join(ProfileStore.mature(hist08, minObs, "my_ip"), Seq("my_ip"))
       .filter(size(map_filter(col("profile"), (k, v) =>
@@ -793,8 +807,8 @@ object Detectors {
     * flows from many pairs ([[hostPairs]]) whose inter-arrival gaps —
     * after dropping the 4 largest — average under a minute.
     */
-  def ddos(summary: DataFrame, hostPairs: DataFrame, minFlows: Int = 50, minPairs: Int = 20,
-      maxMeanGapSecs: Double = 60.0): DataFrame = {
+  def ddos(summary: DataFrame, hostPairs: DataFrame, minFlows: Int = Defaults.ddosMinFlows,
+      minPairs: Int = Defaults.ddosMinPairs, maxMeanGapSecs: Double = 60.0): DataFrame = {
     val byStart = Window.partitionBy(col("my_ip")).orderBy(col("t_min"), col("alien_ip"), col("alien_port"))
     val gaps = summary
       .withColumn("gap", col("t_min") - lag(col("t_min"), 1).over(byStart))
@@ -813,7 +827,8 @@ object Detectors {
   /** Botnet C&C contact (J2 longest-prefix blacklist,
     * HogSFlow.scala:2770-2808): chatty flows to a blacklisted prefix.
     */
-  def botnetCC(summary: DataFrame, blacklist: DataFrame, minPktsPerFlow: Int = 20): DataFrame = {
+  def botnetCC(summary: DataFrame, blacklist: DataFrame,
+      minPktsPerFlow: Int = Defaults.botnetMinPktsPerFlow): DataFrame = {
     val chatty = summary.filter(col("n_pkts") >= minPktsPerFlow)
       .select("my_ip", "alien_ip", "n_pkts")
     NetFunctions.longestPrefixJoin(chatty, "alien_ip", blacklist)

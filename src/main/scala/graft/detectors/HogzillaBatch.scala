@@ -3,7 +3,7 @@ package graft.detectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftConfig
+import graft.{Detection, GraftConfig}
 import graft.functions.HistogramFunctions
 import graft.operators.{Pin, ProfileStore}
 
@@ -149,19 +149,18 @@ object HogzillaBatch {
     * a long-lived session). The returned frames stay usable after it: they
     * recompute.
     *
-    * `config` carries the reference's per-detector conf surface
-    * (`scripts/conf/sflow.conf` key names, `HogSFlow.scala:118-189`
-    * defaults): every threshold below reads its reference key with the
-    * compiled-in default, each section honors `<section>.disabled`, and
-    * `<section>.excludeIPs` ++ `general.excludeIPs` suppress alerts for
-    * the listed local IPs (a broadcast-literal isin filter — exclusion
-    * sets are config-sized, never data-sized).
+    * `config` is read once, as a [[Detection]]: every threshold below is
+    * one of its fields, the sections run in [[Detection.Sections]] order,
+    * a disabled section never builds its plan, and each section's
+    * exclusion list with the general one suppresses alerts for the listed
+    * IPs (a broadcast-literal isin filter — exclusion sets are
+    * config-sized, never data-sized).
     */
   def run(spark: SparkSession, samples: DataFrame, myNets: Seq[String],
       profiles: ProfileTables, blacklist: DataFrame, osRepos: DataFrame,
       config: GraftConfig = GraftConfig.empty)
       : (DataFrame, ProfileTables, ReputationLists, () => Unit) = {
-    val c = config
+    val d = Detection.fromConfig(config)
 
     // run-scoped pins, dropped by release() dependents first (newest
     // first): a pin uncached before the pins planned over it would make
@@ -175,20 +174,16 @@ object HogzillaBatch {
     // reads; the my_ip-keyed ones eagerly, like the summary
     def family(df: DataFrame) = pins.cache(df, eager = true)
     val host = family(Detectors.hostFeatures(summary, myNets,
-      udpMinPkts = c.getInt("UDPAmplifier.minPktsPerFlow", 2000),
-      icmpMinPktSize = c.getInt("ICMPTunnel.minPacket", 200)))
+      udpMinPkts = d.udpMinPktsPerFlow, icmpMinPktSize = d.icmpMinPacket))
     val contacts = family(Detectors.contacts(summary,
-      mediaMinDuration = c.getInt("mediaStreaming.minDuration", 300),
-      mediaMaxDuration = c.getInt("mediaStreaming.maxDuration", 7200),
-      mediaExcludePorts = c.getSetString("mediaStreaming.excludePorts", Set("1194")).toSeq.sorted,
-      vScanMaxPort = c.getInt("vPortScan.maxPortNumber", 1024),
-      minPktsPerFlow = c.getInt("atypicalAlienPorts.minPacketsPerFlow", 2)))
+      mediaMinDuration = d.mediaMinDuration, mediaMaxDuration = d.mediaMaxDuration,
+      mediaExcludePorts = d.mediaExcludePorts.toSeq.sorted,
+      vScanMaxPort = d.vScanMaxPortNumber, minPktsPerFlow = d.alienPortsMinPacketsPerFlow))
     val pair = family(Detectors.pairFeatures(contacts))
     val alienPort = family(Detectors.alienPortFeatures(contacts))
     val servedPort = family(Detectors.servedPortFeatures(summary))
     val alienNet = pins.cache(Detectors.alienNetFeatures(summary, myNets))
 
-    val generalExcluded = c.getSetString("general.excludeIPs", Set.empty)
     // reference semantics (HogSFlow.scala:173-189): per-detector
     // exclusions extend the general list and suppress alerts keyed to an
     // excluded host — LOCAL or ALIEN (the reference also drops flows whose
@@ -198,7 +193,7 @@ object HogzillaBatch {
     // toward a local host's p2p aggregates (they only stop producing
     // alerts KEYED to the excluded IP).
     def excluding(section: String)(alerts: DataFrame): DataFrame = {
-      val ex = (c.getSetString(s"$section.excludeIPs", Set.empty) ++ generalExcluded).toSeq.sorted
+      val ex = d.excludedIPs(section)
       if (ex.isEmpty) alerts
       else alerts.filter((col("my_ip").isNull || !col("my_ip").isin(ex: _*)) &&
         (col("alien_ip").isNull || !col("alien_ip").isin(ex: _*)))
@@ -207,25 +202,17 @@ object HogzillaBatch {
     // derived exclusion sets first (the reference's detector DAG)
     val p2p = pins.cache(excluding("p2p")(Detectors.p2pTalkers(summary, myNets,
       Detectors.ftpTalkerPairs(pair), Detectors.ftpServers(host),
-      minPairs = c.getInt("p2p.minPairs", 5),
-      minPorts = c.getInt("p2p.minPorts", 4),
-      minPairs2 = c.getInt("p2p.minPairs2nd", 10),
-      minPorts2 = c.getInt("p2p.minPorts2nd", 10),
-      minBytes2 = c.getLong("p2p.minBytes2nd", 10000000L))))
+      minPairs = d.p2pMinPairs, minPorts = d.p2pMinPorts, minPairs2 = d.p2pMinPairs2nd,
+      minPorts2 = d.p2pMinPorts2nd, minBytes2 = d.p2pMinBytes2nd)))
     val p2pHosts = p2p.select(col("my_ip")).distinct()
 
     // pass 1: intra-run reputation (HogSFlow.scala:1486, 2029)
     val reputation = ReputationLists(
       proxies = Detectors.proxyServers(servedPort),
-      bigProviders = Detectors.bigProviders(alienNet,
-        minBytes = c.getLong("bigProviders.minBytes", 1073741824L)))
+      bigProviders = Detectors.bigProviders(alienNet, minBytes = d.bigProvidersMinBytes))
 
-    // the scan thresholds the learn pass applies too, as the reference
-    // does before it learns HIST07/HIST08
-    val hScanMinFlows = c.getInt("hPortScan.minFlows", 100)
-    val hScanExcluded = c.getSetString("hPortScan.excludeAlienPorts",
-      Set("80", "443", "53")).toSeq.sorted
-    val vScanMinPorts = c.getInt("vPortScan.minPorts", 3)
+    // hPortScan's ports, which the HIST07 learn pass excludes too
+    val hScanExcluded = d.hScanExcludeAlienPorts.toSeq.sorted
 
     // the current-window frames a detector and a learner both read
     val hist02Cur = Detectors.hist02Current(alienPort)
@@ -233,67 +220,55 @@ object HogzillaBatch {
     val hostPairs = Detectors.hostPairs(pair)
 
     // pass 2: the standing detectors, profile-relative where the
-    // reference's are (HIST01/02/02.1/03/04/05/07/08); each entry is
-    // (conf section, lazily-built frame) so a disabled section never
-    // even constructs its plan
-    val detectorRuns: Seq[(String, () => DataFrame)] = Seq(
+    // reference's are (HIST01/02/02.1/03/04/05/07/08), each built lazily
+    // so that a disabled section never even constructs its plan
+    val sections: Map[String, () => DataFrame] = Map(
       "topTalkers" -> (() => Detectors.topTalkers(host)),
       "SMTPTalkers" -> (() => Detectors.smtpTalkers(host, profiles.hist01, profiles.hist02,
-        minBytes = c.getLong("SMTPTalkers.minBytes", 20971520L))),
+        minBytes = d.smtpMinBytes)),
       "p2p" -> (() => p2p),
       "mediaStreaming" -> (() => Detectors.mediaStreamingClients(pair, myNets, p2pHosts,
-        maxUpload = c.getLong("mediaStreaming.maxUploadBytes", 10000000L),
-        minDownload = c.getLong("mediaStreaming.minDownloadBytes", 1000000L))),
+        maxUpload = d.mediaMaxUploadBytes, minDownload = d.mediaMinDownloadBytes)),
       "atypicalPorts" -> (() => Detectors.atypicalPorts(servedPort, profiles.hist01,
-        reputation.proxies,
-        excludePorts = c.getSetString("atypicalPorts.excludePorts",
-          Set("80", "443", "587", "465", "993", "995")).toSeq.sorted)),
+        reputation.proxies, excludePorts = d.atypicalPortsExcludePorts.toSeq.sorted)),
       "atypicalAlienPorts" -> (() => Detectors.atypicalAlienPorts(contacts, hist02Cur, myNets,
         profiles.hist02, profiles.hist02snap, profiles.hist01, profiles.hist05)),
       "atypicalPairs" -> (() => Detectors.atypicalPairs(hostPairs, profiles.hist03,
-        minPairs = c.getInt("atypicalPairs.minPairs", 300))),
+        minPairs = d.atypicalPairsMinPairs)),
       "atypicalData" -> (() => Detectors.atypicalData(summary, myNets, profiles.hist04,
-        reputation.bigProviders,
-        minBytes = c.getLong("atypicalData.minBytes", 5737418240L))),
+        reputation.bigProviders, minBytes = d.atypicalDataMinBytes)),
       "alienNetworkAtypicalPorts" -> (() =>
         Detectors.alienNetworkAtypicalPorts(hist05Cur, profiles.hist05)),
-      "alien" -> (() => Detectors.alienAccess(summary, myNets,
-        minPairs = c.getInt("alien.minPairs", 20))),
+      "alien" -> (() => Detectors.alienAccess(summary, myNets, minPairs = d.alienMinPairs)),
       "UDPAmplifier" -> (() => Detectors.udpAmplifier(host)),
-      "abusedSMTP" -> (() => Detectors.abusedSmtp(pair,
-        minBytes = c.getLong("abusedSMTP.minBytes", 50000000L))),
-      "dnsTunnel" -> (() => Detectors.dnsTunnel(host,
-        minBytes = c.getLong("dnsTunnel.minBytes", 25000000L))),
-      "ICMPTunnel" -> (() => Detectors.icmpTunnel(host,
-        minBytes = c.getLong("ICMPTunnel.minBytes", 100000000L))),
+      "abusedSMTP" -> (() => Detectors.abusedSmtp(pair, minBytes = d.abusedSmtpMinBytes)),
+      "dnsTunnel" -> (() => Detectors.dnsTunnel(host, minBytes = d.dnsTunnelMinBytes)),
+      "ICMPTunnel" -> (() => Detectors.icmpTunnel(host, minBytes = d.icmpMinBytes)),
       "hPortScan" -> (() => Detectors.hPortScan(alienPort, myNets, profiles.hist07,
-        profiles.hist01, p2pHosts, minPairsPort = hScanMinFlows,
+        profiles.hist01, p2pHosts, minPairsPort = d.hScanMinFlows,
         excludeAlienPorts = hScanExcluded)),
       "vPortScan" -> (() => Detectors.vPortScan(pair, myNets, profiles.hist08, p2pHosts,
-        minPorts = vScanMinPorts)),
+        minPorts = d.vScanMinPorts)),
       "DDoS" -> (() => Detectors.ddos(summary, hostPairs,
-        minFlows = c.getInt("DDoS.minFlows", 50),
-        minPairs = c.getInt("DDoS.minPairs", 20))),
+        minFlows = d.ddosMinFlows, minPairs = d.ddosMinPairs)),
       "BotNet" -> (() => Detectors.botnetCC(summary, blacklist,
-        minPktsPerFlow = c.getInt("BotNet.minPktsPerFlow", 20))),
-      "osDiscovery" -> (() => Detectors.osDiscovery(summary, osRepos)),
-    )
-    val enabled = detectorRuns.filterNot { case (section, _) => c.isDisabled(section) }
-      .map { case (section, build) => excluding(section)(build()) }
+        minPktsPerFlow = d.botnetMinPktsPerFlow)),
+      "osDiscovery" -> (() => Detectors.osDiscovery(summary, osRepos)))
+    val enabled = Detection.Sections.map(_.name).filter(d.enabled)
+      .map(section => excluding(section)(sections(section)()))
     // the alert union, pinned after p2p so its cached plan reads the p2p
     // pin, in one partition (scaladoc above); every section disabled → an
     // empty frame with the alert schema
     val bare = pins.cache(enabled.reduceOption(_ union _)
-      .getOrElse(detectorRuns.head._2().limit(0)).repartition(1))
+      .getOrElse(sections(Detection.Sections.head.name)().limit(0)).repartition(1))
 
     // alert payloads: bounded top-K rendered flow lists for every alerted
     // host (HogSFlow.scala:662-713) — my_ip-keyed alerts get the local
     // host's flows, alien-only alerts (e.g. alienAccess) the alien's
-    val flowListLimit = c.getInt("alert.maxFlowList", Detectors.FlowListLimit)
     val detailMy = Detectors.flowDetail(summary, bare.filter(col("my_ip").isNotNull),
-      "my_ip", flowListLimit)
+      "my_ip", d.maxFlowList)
     val detailAlien = Detectors.flowDetail(summary,
-      bare.filter(col("my_ip").isNull && col("alien_ip").isNotNull), "alien_ip", flowListLimit)
+      bare.filter(col("my_ip").isNull && col("alien_ip").isNotNull), "alien_ip", d.maxFlowList)
       .withColumnRenamed("flows_detail", "flows_detail_alien")
     // event-row fidelity (HogEvent.scala:61-82): every alert carries the
     // reference's numeric signature (id/title/priority — broadcast join
@@ -343,9 +318,9 @@ object HogzillaBatch {
       hist06 = ProfileStore.update(profiles.hist06,
         Detectors.hist06Current(summary, alienNet, myNets)),
       hist07 = ProfileStore.updateMax(profiles.hist07,
-        Detectors.hist07Current(alienPort, p2pHosts, hScanMinFlows, hScanExcluded)),
+        Detectors.hist07Current(alienPort, p2pHosts, d.hScanMinFlows, hScanExcluded)),
       hist08 = ProfileStore.update(profiles.hist08,
-        Detectors.hist08Current(pair, p2pHosts, vScanMinPorts)))
+        Detectors.hist08Current(pair, p2pHosts, d.vScanMinPorts)))
     // rebalanced so AQE sizes their files (scaladoc above)
     (withDetail, learned.map(_.hint("rebalance")), reputation, () => pins.release())
   }

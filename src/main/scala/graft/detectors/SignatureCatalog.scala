@@ -1,6 +1,6 @@
 package graft.detectors
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's numeric alert-signature catalog, re-expressed as a
@@ -88,6 +88,16 @@ object SignatureCatalog {
     "atypicalAccess" -> 826001201L,
     "impossibleTravel" -> 826002001L,
   )
+
+  /** The signature of an atypicalAccess alert from its three 0/1 family
+    * flags (HogAuth.scala:68-71): the combined "Atypical user access" id
+    * when more than one family fired, else the id of the one that did.
+    */
+  def authSignature(city: Column, userAgent: Column, service: Column): Column =
+    when(city + userAgent + service > 1, lit(826001204L))
+      .when(city === 1, lit(826001201L))
+      .when(userAgent === 1, lit(826001202L))
+      .otherwise(lit(826001203L))
 
   /** The catalog as a DataFrame (a broadcast-sized dimension). */
   def catalog(spark: SparkSession): DataFrame = {

@@ -73,6 +73,12 @@ class CurationSpec extends AnyFunSuite {
     assert(byField.isEmpty, s"keys sharing one field: $byField")
   }
 
+  test("a value that does not parse fails, naming the key") {
+    val e = intercept[IllegalArgumentException](
+      Curation.fromConfig(GraftConfig.parse("curation { qualityMin = \"0.5x\" }")))
+    assert(e.getMessage.contains("curation.qualityMin") && e.getMessage.contains("0.5x"))
+  }
+
   test("no main source outside Curation.scala names a curation.* key") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: $root")

@@ -504,10 +504,7 @@ class DetectorSpec extends AnyFunSuite {
   test("HogzillaBatch release() drops pins that never materialized") {
     // only topTalkers runs and only the alerts are materialized, so the
     // p2p pin (read by the hist07/hist08 learn pass) is never filled
-    val others = Seq("SMTPTalkers", "p2p", "mediaStreaming", "atypicalPorts",
-      "atypicalAlienPorts", "atypicalPairs", "atypicalData", "alienNetworkAtypicalPorts",
-      "alien", "UDPAmplifier", "abusedSMTP", "dnsTunnel", "ICMPTunnel", "hPortScan",
-      "vPortScan", "DDoS", "BotNet", "osDiscovery")
+    val others = Detection.Sections.map(_.name).filterNot(_ == "topTalkers")
     val before = CacheProbe.entries(spark)
     val (alerts, updated, _, release) =
       fullDag(GraftConfig.parse(others.map(s => s"$s.disabled = 1").mkString("\n")))
