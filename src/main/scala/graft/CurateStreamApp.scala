@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.TextFunctions._
 import graft.operators.{Buckets, Dedup, Pin, StateSwap}
@@ -78,15 +78,16 @@ import graft.streaming.StreamingJobs
   * every other state root — see [[StateSwap]] for the one protocol and
   * its recovery) whose existence is the applied marker — a replay is
   * detected and skipped, and the per-batch-id output directory is
-  * overwritten, never appended, so a replayed write replaces itself. A
-  * commit killed before its promotion leaves no `batch=<id>`, so the
-  * replay runs again and its own commit recovers the debris first; one
-  * killed after it is skipped, and the next fold reaps its side entries.
-  * Every `curation.foldEvery` batches the delta log folds into the
-  * compacted BASE tables under `corpus_state` in a single
-  * [[StateSwap.swapAll]] (fingerprints, band index, bucket sizes advance
-  * together; the fold-through marker rides inside the fp table), and the
-  * folded deltas are reaped. Per-batch write cost is therefore O(batch),
+  * overwritten, never appended, so a replayed write replaces itself. The
+  * log is listed by [[StateSwap.roots]]: a commit killed before its
+  * promotion leaves only side entries, which list as not committed, so
+  * the replay runs again and its own commit recovers the debris first;
+  * one killed after it is skipped. Every `curation.foldEvery` batches
+  * the delta log folds into the compacted BASE tables under
+  * `corpus_state` in a single [[StateSwap.swapAll]] (every table of
+  * [[Tables]] advances together; the fold-through marker rides inside
+  * the fp table), and [[StateSwap.drop]] reaps each folded delta with
+  * its side entries. Per-batch write cost is therefore O(batch),
   * not O(corpus): at 100 TB a full-state rewrite per 10-second trigger
   * would be the pipeline's entire IO budget, while the delta log
   * amortizes the corpus rewrite across the fold interval (or hands it to
@@ -216,122 +217,109 @@ object CurateStreamApp {
   def run(spark: SparkSession, stream: DataFrame, stateDir: String,
           outDir: String, intervalSecs: Int,
           config: GraftConfig = GraftConfig.empty)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    // read once, so a conf that does not parse fails before the query starts
+    val curation = Curation.fromConfig(config)
     StreamingJobs.consumeMicroBatches(stream, intervalSecs,
         checkpointDir = Some(s"$stateDir/checkpoint")) { (batch, batchId) =>
-      if (!batch.isEmpty) processBatch(spark, batch, stateDir, outDir, config, batchId)
+      if (!batch.isEmpty) processBatch(spark, batch, stateDir, outDir, curation, batchId)
     }
+  }
+
+  /** One table of the corpus state: its name under `corpus_state` and
+    * in a delta, and its DDL schema (the empty table a cold start reads).
+    * A `logged` table's state is its base ∪ every live delta that holds
+    * it; the one derived table, `bucket_sizes`, is the base plus the live
+    * deltas' band counts.
+    */
+  private final case class Table(name: String, ddl: String, logged: Boolean = true)
+
+  /** The corpus state's tables, in commit order. A delta holds `fps` and
+    * `bands` always, the media tables only when its batch admitted media;
+    * the base `fps` carries the fold-through marker row.
+    */
+  private val Tables = Seq(
+    Table("fps", "fp string, doc_id bigint"),
+    Table("bands", "band int, sig string, doc_id bigint"),
+    Table("bucket_sizes", "band int, sig string, n bigint", logged = false),
+    // the m4 screen's index: phash travels with the band row, so the
+    // stream-side Hamming verify needs no second lookup
+    Table("img_bands", "band int, sig bigint, media_id bigint, phash bigint"),
+    // the m9 screen's index: one row per DISTINCT (clip, frame fp)
+    Table("audio_fps", "media_id bigint, fp bigint"))
 
   /** The corpus state as ONE logical view over its log-structured layout:
     * compacted BASE tables under `corpus_state` (atomically replaced by
     * [[foldDeltas]]) plus one small immutable DELTA directory per applied
-    * micro-batch under `corpus_deltas/batch=<id>`. `appliedThrough` is
-    * the base's fold-through batch id; `liveDeltas` the committed batch
-    * ids newer than it (stale delta dirs at or below the marker are
-    * fold-then-crash debris and are excluded here, deleted by the next
-    * fold). Bucket sizes are the base table plus the live deltas' band
-    * counts — an aggregation of a few batch-sized frames, never a rescan
-    * of the corpus index.
+    * micro-batch under `corpus_deltas/batch=<id>`, each table of
+    * [[Tables]] by name. `appliedThrough` is the base's fold-through
+    * batch id; `liveDeltas` the committed batch ids newer than it (stale
+    * delta dirs at or below the marker are fold-then-crash debris and are
+    * excluded here, dropped by the next fold). Bucket sizes are the base
+    * table plus the live deltas' band counts — an aggregation of a few
+    * batch-sized frames, never a rescan of the corpus index.
     */
-  private[graft] final case class CorpusState(fps: DataFrame, bands: DataFrame,
-      sizes: DataFrame, imgBands: DataFrame, audioFps: DataFrame,
-      appliedThrough: Long, liveDeltas: Seq[Long])
-
-  /** A delta log entry: the committed `batch=<id>` directory, or one of
-    * [[StateSwap]]'s side entries (`.staging`, `.swap`, `.old`) that a
-    * commit killed mid-swap leaves beside it.
-    */
-  private val DeltaEntry = """batch=(\d+)(\..*)?""".r
-
-  /** The delta log's entries as (path, batch id, committed?). */
-  private def deltaEntries(spark: SparkSession, deltaRoot: String): Seq[(Path, Long, Boolean)] = {
-    val fs = StateSwap.fileSystem(spark, deltaRoot)
-    val root = new Path(deltaRoot)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath).flatMap(p => p.getName match {
-      case DeltaEntry(id, side) => Some((p, id.toLong, side == null))
-      case _ => None
-    })
+  private[graft] final case class CorpusState(tables: Map[String, DataFrame],
+      appliedThrough: Long, liveDeltas: Seq[Long]) {
+    def fps: DataFrame = tables("fps")
+    def bands: DataFrame = tables("bands")
+    def sizes: DataFrame = tables("bucket_sizes")
+    def imgBands: DataFrame = tables("img_bands")
+    def audioFps: DataFrame = tables("audio_fps")
   }
 
+  private def delta(stateDir: String, batchId: Long) = s"$stateDir/corpus_deltas/batch=$batchId"
+
+  /** The delta log's batch ids, each with whether its delta is committed. */
+  private def deltaIds(spark: SparkSession, stateDir: String): Map[Long, Boolean] =
+    StateSwap.roots(spark, s"$stateDir/corpus_deltas").collect {
+      case (s"batch=$id", committed) if id.nonEmpty && id.forall(_.isDigit) =>
+        id.toLong -> committed
+    }
+
   private[graft] def readCorpusState(spark: SparkSession, stateDir: String): CorpusState = {
-    val stateRoot = s"$stateDir/corpus_state"
-    val deltaRoot = s"$stateDir/corpus_deltas"
-    val allFps = StateSwap.readTableOrElse(spark, stateRoot, "fps",
-      spark.range(0).select(col("id").cast("string").as("fp"), col("id").as("doc_id")))
-    val appliedThrough = allFps.filter(col("fp") === BatchMarker)
+    def read(root: String, t: Table) = StateSwap.readTableOrElse(spark, root, t.name,
+      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(t.ddl)))
+    val marked = Tables.map(t => t.name -> read(s"$stateDir/corpus_state", t)).toMap
+    val appliedThrough = marked("fps").filter(col("fp") === BatchMarker)
       .select(col("doc_id")).collect().headOption.map(_.getLong(0)).getOrElse(-1L)
-    val baseFps = allFps.filter(col("fp") =!= BatchMarker)
-    val baseBands = StateSwap.readTableOrElse(spark, stateRoot, "bands",
-      spark.range(0).select(col("id").cast("int").as("band"),
-        col("id").cast("string").as("sig"), col("id").as("doc_id")))
-    val baseSizes = StateSwap.readTableOrElse(spark, stateRoot, "bucket_sizes",
-      spark.range(0).select(col("id").cast("int").as("band"),
-        col("id").cast("string").as("sig"), col("id").as("n")))
-    // image band index (the m4 screen's state; phash travels with the
-    // band row so the stream-side Hamming verify needs no second lookup).
-    // Absent unless the image screen has ever admitted an image.
-    def emptyImgBands = spark.range(0).select(col("id").cast("int").as("band"),
-      col("id").as("sig"), col("id").as("media_id"), col("id").as("phash"))
-    val baseImg = StateSwap.readTableOrElse(spark, stateRoot, "img_bands", emptyImgBands)
-    // audio fingerprint index (the m9 screen's state: one row per
-    // DISTINCT (clip, frame fp)). Absent unless the audio screen has
-    // ever admitted a clip.
-    def emptyAudioFps = spark.range(0).select(
-      col("id").as("media_id"), col("id").as("fp"))
-    val baseAud = StateSwap.readTableOrElse(spark, stateRoot, "audio_fps", emptyAudioFps)
-    val live = deltaEntries(spark, deltaRoot)
-      .collect { case (_, id, true) if id > appliedThrough => id }.sorted
-    if (live.isEmpty)
-      CorpusState(baseFps, baseBands, baseSizes, baseImg, baseAud, appliedThrough, live)
-    else {
-      val fsRoot = StateSwap.fileSystem(spark, deltaRoot)
-      val dFps = live.map(b => spark.read.parquet(s"$deltaRoot/batch=$b/fps"))
-        .reduce(_ unionByName _)
-      val dBands = live.map(b => spark.read.parquet(s"$deltaRoot/batch=$b/bands"))
-        .reduce(_ unionByName _)
-      // media tables are only present in deltas whose batch admitted media
-      def foldMedia(base: DataFrame, table: String) = live
-        .filter(b => fsRoot.exists(new Path(s"$deltaRoot/batch=$b/$table")))
-        .map(b => spark.read.parquet(s"$deltaRoot/batch=$b/$table"))
-        .foldLeft(base)(_ unionByName _)
-      val sizes = baseSizes
-        .join(dBands.groupBy(col("band"), col("sig")).agg(count(lit(1)).as("add")),
+    val base = marked.updated("fps", marked("fps").filter(col("fp") =!= BatchMarker))
+    val live = deltaIds(spark, stateDir)
+      .collect { case (id, true) if id > appliedThrough => id }.toSeq.sorted
+    val deltas = Tables.filter(_.logged)
+      .map(t => t.name -> live.map(b => read(delta(stateDir, b), t))).toMap
+    val logged = deltas.map { case (name, ds) => name -> ds.foldLeft(base(name))(_ unionByName _) }
+    val sizes =
+      if (live.isEmpty) base("bucket_sizes")
+      else base("bucket_sizes")
+        .join(deltas("bands").reduce(_ unionByName _)
+            .groupBy(col("band"), col("sig")).agg(count(lit(1)).as("add")),
           Seq("band", "sig"), "full_outer")
         .select(col("band"), col("sig"),
           (coalesce(col("n"), lit(0L)) + coalesce(col("add"), lit(0L))).as("n"))
-      CorpusState(baseFps.unionByName(dFps), baseBands.unionByName(dBands),
-        sizes, foldMedia(baseImg, "img_bands"), foldMedia(baseAud, "audio_fps"),
-        appliedThrough, live)
-    }
+    CorpusState(logged.updated("bucket_sizes", sizes), appliedThrough, live)
   }
 
   /** Compact the delta log into the base tables: fold every live delta
-    * into `corpus_state` (one [[StateSwap.swapAll]], marker = highest
-    * folded batch id), then delete the folded delta directories and any
-    * side entries a killed commit left beside them. A crash after the
-    * swap leaves deltas at or below the marker on disk — they are
-    * ignored by [[readCorpusState]] and reaped here next time.
-    * Amortizes the O(corpus) rewrite across `curation.foldEvery` batches;
-    * at production scale this fold can also run out-of-band.
+    * into `corpus_state` (one [[StateSwap.swapAll]] of every table of
+    * [[Tables]], marker = highest folded batch id), then drop the folded
+    * deltas with any side entries a killed commit left beside them
+    * ([[StateSwap.drop]]). A crash after the swap leaves deltas at or
+    * below the marker on disk — they are ignored by [[readCorpusState]]
+    * and dropped here next time. Amortizes the O(corpus) rewrite across
+    * `curation.foldEvery` batches; at production scale this fold can also
+    * run out-of-band.
     */
   private[graft] def foldDeltas(spark: SparkSession, stateDir: String): Unit = {
-    val stateRoot = s"$stateDir/corpus_state"
-    val deltaRoot = s"$stateDir/corpus_deltas"
     val state = readCorpusState(spark, stateDir)
     val upTo = (state.liveDeltas :+ state.appliedThrough).max
     if (state.liveDeltas.nonEmpty) {
-      val withMarker = state.fps.unionByName(spark.range(1)
-        .select(lit(BatchMarker).as("fp"), lit(upTo).as("doc_id")))
-      StateSwap.swapAll(stateRoot, Seq(
-        "fps" -> withMarker, "bands" -> state.bands,
-        "bucket_sizes" -> state.sizes, "img_bands" -> state.imgBands,
-        "audio_fps" -> state.audioFps))
+      val folded = state.tables.updated("fps", state.fps.unionByName(spark.range(1)
+        .select(lit(BatchMarker).as("fp"), lit(upTo).as("doc_id"))))
+      StateSwap.swapAll(s"$stateDir/corpus_state", Tables.map(t => t.name -> folded(t.name)))
     }
-    val fs = StateSwap.fileSystem(spark, deltaRoot)
-    deltaEntries(spark, deltaRoot).foreach { case (p, id, _) =>
-      if (id <= upTo) fs.delete(p, true)
-    }
+    deltaIds(spark, stateDir).keys.filter(_ <= upTo)
+      .foreach(id => StateSwap.drop(spark, delta(stateDir, id)))
   }
 
   /** One micro-batch: screen, write survivors to
@@ -339,10 +327,10 @@ object CurateStreamApp {
     * delta `batch=<batchId>`. A batch id already applied is a no-op.
     */
   def processBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
-                   outDir: String, config: GraftConfig = GraftConfig.empty,
+                   outDir: String, curation: Curation = Curation.default,
                    batchId: Long): Unit = {
     val pins = Pin.scope() // every pin of the batch is read only by its own writes
-    try screenBatch(spark, batch, stateDir, outDir, Curation.fromConfig(config), batchId, pins)
+    try screenBatch(spark, batch, stateDir, outDir, curation, batchId, pins)
     finally pins.release()
   }
 
@@ -361,8 +349,6 @@ object CurateStreamApp {
     import curation._
     val state = readCorpusState(spark, stateDir)
     if (batchId <= state.appliedThrough || state.liveDeltas.contains(batchId)) return
-    val stateFps = state.fps
-    val stateBands = state.bands
 
     // 1. quality gate — selectable (curation.qualityGate, same modes as
     // CurateApp): score and gopher are row-local, no shuffle; perplexity
@@ -390,7 +376,7 @@ object CurateStreamApp {
 
     // 2. exact dedup: first-in-batch occurrence keeps (window min over
     // the fingerprint), then drop anything the corpus already has
-    val batchUnique = firstUnseen(qualified, stateFps)
+    val batchUnique = firstUnseen(qualified, state.fps)
 
     // 3. near-dup screen: row-local band signatures against the corpus
     // band index, with the st7 megabucket guard driven by the
@@ -401,15 +387,14 @@ object CurateStreamApp {
     // set is config-bounded tiny; the remaining lookup is a semi join
     // whose small side is the batch (broadcast), so the state is
     // scanned, never shuffled.
-    val stateSizes = state.sizes
-    val oversized = Buckets.oversized(stateSizes, Seq("band", "sig"), "n", maxBucket)
+    val oversized = Buckets.oversized(state.sizes, Seq("band", "sig"), "n", maxBucket)
     // Only the MinHash widths apply here (nearDupMethod selects the BATCH
     // app's generator only); see the DedupWidths scaladoc for the
     // state-directory width-compatibility contract.
     val batchBands = Dedup.lshBands(batchUnique, widths.numPerms, widths.numBands)
     val corpusHit = batchBands
       .join(oversized, Seq("band", "sig"), "left_anti")
-      .join(stateBands, Seq("band", "sig"), "left_semi")
+      .join(state.bands, Seq("band", "sig"), "left_semi")
       .select(col("doc_id")).distinct()
     // in-batch near-dups: a doc sharing any band bucket with an EARLIER
     // (smaller doc_id) doc of the same batch is dropped too — greedy
@@ -446,21 +431,16 @@ object CurateStreamApp {
         // megabucket guard (the text screen's maxBucket trade at the
         // image index): the verify join's fanout per batch image is the
         // state bucket size, so a band shared by a million near-identical
-        // corpus images would detonate one lookup. The guard counts ONLY
-        // the state rows the batch's own (band, sig) keys touch — a
-        // broadcast semi-join subset, no extra state table, no O(corpus)
-        // pass — pins that subset, and drops oversized buckets before the
-        // fanout (their members still screen via their other 3 bands).
-        val touched = state.imgBands
-          .withColumnRenamed("media_id", "state_id")
-          .withColumnRenamed("phash", "state_ph")
-          .join(broadcast(ib.select(col("band"), col("sig")).distinct()),
-            Seq("band", "sig"), "left_semi")
-          .transform(pins.truncate(_)) // read twice: bucket count + verify join
-        val hot = Buckets.hot(touched, Seq("band", "sig"), maxBucket)
+        // corpus images would detonate one lookup. Buckets.lookup counts
+        // ONLY the state rows the batch's own (band, sig) keys touch and
+        // drops oversized buckets before the fanout (their members still
+        // screen via their other 3 bands).
+        val indexed = Buckets.lookup(state.imgBands
+            .withColumnRenamed("media_id", "state_id")
+            .withColumnRenamed("phash", "state_ph"),
+          ib, Seq("band", "sig"), maxBucket, pins)
         val imgCorpusHit = ib
-          .join(touched.join(broadcast(hot), Seq("band", "sig"), "left_anti"),
-            Seq("band", "sig"))
+          .join(indexed, Seq("band", "sig"))
           .filter(bit_count(col("__h").bitwiseXOR(col("state_ph"))) <= imageMaxHamming)
           .select(col("media_id").as("doc_id")).distinct()
         val a = ib.select(col("band"), col("sig"),
@@ -499,10 +479,8 @@ object CurateStreamApp {
         // same touched-subset megabucket guard as the image screen, on
         // the fp key (a frame fp shared by a million corpus clips —
         // boilerplate audio — would fan the verify join out per arrival)
-        val audTouched = state.audioFps.withColumnRenamed("media_id", "state_id")
-          .join(broadcast(sigs.select(col("fp")).distinct()), Seq("fp"), "left_semi")
-          .transform(pins.truncate(_)) // read twice: bucket count + verify join
-        val audHot = Buckets.hot(audTouched, Seq("fp"), maxBucket)
+        val audIndexed = Buckets.lookup(state.audioFps.withColumnRenamed("media_id", "state_id"),
+          sigs, Seq("fp"), maxBucket, pins)
         // containment denominator = least(nfp_arrival, nfp_state), the
         // m9/audioNearDupPairs verify: an arrival that EXTENDS a corpus
         // clip is caught too (its superset fp set contains the state
@@ -512,13 +490,15 @@ object CurateStreamApp {
         // would undercount: they only see fps the batch also carries) —
         // the candidate set is bounded by batch fps × maxBucket, so the
         // extra pass is a scan plus a candidate-sized aggregate, never a
-        // corpus shuffle.
-        val candIds = audTouched.select(col("state_id")).distinct()
+        // corpus shuffle. The candidates are the GUARDED subset's ids,
+        // which changes no verdict: stateNfp is joined below only on the
+        // state ids that survive the guard.
+        val candIds = audIndexed.select(col("state_id")).distinct()
         val stateNfp = state.audioFps.withColumnRenamed("media_id", "state_id")
           .join(broadcast(candIds), Seq("state_id"), "left_semi")
           .groupBy(col("state_id")).agg(count(lit(1)).as("nfp_state"))
         val audCorpusHit = sigs
-          .join(audTouched.join(broadcast(audHot), Seq("fp"), "left_anti"), Seq("fp"))
+          .join(audIndexed, Seq("fp"))
           .groupBy(col("media_id"), col("state_id")).agg(count(lit(1)).as("shared"))
           .join(nfp, Seq("media_id"))
           .join(stateNfp, Seq("state_id"))
@@ -594,13 +574,8 @@ object CurateStreamApp {
             // the media screens' trade), then exact-Jaccard verify against
             // the prebuilt per-doc bench shingle sets — precision-leaning
             // (flags near-clones of benchmark docs, not common fragments)
-            val touched = benchBands
-              .join(broadcast(batchBands.select(col("band"), col("sig")).distinct()),
-                Seq("band", "sig"), "left_semi")
-              .transform(pins.truncate(_)) // read twice: bucket count + candidates
-            val hot = Buckets.hot(touched, Seq("band", "sig"), maxBucket)
             val pairs = batchBands
-              .join(touched.join(broadcast(hot), Seq("band", "sig"), "left_anti"),
+              .join(Buckets.lookup(benchBands, batchBands, Seq("band", "sig"), maxBucket, pins),
                 Seq("band", "sig"))
               .select(col("doc_id"), col("bench_id")).distinct()
               .transform(pins.truncate(_)) // read 3×: verify, nT prune, final join
@@ -654,7 +629,7 @@ object CurateStreamApp {
         // two arrivals whose texts differ only inside excised spans
         // converge on one cleaned fingerprint — first-keeps again on the
         // REWRITTEN fp (batch-sized window), then the state re-check
-        firstUnseen(rewritten, stateFps)
+        firstUnseen(rewritten, state.fps)
     }).transform(pins.truncate(_))
 
     survivors.drop("fp").write.mode(SaveMode.Overwrite)
@@ -678,10 +653,11 @@ object CurateStreamApp {
     // batches instead. Deltas are batch-sized: one file per table keeps
     // the pre-fold file count at 2-4 per batch (the media tables only
     // when the batch admitted media).
-    StateSwap.swapAll(s"$stateDir/corpus_deltas/batch=$batchId",
-      (Seq("fps" -> survivors.select(col("fp"), col("doc_id")), "bands" -> survivorBands) ++
-        survivorImgBands.map("img_bands" -> _) ++ survivorAudioFps.map("audio_fps" -> _))
-        .map { case (name, df) => name -> df.coalesce(1) })
+    val advance = Map("fps" -> survivors.select(col("fp"), col("doc_id")),
+      "bands" -> survivorBands) ++
+      survivorImgBands.map("img_bands" -> _) ++ survivorAudioFps.map("audio_fps" -> _)
+    StateSwap.swapAll(delta(stateDir, batchId),
+      Tables.flatMap(t => advance.get(t.name).map(t.name -> _.coalesce(1))))
     if (state.liveDeltas.size + 1 >= foldEvery) foldDeltas(spark, stateDir)
   }
 }

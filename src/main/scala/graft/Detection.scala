@@ -14,9 +14,10 @@ import graft.operators.AlertSink
   *
   * A value that does not parse fails [[Detection.fromConfig]], naming the
   * key and the value. A key this value does not read, inside a section it
-  * does, is reported ([[Detection.unknownKeys]]) and otherwise ignored, so
-  * that a conf written for the reference, which has keys graft does not
-  * implement, still loads.
+  * does, is reported ([[Detection.unknownKeys]], printed once per app run
+  * by [[Detection.warnUnknownKeys]]) and otherwise ignored, so that a conf
+  * written for the reference, which has keys graft does not implement,
+  * still loads.
   *
   * `gates` holds each detector section's `disabled` flag and `excludeIPs`
   * list, keyed by the section's name in [[Detection.Sections]]. The auth
@@ -233,14 +234,18 @@ object Detection {
   def unknownKeys(c: GraftConfig): Seq[String] =
     c.entries.keys.filter(k => KnownSections(k.takeWhile(_ != '.')) && !Keys(k)).toSeq.sorted
 
-  /** The keys of `c`; a missing key keeps its default, a value that does
-    * not parse throws, and each unknown key is one stderr line.
+  /** One stderr line per key of [[unknownKeys]]; each app's `run` calls
+    * it once.
     */
-  def fromConfig(c: GraftConfig): Detection = {
+  def warnUnknownKeys(c: GraftConfig): Unit =
     unknownKeys(c).foreach(k =>
       System.err.println(s"[Detection] unknown key $k => '${c.entries(k)}'; ignored"))
+
+  /** The keys of `c`; a missing key keeps its default and a value that
+    * does not parse throws.
+    */
+  def fromConfig(c: GraftConfig): Detection =
     read(new Get {
       def apply[T](key: String, default: T, lit: Literal[T]): T = c.strict(key, default, lit)
     })
-  }
 }

@@ -62,6 +62,7 @@ object GraftApp {
           sink: Option[graft.operators.AlertSink.Sink] = None): Unit = {
     // read first, so a broken conf fails before any Spark work
     val alertNotify = Detection.fromConfig(config).alertNotify
+    Detection.warnUnknownKeys(config)
     val samples = spark.read.parquet(samplesPath)
     val profiles = ProfileTables.fromSeq(ProfileTables.Names.map(h =>
       StateSwap.readOrElse(spark, s"$stateDir/$h", HogzillaBatch.emptyProfiles(spark))))

@@ -8,10 +8,11 @@ package graft
   *
   * The file format is the HOCON subset those conf files actually use —
   * `section { key = "value" }` blocks (nesting allowed), bare or quoted
-  * scalar values, `#`/`//` comments, `Set(...)` literals for exclusion
-  * lists, last duplicate key wins. Parsed with a ~40-line reader because
-  * the runtime classpath ships no config library and the project rule is
-  * zero extra dependencies.
+  * scalar values, `#` comments and `//` comments (at line start or after
+  * whitespace, so `file:/var//spool` keeps its `//`), `Set(...)` literals
+  * for exclusion lists, last duplicate key wins. Parsed with a ~40-line
+  * reader because the runtime classpath ships no config library and the
+  * project rule is zero extra dependencies.
   *
   * The accessors (`getString`/`getInt`/`getLong`/`getDouble`/
   * `getSetString`/`getSetInt`) are the generic, lenient surface and
@@ -103,13 +104,15 @@ object GraftConfig {
     val assign = """([A-Za-z0-9_.-]+)\s*=\s*(.*)""".r
     val sectionOpen = """([A-Za-z0-9_.-]+)\s*\{""".r
     def stripComment(line: String): String = {
-      // comments start at # or // outside double quotes
+      // comments start outside double quotes, at # or at a // that
+      // begins the line or follows whitespace
       var inQ = false
       var i = 0
       while (i < line.length) {
         val c = line.charAt(i)
         if (c == '"') inQ = !inQ
-        else if (!inQ && (c == '#' || (c == '/' && i + 1 < line.length && line.charAt(i + 1) == '/')))
+        else if (!inQ && (c == '#' || (line.startsWith("//", i) &&
+            (i == 0 || line.charAt(i - 1).isWhitespace))))
           return line.substring(0, i)
         i += 1
       }

@@ -65,11 +65,15 @@ object GraftContinuousApp {
   def run(spark: SparkSession, stream: DataFrame, stateDir: String,
           outDir: String, intervalSecs: Int,
           config: GraftConfig = GraftConfig.empty)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    // read once, so a conf that does not parse fails before the query starts
+    val detection = Detection.fromConfig(config)
+    Detection.warnUnknownKeys(config)
     StreamingJobs.consumeMicroBatches(stream, intervalSecs,
         checkpointDir = Some(s"$stateDir/checkpoint")) { (batch, batchId) =>
-      if (!batch.isEmpty) processBatch(spark, batch, stateDir, outDir, batchId, config)
+      if (!batch.isEmpty) processBatch(spark, batch, stateDir, outDir, batchId, detection)
     }
+  }
 
   /** One micro-batch: detect against saved profiles, write alerts,
     * learn, stage-swap the profile state (with the applied batch id
@@ -77,8 +81,7 @@ object GraftContinuousApp {
     */
   def processBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
                    outDir: String, batchId: Long,
-                   config: GraftConfig = GraftConfig.empty): Unit = {
-    val d = Detection.fromConfig(config)
+                   detection: Detection = Detection.default): Unit = {
     // both state tables (profiles + city coords) live under one root and
     // promote in a single StateSwap.swapAll, so the replay marker inside
     // the profiles is provably in sync with the coords table too
@@ -111,13 +114,13 @@ object GraftContinuousApp {
     // 2 = nothing (also skip learning below)
     def gated(flag: String, level: Int) = if (level != 0) lit(0) else col(flag)
     val atypical = AuthProfiling.atypicalAccess(batch, profiles, cityCoords,
-        radiusKm = d.allowedRadixKm)
-      .withColumn("atypical_city", gated("atypical_city", d.locationLevel))
-      .withColumn("atypical_ua", gated("atypical_ua", d.userAgentLevel))
-      .withColumn("atypical_service", gated("atypical_service", d.systemLevel))
+        radiusKm = detection.allowedRadixKm)
+      .withColumn("atypical_city", gated("atypical_city", detection.locationLevel))
+      .withColumn("atypical_ua", gated("atypical_ua", detection.userAgentLevel))
+      .withColumn("atypical_service", gated("atypical_service", detection.systemLevel))
       .filter(col("atypical_city") + col("atypical_ua") + col("atypical_service") > 0)
       .withColumn("detector", lit("atypicalAccess"))
-    val travel = AuthProfiling.impossibleTravel(batch, maxKmh = d.travelMaxKmh)
+    val travel = AuthProfiling.impossibleTravel(batch, maxKmh = detection.travelMaxKmh)
       .select(col("user_name"), col("city"), lit(null).cast("string").as("user_agent"),
         lit(null).cast("string").as("service"), col("speed_kmh").as("min_city_dist_km"),
         lit(1).as("atypical_city"), lit(0).as("atypical_ua"), lit(0).as("atypical_service"))
@@ -142,8 +145,9 @@ object GraftContinuousApp {
     alertRows.write.mode(SaveMode.Overwrite).parquet(s"$outDir/auth_alerts/batch=$batchId")
 
     // learn pass: merge this batch into every family's histograms
-    val learning = Seq(("HIST20", "city", d.locationLevel),
-        ("HIST21", "user_agent", d.userAgentLevel), ("HIST22", "service", d.systemLevel))
+    val learning = Seq(("HIST20", "city", detection.locationLevel),
+        ("HIST21", "user_agent", detection.userAgentLevel),
+        ("HIST22", "service", detection.systemLevel))
       .filter(_._3 != 2)
     val updated =
       if (learning.isEmpty) profiles

@@ -23,6 +23,7 @@ import org.apache.spark.sql.functions._
   *    already shuffles on the bucket key;
   *  - [[kept]] / [[hot]] / [[oversized]]: the count-aggregate key gate,
   *    for a stream that must not be sorted just to size its buckets;
+  *  - [[lookup]]: the guarded state-index lookup of the stream screens;
   *  - [[pairs]] and [[sharedGramPairs]]: sorted member lists expanded
   *    by the compiled [[graft.expressions.PairCombinations]] kernel;
   *  - [[selfJoin]]: the in-bucket self-join, spread over every core;
@@ -103,6 +104,24 @@ object Buckets {
   def oversized(sizes: DataFrame, keys: Seq[String], sizeCol: String,
       maxBucket: Int): DataFrame =
     sizes.filter(col(sizeCol) > maxBucket).select(keys.map(col): _*)
+
+  /** The guarded state-index lookup of the stream screens (image bands,
+    * audio fps, bench bands): the rows of `index` whose `keys` the batch
+    * frame `probe` carries — a broadcast semi-join on the batch's
+    * distinct keys, so the index is scanned, never shuffled — pinned
+    * through the batch's `pins` (read twice: the bucket count and the
+    * lookup), minus the buckets holding more than `maxBucket` of them
+    * ([[hot]], a broadcast anti-join). The count sees only the touched
+    * subset: no size table and no O(index) pass, and a verify join after
+    * it fans out at most `maxBucket` rows per probe key.
+    */
+  def lookup(index: DataFrame, probe: DataFrame, keys: Seq[String], maxBucket: Int,
+      pins: Pin.Scope): DataFrame = {
+    val touched = index
+      .join(broadcast(probe.select(keys.map(col): _*).distinct()), keys, "left_semi")
+      .transform(pins.truncate(_))
+    touched.join(broadcast(hot(touched, keys, maxBucket)), keys, "left_anti")
+  }
 
   /** Compiled in-bucket pair expansion over a sorted `array<bigint>`:
     * `array<struct<doc_a, doc_b>>` with doc_a < doc_b. The HOF

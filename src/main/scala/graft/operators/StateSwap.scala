@@ -34,7 +34,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *  - the auth (`auth_state`) and curation (`corpus_state`, `lm_state`,
   *    `bench_state`) multi-table roots ([[swapAll]]);
   *  - the curation delta log, one `corpus_deltas/batch=<id>` per applied
-  *    micro-batch ([[swapStaged]]);
+  *    micro-batch ([[swapAll]]), listed by [[roots]] and reaped after a
+  *    fold by [[drop]];
   *  - IVF index rebalance ([[swapStaged]]) and [[Compaction]] ([[swap]]);
   *  - cdc upsert (`StreamingJobs.cdcUpsertMicroBatches`, [[swap]]);
   *  - [[Retention]], whose partition rewrites keep their own markers but
@@ -47,9 +48,13 @@ object StateSwap {
   private[graft] def fileSystem(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def stagingOf(t: Path) = new Path(t.getParent, t.getName + ".staging")
-  private def oldOf(t: Path)     = new Path(t.getParent, t.getName + ".old")
-  private def markerOf(t: Path)  = new Path(t.getParent, t.getName + ".swap")
+  private val Staging = ".staging"
+  private val Old = ".old"
+  private val Marker = ".swap"
+
+  private def stagingOf(t: Path) = new Path(t.getParent, t.getName + Staging)
+  private def oldOf(t: Path)     = new Path(t.getParent, t.getName + Old)
+  private def markerOf(t: Path)  = new Path(t.getParent, t.getName + Marker)
 
   private[operators] def renameOrDie(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
@@ -158,5 +163,28 @@ object StateSwap {
     recover(spark, root)
     if (!fileSystem(spark, root).exists(new Path(root))) None
     else Some(names.map(n => spark.read.parquet(new Path(root, n).toString)))
+  }
+
+  /** The roots under `parent` by name, each with whether it is committed:
+    * a root whose own directory exists is; one present only through its
+    * side entries (`.staging`, `.swap`, `.old` — a swap killed before its
+    * promotion) is not. Empty when `parent` does not exist.
+    */
+  def roots(spark: SparkSession, parent: String): Map[String, Boolean] = {
+    val fs = fileSystem(spark, parent)
+    val dir = new Path(parent)
+    if (!fs.exists(dir)) Map.empty
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .groupBy(n => Seq(Staging, Old, Marker).find(n.endsWith).fold(n)(n.stripSuffix))
+      .map { case (root, names) => root -> names.contains(root) }
+  }
+
+  /** Delete `root` with its side entries, the marker first, so a drop
+    * killed halfway never leaves a marked staging dir to promote.
+    */
+  def drop(spark: SparkSession, root: String): Unit = {
+    val fs = fileSystem(spark, root)
+    val t = new Path(root)
+    Seq(markerOf(t), stagingOf(t), t, oldOf(t)).foreach(fs.delete(_, true))
   }
 }

@@ -9,12 +9,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Decontaminate, Dedup, Multimodal, SimilaritySearch}
+import graft.operators.{Buckets, Decontaminate, Dedup, Multimodal, Pin, SimilaritySearch}
 import graft.streaming.StreamingJobs
 
 /** The megabucket cap lives in `graft.operators.Buckets` alone, and it is
-  * inclusive on every generator that uses it: a bucket of exactly
-  * `maxBucket` members still pairs, and one of `maxBucket + 1` drops.
+  * inclusive on every generator and lookup that uses it: a bucket of
+  * exactly `maxBucket` members still pairs (or is looked up), and one of
+  * `maxBucket + 1` drops.
   */
 class BucketsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -94,6 +95,15 @@ class BucketsSpec extends AnyFunSuite {
       val corpus = (1 to n).map(i => (i.toLong, Seq(1f, 2f, 3f, 4f))).toDF("vec_id", "embedding")
       SimilaritySearch.nearDupPairs(corpus, 0.9, nPlanes = 2, dim = 4, maxBucket = Cap).count()
     }),
+    // the stream screens' guarded state-index lookup: every index row
+    // sits in the one bucket the batch probes
+    ("lookup", Cap.toLong, { n =>
+      import spark.implicits._
+      val index = (1 to n).map(i => (i.toLong, 42L)).toDF("state_id", "fp")
+      val pins = Pin.scope()
+      try Buckets.lookup(index, Seq(42L).toDF("fp"), Seq("fp"), Cap, pins).count()
+      finally pins.release()
+    }),
     ("copurchasePairs", PairsAtCap, { n =>
       import spark.implicits._
       val lines = (1 to n).map(i => (7L, i.toLong)).toDF("l_orderkey", "l_partkey")
@@ -113,6 +123,10 @@ class BucketsSpec extends AnyFunSuite {
   private val capCompare = Pattern.compile(
     "[<>]=?\\s*max(Bucket|Block|Basket)\\b|\\bmax(Bucket|Block|Basket)\\s*[<>]=?" +
       "|between\\([^)]*\\bmax(Bucket|Block|Basket)\\b")
+  // a hand-written hinted anti-join of a hot-bucket set: the guarded lookup
+  private val hotAntiJoin = Pattern.compile("broadcast\\((?:[\\w.]*\\.)?(?:hot|\\w*Hot)\\b")
+  private def locked(c: String) =
+    pairCall.matcher(c).find() || capCompare.matcher(c).find() || hotAntiJoin.matcher(c).find()
 
   /** Code of a line: scaladoc/comment lines dropped, trailing `//` cut. */
   private def code(line: String): String = {
@@ -128,16 +142,20 @@ class BucketsSpec extends AnyFunSuite {
       """.filter(col("bsz") <= maxBucket).drop("bsz")""",
       """if (nBuckets.toLong * maxBucket <= cap)""",
       """.filter(col("__bsz").between(2, maxBlock))""",
-      """graft.expressions.PairCombinations(""")
-    caught.foreach(l => assert(
-      pairCall.matcher(code(l)).find() || capCompare.matcher(code(l)).find(), l))
+      """graft.expressions.PairCombinations(""",
+      """.join(touched.join(broadcast(hot), Seq("band", "sig"), "left_anti"),""",
+      """.join(audTouched.join(broadcast(audHot), Seq("fp"), "left_anti"), Seq("fp"))""",
+      """t.join(broadcast(Buckets.hot(t, keys, maxBucket)), keys, "left_anti")""")
+    caught.foreach(l => assert(locked(code(l)), l))
     val passed = Seq(
       "case class PairCombinations(child: Expression) extends UnaryExpression {",
       "    * degenerate buckets (> maxBucket members) dropped.",
       "  def pairs(df: DataFrame, maxBucket: Int): DataFrame =",
-      "      Buckets.sized(bands, Seq(\"band\", \"sig\"), 1, maxBucket)")
-    passed.foreach(l => assert(
-      !pairCall.matcher(code(l)).find() && !capCompare.matcher(code(l)).find(), l))
+      "      Buckets.sized(bands, Seq(\"band\", \"sig\"), 1, maxBucket)",
+      """      .join(graft.operators.Buckets.hot(corpusBands, Seq("band", "sig"), maxBucket),""",
+      """      .join(Buckets.lookup(benchBands, batchBands, Seq("band", "sig"), maxBucket, pins),""",
+      """      .join(broadcast(shots), Seq("id"))""")
+    passed.foreach(l => assert(!locked(code(l)), l))
   }
 
   test("no main source outside Buckets.scala compares against the cap or expands pairs") {
@@ -149,8 +167,7 @@ class BucketsSpec extends AnyFunSuite {
       p <- sources
       if rel(p) != "graft/operators/Buckets.scala"
       (line, n) <- Files.readAllLines(p).asScala.zipWithIndex
-      c = code(line)
-      if pairCall.matcher(c).find() || capCompare.matcher(c).find()
+      if locked(code(line))
     } yield s"${rel(p)}:${n + 1}: ${line.trim}"
     assert(sources.size > 50, s"scanned only ${sources.size} files")
     assert(hits.isEmpty, hits.mkString("megabucket policy outside Buckets:\n", "\n", ""))

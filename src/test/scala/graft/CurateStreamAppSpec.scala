@@ -115,7 +115,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     // no LM bootstrapped yet → the gate must fail loudly, not keep-all
     intercept[RuntimeException] {
       CurateStreamApp.processBatch(spark, docs(1L -> baseText),
-        stateDir, outDir, conf, batchId = 0L)
+        stateDir, outDir, Curation.fromConfig(conf), batchId = 0L)
     }
 
     // LM trained on the fox/ship register (the "reference corpus")
@@ -129,7 +129,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
       "mxw pqd fhz vvk juw qnc rbl tzx ") * 3
     CurateStreamApp.processBatch(spark,
       docs(1L -> baseText, 2L -> gibberish),
-      stateDir, outDir, conf, batchId = 0L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 0L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L))
 
@@ -137,18 +137,18 @@ class CurateStreamAppSpec extends AnyFunSuite {
     // replayed batch is still a no-op under the perplexity config
     CurateStreamApp.processBatch(spark,
       docs(10L -> baseText, 11L -> shipText),
-      stateDir, outDir, conf, batchId = 1L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 1L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 11L))
     CurateStreamApp.processBatch(spark,
       docs(10L -> baseText, 11L -> shipText),
-      stateDir, outDir, conf, batchId = 1L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 1L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 2)
 
     // re-bootstrap swaps the LM atomically (same root, new tables)
     CurateStreamApp.bootstrapLm(spark, docs(200L -> gibberish), stateDir)
     CurateStreamApp.processBatch(spark, docs(20L -> (gibberish + " zq vx")),
-      stateDir, outDir, conf, batchId = 2L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 2L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 11L, 20L))
   }
@@ -188,7 +188,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     // batch 0: two distinct images enter the corpus + the image index
     CurateStreamApp.processBatch(spark,
       mdocs((1L, tRiver, imgA), (2L, tHarbor, imgB)),
-      stateDir, outDir, conf, batchId = 0L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 0L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
 
@@ -204,25 +204,25 @@ class CurateStreamAppSpec extends AnyFunSuite {
     val imgC = Multimodal.syntheticGradientPng(7L, 200L)
     CurateStreamApp.processBatch(spark,
       mdocs((10L, tMountain, imgAish), (11L, tDesert, imgC), (12L, tForest, imgC)),
-      stateDir, outDir, conf, batchId = 1L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 1L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 11L))
 
     // replay is still a no-op with the image screen on
     CurateStreamApp.processBatch(spark,
       mdocs((10L, tMountain, imgAish), (11L, tDesert, imgC), (12L, tForest, imgC)),
-      stateDir, outDir, conf, batchId = 1L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 1L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 3)
 
     // batch 2: image C is corpus state now (its bands folded through the
     // delta log), so a re-rip of C screens out
     CurateStreamApp.processBatch(spark, mdocs((20L, tIsland, imgC)),
-      stateDir, outDir, conf, batchId = 2L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 2L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 3)
 
     // and a text-only stream (no media columns) still flows untouched
     CurateStreamApp.processBatch(spark, docs(30L -> baseText),
-      stateDir, outDir, conf, batchId = 3L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 3L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 4)
 
     // megabucket guard: with maxBucket = 0 every touched state bucket is
@@ -232,7 +232,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
       """curation { imageScreen = "phash"
         |           maxBucket = "0" }""".stripMargin)
     CurateStreamApp.processBatch(spark, mdocs((40L, tIsland, imgC)),
-      stateDir, outDir, confHot, batchId = 4L)
+      stateDir, outDir, Curation.fromConfig(confHot), batchId = 4L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet
       .contains(40L), "maxBucket=0 should disable the corpus image lookup")
@@ -247,11 +247,25 @@ class CurateStreamAppSpec extends AnyFunSuite {
         """curation { contamScreen = "fuzy" }""")) {
       val e = intercept[IllegalArgumentException] {
         CurateStreamApp.processBatch(spark, docs(1L -> baseText),
-          stateDir, outDir, GraftConfig.parse(conf), batchId = 0L)
+          stateDir, outDir, Curation.fromConfig(GraftConfig.parse(conf)), batchId = 0L)
       }
       assert(e.getMessage.contains("must be off|"), e.getMessage)
     }
     assert(!new java.io.File(s"$outDir/curated").exists(), "a rejected conf wrote output")
+  }
+
+  test("run rejects a conf value that does not parse before it starts a query") {
+    import spark.implicits._
+    val root = ScratchDirs.create("curatestream_badconf")
+    val source = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, Long, String, String)](spark, 1)
+    val stream = source.toDF().toDF("doc_id", "text", "n_chars", "lang", "source")
+    val e = intercept[IllegalArgumentException] {
+      CurateStreamApp.run(spark, stream, s"$root/state", s"$root/out", 1,
+        GraftConfig.parse("""curation { qualityMin = "0.5x" }"""))
+    }
+    assert(e.getMessage.contains("curation.qualityMin"), e.getMessage)
+    assert(!new java.io.File(s"$root/state/checkpoint").exists(), "a query was started")
   }
 
   test("refreshState retrains the LM from the drifted corpus: verdicts change, replay stays a no-op") {
@@ -276,19 +290,19 @@ class CurateStreamAppSpec extends AnyFunSuite {
     CurateStreamApp.bootstrapLm(spark, docs(100L -> baseText, 101L -> shipText), stateDir)
     // batch 0 (perplexity gate): register A passes, register B fails
     CurateStreamApp.processBatch(spark, docs(1L -> baseText, 2L -> driftB),
-      stateDir, outDir, pplConf, batchId = 0L)
+      stateDir, outDir, Curation.fromConfig(pplConf), batchId = 0L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L))
 
     // drift: register-B text enters the corpus through the score gate
     // (the LM gate was never the only admission path)
     CurateStreamApp.processBatch(spark, docs(10L -> driftB),
-      stateDir, outDir, scoreConf, batchId = 1L)
+      stateDir, outDir, Curation.fromConfig(scoreConf), batchId = 1L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 2)
 
     // pre-refresh, a register-B variant still fails the perplexity gate
     CurateStreamApp.processBatch(spark, docs(20L -> driftB2),
-      stateDir, outDir, pplConf, batchId = 2L)
+      stateDir, outDir, Curation.fromConfig(pplConf), batchId = 2L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 2,
       "register-B text must fail against the stale LM")
 
@@ -296,16 +310,16 @@ class CurateStreamAppSpec extends AnyFunSuite {
     // the same register-B variant now passes
     CurateStreamApp.refreshState(spark, stateDir, outDir)
     CurateStreamApp.processBatch(spark, docs(30L -> driftB2),
-      stateDir, outDir, pplConf, batchId = 3L)
+      stateDir, outDir, Curation.fromConfig(pplConf), batchId = 3L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 10L, 30L))
 
     // replays of pre- and post-refresh batches are still no-ops, and the
     // refresh folded the delta log into a compact base
     CurateStreamApp.processBatch(spark, docs(10L -> driftB),
-      stateDir, outDir, scoreConf, batchId = 1L)
+      stateDir, outDir, Curation.fromConfig(scoreConf), batchId = 1L)
     CurateStreamApp.processBatch(spark, docs(30L -> driftB2),
-      stateDir, outDir, pplConf, batchId = 3L)
+      stateDir, outDir, Curation.fromConfig(pplConf), batchId = 3L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 3)
     val st = CurateStreamApp.readCorpusState(spark, stateDir)
     assert(st.appliedThrough >= 2L && st.fps.count() == 3)
@@ -341,7 +355,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
       // screen on but bench index never bootstrapped → fail loud, not keep-all
       intercept[RuntimeException] {
         CurateStreamApp.processBatch(spark, docs(1L -> fresh),
-          stateDir, outDir, conf, batchId = 0L)
+          stateDir, outDir, Curation.fromConfig(conf), batchId = 0L)
       }
       CurateStreamApp.bootstrapBench(spark,
         docs(900L -> benchA, 901L -> benchB), stateDir)
@@ -351,7 +365,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
       // band state could have caught it: the contamination screen is
       // load-bearing here)
       CurateStreamApp.processBatch(spark, docs(1L -> fresh, 2L -> benchA),
-        stateDir, outDir, conf, batchId = 0L)
+        stateDir, outDir, Curation.fromConfig(conf), batchId = 0L)
       assert(spark.read.parquet(s"$outDir/curated")
         .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L),
         s"mode=$mode: exact bench copy must drop")
@@ -364,7 +378,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
       CurateStreamApp.processBatch(spark,
         docs(10L -> (benchB + "with one extra closing word appended"),
              11L -> quoter),
-        stateDir, outDir, conf, batchId = 1L)
+        stateDir, outDir, Curation.fromConfig(conf), batchId = 1L)
       val after1 = spark.read.parquet(s"$outDir/curated")
         .select("doc_id").collect().map(_.getLong(0)).toSet
       val expect1 = if (mode == "overlap") Set(1L) else Set(1L, 11L)
@@ -374,7 +388,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
       CurateStreamApp.processBatch(spark,
         docs(10L -> (benchB + "with one extra closing word appended"),
              11L -> quoter),
-        stateDir, outDir, conf, batchId = 1L)
+        stateDir, outDir, Curation.fromConfig(conf), batchId = 1L)
       assert(spark.read.parquet(s"$outDir/curated").count() == expect1.size)
     }
   }
@@ -403,7 +417,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
 
     CurateStreamApp.processBatch(spark,
       docs(1L -> fresh, 2L -> quoter, 3L -> heavy),
-      stateDir, outDir, conf, batchId = 0L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 0L)
     val cur0 = spark.read.parquet(s"$outDir/curated")
       .select("doc_id", "text", "n_chars").collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
@@ -420,7 +434,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     // NOT in state) re-surgers to the same cleaned text and drops on the
     // rewritten-fp state re-check
     CurateStreamApp.processBatch(spark, docs(20L -> quoter),
-      stateDir, outDir, conf, batchId = 1L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 1L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
 
@@ -428,7 +442,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     // two survivors only
     CurateStreamApp.processBatch(spark,
       docs(1L -> fresh, 2L -> quoter, 3L -> heavy),
-      stateDir, outDir, conf, batchId = 0L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 0L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 2)
     assert(CurateStreamApp.readCorpusState(spark, stateDir).fps.count() == 2)
   }
@@ -464,7 +478,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     CurateStreamApp.processBatch(spark,
       adocs((1L, tA, Multimodal.syntheticToneWav(1L, 700L)),
             (2L, tB, Multimodal.syntheticToneWav(22L, 700L))),
-      stateDir, outDir, conf, batchId = 0L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 0L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
 
@@ -476,7 +490,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
       adocs((10L, tC, Multimodal.syntheticToneWav(4L, 300L)),
             (11L, tD, Multimodal.syntheticToneWav(43L, 700L)),
             (12L, tE, Multimodal.syntheticToneWav(46L, 500L))),
-      stateDir, outDir, conf, batchId = 1L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 1L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 11L))
 
@@ -485,11 +499,11 @@ class CurateStreamAppSpec extends AnyFunSuite {
       adocs((10L, tC, Multimodal.syntheticToneWav(4L, 300L)),
             (11L, tD, Multimodal.syntheticToneWav(43L, 700L)),
             (12L, tE, Multimodal.syntheticToneWav(46L, 500L))),
-      stateDir, outDir, conf, batchId = 1L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 1L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 3)
     CurateStreamApp.processBatch(spark,
       adocs((20L, tF, Multimodal.syntheticToneWav(43L, 400L))),
-      stateDir, outDir, conf, batchId = 2L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 2L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 3)
 
     // megabucket guard: maxBucket = 0 marks every touched fp bucket hot,
@@ -501,7 +515,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
         |           maxBucket = "0" }""".stripMargin)
     CurateStreamApp.processBatch(spark,
       adocs((30L, tG, Multimodal.syntheticToneWav(43L, 600L))),
-      stateDir, outDir, confHot, batchId = 3L)
+      stateDir, outDir, Curation.fromConfig(confHot), batchId = 3L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet
       .contains(30L), "maxBucket=0 should disable the corpus audio lookup")
@@ -547,7 +561,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     // batch 0: the short source clip (tone group 0) enters the corpus
     val clipA = Multimodal.syntheticToneWav(1L, 700L)
     CurateStreamApp.processBatch(spark, adocs((1L, tA, clipA)),
-      stateDir, outDir, conf, batchId = 0L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 0L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 1)
 
     // batch 1: an arrival whose FIRST HALF is clip A's waveform and whose
@@ -559,7 +573,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     val (_, pcmB) = Multimodal.decodePcmMono(Multimodal.syntheticToneWav(106L, 700L))
     val extension = wavOf(pcmA ++ pcmB, srA)
     CurateStreamApp.processBatch(spark, adocs((10L, tB, extension)),
-      stateDir, outDir, conf, batchId = 1L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 1L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L),
       "an arrival extending a corpus clip must drop")
@@ -568,7 +582,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     // was dropped whole), so a pure clip of it is admitted
     CurateStreamApp.processBatch(spark,
       adocs((20L, tC, Multimodal.syntheticToneWav(106L, 500L))),
-      stateDir, outDir, conf, batchId = 2L)
+      stateDir, outDir, Curation.fromConfig(conf), batchId = 2L)
     assert(spark.read.parquet(s"$outDir/curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 20L))
   }
@@ -591,7 +605,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
 
     val clean = ScratchDirs.create("curatestream_lm_clean")
     CurateStreamApp.bootstrapLm(spark, reference, s"$clean/state")
-    CurateStreamApp.processBatch(spark, batch, s"$clean/state", s"$clean/out", conf, batchId = 0L)
+    CurateStreamApp.processBatch(spark, batch, s"$clean/state", s"$clean/out", Curation.fromConfig(conf), batchId = 0L)
     assert(curatedIds(s"$clean/out") == Set(1L))
 
     // the old generation learned the gibberish register; the new one (the
@@ -608,7 +622,7 @@ class CurateStreamAppSpec extends AnyFunSuite {
     fs.create(side(lm, ".swap"), true).close()
     assert(!fs.exists(lm))
 
-    CurateStreamApp.processBatch(spark, batch, stateDir, s"$root/out", conf, batchId = 0L)
+    CurateStreamApp.processBatch(spark, batch, stateDir, s"$root/out", Curation.fromConfig(conf), batchId = 0L)
     assert(curatedIds(s"$root/out") == curatedIds(s"$clean/out"))
     assert(fs.exists(lm) && Seq(".old", ".staging", ".swap").forall(e => !fs.exists(side(lm, e))))
   }

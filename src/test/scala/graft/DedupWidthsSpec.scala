@@ -91,7 +91,7 @@ class DedupWidthsSpec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")).cast("long"))
     val conf = GraftConfig.parse(
       "curation { minhash.numPerms = \"128\"\nminhash.numBands = \"32\" }")
-    CurateStreamApp.processBatch(spark, batch, stateDir, outDir, conf, batchId = 0L)
+    CurateStreamApp.processBatch(spark, batch, stateDir, outDir, Curation.fromConfig(conf), batchId = 0L)
     CurateStreamApp.foldDeltas(spark, stateDir) // the delta's bands into corpus_state
     val bands = spark.read.parquet(s"$stateDir/corpus_state/bands")
     assert(bands.select("band").distinct().count() == 32)

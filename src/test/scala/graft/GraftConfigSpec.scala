@@ -54,6 +54,18 @@ class GraftConfigSpec extends AnyFunSuite {
     assert(c.getSetInt("hPortScan.excludeAlienPorts", Set.empty) == Set(80, 443))
   }
 
+  test("parse: // starts a comment only at line start or after whitespace") {
+    val c = GraftConfig.parse(
+      """// a whole-line comment = 1
+        |alert.notify = file:/var//spool
+        |DDoS { minFlows = 5 // note
+        |}
+        |""".stripMargin)
+    assert(Detection.fromConfig(c).alertNotify == Detection.Notify.File("/var//spool"))
+    assert(c.getInt("DDoS.minFlows", 50) == 5)
+    assert(c.entries.keySet == Set("alert.notify", "DDoS.minFlows"))
+  }
+
   test("load: missing file is the all-defaults config") {
     val c = GraftConfig.load("/tmp/does/not/exist.conf")
     assert(c.getInt("anything.at.all", 5) == 5)

@@ -13,6 +13,20 @@ class GraftContinuousAppSpec extends AnyFunSuite {
 
   private def ts(min: Long) = new Timestamp(min * 60000L)
 
+  test("run rejects a conf value that does not parse before it starts a query") {
+    import spark.implicits._
+    val root = ScratchDirs.create("graftcont_badconf")
+    val source = MemoryStream[(String, Timestamp, String, String, String, String)](spark, 21)
+    val stream = source.toDF()
+      .toDF("user_name", "ts", "city", "coords", "user_agent", "service")
+    val e = intercept[IllegalArgumentException] {
+      GraftContinuousApp.run(spark, stream, s"$root/state", s"$root/out", 1,
+        GraftConfig.parse("""DDoS { minFlows = "fifty" }"""))
+    }
+    assert(e.getMessage.contains("DDoS.minFlows"), e.getMessage)
+    assert(!new java.io.File(s"$root/state/checkpoint").exists(), "a query was started")
+  }
+
   test("continuous auth mode: learn batch then detect batch, state persists") {
     import spark.implicits._
     val root = ScratchDirs.create("graftcont")

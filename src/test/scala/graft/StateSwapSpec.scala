@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, Path => JPath}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,9 +15,11 @@ import graft.queries.ScratchDirs
   * interruption point between "staging written" and "debris deleted"
   * must recover to the NEW state, and an interrupted staging write (no
   * marker yet) must fall back to the OLD state — never a cold start,
-  * never a partial directory. And StateSwap is the only main source
-  * that renames, or that picks a filesystem other than the one holding
-  * the path.
+  * never a partial directory. A listing names each root once, committed
+  * only when its own directory exists, and a drop leaves nothing. And
+  * StateSwap is the only main source that renames, or that picks a
+  * filesystem other than the one holding the path, and only Retention
+  * borrows its filesystem lookup.
   */
 class StateSwapSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -136,6 +138,42 @@ class StateSwapSpec extends AnyFunSuite {
     assert(!fs.exists(new Path(t + ".staging")))
   }
 
+  test("roots lists a swap killed at any point under its root name; drop leaves nothing") {
+    val parent = ScratchDirs.create("swap_roots") + "/log"
+    val fs = new Path(parent).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def side(d: Path, ext: String) = new Path(d.getParent, d.getName + ext)
+    def copy(from: Path, to: Path) = assert(
+      FileUtil.copy(fs, from, fs, to, false, spark.sparkContext.hadoopConfiguration))
+    // (root, committed?, how its swap died): the curation delta log's layouts
+    val layouts: Seq[(String, Boolean, Path => Unit)] = Seq(
+      ("batch=1", false, { d => // killed while staging (no marker)
+        assert(fs.rename(d, side(d, ".staging")))
+        fs.delete(new Path(side(d, ".staging"), "b"), true)
+      }),
+      ("batch=2", false, { d => // killed after the marker, before any rename
+        assert(fs.rename(d, side(d, ".staging")))
+        fs.create(side(d, ".swap"), true).close()
+      }),
+      ("batch=3", false, { d => // a replayed commit killed between its renames
+        copy(d, side(d, ".old"))
+        assert(fs.rename(d, side(d, ".staging")))
+        fs.create(side(d, ".swap"), true).close()
+      }),
+      ("batch=4", true, { d => // a replayed commit killed after promotion
+        copy(d, side(d, ".old"))
+        fs.create(side(d, ".swap"), true).close()
+      }),
+      ("batch=5", true, _ => ())) // a clean commit
+    for ((name, _, crash) <- layouts) {
+      StateSwap.swapAll(s"$parent/$name", Seq("a" -> df(1), "b" -> df(10)))
+      crash(new Path(s"$parent/$name"))
+    }
+    assert(StateSwap.roots(spark, parent) == layouts.map(l => l._1 -> l._2).toMap)
+    layouts.foreach(l => StateSwap.drop(spark, s"$parent/${l._1}"))
+    assert(fs.listStatus(new Path(parent)).isEmpty)
+    assert(StateSwap.roots(spark, s"$parent/never_written").isEmpty)
+  }
+
   test("no main source outside StateSwap.scala renames, and none asks for the default filesystem") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: $root")
@@ -146,10 +184,12 @@ class StateSwapSpec extends AnyFunSuite {
       p <- sources
       (line, n) <- Files.readAllLines(p).asScala.zipWithIndex
       token <- Seq("FileSystem.get(") ++
-        (if (rel(p) == "graft/operators/StateSwap.scala") Nil else Seq(".rename("))
+        (if (rel(p) == "graft/operators/StateSwap.scala") Nil else Seq(".rename(")) ++
+        (if (rel(p) == "graft/operators/Retention.scala") Nil else Seq("StateSwap.fileSystem("))
       if line.contains(token)
     } yield s"${rel(p)}:${n + 1}: $token"
     assert(sources.size > 50, s"scanned only ${sources.size} files")
-    assert(hits.isEmpty, hits.mkString("renames or default-filesystem lookups outside StateSwap:\n", "\n", ""))
+    assert(hits.isEmpty,
+      hits.mkString("renames or filesystem lookups outside StateSwap:\n", "\n", ""))
   }
 }
