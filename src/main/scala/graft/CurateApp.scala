@@ -80,8 +80,11 @@ object CurateApp {
     // curation thresholds come from the conf file (curation.* keys — the
     // pipeline counterpart of the reference's sflow.conf detector knobs)
     val c = if (args.length > 2) GraftConfig.load(args(2)) else GraftConfig.empty
+    // read first, so a broken conf fails before the session starts
+    val curation = Curation.fromConfig(c)
+    Curation.warnUnknownKeys(c)
     val spark = GraftSession.build()
-    val report = run(spark, inDir, outDir, Curation.fromConfig(c))
+    val report = run(spark, inDir, outDir, curation)
     report.orderBy(col("stage")).show(20, truncate = false)
     spark.stop()
   }

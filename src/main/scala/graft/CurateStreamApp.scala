@@ -61,16 +61,19 @@ import graft.streaming.StreamingJobs
   *   6. `near_dup`  — any MinHash band collides with the corpus band
   *                    index (`Dedup.lshBands` on the stream side —
   *                    one codegen kernel per row, no stream-side
-  *                    shuffle; the corpus side carries the same
-  *                    megabucket guard as the batch generators), OR with
+  *                    shuffle; the corpus side is read through
+  *                    [[Buckets.lookup]], the megabucket guard of every
+  *                    screen), OR with
   *                    an earlier (smaller doc_id) document of the SAME
   *                    batch — greedy first-keeps ordering, so two
   *                    near-identical docs arriving together can't both
   *                    enter the corpus;
   *   7. survivors   — appended under `<outDir>/curated/batch=<id>` and
-  *                    merged into the state tables (text fingerprints,
-  *                    text band index, and — when the media screens are
-  *                    on — the image band / audio fp indices).
+  *                    merged into the state tables of [[Tables]]: text
+  *                    fingerprints (`fps`), the text band index (`bands`)
+  *                    and — when the media screens are on — the image
+  *                    band index (`img_bands`) and the audio fp index
+  *                    (`audio_fps`).
   *
   * Delivery contract: foreachBatch is at-least-once, so every batch's
   * state advance commits as one immutable DELTA directory
@@ -93,9 +96,11 @@ import graft.streaming.StreamingJobs
   * amortizes the corpus rewrite across the fold interval (or hands it to
   * an out-of-band compactor).
   *
-  * Scale shape: state lookups are semi/anti joins on content-hash keys
-  * (broadcast-able while the batch is small, hash-join on the band key
-  * when it isn't); state updates are unions of the batch's few rows with
+  * Scale shape: state lookups are semi/anti joins on content-hash keys;
+  * the text band, image band and audio fp index lookups go through
+  * [[Buckets.lookup]], which broadcasts the batch's distinct keys, so
+  * those indices are scanned, never shuffled; state updates are unions
+  * of the batch's few rows with
   * the state tables, swapped atomically — no per-key RPCs, no driver
   * loops; the band index is the SAME (band, sig, doc_id) layout the
   * batch LSH uses, so bootstrap is just `Dedup.lshBands(corpus)`.
@@ -175,10 +180,14 @@ object CurateStreamApp {
     *
     * The media/band indices need no refresh — they are exact incremental
     * state (every admitted row indexed at admit time), not a model.
-    * Run out-of-band on whatever cadence the drift budget allows:
     *
-    *   spark-submit --class graft.CurateStreamApp ... # stream keeps running
-    *   // elsewhere, periodically:
+    * Run it, like [[bootstrapLm]] and [[bootstrapBench]], only while the
+    * stream is STOPPED: it swaps `corpus_state` and `lm_state`, the roots
+    * the stream's own batches read and recover, and a recovery deletes a
+    * staging directory that has no marker yet, so a concurrent refresh
+    * can lose its half-written swap. Stop the query, refresh, restart it
+    * on the same checkpoint, on whatever cadence the drift budget allows:
+    *
     *   CurateStreamApp.refreshState(spark, stateDir, outDir)
     */
   def refreshState(spark: SparkSession, stateDir: String, outDir: String): Unit = {
@@ -220,6 +229,7 @@ object CurateStreamApp {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     // read once, so a conf that does not parse fails before the query starts
     val curation = Curation.fromConfig(config)
+    Curation.warnUnknownKeys(config)
     StreamingJobs.consumeMicroBatches(stream, intervalSecs,
         checkpointDir = Some(s"$stateDir/checkpoint")) { (batch, batchId) =>
       if (!batch.isEmpty) processBatch(spark, batch, stateDir, outDir, curation, batchId)
@@ -228,11 +238,9 @@ object CurateStreamApp {
 
   /** One table of the corpus state: its name under `corpus_state` and
     * in a delta, and its DDL schema (the empty table a cold start reads).
-    * A `logged` table's state is its base ∪ every live delta that holds
-    * it; the one derived table, `bucket_sizes`, is the base plus the live
-    * deltas' band counts.
+    * Its state is its base ∪ every live delta that holds it.
     */
-  private final case class Table(name: String, ddl: String, logged: Boolean = true)
+  private final case class Table(name: String, ddl: String)
 
   /** The corpus state's tables, in commit order. A delta holds `fps` and
     * `bands` always, the media tables only when its batch admitted media;
@@ -241,7 +249,6 @@ object CurateStreamApp {
   private val Tables = Seq(
     Table("fps", "fp string, doc_id bigint"),
     Table("bands", "band int, sig string, doc_id bigint"),
-    Table("bucket_sizes", "band int, sig string, n bigint", logged = false),
     // the m4 screen's index: phash travels with the band row, so the
     // stream-side Hamming verify needs no second lookup
     Table("img_bands", "band int, sig bigint, media_id bigint, phash bigint"),
@@ -255,15 +262,13 @@ object CurateStreamApp {
     * [[Tables]] by name. `appliedThrough` is the base's fold-through
     * batch id; `liveDeltas` the committed batch ids newer than it (stale
     * delta dirs at or below the marker are fold-then-crash debris and are
-    * excluded here, dropped by the next fold). Bucket sizes are the base
-    * table plus the live deltas' band counts — an aggregation of a few
-    * batch-sized frames, never a rescan of the corpus index.
+    * excluded here, dropped by the next fold). A table a delta does not
+    * hold reads as empty there.
     */
   private[graft] final case class CorpusState(tables: Map[String, DataFrame],
       appliedThrough: Long, liveDeltas: Seq[Long]) {
     def fps: DataFrame = tables("fps")
     def bands: DataFrame = tables("bands")
-    def sizes: DataFrame = tables("bucket_sizes")
     def imgBands: DataFrame = tables("img_bands")
     def audioFps: DataFrame = tables("audio_fps")
   }
@@ -286,18 +291,9 @@ object CurateStreamApp {
     val base = marked.updated("fps", marked("fps").filter(col("fp") =!= BatchMarker))
     val live = deltaIds(spark, stateDir)
       .collect { case (id, true) if id > appliedThrough => id }.toSeq.sorted
-    val deltas = Tables.filter(_.logged)
-      .map(t => t.name -> live.map(b => read(delta(stateDir, b), t))).toMap
-    val logged = deltas.map { case (name, ds) => name -> ds.foldLeft(base(name))(_ unionByName _) }
-    val sizes =
-      if (live.isEmpty) base("bucket_sizes")
-      else base("bucket_sizes")
-        .join(deltas("bands").reduce(_ unionByName _)
-            .groupBy(col("band"), col("sig")).agg(count(lit(1)).as("add")),
-          Seq("band", "sig"), "full_outer")
-        .select(col("band"), col("sig"),
-          (coalesce(col("n"), lit(0L)) + coalesce(col("add"), lit(0L))).as("n"))
-    CorpusState(logged.updated("bucket_sizes", sizes), appliedThrough, live)
+    CorpusState(Tables.map(t => t.name ->
+        live.foldLeft(base(t.name))((s, b) => s.unionByName(read(delta(stateDir, b), t)))).toMap,
+      appliedThrough, live)
   }
 
   /** Compact the delta log into the base tables: fold every live delta
@@ -379,22 +375,19 @@ object CurateStreamApp {
     val batchUnique = firstUnseen(qualified, state.fps)
 
     // 3. near-dup screen: row-local band signatures against the corpus
-    // band index, with the st7 megabucket guard driven by the
-    // INCREMENTALLY MAINTAINED bucket-size table — recomputing sizes
-    // with a window over the whole band state would shuffle the entire
-    // corpus index every 10-second batch, which is exactly the per-batch
-    // full-state pass this entry point exists to avoid. The oversized
-    // set is config-bounded tiny; the remaining lookup is a semi join
-    // whose small side is the batch (broadcast), so the state is
-    // scanned, never shuffled.
-    val oversized = Buckets.oversized(state.sizes, Seq("band", "sig"), "n", maxBucket)
+    // band index through the guarded lookup every screen shares: the
+    // batch's distinct band keys are broadcast, so the index is scanned,
+    // never shuffled, and a corpus bucket holding more than maxBucket
+    // docs is dropped (its members still screen via their other bands).
+    // The lookup counts every index row of a key the batch carries, so
+    // its count is that bucket's full size.
     // Only the MinHash widths apply here (nearDupMethod selects the BATCH
     // app's generator only); see the DedupWidths scaladoc for the
     // state-directory width-compatibility contract.
     val batchBands = Dedup.lshBands(batchUnique, widths.numPerms, widths.numBands)
     val corpusHit = batchBands
-      .join(oversized, Seq("band", "sig"), "left_anti")
-      .join(state.bands, Seq("band", "sig"), "left_semi")
+      .join(Buckets.lookup(state.bands, batchBands, Seq("band", "sig"), maxBucket, pins),
+        Seq("band", "sig"), "left_semi")
       .select(col("doc_id")).distinct()
     // in-batch near-dups: a doc sharing any band bucket with an EARLIER
     // (smaller doc_id) doc of the same batch is dropped too — greedy

@@ -11,7 +11,11 @@ import graft.operators.PerplexityGate
   * defaults and [[Curation.fromConfig]] reads the conf keys (see the
   * `curation` block of `conf/graft.conf`): no other code names a
   * `curation.*` key or its default, so the batch and stream apps cannot
-  * drift apart on a threshold.
+  * drift apart on a threshold. A value that does not parse fails
+  * [[Curation.fromConfig]]; a `curation.*` key it does not read (a
+  * misspelling such as `qualityMn`) is reported
+  * ([[Curation.unknownKeys]], printed once per app run by
+  * [[Curation.warnUnknownKeys]]) and otherwise ignored.
   *
   * A misspelled selector fails here, at construction, whether or not
   * the batch at hand would reach the stage it selects (a text-only
@@ -70,7 +74,7 @@ final case class Curation(
   }
 }
 
-object Curation {
+object Curation extends GraftConfig.Settings[Curation]("Curation") {
 
   /** The compiled-in defaults; `conf/graft.conf` spells out the same values. */
   val default: Curation = Curation(
@@ -93,42 +97,38 @@ object Curation {
     audioMinContainment = 0.8,
     contamScreen = "off")
 
-  /** The `curation.*` keys of `c`; a missing key keeps its default, a
-    * value that does not parse throws (as in [[Detection.fromConfig]]).
-    */
-  def fromConfig(c: GraftConfig): Curation = {
+  protected def read(get: Get): Curation = {
     val d = default
     val w = d.widths
-    def int(key: String, default: Int) = c.strict(key, default, Literal.Int)
-    def long(key: String, default: Long) = c.strict(key, default, Literal.Long)
-    def double(key: String, default: Double) = c.strict(key, default, Literal.Double)
     Curation(
-      qualityGate = c.getString("curation.qualityGate", d.qualityGate),
-      qualityMin = double("curation.qualityMin", d.qualityMin),
-      perplexityMaxNllE6 = long("curation.perplexityMaxNllE6", d.perplexityMaxNllE6),
-      benchMod = int("curation.benchMod", d.benchMod),
-      contamGate = c.getString("curation.contamGate", d.contamGate),
-      maxOverlap = double("curation.maxOverlap", d.maxOverlap),
-      fuzzyMinJaccard = double("curation.fuzzyMinJaccard", d.fuzzyMinJaccard),
-      surgeryMinKeepFrac = double("curation.surgeryMinKeepFrac", d.surgeryMinKeepFrac),
-      surgeryNGram = int("curation.surgeryNGram", d.surgeryNGram),
-      surgeryPad = int("curation.surgeryPad", d.surgeryPad),
-      maxBucket = int("curation.maxBucket", d.maxBucket),
-      foldEvery = int("curation.foldEvery", d.foldEvery),
+      qualityGate = get("curation.qualityGate", d.qualityGate, Literal.String),
+      qualityMin = get("curation.qualityMin", d.qualityMin, Literal.Double),
+      perplexityMaxNllE6 = get("curation.perplexityMaxNllE6", d.perplexityMaxNllE6, Literal.Long),
+      benchMod = get("curation.benchMod", d.benchMod, Literal.Int),
+      contamGate = get("curation.contamGate", d.contamGate, Literal.String),
+      maxOverlap = get("curation.maxOverlap", d.maxOverlap, Literal.Double),
+      fuzzyMinJaccard = get("curation.fuzzyMinJaccard", d.fuzzyMinJaccard, Literal.Double),
+      surgeryMinKeepFrac =
+        get("curation.surgeryMinKeepFrac", d.surgeryMinKeepFrac, Literal.Double),
+      surgeryNGram = get("curation.surgeryNGram", d.surgeryNGram, Literal.Int),
+      surgeryPad = get("curation.surgeryPad", d.surgeryPad, Literal.Int),
+      maxBucket = get("curation.maxBucket", d.maxBucket, Literal.Int),
+      foldEvery = get("curation.foldEvery", d.foldEvery, Literal.Int),
       widths = DedupWidths(
-        method = c.getString("curation.nearDupMethod", w.method),
-        numPerms = int("curation.minhash.numPerms", w.numPerms),
-        numBands = int("curation.minhash.numBands", w.numBands),
-        simhashBits = int("curation.simhash.bits", w.simhashBits),
-        simhashBucketBits = int("curation.simhash.bucketBits", w.simhashBucketBits),
-        simhashMaxHamming = int("curation.simhash.maxHamming", w.simhashMaxHamming),
-        semanticTau = double("curation.semantic.tau", w.semanticTau),
+        method = get("curation.nearDupMethod", w.method, Literal.String),
+        numPerms = get("curation.minhash.numPerms", w.numPerms, Literal.Int),
+        numBands = get("curation.minhash.numBands", w.numBands, Literal.Int),
+        simhashBits = get("curation.simhash.bits", w.simhashBits, Literal.Int),
+        simhashBucketBits = get("curation.simhash.bucketBits", w.simhashBucketBits, Literal.Int),
+        simhashMaxHamming = get("curation.simhash.maxHamming", w.simhashMaxHamming, Literal.Int),
+        semanticTau = get("curation.semantic.tau", w.semanticTau, Literal.Double),
         semanticTargetCluster =
-          int("curation.semantic.targetCluster", w.semanticTargetCluster)),
-      imageScreen = c.getString("curation.imageScreen", d.imageScreen),
-      imageMaxHamming = int("curation.image.maxHamming", d.imageMaxHamming),
-      audioScreen = c.getString("curation.audioScreen", d.audioScreen),
-      audioMinContainment = double("curation.audio.minContainment", d.audioMinContainment),
-      contamScreen = c.getString("curation.contamScreen", d.contamScreen))
+          get("curation.semantic.targetCluster", w.semanticTargetCluster, Literal.Int)),
+      imageScreen = get("curation.imageScreen", d.imageScreen, Literal.String),
+      imageMaxHamming = get("curation.image.maxHamming", d.imageMaxHamming, Literal.Int),
+      audioScreen = get("curation.audioScreen", d.audioScreen, Literal.String),
+      audioMinContainment =
+        get("curation.audio.minContainment", d.audioMinContainment, Literal.Double),
+      contamScreen = get("curation.contamScreen", d.contamScreen, Literal.String))
   }
 }

@@ -81,7 +81,7 @@ final case class Detection(
     (gates(section).excludeIPs ++ generalExcludeIPs).toSeq.sorted
 }
 
-object Detection {
+object Detection extends GraftConfig.Settings[Detection]("Detection") {
 
   /** A detector section of the conf: its block name and the `detector`
     * value of the alert rows it emits.
@@ -154,13 +154,7 @@ object Detection {
   /** The compiled-in defaults; `conf/graft.conf` spells out the same values. */
   val default: Detection = Detection()
 
-  /** One key's value: its default when the key is missing. */
-  private trait Get {
-    def apply[T](key: String, default: T, lit: Literal[T]): T
-  }
-
-  /** The value `get` reads; the only code that names a key. */
-  private def read(get: Get): Detection = {
+  protected def read(get: Get): Detection = {
     val d = default
     Detection(
       gates = Sections.map { s =>
@@ -213,39 +207,4 @@ object Detection {
       allowedRadixKm = get("location.allowedRadix", d.allowedRadixKm, Literal.Double),
       travelMaxKmh = get("travel.maxKmh", d.travelMaxKmh, Literal.Double))
   }
-
-  /** Every key [[fromConfig]] reads, from one [[read]] that returns the
-    * defaults.
-    */
-  lazy val Keys: Set[String] = {
-    val keys = Set.newBuilder[String]
-    read(new Get {
-      def apply[T](key: String, default: T, lit: Literal[T]): T = { keys += key; default }
-    })
-    keys.result()
-  }
-
-  /** The sections [[Keys]] belong to. */
-  private lazy val KnownSections: Set[String] = Keys.map(_.takeWhile(_ != '.'))
-
-  /** The keys of `c` inside a section this value reads that it does not
-    * read (a misspelling such as `DDoS.minFlow`), sorted.
-    */
-  def unknownKeys(c: GraftConfig): Seq[String] =
-    c.entries.keys.filter(k => KnownSections(k.takeWhile(_ != '.')) && !Keys(k)).toSeq.sorted
-
-  /** One stderr line per key of [[unknownKeys]]; each app's `run` calls
-    * it once.
-    */
-  def warnUnknownKeys(c: GraftConfig): Unit =
-    unknownKeys(c).foreach(k =>
-      System.err.println(s"[Detection] unknown key $k => '${c.entries(k)}'; ignored"))
-
-  /** The keys of `c`; a missing key keeps its default and a value that
-    * does not parse throws.
-    */
-  def fromConfig(c: GraftConfig): Detection =
-    read(new Get {
-      def apply[T](key: String, default: T, lit: Literal[T]): T = c.strict(key, default, lit)
-    })
 }

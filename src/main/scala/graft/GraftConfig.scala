@@ -19,9 +19,9 @@ package graft
   * mirror the reference's: the default on a missing key, an empty value
   * or a value that does not parse (the reference's fail-soft contract).
   * The apps do not use them: they read one settings value,
-  * [[Detection]] or [[Curation]], through [[strict]], which parses the
-  * same [[GraftConfig.Literal]]s but fails on a value that does not
-  * parse.
+  * [[Detection]] or [[Curation]] (each a [[GraftConfig.Settings]]),
+  * through [[strict]], which parses the same [[GraftConfig.Literal]]s but
+  * fails on a value that does not parse.
   */
 final class GraftConfig private[graft] (val entries: Map[String, String]) {
   import GraftConfig.Literal
@@ -82,6 +82,7 @@ object GraftConfig {
     val Int: Literal[Int] = number("an integer", _.toInt)
     val Long: Literal[Long] = number("an integer", _.toLong)
     val Double: Literal[Double] = number("a number", _.toDouble)
+    val String: Literal[String] = Literal("a string", Some(_))
 
     val SetString: Literal[Set[String]] = Literal("a Set(...) literal", v =>
       if (!v.startsWith("Set(") || !v.endsWith(")")) None
@@ -92,6 +93,58 @@ object GraftConfig {
       SetString.parse(v).flatMap { s =>
         val ints = s.map(Int.parse)
         if (ints.forall(_.isDefined)) Some(ints.flatten) else None
+      })
+  }
+
+  /** The companion of a settings value `T` ([[Detection]], [[Curation]]):
+    * its `read` is the only code that names one of the value's keys or
+    * defaults, one [[Get]] call per key. From that one read come the
+    * strict [[fromConfig]], the key list [[Keys]] and the report of the
+    * keys a conf misspells, [[unknownKeys]]; `name` tags the report.
+    */
+  abstract class Settings[T](name: String) {
+
+    /** One key's value: its default when the key is missing. */
+    protected trait Get {
+      def apply[V](key: String, default: V, lit: Literal[V]): V
+    }
+
+    /** The value `get` reads. */
+    protected def read(get: Get): T
+
+    /** Every key [[fromConfig]] reads, from one [[read]] that returns the
+      * defaults.
+      */
+    lazy val Keys: Set[String] = {
+      val keys = Set.newBuilder[String]
+      read(new Get {
+        def apply[V](key: String, default: V, lit: Literal[V]): V = { keys += key; default }
+      })
+      keys.result()
+    }
+
+    /** The sections [[Keys]] belong to. */
+    private lazy val KnownSections: Set[String] = Keys.map(_.takeWhile(_ != '.'))
+
+    /** The keys of `c` inside a section this value reads that it does not
+      * read (a misspelling such as `DDoS.minFlow`), sorted.
+      */
+    def unknownKeys(c: GraftConfig): Seq[String] =
+      c.entries.keys.filter(k => KnownSections(k.takeWhile(_ != '.')) && !Keys(k)).toSeq.sorted
+
+    /** One stderr line per key of [[unknownKeys]]; each app calls it once
+      * per run.
+      */
+    def warnUnknownKeys(c: GraftConfig): Unit =
+      unknownKeys(c).foreach(k =>
+        System.err.println(s"[$name] unknown key $k => '${c.entries(k)}'; ignored"))
+
+    /** The keys of `c`; a missing key keeps its default and a value that
+      * does not parse throws.
+      */
+    def fromConfig(c: GraftConfig): T =
+      read(new Get {
+        def apply[V](key: String, default: V, lit: Literal[V]): V = c.strict(key, default, lit)
       })
   }
 

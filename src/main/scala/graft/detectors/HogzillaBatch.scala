@@ -199,7 +199,9 @@ object HogzillaBatch {
         (col("alien_ip").isNull || !col("alien_ip").isin(ex: _*)))
     }
 
-    // derived exclusion sets first (the reference's detector DAG)
+    // derived exclusion sets first (the reference's detector DAG); the
+    // p2p section's exclusion is applied here, once, so p2pHosts and the
+    // alert union both read the excluded pin
     val p2p = pins.cache(excluding("p2p")(Detectors.p2pTalkers(summary, myNets,
       Detectors.ftpTalkerPairs(pair), Detectors.ftpServers(host),
       minPairs = d.p2pMinPairs, minPorts = d.p2pMinPorts, minPairs2 = d.p2pMinPairs2nd,
@@ -221,12 +223,12 @@ object HogzillaBatch {
 
     // pass 2: the standing detectors, profile-relative where the
     // reference's are (HIST01/02/02.1/03/04/05/07/08), each built lazily
-    // so that a disabled section never even constructs its plan
+    // so that a disabled section never even constructs its plan; the
+    // p2p section is the pin above
     val sections: Map[String, () => DataFrame] = Map(
       "topTalkers" -> (() => Detectors.topTalkers(host)),
       "SMTPTalkers" -> (() => Detectors.smtpTalkers(host, profiles.hist01, profiles.hist02,
         minBytes = d.smtpMinBytes)),
-      "p2p" -> (() => p2p),
       "mediaStreaming" -> (() => Detectors.mediaStreamingClients(pair, myNets, p2pHosts,
         maxUpload = d.mediaMaxUploadBytes, minDownload = d.mediaMinDownloadBytes)),
       "atypicalPorts" -> (() => Detectors.atypicalPorts(servedPort, profiles.hist01,
@@ -254,8 +256,10 @@ object HogzillaBatch {
       "BotNet" -> (() => Detectors.botnetCC(summary, blacklist,
         minPktsPerFlow = d.botnetMinPktsPerFlow)),
       "osDiscovery" -> (() => Detectors.osDiscovery(summary, osRepos)))
-    val enabled = Detection.Sections.map(_.name).filter(d.enabled)
-      .map(section => excluding(section)(sections(section)()))
+    val enabled = Detection.Sections.map(_.name).filter(d.enabled).map {
+      case "p2p" => p2p
+      case section => excluding(section)(sections(section)())
+    }
     // the alert union, pinned after p2p so its cached plan reads the p2p
     // pin, in one partition (scaladoc above); every section disabled → an
     // empty frame with the alert schema

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   * The operators, each with the plan shape its call sites measured:
   *  - [[sized]]: the window-count guard, for a stream the next operator
   *    already shuffles on the bucket key;
-  *  - [[kept]] / [[hot]] / [[oversized]]: the count-aggregate key gate,
-  *    for a stream that must not be sorted just to size its buckets;
-  *  - [[lookup]]: the guarded state-index lookup of the stream screens;
+  *  - [[kept]] / [[hot]]: the count-aggregate key gate, for a stream
+  *    that must not be sorted just to size its buckets;
+  *  - [[lookup]]: the guarded state-index lookup of every stream screen;
   *  - [[pairs]] and [[sharedGramPairs]]: sorted member lists expanded
   *    by the compiled [[graft.expressions.PairCombinations]] kernel;
   *  - [[selfJoin]]: the in-bucket self-join, spread over every core;
@@ -95,25 +95,19 @@ object Buckets {
     * touched-subset index, or wide rows that should not be re-read.
     */
   def hot(df: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame =
-    oversized(sizes(df, keys), keys, Size, maxBucket)
+    sizes(df, keys).filter(col(Size) > maxBucket).select(keys.map(col): _*)
 
-  /** [[hot]] over a size table the caller already maintains, with the
-    * size of each bucket in `sizeCol` (the incremental band-index state
-    * of the stream screen).
-    */
-  def oversized(sizes: DataFrame, keys: Seq[String], sizeCol: String,
-      maxBucket: Int): DataFrame =
-    sizes.filter(col(sizeCol) > maxBucket).select(keys.map(col): _*)
-
-  /** The guarded state-index lookup of the stream screens (image bands,
-    * audio fps, bench bands): the rows of `index` whose `keys` the batch
-    * frame `probe` carries — a broadcast semi-join on the batch's
-    * distinct keys, so the index is scanned, never shuffled — pinned
-    * through the batch's `pins` (read twice: the bucket count and the
-    * lookup), minus the buckets holding more than `maxBucket` of them
-    * ([[hot]], a broadcast anti-join). The count sees only the touched
-    * subset: no size table and no O(index) pass, and a verify join after
-    * it fans out at most `maxBucket` rows per probe key.
+  /** The guarded state-index lookup of every stream screen (text bands,
+    * image bands, audio fps, bench bands): the rows of `index` whose
+    * `keys` the batch frame `probe` carries — a broadcast semi-join on
+    * the batch's distinct keys, so the index is scanned, never shuffled —
+    * pinned through the batch's `pins` (read twice: the bucket count and
+    * the lookup), minus the buckets holding more than `maxBucket` of them
+    * ([[hot]], a broadcast anti-join). Every index row of a probed key is
+    * touched, so the count is that bucket's full size: no size table and
+    * no O(index) pass, and a verify join after it fans out at most
+    * `maxBucket` rows per probe key. The trade: an oversized bucket's
+    * touched rows are pinned for the batch before they are dropped.
     */
   def lookup(index: DataFrame, probe: DataFrame, keys: Seq[String], maxBucket: Int,
       pins: Pin.Scope): DataFrame = {

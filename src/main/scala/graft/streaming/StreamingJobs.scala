@@ -104,9 +104,9 @@ object StreamingJobs {
     * index-build time and persist the result — a stream-static join
     * re-evaluates the static plan every trigger, so a guard left inline
     * (as a window over the full index) would re-shuffle the whole corpus
-    * per micro-batch. CurateStreamApp goes further and maintains the
-    * bucket sizes incrementally; for a one-shot build the groupBy is the
-    * same O(index) cost paid once.
+    * per micro-batch. CurateStreamApp goes further and sizes only the
+    * buckets each micro-batch touches ([[graft.operators.Buckets.lookup]]);
+    * for a one-shot build the groupBy is the same O(index) cost paid once.
     */
   def guardedBandIndex(corpusBands: DataFrame, maxBucket: Int = 10000): DataFrame = {
     corpusBands

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.ScratchDirs
@@ -75,18 +74,6 @@ class CurateStreamAppSpec extends AnyFunSuite {
     CurateStreamApp.processBatch(spark, docs(20L -> fresh), stateDir, outDir, batchId = 2L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 3)
 
-    // the incrementally-maintained bucket-size view mirrors the band
-    // index exactly (it is the megabucket guard's source of truth)
-    def sizesMirrorBands(): Unit = {
-      val s = state()
-      val bands = s.bands.groupBy(col("band"), col("sig")).count()
-        .collect().map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
-      val sizes = s.sizes
-        .collect().map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
-      assert(sizes == bands, s"sizes drifted: ${sizes.size} vs ${bands.size} buckets")
-    }
-    sizesMirrorBands()
-
     // folding compacts the delta log into the base without changing the
     // logical state, reaps the delta dirs, and keeps replays no-ops
     val fpsBefore = state().fps.collect().map(_.toSeq).toSet
@@ -96,7 +83,6 @@ class CurateStreamAppSpec extends AnyFunSuite {
     assert(folded.appliedThrough == 2L)
     assert(folded.fps.collect().map(_.toSeq).toSet == fpsBefore)
     assert(!new java.io.File(s"$stateDir/corpus_deltas/batch=1").exists())
-    sizesMirrorBands()
     CurateStreamApp.processBatch(spark, b1, stateDir, outDir, batchId = 1L)
     assert(spark.read.parquet(s"$outDir/curated").count() == 3)
     // and the stream continues on top of the folded base
@@ -643,12 +629,12 @@ class CurateStreamAppSpec extends AnyFunSuite {
     }
     def snapshot(stateDir: String, outDir: String) = {
       val st = CurateStreamApp.readCorpusState(spark, stateDir)
-      (rows(st.fps), rows(st.bands), rows(st.sizes), st.appliedThrough, st.liveDeltas,
+      (rows(st.fps), rows(st.bands), st.appliedThrough, st.liveDeltas,
         rows(spark.read.parquet(s"$outDir/curated/batch=1")))
     }
     val (cleanState, cleanOut) = run(ScratchDirs.create("curatestream_delta_clean"))((_, _) => ())
     val expected = snapshot(cleanState, cleanOut)
-    assert(expected._5 == Seq(0L, 1L) && expected._6.map(_.head) == Set(13L))
+    assert(expected._4 == Seq(0L, 1L) && expected._5.map(_.head) == Set(13L))
 
     def copy(fs: FileSystem, from: Path, to: Path) =
       assert(FileUtil.copy(fs, from, fs, to, false, spark.sparkContext.hadoopConfiguration))
@@ -680,5 +666,96 @@ class CurateStreamAppSpec extends AnyFunSuite {
       assert(fsOf(stateDir).listStatus(new Path(s"$stateDir/corpus_deltas")).isEmpty, name)
       assert(rows(CurateStreamApp.readCorpusState(spark, stateDir).fps) == expected._1, name)
     }
+  }
+
+  test("text screen at the cap: a corpus bucket of exactly maxBucket docs still screens; maxBucket = 0 turns the corpus lookup off") {
+    val root = ScratchDirs.create("curatestream_textcap")
+    val stateDir = s"$root/state"; val outDir = s"$root/out"
+    // one band, so an arrival collides in one corpus bucket at most
+    def at(maxBucket: Int) = Curation.default.copy(maxBucket = maxBucket,
+      widths = DedupWidths.default.copy(numBands = 1))
+    // repeats of one sentence share one shingle set, so one MinHash
+    // signature, but each has its own exact fingerprint
+    val sentence = "the tall ships sailed across the wide blue ocean carrying " +
+      "spices and silk toward distant harbors under a bright morning sky "
+    def batch(id: Long, maxBucket: Int) = CurateStreamApp.processBatch(spark,
+      docs(id -> sentence * (id.toInt + 2)), stateDir, outDir, at(maxBucket), batchId = id)
+
+    batch(0L, maxBucket = 1)
+    // maxBucket = 0: the arrival's bucket (1 doc) is over the cap, so the
+    // corpus lookup drops it and the copy enters: the bucket now holds 2
+    batch(1L, maxBucket = 0)
+    assert(curatedIds(outDir) == Set(0L, 1L), "maxBucket=0 should disable the corpus text lookup")
+    // the arrival's only colliding bucket holds exactly maxBucket docs:
+    // the bound is inclusive, so it still screens and the copy drops
+    batch(2L, maxBucket = 2)
+    assert(curatedIds(outDir) == Set(0L, 1L), "a bucket at the cap must still screen")
+    // one doc over the cap: the bucket is dropped and the copy enters
+    batch(3L, maxBucket = 1)
+    assert(curatedIds(outDir) == Set(0L, 1L, 3L), "a bucket over the cap must not screen")
+  }
+
+  test("the text screen scans the corpus band index without exchanging it") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val root = ScratchDirs.create("curatestream_textplan")
+    val stateDir = s"$root/state"; val outDir = s"$root/out"
+    val fresh = ("completely different subject matter entirely about rivers " +
+      "and mountains flowing gently through the green valley all day long ") * 3
+    // a folded base (batch 0) and a live delta (batch 1) under the index
+    CurateStreamApp.processBatch(spark, docs(1L -> baseText), stateDir, outDir, batchId = 0L)
+    CurateStreamApp.foldDeltas(spark, stateDir)
+    CurateStreamApp.processBatch(spark, docs(2L -> shipText), stateDir, outDir, batchId = 1L)
+
+    /** The plan's nodes, through AQE wrappers, query stages and reuse. */
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case _ => p.children.flatMap(nodes)
+    })
+    val bandIndex = ".*/corpus_(state|deltas/batch=[0-9]+)/(bands|bucket_sizes)/?".r
+    def scansBandIndex(p: SparkPlan) = nodes(p).exists {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(r => bandIndex.matches(r.toString))
+      case _ => false
+    }
+    val plans = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = thresholds.map(k => k -> spark.conf.getOption(k))
+    thresholds.foreach(spark.conf.set(_, "-1"))
+    spark.listenerManager.register(listener)
+    try {
+      // a near-dup of the base's doc, a near-dup of the delta's, a fresh doc
+      CurateStreamApp.processBatch(spark, docs(
+          10L -> (baseText + "with one extra closing word appended"),
+          11L -> (shipText + "with one extra closing word appended"),
+          12L -> fresh), stateDir, outDir, batchId = 2L)
+      org.apache.spark.sql.graft.ListenerBus.drain(spark)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    assert(curatedIds(outDir) == Set(1L, 2L, 12L))
+    val all = plans.asScala.toSeq
+    assert(all.exists(scansBandIndex), s"no plan scanned the band index in ${all.size} plans")
+    val exchanged = all.flatMap(nodes).collect {
+      case e: Exchange if scansBandIndex(e) => e
+    }.distinct
+    assert(exchanged.isEmpty,
+      s"${exchanged.size} exchanges over the band index:\n${exchanged.map(_.treeString).mkString("\n")}")
   }
 }

@@ -53,6 +53,9 @@ class CurationSpec extends AnyFunSuite {
 
   test("the curation block of conf/graft.conf parses to Curation.default") {
     assert(block.size > 20, s"read only ${block.size} curation keys")
+    assert(Curation.Keys == block.keySet,
+      s"shipped but not read: ${block.keySet -- Curation.Keys}; " +
+        s"read but not shipped: ${Curation.Keys -- block.keySet}")
     assert(Curation.fromConfig(shipped) == Curation.default)
     assert(Curation.fromConfig(GraftConfig.empty) == Curation.default)
   }
@@ -77,6 +80,15 @@ class CurationSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       Curation.fromConfig(GraftConfig.parse("curation { qualityMin = \"0.5x\" }")))
     assert(e.getMessage.contains("curation.qualityMin") && e.getMessage.contains("0.5x"))
+  }
+
+  test("a misspelled curation key is reported once; a valid key is not") {
+    val c = GraftConfig.parse(
+      "curation { qualityMn = 0.9\n qualityMin = 0.6\n minhash { numBand = 8 } }\nDDoS { minFlow = 5 }")
+    assert(Curation.unknownKeys(c) == Seq("curation.minhash.numBand", "curation.qualityMn"))
+    assert(Curation.fromConfig(c) == Curation.default.copy(qualityMin = 0.6))
+    // each settings value reports the keys of its own sections only
+    assert(Detection.unknownKeys(c) == Seq("DDoS.minFlow"))
   }
 
   test("no main source outside Curation.scala names a curation.* key") {

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Union}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -465,6 +465,36 @@ class DetectorSpec extends AnyFunSuite {
       assert(cachedRelations(plan).nonEmpty)
       assert(alerts.filter(col("detector") === "smtpTalkers").count() == 1)
     } finally release()
+  }
+
+  test("HogzillaBatch.run: p2p.excludeIPs drops the excluded host's p2p alert, filtering once") {
+    import spark.implicits._
+    // two method-1 p2p talkers (many peers over many local ports)
+    def talker(ip: String, net: String) = (1 to 8).map(i =>
+      (ip, s"$net.$i", (4000 + i).toString, "6881", "6", 1000L, 1L, "0x02", 100L + i))
+    def run(conf: String) = HogzillaBatch.run(spark,
+      samples(talker("10.0.0.7", "66.2.1") ++ talker("10.0.0.8", "66.3.1") ++ benign), myNets,
+      HogzillaBatch.emptyProfileTables(spark), blacklist = Seq("66.66.").toDF("prefix"),
+      osRepos = Seq(("93.1.1.1", "debian")).toDF("repo_ip", "os"),
+      config = GraftConfig.parse(conf))
+    def rows(alerts: DataFrame) = alerts.drop("time").collect().toSet
+    val (all, _, _, releaseAll) = run("")
+    val (excluded, _, _, release) = run("p2p { excludeIPs = \"Set(10.0.0.7)\" }")
+    try {
+      def p2p(r: Row) = r.getAs[String]("detector") == "p2pTalkers"
+      val before = rows(all)
+      assert(before.count(p2p) == 2, before.toString)
+      // the same rows as without the list, less the excluded host's p2p alert
+      assert(rows(excluded) == before.filterNot(r => p2p(r) && r.getAs[String]("my_ip") == "10.0.0.7"))
+      // the exclusion filter sits on the p2p branch once: in the pinned
+      // frame that p2pHosts reads too, not again in the alert union
+      def maxOnPath(p: LogicalPlan): Int =
+        (p match {
+          case f: Filter if f.condition.sql.contains("10.0.0.7") => 1
+          case _ => 0
+        }) + p.children.map(maxOnPath).maxOption.getOrElse(0)
+      assert(maxOnPath(excluded.queryExecution.analyzed) == 1)
+    } finally { release(); releaseAll() }
   }
 
   /** Every node the planner put into a physical plan: through AQE's
