@@ -97,9 +97,10 @@ import graft.streaming.StreamingJobs
   * an out-of-band compactor).
   *
   * Scale shape: state lookups are semi/anti joins on content-hash keys;
-  * the text band, image band and audio fp index lookups go through
-  * [[Buckets.lookup]], which broadcasts the batch's distinct keys, so
-  * those indices are scanned, never shuffled; state updates are unions
+  * the fp state is read through [[Buckets.touched]] and the text band,
+  * image band and audio fp indices through [[Buckets.lookup]], both of
+  * which broadcast the batch's distinct keys, so the state is scanned,
+  * never shuffled; state updates are unions
   * of the batch's few rows with
   * the state tables, swapped atomically — no per-key RPCs, no driver
   * loops; the band index is the SAME (band, sig, doc_id) layout the
@@ -331,13 +332,17 @@ object CurateStreamApp {
   }
 
   /** First occurrence (min doc_id) per fingerprint `fp` among `docs`,
-    * minus the fingerprints the corpus state already holds.
+    * minus the fingerprints the corpus state already holds, looked up by
+    * the batch's keys ([[Buckets.touched]]), so the fp state is scanned,
+    * never shuffled. No megabucket guard: fingerprints are unique keys,
+    * and `maxBucket` bounds only the band screens.
     */
-  private def firstUnseen(docs: DataFrame, stateFps: DataFrame): DataFrame = {
+  private def firstUnseen(docs: DataFrame, stateFps: DataFrame, pins: Pin.Scope): DataFrame = {
     val byFp = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
     docs.withColumn("fp_canon", min(col("doc_id")).over(byFp))
       .filter(col("doc_id") === col("fp_canon")).drop("fp_canon")
-      .join(stateFps.select(col("fp")), Seq("fp"), "left_anti")
+      .join(Buckets.touched(stateFps.select(col("fp")), docs, Seq("fp"), pins),
+        Seq("fp"), "left_anti")
   }
 
   private def screenBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
@@ -372,7 +377,7 @@ object CurateStreamApp {
 
     // 2. exact dedup: first-in-batch occurrence keeps (window min over
     // the fingerprint), then drop anything the corpus already has
-    val batchUnique = firstUnseen(qualified, state.fps)
+    val batchUnique = firstUnseen(qualified, state.fps, pins)
 
     // 3. near-dup screen: row-local band signatures against the corpus
     // band index through the guarded lookup every screen shares: the
@@ -622,7 +627,7 @@ object CurateStreamApp {
         // two arrivals whose texts differ only inside excised spans
         // converge on one cleaned fingerprint — first-keeps again on the
         // REWRITTEN fp (batch-sized window), then the state re-check
-        firstUnseen(rewritten, state.fps)
+        firstUnseen(rewritten, state.fps, pins)
     }).transform(pins.truncate(_))
 
     survivors.drop("fp").write.mode(SaveMode.Overwrite)

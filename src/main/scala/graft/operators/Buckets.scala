@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   *    already shuffles on the bucket key;
   *  - [[kept]] / [[hot]]: the count-aggregate key gate, for a stream
   *    that must not be sorted just to size its buckets;
-  *  - [[lookup]]: the guarded state-index lookup of every stream screen;
+  *  - [[touched]] / [[lookup]]: the state-index rows a batch's keys
+  *    reach, unguarded / guarded — the lookup of every stream screen;
   *  - [[pairs]] and [[sharedGramPairs]]: sorted member lists expanded
   *    by the compiled [[graft.expressions.PairCombinations]] kernel;
   *  - [[selfJoin]]: the in-bucket self-join, spread over every core;
@@ -97,24 +98,34 @@ object Buckets {
   def hot(df: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame =
     sizes(df, keys).filter(col(Size) > maxBucket).select(keys.map(col): _*)
 
+  /** The rows of `index` whose `keys` the batch frame `probe` carries —
+    * a broadcast semi-join on the batch's distinct keys, so the index is
+    * scanned, never shuffled — pinned through the batch's `pins`. Every
+    * index row of a probed key is touched. The exact-dup screen of
+    * [[graft.CurateStreamApp]] anti-joins its fingerprints against it
+    * unguarded (fingerprints are unique keys); [[lookup]] is the guarded
+    * form.
+    */
+  def touched(index: DataFrame, probe: DataFrame, keys: Seq[String],
+      pins: Pin.Scope): DataFrame =
+    index
+      .join(broadcast(probe.select(keys.map(col): _*).distinct()), keys, "left_semi")
+      .transform(pins.truncate(_))
+
   /** The guarded state-index lookup of every stream screen (text bands,
-    * image bands, audio fps, bench bands): the rows of `index` whose
-    * `keys` the batch frame `probe` carries — a broadcast semi-join on
-    * the batch's distinct keys, so the index is scanned, never shuffled —
-    * pinned through the batch's `pins` (read twice: the bucket count and
-    * the lookup), minus the buckets holding more than `maxBucket` of them
-    * ([[hot]], a broadcast anti-join). Every index row of a probed key is
-    * touched, so the count is that bucket's full size: no size table and
-    * no O(index) pass, and a verify join after it fans out at most
-    * `maxBucket` rows per probe key. The trade: an oversized bucket's
-    * touched rows are pinned for the batch before they are dropped.
+    * image bands, audio fps, bench bands): the [[touched]] rows (pinned,
+    * since they are read twice: the bucket count and the lookup), minus
+    * the buckets holding more than `maxBucket` of them ([[hot]], a
+    * broadcast anti-join). Every index row of a probed key is touched, so
+    * the count is that bucket's full size: no size table and no O(index)
+    * pass, and a verify join after it fans out at most `maxBucket` rows
+    * per probe key. The trade: an oversized bucket's touched rows are
+    * pinned for the batch before they are dropped.
     */
   def lookup(index: DataFrame, probe: DataFrame, keys: Seq[String], maxBucket: Int,
       pins: Pin.Scope): DataFrame = {
-    val touched = index
-      .join(broadcast(probe.select(keys.map(col): _*).distinct()), keys, "left_semi")
-      .transform(pins.truncate(_))
-    touched.join(broadcast(hot(touched, keys, maxBucket)), keys, "left_anti")
+    val rows = touched(index, probe, keys, pins)
+    rows.join(broadcast(hot(rows, keys, maxBucket)), keys, "left_anti")
   }
 
   /** Compiled in-bucket pair expansion over a sorted `array<bigint>`:

@@ -9,15 +9,29 @@ import graft.functions.VectorFunctions._
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
   * column.
   *
-  * Two paths:
-  *  - brute force: broadcast the (small) query set against the corpus —
-  *    exact, O(|Q|·n), the correctness baseline; at 100 TB the corpus
-  *    scan is embarrassingly parallel and the top-K is a per-partition
-  *    heap then a tiny final merge (Spark's window + limit does this);
-  *  - LSH-bucketed: random-hyperplane signatures (deterministic planes,
+  * Every top-k retriever is one skeleton: the query head ([[queryHead]]:
+  * each query's vector and norm), a candidate generator, the exact cosine
+  * of each candidate against its query, and the per-query rank
+  * ([[exactTopK]]: sim desc, vec_id asc, over the one [[ranked]] window).
+  * Only the candidate generator differs:
+  *  - brute force: the (small) query set broadcast against the whole
+  *    corpus — exact, O(|Q|·n), the correctness baseline; at 100 TB the
+  *    corpus scan is embarrassingly parallel and the top-K is a
+  *    per-partition heap then a tiny final merge (Spark's window + limit);
+  *  - LSH buckets: random-hyperplane signatures (deterministic planes,
   *    [[graft.functions.VectorFunctions.hyperplaneSigns]]) pre-partition
-  *    the corpus; each query probes only its own bucket, so the join key
-  *    is the bucket id and the shuffle is O(n), never O(n²).
+  *    the corpus and each query probes its own bucket (or a few flipped
+  *    ones), so the join key is the bucket id and the shuffle is O(n),
+  *    never O(n²);
+  *  - IVF cells: each query probes its `nProbe` nearest centroids
+  *    ([[probe]]) and searches only those cells, in-session or from the
+  *    persisted index;
+  *  - a coarse prefix-cosine shortlist, or int8-dequantized vectors.
+  *
+  * The IVF centroids are one table shape ([[centroidTable]]), and a
+  * vector's own cell is one rule ([[nearestCell]]): the highest rounded
+  * cosine, ties to the lowest cell id — the probe's (csim desc, part asc)
+  * order.
   *
   * Similarities are rounded to 6 dp BEFORE ranking so ordering is stable
   * across engines (ulp-level summation differences can't flip ranks).
@@ -35,19 +49,47 @@ object SimilaritySearch {
   private def pairSim(v1: Column, v2: Column, n1: Column, n2: Column): Column =
     round(when(n1 * n2 > 0, dot(v1, v2) / (n1 * n2)).otherwise(lit(0.0)), 6)
 
+  /** The query side of every retriever: (query_id, qvec, qnrm). */
+  private def queryHead(queries: DataFrame): DataFrame =
+    withNorm(queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
+      "qvec", "qnrm")
+
+  /** `df` ranked by `order` within each `by` group, the first `k` rows
+    * kept, the rank (an int) in `as`.
+    */
+  private def ranked(df: DataFrame, order: Seq[Column], k: Int, as: String,
+      by: Seq[String] = Seq("query_id")): DataFrame =
+    df.withColumn(as, row_number().over(Window.partitionBy(by.map(col): _*).orderBy(order: _*)))
+      .filter(col(as) <= k)
+
+  private val Rank = col("rank").cast("long").as("rank")
+
+  /** The skeleton's tail: each candidate row (a corpus `vec_id`,
+    * `embedding`, `nrm` beside a query head) scored by exact cosine, the
+    * top k per query kept. Output: (query_id, rank, extra…, vec_id, sim).
+    */
+  private def exactTopK(candidates: DataFrame, k: Int, extra: Column*): DataFrame =
+    ranked(candidates.withColumn("sim",
+        pairSim(col("embedding"), col("qvec"), col("nrm"), col("qnrm"))),
+      Seq(col("sim").desc, col("vec_id").asc), k, "rank")
+      .select(Seq(col("query_id"), Rank) ++ extra ++ Seq(col("vec_id"), col("sim")): _*)
+
+  /** Candidates sharing a `key` value with a probing query (the bucket or
+    * the cell), the query's own row excluded.
+    */
+  private def sharing(corpus: DataFrame, probes: DataFrame, key: String): DataFrame =
+    corpus.join(broadcast(probes), Seq(key)).filter(col("vec_id") =!= col("query_id"))
+
+  /** The `v` values of each group as one array in ascending `i` order. */
+  private def indexOrdered(i: String, v: String): Column =
+    transform(array_sort(collect_list(struct(col(i), col(v)))), e => e.getField(v))
+
   /** Exact top-k cosine neighbors for each query vector.
     * `corpus` and `queries` both need (vec_id, embedding).
     */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val c = withNorm(corpus, "embedding", "nrm")
-    val q = withNorm(queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
-      "qvec", "qnrm")
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("sim", pairSim(col("embedding"), col("qvec"), col("nrm"), col("qnrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("vec_id"), col("sim"))
-  }
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    exactTopK(withNorm(corpus, "embedding", "nrm")
+      .join(broadcast(queryHead(queries)), col("vec_id") =!= col("query_id")), k)
 
   /** Two-stage coarse-then-rerank retrieval: stage 1 scores every corpus
     * vector against the query on only the first `coarseDim` dimensions
@@ -64,26 +106,20 @@ object SimilaritySearch {
       coarseDim: Int, shortlist: Int): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be ≥ k $k")
     val trunc = (v: Column) => slice(v, 1, coarseDim)
-    val c = withNorm(corpus, "embedding", "nrm")
-      .withColumn("cvec", trunc(col("embedding")))
-    val cc = withNorm(c, "cvec", "cnrm")
-    val q0 = queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      .withColumn("qtrunc", trunc(col("qvec")))
-    val q = withNorm(withNorm(q0, "qvec", "qnrm"), "qtrunc", "qtnrm")
+    val c = withNorm(withNorm(corpus, "embedding", "nrm")
+      .withColumn("cvec", trunc(col("embedding"))), "cvec", "cnrm")
+    val q = withNorm(queryHead(queries).withColumn("qtrunc", trunc(col("qvec"))),
+      "qtrunc", "qtnrm")
     // stage 1: coarse scores over truncated prefixes, shortlist per query
-    val coarse = cc.join(broadcast(q), col("vec_id") =!= col("query_id"))
+    val coarse = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .withColumn("csim", pairSim(col("cvec"), col("qtrunc"), col("cnrm"), col("qtnrm")))
-    val w1 = Window.partitionBy(col("query_id")).orderBy(col("csim").desc, col("vec_id").asc)
-    val short = coarse.withColumn("crank", row_number().over(w1))
-      .filter(col("crank") <= shortlist)
     // stage 2: exact rerank of the shortlist only
-    val w2 = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    short
-      .withColumn("sim", pairSim(col("embedding"), col("qvec"), col("nrm"), col("qnrm")))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("vec_id"), col("sim"))
+    exactTopK(ranked(coarse, Seq(col("csim").desc, col("vec_id").asc), shortlist, "crank"), k)
   }
+
+  /** Corpus rows with their norm and hyperplane-sign bucket. */
+  private def bucketed(corpus: DataFrame, planes: Seq[Array[Double]]): DataFrame =
+    withNorm(corpus, "embedding", "nrm").withColumn("bucket", lshBucket(col("embedding"), planes))
 
   /** LSH-bucketed ANN: candidates share the query's hyperplane-sign
     * bucket; exact cosine re-ranks within the bucket. Recall < 1 by
@@ -91,17 +127,9 @@ object SimilaritySearch {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, nPlanes: Int, dim: Int): DataFrame = {
     val planes = hyperplaneSigns(nPlanes, dim)
-    val bucketed = withNorm(corpus, "embedding", "nrm")
-      .withColumn("bucket", lshBucket(col("embedding"), planes))
-    val q = withNorm(queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
-        "qvec", "qnrm")
-      .withColumn("bucket", lshBucket(col("qvec"), planes))
-    val scored = bucketed.join(broadcast(q), Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", pairSim(col("embedding"), col("qvec"), col("nrm"), col("qnrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("bucket"), col("rank").cast("long").as("rank"), col("vec_id"), col("sim"))
+    val q = queryHead(queries).withColumn("bucket", lshBucket(col("qvec"), planes))
+    exactTopK(sharing(bucketed(corpus, planes), q, "bucket"), k, col("bucket"))
+      .select("query_id", "bucket", "rank", "vec_id", "sim")
   }
 
   /** IVF coarse-quantizer training: per-partition centroids as long-form
@@ -119,36 +147,62 @@ object SimilaritySearch {
       .groupBy(col("part"), col("i"))
       .agg(round(avg(col("x").cast("double")), 6).as("c"))
 
+  /** The centroid table every IVF path reads: (part, cvec, cnrm), one row
+    * per cell of the long-form [[ivfCentroids]] rows, components in index
+    * order (a deterministic fold).
+    */
+  private def centroidTable(long: DataFrame): DataFrame =
+    long.groupBy(col("part")).agg(indexOrdered("i", "c").as("cvec"))
+      .withColumn("cnrm", norm(col("cvec")))
+
+  /** The `nProbe` nearest cells of each query: (query_id, qvec, qnrm,
+    * part), ties to the lower cell id.
+    */
+  private def probe(queries: DataFrame, cent: DataFrame, nProbe: Int): DataFrame =
+    ranked(queryHead(queries).crossJoin(broadcast(cent))
+        .withColumn("csim", pairSim(col("qvec"), col("cvec"), col("qnrm"), col("cnrm"))),
+      Seq(col("csim").desc, col("part").asc), nProbe, "pr")
+      .select(col("query_id"), col("qvec"), col("qnrm"), col("part"))
+
+  /** The top k of each query among the rows of the cells it probed. */
+  private def cellTopK(vecs: DataFrame, probed: DataFrame, k: Int): DataFrame =
+    exactTopK(sharing(vecs, probed, "part"), k, col("part").cast("long").as("part"))
+
+  /** The centroid table on the driver, ascending cell id: cells × dim
+    * doubles, bounded by construction.
+    */
+  private def centroidsOnDriver(cent: DataFrame): Seq[(Long, Seq[Double])] =
+    cent.collect().toSeq
+      .map(r => r.getAs[Number]("part").longValue -> r.getSeq[Double](1))
+      .sortBy(_._1)
+
+  /** The nearest-cell rule: each row's (`embedding`, `nrm`) cell among
+    * `cent` (ascending cell id) — the highest rounded cosine, ties to the
+    * lowest cell id (strict > keeps the first of the ascending scan), the
+    * order [[probe]] ranks cells in. The centroids are driver-resident
+    * and tiny, so this is a row-LOCAL fold over a literal centroid array:
+    * no join, no shuffle, whole-stage codegen end to end.
+    */
+  private def nearestCell(cent: Seq[(Long, Seq[Double])]): Column = {
+    val cells = cent.map { case (p, c) =>
+      struct(lit(p).as("p"), array(c.map(lit): _*).as("cv"),
+        lit(math.sqrt(c.map(x => x * x).sum)).as("cn"))
+    }
+    aggregate(array(cells: _*), struct(lit(-2.0).as("s"), lit(-1L).as("p")), (acc, e) => {
+      val sim = pairSim(col("embedding"), e.getField("cv"), col("nrm"), e.getField("cn"))
+      when(sim > acc.getField("s"), struct(sim.as("s"), e.getField("p").as("p"))).otherwise(acc)
+    }).getField("p")
+  }
+
   /** IVF probe search: each query scores the (few) centroids, probes the
     * `nProbe` nearest partitions, and searches ONLY those partitions
     * exactly — the corpus-side work is a partition-pruned fraction of the
     * data, which is the entire point of IVF at 100 TB.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, partitionCol: String,
-      k: Int, nProbe: Int): DataFrame = {
-    // centroid arrays, components in index order (deterministic fold)
-    val cent = ivfCentroids(corpus, partitionCol)
-      .groupBy(col("part"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-        e => e.getField("c")).as("cvec"))
-      .withColumn("cnrm", norm(col("cvec")))
-    val q = withNorm(queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
-      "qvec", "qnrm")
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("csim", pairSim(col("qvec"), col("cvec"), col("qnrm"), col("cnrm")))
-    val pw = Window.partitionBy(col("query_id")).orderBy(col("csim").desc, col("part").asc)
-    val probed = probes.withColumn("pr", row_number().over(pw)).filter(col("pr") <= nProbe)
-      .select(col("query_id"), col("qvec"), col("qnrm"), col("part"))
-    val c = withNorm(corpus, "embedding", "nrm")
-      .withColumn("part", col(partitionCol))
-    val scored = c.join(broadcast(probed), Seq("part"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", pairSim(col("embedding"), col("qvec"), col("nrm"), col("qnrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("part").cast("long").as("part"), col("vec_id"), col("sim"))
-  }
+      k: Int, nProbe: Int): DataFrame =
+    cellTopK(withNorm(corpus, "embedding", "nrm").withColumn("part", col(partitionCol)),
+      probe(queries, centroidTable(ivfCentroids(corpus, partitionCol)), nProbe), k)
 
   /** Persisted IVF index, build side: writes the coarse centroid table
     * and the corpus PARTITIONED BY its coarse cell, vector norms
@@ -166,27 +220,20 @@ object SimilaritySearch {
   }
 
   /** Persisted IVF index, incremental append: assign new vectors to
-    * their nearest EXISTING centroid and add them into that cell's
-    * partition directory — continuous ingest ([[graft.CurateStreamApp]])
-    * keeps the index fresh without a refit. Standard IVF drift caveat:
-    * appended vectors didn't participate in centroid fitting, so after
-    * enough drift a periodic [[buildIvfIndex]] rebuild (plus
-    * [[Compaction]] of the cell directories accumulating small batch
-    * files) restores cell balance.
+    * their nearest EXISTING centroid ([[nearestCell]]) and add them into
+    * that cell's partition directory — continuous ingest
+    * ([[graft.CurateStreamApp]]) keeps the index fresh without a refit.
+    * Standard IVF drift caveat: appended vectors didn't participate in
+    * centroid fitting, so after enough drift a [[rebalanceIvfIndex]] (or
+    * a periodic [[buildIvfIndex]] rebuild, plus [[Compaction]] of the
+    * cell directories accumulating small batch files) restores cell
+    * balance.
     */
   def appendToIvfIndex(spark: SparkSession, dir: String, vectors: DataFrame): Unit = {
-    val cent = spark.read.parquet(s"$dir/centroids")
-      .groupBy(col("part"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-        e => e.getField("c")).as("cvec"))
-      .withColumn("cnrm", norm(col("cvec")))
-    val v = withNorm(vectors, "embedding", "nrm")
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cpart").asc)
-    v.crossJoin(broadcast(cent.select(col("part").as("cpart"), col("cvec"), col("cnrm"))))
-      .withColumn("csim", pairSim(col("embedding"), col("cvec"), col("nrm"), col("cnrm")))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .drop("cvec", "cnrm", "csim", "rn")
-      .withColumn("part", col("cpart").cast("long")).drop("cpart")
+    val cent = centroidsOnDriver(centroidTable(spark.read.parquet(s"$dir/centroids")))
+    require(cent.nonEmpty, s"$dir holds no centroids to assign vectors to")
+    withNorm(vectors, "embedding", "nrm")
+      .withColumn("part", nearestCell(cent))
       .write.mode(SaveMode.Append).partitionBy("part").parquet(s"$dir/vectors")
   }
 
@@ -205,12 +252,13 @@ object SimilaritySearch {
     *     current centroids over a deterministic hash-sample of the
     *     vectors (cell ids stay stable — a cell whose region didn't
     *     drift keeps its centroid and its rows);
-    *  2. assign every vector to its nearest new centroid and compute the
-    *     set of cells any row enters or leaves — only THOSE cells'
-    *     partitions are re-encoded by Spark; untouched cells are carried
-    *     into the staged layout as raw file copies (no decode, no
-    *     shuffle — at 100 TB with localized drift this is the difference
-    *     between rewriting everything and rewriting a few percent);
+    *  2. assign every vector to its nearest new centroid
+    *     ([[nearestCell]]) and compute the set of cells any row enters or
+    *     leaves — only THOSE cells' partitions are re-encoded by Spark;
+    *     untouched cells are carried into the staged layout as raw file
+    *     copies (no decode, no shuffle — at 100 TB with localized drift
+    *     this is the difference between rewriting everything and
+    *     rewriting a few percent);
     *  3. promote centroids + vectors atomically via
     *     [[StateSwap.swapStaged]] — readers see the old index or the new
     *     one, never a mix (mismatched centroids/cells would mis-probe).
@@ -231,53 +279,18 @@ object SimilaritySearch {
       .filter(pmod(xxhash64(col("vec_id"), lit(seed)), lit(mod)) <
         lit((sampleFraction * mod).toLong))
       .select(col("embedding"), col("nrm")))
-    // centroids are driver-resident and tiny (cells × dim), so nearest-cell
-    // assignment is a row-LOCAL fold over a literal centroid array — no
-    // join, no shuffle, whole-stage codegen end to end; ties break to the
-    // lowest cell id (strict > keeps the first of an ascending scan),
-    // matching [[appendToIvfIndex]]'s (csim desc, part asc) ordering
-    def nearestCell(cent: Seq[(Long, Seq[Double])]): Column = {
-      val entries = cent.sortBy(_._1).map { case (p, c) =>
-        val cn = math.sqrt(c.map(x => x * x).sum)
-        struct(lit(p).as("p"), array(c.map(lit): _*).as("cv"), lit(cn).as("cn"))
-      }
-      aggregate(array(entries: _*),
-        struct(lit(-2.0).as("s"), lit(-1L).as("p")),
-        (acc, e) => {
-          val sim = round(when(col("nrm") * e.getField("cn") > 0,
-            dot(col("embedding"), e.getField("cv")) / (col("nrm") * e.getField("cn")))
-            .otherwise(lit(0.0)), 6)
-          when(sim > acc.getField("s"),
-            struct(sim.as("s"), e.getField("p").as("p"))).otherwise(acc)
-        }).getField("p")
-    }
-    def nearest(df: DataFrame, cent: Seq[(Long, Seq[Double])]): DataFrame =
-      df.withColumn("cpart", nearestCell(cent))
-    var cent: Seq[(Long, Seq[Double])] = spark.read.parquet(s"$dir/centroids")
-      .groupBy(col("part"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-        e => e.getField("c")).as("cvec"))
-      .collect().toSeq
-      .map(r => r.getAs[Number]("part").longValue -> r.getSeq[Double](1))
-      .sortBy(_._1)
+    var cent = centroidsOnDriver(centroidTable(spark.read.parquet(s"$dir/centroids")))
     for (_ <- 1 to iters) {
-      val means = nearest(sample, cent)
-        .select(col("cpart"), posexplode(col("embedding")).as(Seq("i", "x")))
-        .groupBy(col("cpart"), col("i"))
-        .agg(round(avg(col("x").cast("double")), 6).as("c"))
-        .groupBy(col("cpart"))
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-          e => e.getField("c")).as("cvec"))
-        .collect()
-        .map(r => r.getAs[Number]("cpart").longValue -> r.getSeq[Double](1)).toMap
+      val means = centroidsOnDriver(centroidTable(ivfCentroids(
+        sample.withColumn("cpart", nearestCell(cent)), "cpart"))).toMap
       // a cell the sample never hits keeps its old centroid (never NaN)
       cent = cent.map { case (p, c) => p -> means.getOrElse(p, c) }
     }
     pins.release() // the sample
     // full assignment against the new centroids; only cells some row
     // enters or leaves get re-encoded
-    val assigned = pins.cache(nearest(vecs, cent)
-      .withColumn("new_part", col("cpart").cast("long")).drop("cpart")
+    val assigned = pins.cache(vecs
+      .withColumn("new_part", nearestCell(cent))
       .withColumn("old_part", col("part").cast("long")))
     try {
       val changedCells = assigned
@@ -319,31 +332,13 @@ object SimilaritySearch {
     */
   def queryIvfIndex(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
-    val cent = spark.read.parquet(s"$dir/centroids")
-      .groupBy(col("part"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-        e => e.getField("c")).as("cvec"))
-      .withColumn("cnrm", norm(col("cvec")))
-    val q = withNorm(queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
-      "qvec", "qnrm")
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("csim", pairSim(col("qvec"), col("cvec"), col("qnrm"), col("cnrm")))
-    val pw = Window.partitionBy(col("query_id")).orderBy(col("csim").desc, col("part").asc)
-    val probed = probes.withColumn("pr", row_number().over(pw)).filter(col("pr") <= nProbe)
-      .select(col("query_id"), col("qvec"), col("qnrm"), col("part"))
+    val probed = probe(queries, centroidTable(spark.read.parquet(s"$dir/centroids")), nProbe)
     val cells = probed.select(col("part").cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val vecs = spark.read.parquet(s"$dir/vectors")
-      .filter(col("part").isin(cells: _*)) // directory-pruning literal
     // per-query restriction to ITS probed cells happens in the join key;
     // the scan-level isin only bounds the union of cells any query needs
-    val scored = vecs.join(broadcast(probed), Seq("part"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", pairSim(col("embedding"), col("qvec"), col("nrm"), col("qnrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("part").cast("long").as("part"), col("vec_id"), col("sim"))
+    cellTopK(spark.read.parquet(s"$dir/vectors")
+      .filter(col("part").isin(cells: _*)), probed, k) // directory-pruning literal
   }
 
   /** Embedding-cosine near-duplicate pairs above `minSim`, bucketed by
@@ -487,32 +482,38 @@ object SimilaritySearch {
     */
   def semanticDedup(corpus: DataFrame, tau: Double, k: Int,
       fitSampleCap: Int = 100000, seed: Long = 42L,
-      fitMaxIter: Int = 20): DataFrame = {
-    val assigned = assignedClusters(corpus, k, fitSampleCap, seed, fitMaxIter)
-    // EVERY senior-side column is renamed — in a self-join a shared name
-    // resolves both sides to the same attribute and the equi-predicate
-    // folds to trivially-true (the join silently degenerates to
-    // all-pairs), so the rename is the load-bearing disambiguation
-    val senior = assigned.select(col("cluster").as("scl"), col("vec_id").as("sid"),
-      col("embedding").as("sv"), col("nrm").as("sn"))
-    // dropped = rows with at least one senior near-dup in their cluster —
-    // a LEFT SEMI on the cluster key (bounded fan-out, never cross-cluster)
-    val dropped = assigned.join(senior,
-        col("scl") === col("cluster") &&
-          col("sid") < col("vec_id") &&
-          pairSim(col("sv"), col("embedding"), col("sn"), col("nrm")) >= tau,
-        "left_semi")
-      .select(col("vec_id"), lit(0).as("kept"))
+      fitMaxIter: Int = 20): DataFrame =
+    keptFlags(assignedClusters(corpus, k, fitSampleCap, seed, fitMaxIter), tau)
+
+  /** (vec_id, cluster, kept) over an [[assignedClusters]] frame: dropped
+    * = rows with at least one senior near-dup in their cluster — a LEFT
+    * SEMI on the cluster key (bounded fan-out, never cross-cluster).
+    */
+  private def keptFlags(assigned: DataFrame, tau: Double): DataFrame = {
+    val dropped = seniorJoin(assigned, tau, "left_semi").select(col("vec_id"), lit(0).as("kept"))
     assigned.select(col("vec_id"), col("cluster").cast("long").as("cluster"))
       .join(dropped, Seq("vec_id"), "left")
       .withColumn("kept", coalesce(col("kept"), lit(1)).cast("long"))
   }
 
-  /** Fit-and-assign head shared by [[semanticDedup]] and
-    * [[semanticCandidatePairs]]: seeded K-Means on a bounded
-    * deterministic sample, every vector assigned to its nearest
-    * centroid. Returns (vec_id, embedding, cluster, nrm).
+  /** Each row of an [[assignedClusters]] frame joined (`how`) to the
+    * more senior (lower-id) members of its cluster at cosine ≥ `tau`,
+    * the senior's id as `sid`. EVERY senior-side column is renamed — in
+    * a self-join a shared name resolves both sides to the same attribute
+    * and the equi-predicate folds to trivially-true (the join silently
+    * degenerates to all-pairs), so the rename is the load-bearing
+    * disambiguation.
     */
+  private def seniorJoin(assigned: DataFrame, tau: Double, how: String): DataFrame = {
+    val senior = assigned.select(col("cluster").as("scl"), col("vec_id").as("sid"),
+      col("embedding").as("sv"), col("nrm").as("sn"))
+    assigned.join(senior,
+      col("scl") === col("cluster") &&
+        col("sid") < col("vec_id") &&
+        pairSim(col("sv"), col("embedding"), col("sn"), col("nrm")) >= tau,
+      how)
+  }
+
   /** Above this k the flat fit/assign regime-gates to the two-level
     * quantizer (the a21/AdaptiveWidth pattern): flat k-means is
     * O(iter·k·sample·dim) to fit and O(n·k·dim) to assign, and with the
@@ -524,6 +525,11 @@ object SimilaritySearch {
     */
   private val FlatKMax = 1024
 
+  /** Fit-and-assign head shared by [[semanticDedup]] and
+    * [[semanticCandidatePairs]]: seeded K-Means on a bounded
+    * deterministic sample, every vector assigned to its nearest
+    * centroid. Returns (vec_id, embedding, cluster, nrm).
+    */
   private def assignedClusters(corpus: DataFrame, k: Int, fitSampleCap: Int,
       seed: Long, fitMaxIter: Int): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
@@ -591,6 +597,20 @@ object SimilaritySearch {
       .transform(Pin.truncate(_))
   }
 
+  /** [[assignedClusters]] with k = max(2, ceil(n / targetCluster)), which
+    * keeps expected cluster population — and so per-row join fan-out —
+    * flat as the corpus grows; the fit budget scales with k, not with n
+    * (min(fitSampleCap, max(16·k, 10000)) rows, 10 iterations; see
+    * [[semanticDedupAdaptive]]'s scaladoc for the measured numbers).
+    * Exact integer arithmetic so every caller derives the same fit.
+    */
+  private def adaptiveClusters(corpus: DataFrame, targetCluster: Int,
+      fitSampleCap: Int, seed: Long): DataFrame = {
+    val k = math.max(2L, (corpus.count() + targetCluster - 1) / targetCluster).toInt
+    assignedClusters(corpus, k, math.min(fitSampleCap, math.max(16 * k, 10000)), seed,
+      fitMaxIter = 10)
+  }
+
   /** SemDeDup as a CANDIDATE-PAIR generator — the embedding-modality
     * plug-in for the curation apps' `nearDupMethod` dial (the
     * [[graft.operators.Dedup.lshCandidatePairs]] /
@@ -605,17 +625,9 @@ object SimilaritySearch {
     */
   def semanticCandidatePairs(corpus: DataFrame, tau: Double,
       targetCluster: Int = 128, fitSampleCap: Int = 100000,
-      seed: Long = 42L): DataFrame = {
-    val (k, cap) = adaptiveKCap(corpus.count(), targetCluster, fitSampleCap)
-    val assigned = assignedClusters(corpus, k, cap, seed, fitMaxIter = 10)
-    val senior = assigned.select(col("cluster").as("scl"), col("vec_id").as("sid"),
-      col("embedding").as("sv"), col("nrm").as("sn"))
-    assigned.join(senior,
-        col("scl") === col("cluster") &&
-          col("sid") < col("vec_id") &&
-          pairSim(col("sv"), col("embedding"), col("sn"), col("nrm")) >= tau)
+      seed: Long = 42L): DataFrame =
+    seniorJoin(adaptiveClusters(corpus, targetCluster, fitSampleCap, seed), tau, "inner")
       .select(col("sid").as("doc1"), col("vec_id").as("doc2"))
-  }
 
   /** The fit/assign head of [[semanticCandidatePairs]] as a standalone
     * (vec_id, cluster) frame — same adaptive k, fit-sample rule, seed and
@@ -629,23 +641,9 @@ object SimilaritySearch {
     * embeddings.
     */
   def semanticAssignments(corpus: DataFrame, targetCluster: Int = 128,
-      fitSampleCap: Int = 100000, seed: Long = 42L): DataFrame = {
-    val (k, cap) = adaptiveKCap(corpus.count(), targetCluster, fitSampleCap)
-    assignedClusters(corpus, k, cap, seed, fitMaxIter = 10)
+      fitSampleCap: Int = 100000, seed: Long = 42L): DataFrame =
+    adaptiveClusters(corpus, targetCluster, fitSampleCap, seed)
       .select(col("vec_id"), col("cluster").cast("long").as("cluster"))
-  }
-
-  /** Adaptive (k, fit-sample cap): k = ceil(n / targetCluster) keeps
-    * expected cluster population — and so per-row join fan-out — flat as
-    * the corpus grows; the fit budget scales with k, not with n (see
-    * [[semanticDedupAdaptive]]'s scaladoc for the measured numbers).
-    * Exact integer arithmetic so every caller derives the same pair.
-    */
-  private def adaptiveKCap(n: Long, targetCluster: Int,
-      fitSampleCap: Int): (Int, Int) = {
-    val k = math.max(2L, (n + targetCluster - 1) / targetCluster).toInt
-    (k, math.min(fitSampleCap, math.max(16 * k, 10000)))
-  }
 
   /** [[semanticDedup]] with k chosen from the corpus size so expected
     * cluster population stays near `targetCluster` — the linear-in-n
@@ -663,10 +661,8 @@ object SimilaritySearch {
     */
   def semanticDedupAdaptive(corpus: DataFrame, tau: Double,
       targetCluster: Int = 128, fitSampleCap: Int = 100000,
-      seed: Long = 42L): DataFrame = {
-    val (k, cap) = adaptiveKCap(corpus.count(), targetCluster, fitSampleCap)
-    semanticDedup(corpus, tau, k, cap, seed, fitMaxIter = 10)
-  }
+      seed: Long = 42L): DataFrame =
+    keptFlags(adaptiveClusters(corpus, targetCluster, fitSampleCap, seed), tau)
 
   /** Per-dimension (min, max) quantization parameters, as one row of two
     * index-ordered arrays — the int8 scalar-quantization codebook. One
@@ -677,11 +673,7 @@ object SimilaritySearch {
       .select(posexplode(col("embedding")).as(Seq("i", "x")))
       .groupBy(col("i"))
       .agg(min(col("x").cast("double")).as("mn"), max(col("x").cast("double")).as("mx"))
-      .agg(
-        transform(array_sort(collect_list(struct(col("i"), col("mn")))),
-          e => e.getField("mn")).as("mns"),
-        transform(array_sort(collect_list(struct(col("i"), col("mx")))),
-          e => e.getField("mx")).as("mxs"))
+      .agg(indexOrdered("i", "mn").as("mns"), indexOrdered("i", "mx").as("mxs"))
 
   /** int8-dequantized vector: each component snapped to its 256-level
     * grid, `floor(t + 0.5)` (half-up, engine-unambiguous) on
@@ -708,20 +700,43 @@ object SimilaritySearch {
     */
   def sqTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int): DataFrame = {
     val params = sqParams(corpus)
-    def dq(df: DataFrame, idAs: String) = df
+    def dq(df: DataFrame, id: String, v: String, n: String) = withNorm(df
       .crossJoin(broadcast(params))
-      .select(col("vec_id").as(idAs),
-        dequantized(col("embedding"), col("mns"), col("mxs"), dim).as("dv"))
-      .withColumn("nrm", norm(col("dv")))
-    val c = dq(corpus, "vec_id")
-    val q = dq(queries, "query_id")
-      .withColumnRenamed("dv", "qv").withColumnRenamed("nrm", "qnrm")
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("qsim", pairSim(col("dv"), col("qv"), col("nrm"), col("qnrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("qsim").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("vec_id"), col("qsim"))
+      .select(col("vec_id").as(id), dequantized(col("embedding"), col("mns"), col("mxs"), dim).as(v)),
+      v, n)
+    exactTopK(dq(corpus, "vec_id", "embedding", "nrm")
+        .join(broadcast(dq(queries, "query_id", "qvec", "qnrm")), col("vec_id") =!= col("query_id")),
+      k).withColumnRenamed("sim", "qsim")
   }
+
+  /** Per-(code, sub) subspace centroid vectors — the PQ codebook shared
+    * by [[pqCodes]] (encode) and [[pqAdcTopK]] (query-time LUT).
+    */
+  private def subspaceCentroids(corpus: DataFrame, partitionCol: String,
+      subDim: Int): DataFrame =
+    ivfCentroids(corpus, partitionCol)
+      .select(col("part").as("code"), (col("i") / subDim).cast("int").as("sub"),
+        pmod(col("i"), lit(subDim)).cast("int").as("j"), col("c"))
+      .groupBy(col("code"), col("sub"))
+      .agg(indexOrdered("j", "c").as("cvec"))
+
+  /** Each row's `nSub` contiguous subvectors: (`id`, sub, sv), `id` the
+    * row's `vec_id`.
+    */
+  private def subvectors(df: DataFrame, id: String, nSub: Int, subDim: Int): DataFrame =
+    df.select(col("vec_id").as(id), explode(sequence(lit(0), lit(nSub - 1))).as("sub"),
+        col("embedding"))
+      .select(col(id), col("sub"),
+        transform(sequence(lit(0), lit(subDim - 1)),
+          j => element_at(col("embedding"), col("sub") * subDim + j + 1).cast("double"))
+          .as("sv"))
+
+  /** Squared distance of subvector `sv` to centroid `cvec`, accumulated
+    * per dimension left to right, rounded.
+    */
+  private def subDist: Column = round(aggregate(
+    zip_with(col("sv"), col("cvec"), (x, c) => (x - c) * (x - c)),
+    lit(0.0), (acc, d) => acc + d), 6)
 
   /** Product-quantization encoding: the vector splits into `nSub`
     * contiguous subvectors; each is coded as its nearest subspace
@@ -740,37 +755,13 @@ object SimilaritySearch {
     * Output: (vec_id, sub, code, err) — err the subvector's squared
     * reconstruction distance, rounded.
     */
-  /** Per-(code, sub) subspace centroid vectors — the PQ codebook shared
-    * by [[pqCodes]] (encode) and [[pqAdcTopK]] (query-time LUT).
-    */
-  private def subspaceCentroids(corpus: DataFrame, partitionCol: String,
-      subDim: Int): DataFrame =
-    ivfCentroids(corpus, partitionCol)
-      .select(col("part").as("code"), (col("i") / subDim).cast("int").as("sub"),
-        pmod(col("i"), lit(subDim)).cast("int").as("j"), col("c"))
-      .groupBy(col("code"), col("sub"))
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("c")))),
-        e => e.getField("c")).as("cvec"))
-
   def pqCodes(corpus: DataFrame, partitionCol: String, nSub: Int, dim: Int): DataFrame = {
     require(dim % nSub == 0, s"dim $dim must divide into $nSub subspaces")
     val subDim = dim / nSub
-    val cent = subspaceCentroids(corpus, partitionCol, subDim)
-    val subs = corpus
-      .select(col("vec_id"), explode(sequence(lit(0), lit(nSub - 1))).as("sub"),
-        col("embedding"))
-      .select(col("vec_id"), col("sub"),
-        transform(sequence(lit(0), lit(subDim - 1)),
-          j => element_at(col("embedding"), col("sub") * subDim + j + 1).cast("double"))
-          .as("sv"))
-    val dist = aggregate(
-      zip_with(col("sv"), col("cvec"), (x, c) => (x - c) * (x - c)),
-      lit(0.0), (acc, d) => acc + d)
-    val scored = subs.join(broadcast(cent), Seq("sub"))
-      .withColumn("err", round(dist, 6))
-    val w = Window.partitionBy(col("vec_id"), col("sub"))
-      .orderBy(col("err").asc, col("code").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+    val scored = subvectors(corpus, "vec_id", nSub, subDim)
+      .join(broadcast(subspaceCentroids(corpus, partitionCol, subDim)), Seq("sub"))
+      .withColumn("err", subDist)
+    ranked(scored, Seq(col("err").asc, col("code").asc), 1, "rk", Seq("vec_id", "sub"))
       .select(col("vec_id"), col("sub").cast("long").as("sub"),
         col("code").cast("long").as("code"), col("err"))
   }
@@ -792,32 +783,20 @@ object SimilaritySearch {
     */
   def pqAdcTopK(corpus: DataFrame, queries: DataFrame, partitionCol: String,
       k: Int, nSub: Int, dim: Int): DataFrame = {
-    require(dim % nSub == 0, s"dim $dim must divide into $nSub subspaces")
-    val subDim = dim / nSub
-    val codes = pqCodes(corpus, partitionCol, nSub, dim)
+    val codes = pqCodes(corpus, partitionCol, nSub, dim) // checks dim % nSub
       .select(col("vec_id"), col("sub").cast("int").as("sub"),
         col("code").cast("int").as("code"))
+    val subDim = dim / nSub
     val cent = subspaceCentroids(corpus, partitionCol, subDim)
       .withColumn("code", col("code").cast("int"))
-    val qsubs = queries
-      .select(col("vec_id").as("query_id"),
-        explode(sequence(lit(0), lit(nSub - 1))).as("sub"), col("embedding"))
-      .select(col("query_id"), col("sub"),
-        transform(sequence(lit(0), lit(subDim - 1)),
-          j => element_at(col("embedding"), col("sub") * subDim + j + 1).cast("double"))
-          .as("sv"))
-    val sq = aggregate(
-      zip_with(col("sv"), col("cvec"), (x, c) => (x - c) * (x - c)),
-      lit(0.0), (acc, d) => acc + d)
-    val lut = qsubs.join(broadcast(cent), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("code"), round(sq, 6).as("d"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adc").asc, col("vec_id").asc)
-    codes.join(broadcast(lut), Seq("sub", "code"))
+    val lut = subvectors(queries, "query_id", nSub, subDim)
+      .join(broadcast(cent), Seq("sub"))
+      .select(col("query_id"), col("sub"), col("code"), subDist.as("d"))
+    val adc = codes.join(broadcast(lut), Seq("sub", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(round(sum(col("d")), 6).as("adc"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("adc"), col("rank").cast("long").as("rank"))
+    ranked(adc, Seq(col("adc").asc, col("vec_id").asc), k, "rank")
+      .select(col("query_id"), col("vec_id"), col("adc"), Rank)
   }
 
   /** Multi-probe LSH ANN: each query searches its own hyperplane bucket
@@ -833,11 +812,7 @@ object SimilaritySearch {
     require(nProbe >= 1 && nProbe <= nPlanes + 1,
       s"nProbe must be in [1, nPlanes+1], got $nProbe")
     val planes = hyperplaneSigns(nPlanes, dim)
-    val bucketed = withNorm(corpus, "embedding", "nrm")
-      .withColumn("bucket", lshBucket(col("embedding"), planes))
-    val q0 = withNorm(
-      queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
-      "qvec", "qnrm")
+    val q0 = queryHead(queries)
       .withColumn("projs",
         array(planes.map(p => dot(col("qvec"), typedLit(p.toSeq))): _*))
       .withColumn("base", lshBucket(col("qvec"), planes))
@@ -861,11 +836,6 @@ object SimilaritySearch {
       .select(col("query_id"), col("qvec"), col("qnrm"), col("bucket"))
     // base + distinct single-bit flips → the probed buckets are distinct,
     // so no candidate is scored twice
-    val scored = bucketed.join(broadcast(q), Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", pairSim(col("embedding"), col("qvec"), col("nrm"), col("qnrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("vec_id"), col("sim"))
+    exactTopK(sharing(bucketed(corpus, planes), q, "bucket"), k)
   }
 }

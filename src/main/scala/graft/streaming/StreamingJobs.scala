@@ -78,27 +78,6 @@ object StreamingJobs {
   def documentsStream(spark: SparkSession, dir: String): DataFrame =
     tableStream(spark, dir, "documents")
 
-  /** ST7: stream-static near-dup candidate lookup — each incoming
-    * document computes its LSH band signatures ROW-LOCALLY
-    * (Dedup.lshBands: one codegen MinhashSig kernel per row, no
-    * stream-side shuffle) and
-    * equi-joins the static corpus band index on (band, sig). Stateless
-    * per micro-batch: no watermark, no state store — the streaming form
-    * of "which known docs is this new doc a near-dup of", which is how a
-    * continuously-ingesting corpus screens arrivals against a 100 TB
-    * reference index (the static side would be a bucketed/partitioned
-    * table; the join key is already the bucket).
-    *
-    * The static side gets the same degenerate-bucket cap as the batch
-    * candidate generator: an incoming doc landing in a megabucket would
-    * otherwise fan out to the bucket's whole membership in one batch.
-    * Emits one row per shared band; canonicalize + distinct downstream
-    * (distinct here would force unbounded streaming state).
-    */
-  def streamNearDupCandidates(docsStream: DataFrame, corpusBands: DataFrame,
-      maxBucket: Int = 10000): DataFrame =
-    streamNearDupAgainstIndex(docsStream, guardedBandIndex(corpusBands, maxBucket))
-
   /** The megabucket-capped corpus band index: `(match_id, band, sig)` with
     * degenerate buckets (> maxBucket members) dropped. Apply this ONCE at
     * index-build time and persist the result — a stream-static join
@@ -115,9 +94,22 @@ object StreamingJobs {
       .select(col("doc_id").as("match_id"), col("band"), col("sig"))
   }
 
-  /** Join-only half of ST7: the index must already be guarded (and, in
-    * production, read back from a persisted (band, sig)-clustered table —
-    * see `st7_stream_neardup`, which builds exactly that layout).
+  /** ST7: stream-static near-dup candidate lookup — each incoming
+    * document computes its LSH band signatures ROW-LOCALLY
+    * (Dedup.lshBands: one codegen MinhashSig kernel per row, no
+    * stream-side shuffle) and equi-joins the static corpus band index on
+    * (band, sig). Stateless per micro-batch: no watermark, no state
+    * store — the streaming form of "which known docs is this new doc a
+    * near-dup of", which is how a continuously-ingesting corpus screens
+    * arrivals against a 100 TB reference index.
+    *
+    * The index must already be guarded ([[guardedBandIndex]]: an
+    * incoming doc landing in a megabucket would otherwise fan out to the
+    * bucket's whole membership in one batch) and, in production, read
+    * back from a persisted (band, sig)-clustered table — see
+    * `st7_stream_neardup`, which builds exactly that layout. Emits one
+    * row per shared band; canonicalize + distinct downstream (distinct
+    * here would force unbounded streaming state).
     */
   def streamNearDupAgainstIndex(docsStream: DataFrame,
       guardedIndex: DataFrame): DataFrame =

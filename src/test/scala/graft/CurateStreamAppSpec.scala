@@ -717,12 +717,14 @@ class CurateStreamAppSpec extends AnyFunSuite {
       case r: ReusedExchangeExec => nodes(r.child)
       case _ => p.children.flatMap(nodes)
     })
-    val bandIndex = ".*/corpus_(state|deltas/batch=[0-9]+)/(bands|bucket_sizes)/?".r
-    def scansBandIndex(p: SparkPlan) = nodes(p).exists {
+    def state(tables: String) = s".*/corpus_(state|deltas/batch=[0-9]+)/($tables)/?".r
+    def scans(table: scala.util.matching.Regex)(p: SparkPlan) = nodes(p).exists {
       case s: FileSourceScanExec =>
-        s.relation.location.rootPaths.exists(r => bandIndex.matches(r.toString))
+        s.relation.location.rootPaths.exists(r => table.matches(r.toString))
       case _ => false
     }
+    val scansBandIndex = scans(state("bands|bucket_sizes")) _
+    val scansFps = scans(state("fps")) _
     val plans = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkPlan]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
@@ -757,5 +759,12 @@ class CurateStreamAppSpec extends AnyFunSuite {
     }.distinct
     assert(exchanged.isEmpty,
       s"${exchanged.size} exchanges over the band index:\n${exchanged.map(_.treeString).mkString("\n")}")
+    // the exact-dup screen reads the fp state by the batch's keys too
+    assert(all.exists(scansFps), s"no plan scanned the fp state in ${all.size} plans")
+    val fpExchanged = all.flatMap(nodes).collect {
+      case e: Exchange if scansFps(e) => e
+    }.distinct
+    assert(fpExchanged.isEmpty,
+      s"${fpExchanged.size} exchanges over the fp state:\n${fpExchanged.map(_.treeString).mkString("\n")}")
   }
 }

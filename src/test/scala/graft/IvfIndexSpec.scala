@@ -70,6 +70,26 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(res.count() == 3)
   }
 
+  test("appendToIvfIndex breaks a rounded-cosine tie to the lower cell id") {
+    import spark.implicits._
+    val dir = ScratchDirs.create("ivf_tie_")
+    // two cells, the higher id first: 5 at (1, 0) and 3 at (0, 1)
+    SimilaritySearch.buildIvfIndex(Seq((1L, Seq(1f, 0f), 5), (2L, Seq(0f, 1f), 3))
+      .toDF("vec_id", "embedding", "label"), "label", dir)
+    // (1, 1) is equidistant from both; (1.0000002, 1) is nearer cell 5 by
+    // ~2e-7 in cosine, which the 6 dp rounding turns into a tie
+    val v = Seq(1.0000002f, 1f).map(_.toDouble)
+    val cos = Seq(v(0), v(1)).map(x => x / math.sqrt(v.map(y => y * y).sum))
+    assert(cos(0) > cos(1))
+    assert(cos.map(c => BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP)).distinct.size == 1)
+    SimilaritySearch.appendToIvfIndex(spark, dir,
+      Seq((10L, Seq(1f, 1f), 0), (11L, Seq(1.0000002f, 1f), 0)).toDF("vec_id", "embedding", "label"))
+    val cells = spark.read.parquet(s"$dir/vectors").filter(col("vec_id") >= 10)
+      .select(col("vec_id"), col("part").cast("long")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cells == Map(10L -> 3L, 11L -> 3L))
+  }
+
   test("rebalanceIvfIndex restores recall after distribution drift") {
     import spark.implicits._
     val dir = ScratchDirs.create("ivf_reb_")

@@ -217,7 +217,8 @@ class StreamingSpec extends AnyFunSuite {
     val source = MemoryStream[(Long, String)](spark, 31)
     val stream = source.toDF().toDF("doc_id", "text")
     val sink = "neardup_sink_" + System.nanoTime()
-    val q = StreamingJobs.streamNearDupCandidates(stream, corpusBands)
+    val q = StreamingJobs.streamNearDupAgainstIndex(stream,
+        StreamingJobs.guardedBandIndex(corpusBands))
       .writeStream.format("memory").queryName(sink)
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
     // batch 1: an unrelated arrival — no candidates
