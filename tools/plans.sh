@@ -19,7 +19,14 @@ mkdir -p "$tmp"
 cleanup() { for t in "${tools[@]}"; do rm -f "$tmp/$t.scala"; done; }
 trap cleanup EXIT
 for t in "${tools[@]}"; do cp "$here/devtools/$t.scala" "$tmp/"; done
+# offline build; an sbt repositories file in ~/.sbt overrides the
+# resolvers when present (the same defaults as perfbench/run.py)
 export COURSIER_MODE=offline
-export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=/root/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+if [ -z "${SBT_OPTS:-}" ]; then
+  SBT_OPTS="-Dsbt.offline=true -Xmx2g"
+  repos="$HOME/.sbt/repositories"
+  [ -f "$repos" ] && SBT_OPTS="-Dsbt.override.build.repos=true -Dsbt.repository.config=$repos $SBT_OPTS"
+  export SBT_OPTS
+fi
 (cd "$root" && sbt --batch -Dsbt.log.noformat=true compile >&2)
 for t in "${tools[@]}"; do "$root/tools/run.sh" "graft.tmp.$t"; done
